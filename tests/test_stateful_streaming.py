@@ -16,6 +16,8 @@ from nyc_taxi_etl_spark.streaming.stateful import (
     ewma_replay_pandas,
 )
 
+from .conftest import SF_DIR
+
 
 def _stage_two_batches(tmp_path):
     """Two time-ordered files: a small series per user, with one
@@ -308,3 +310,48 @@ def test_cusum_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
         phase2 = [got_events[uid * 1000 + i][2] for i in range(20, 40)]
         assert sum(phase1) == 0
         assert sum(phase2) > 0
+
+
+def _drain_entry(spark, name):
+    from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+
+    rows = {**QUERIES, **QUERIES_EXTRA}[name](spark, SF_DIR).collect()
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_ewma_anomalies", "streaming_tumbling_counts"]
+)
+def test_catalog_drain_rows_do_not_depend_on_state_width(spark, monkeypatch, name):
+    """A catalog drain gives the same rows on one state partition as on
+    the host's width: the per-key fold orders its own input, and the
+    windowed sums are rounded before they are compared."""
+    from nyc_taxi_etl_spark.plans import queries_streaming
+
+    host = _drain_entry(spark, name)
+    monkeypatch.setattr(queries_streaming, "state_partitions", lambda _spark: 1)
+    assert _drain_entry(spark, name) == host
+
+
+def test_catalog_drain_state_width_is_min_8_cores(spark, monkeypatch):
+    """The drained query runs min(8, defaultParallelism) state
+    partitions, whatever the session's shuffle width is."""
+    from nyc_taxi_etl_spark.plans import queries_streaming
+
+    progress: list = []
+    drain = queries_streaming.run_available_now
+    monkeypatch.setattr(
+        queries_streaming,
+        "run_available_now",
+        lambda *a, **k: drain(*a, progress_out=progress, **k),
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try:
+        _drain_entry(spark, "streaming_ewma_anomalies")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    ops = [p["stateOperators"][0] for p in progress if p["stateOperators"]]
+    assert ops
+    want = min(8, spark.sparkContext.defaultParallelism)
+    assert {op["numShufflePartitions"] for op in ops} == {want}

@@ -222,3 +222,39 @@ def test_etl_observed_metrics_match_reality(spark, curated):
     assert res.metrics["cab_types_out"] == (
         spark.read.parquet(out).select("cab_type").distinct().count()
     )
+
+
+# run_etl's reference analyses, as the benchmark's taxi_etl workload runs them
+REFERENCE_ANALYSES = (
+    "summary_rollup",
+    "per_cab_summary",
+    "hourly_dashboard",
+    "od_flows",
+    "tip_pct_by_hour",
+    "median_speed_by_hour",
+    "extreme_days",
+    "trip_segmentation",
+    "busiest_zones",
+    "market_share_by_month",
+)
+
+
+def test_warm_etl_pass_compiles_no_classes(spark, taxi_dir, tmp_path):
+    """The generated-class cache (session.get_spark sets
+    spark.sql.codegen.cache.maxEntries) holds a whole ETL + analyses
+    pass: the second, identical pass compiles nothing with Janino. At
+    Spark's default of 100 entries a pass evicts its own classes."""
+    _base, paths = taxi_dir
+    out = str(tmp_path / "curated")
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def one_pass() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        run_etl(spark, paths, out)
+        trips = read_curated(spark, out)
+        for name in REFERENCE_ANALYSES:
+            getattr(A, name)(trips).collect()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    one_pass()
+    assert one_pass() == 0

@@ -11,7 +11,15 @@ Usage:
 
 Prints one JSON line per query:
     {"name":..., "build_s":..., "runs":[...], "min_s":...,
-     "jobs":N, "stages":N, "tasks":N}
+     "jobs":N, "stages":N, "tasks":N, "compiles":N,
+     "jvm_child_cpu_s":...}
+
+``compiles`` (classes Janino compiled: the ``CodegenMetrics`` count)
+and ``jvm_child_cpu_s`` (CPU of the processes the JVM forked and
+reaped, e.g. the ``chmod`` calls of the local file system when no
+native Hadoop library is loaded: ``cutime + cstime`` from
+``/proc/<jvm>/stat``) cover the plan build and every run. They show
+two fixed-cost classes a wall-time profile hides.
 """
 
 from __future__ import annotations
@@ -30,6 +38,14 @@ from nyc_taxi_etl_spark.session import get_spark  # noqa: E402
 ALL = {**QUERIES, **QUERIES_EXTRA}
 
 
+def jvm_child_cpu_s(pid: int) -> float:
+    """CPU seconds of the reaped children of process ``pid``."""
+    with open(f"/proc/{pid}/stat") as f:
+        rest = f.read().rsplit(")", 1)[1].split()
+    # fields 16-17 of proc(5): cutime, cstime
+    return (int(rest[13]) + int(rest[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names")
@@ -41,6 +57,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile")
     sc = spark.sparkContext
+    jvm_pid = sc._gateway.proc.pid
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     spark.range(1000).selectExpr("sum(id)").collect()  # warm-up
 
     names = [n for n in args.names.split(",") if n]
@@ -50,6 +68,8 @@ def main() -> None:
         if name not in ALL:
             print(json.dumps({"name": name, "error": "unknown"}))
             continue
+        compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
+        child0 = jvm_child_cpu_s(jvm_pid)
         t0 = time.perf_counter()
         df = ALL[name](spark, sf_dir)
         build_s = time.perf_counter() - t0
@@ -101,6 +121,12 @@ def main() -> None:
                     "jobs": len(jobs),
                     "stages": n_stages,
                     "tasks": n_tasks,
+                    "compiles": (
+                        codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
+                    ),
+                    "jvm_child_cpu_s": round(
+                        jvm_child_cpu_s(jvm_pid) - child0, 3
+                    ),
                 }
             ),
             flush=True,
