@@ -2,12 +2,11 @@
 
 §2.11's remaining extension point — the catalog exercises
 ``applyInPandas`` (grouped map), ``mapInPandas`` (batch map),
-``applyInPandasWithState``/``transformWithStateInPandas`` (stateful
-streaming) and SQL UDTFs; this adds the Arrow-vectorized GROUPED
-AGGREGATE form, for a statistic Spark genuinely lacks a built-in for:
-the weighted median (smallest x whose cumulative weight reaches half
-the total — e.g. a price median where each line item counts by its
-quantity).
+``applyInPandasWithState`` (stateful streaming) and SQL UDTFs; this
+adds the Arrow-vectorized GROUPED AGGREGATE form, for a statistic
+Spark genuinely lacks a built-in for: the weighted median (smallest x
+whose cumulative weight reaches half the total — e.g. a price median
+where each line item counts by its quantity).
 
 Scale contract: a GROUPED_AGG UDAF materializes each group in one
 worker, so the caller must bound group payloads. The intended pattern

@@ -9,7 +9,7 @@ individually oracle-checked elsewhere):
   1. ``quality_score(text) >= quality_threshold`` (row-local, pushes to
      the scan — low-quality docs never reach the hash stages);
   2. exact dedup keeps the MIN doc id per content fingerprint (one
-     hash-agg + semi-join);
+     ``min_by`` aggregation that carries the keeper's whole row);
   3. MinHash+LSH candidate pairs verified at ``jaccard_threshold`` over
      the exact-deduped corpus;
   4. near-dup clusters via large-star/small-star connected components;

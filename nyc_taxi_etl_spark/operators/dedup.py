@@ -165,13 +165,18 @@ def _pin_verify_width(pairs: DataFrame, *cols: str) -> DataFrame:
     coalesce to 1-2 tasks and tens of CPU-seconds of verify run nearly
     serial (fuzzy: 14 s vs 4 s at sf0.1). An explicit
     ``repartition(n, cols)`` is REPARTITION_BY_NUM — it satisfies the
-    distinct's clustering requirement, so it REPLACES the coalescible
-    exchange rather than adding one, and AQE never shrinks it. The
-    width comes from ``spark.sql.shuffle.partitions`` — the session's
-    scale-configured parallelism, not a local constant; bytes-based
-    coalescing is simply the wrong model when per-row compute, not
-    transport, dominates (the sizing assumption of guide §2.2
-    inverted)."""
+    distinct's clustering requirement and AQE never shrinks it. Whether
+    it adds an exchange depends on the caller's plan (``Exchange``
+    nodes, shuffle + broadcast, in the sf0.01 physical plan):
+    ``fuzzy_near_pairs`` keeps 6 with or without the pin — it replaces
+    the distinct's exchange; ``ppjoin_near_pairs`` goes from 9 to 10 —
+    without the pin its distinct plans as back-to-back hash aggregates
+    with no exchange, so the pin adds the one exchange that widens the
+    verify. The width comes from ``spark.sql.shuffle.partitions`` —
+    the session's scale-configured parallelism, not a local constant;
+    bytes-based coalescing is simply the wrong model when per-row
+    compute, not transport, dominates (the sizing assumption of guide
+    §2.2 inverted)."""
     try:
         n_part = int(
             pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from ..streaming import (
     read_events_stream,
     run_available_now,
-    state_partitions,
     tumbling_event_counts,
     user_running_totals,
     user_session_windows,
@@ -62,34 +61,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_events_stream(spark, d, max_files_per_trigger=None)
 
 
-def _scratch_dir(prefix: str) -> str:
-    """Per-run scratch directory for stream checkpoints/staging,
-    preferring tmpfs (``/dev/shm``) when present: the checkpoint of a
-    drain-the-backlog-and-stop run is ephemeral coordinator state
-    (offsets/commits/state snapshots live exactly as long as the
-    drain), and the state store's per-batch snapshot+WAL writes are
-    pure fixed cost on a disk-backed /tmp. Production streams pass
-    their own durable ``checkpoint_dir`` to ``run_available_now`` —
-    this helper only serves the catalog's finite drains."""
+def _drain(sdf: DataFrame, mode: str) -> DataFrame:
+    # looked up per call, not bound at import: a caller may rebind
+    # scratch.scratch_dir to move the checkpoints elsewhere
     from ..sources.scratch import scratch_dir
 
-    return scratch_dir(prefix)
-
-
-def _drain(sdf: DataFrame, mode: str) -> DataFrame:
-    name = "q_" + uuid.uuid4().hex[:12]
-    # min(8, cores) state-store partitions: every stateful entry here
-    # keys on a bounded domain (users / hourly windows), where per-store
-    # and per-task fixed cost dominates. streaming_ewma_anomalies on a
-    # 4-vCPU VM (perfbench, median of 3 runs), CPU / wall per iteration:
-    # 8 partitions 7.54 s / 2.94 s, 4: 5.68 / 2.43, 2: 4.54 / 2.79,
-    # 1: 3.88 / 3.22. See run_available_now's sizing note.
     return run_available_now(
-        sdf,
-        name,
-        _scratch_dir("ckpt_"),
-        output_mode=mode,
-        shuffle_partitions=state_partitions(sdf.sparkSession),
+        sdf, "q_" + uuid.uuid4().hex[:12], scratch_dir("ckpt_"), output_mode=mode
     )
 
 
@@ -312,9 +290,8 @@ def streaming_purchase_error_pairs(spark: SparkSession, sf_dir: str) -> DataFram
 def streaming_ewma_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (§2.10/§2.11 north star):
     per-user EWMA anomaly scoring through the arbitrary-state API
-    (streaming/stateful.py — transformWithStateInPandas when protobuf
-    is present, applyInPandasWithState fallback otherwise), rolled up
-    per user. Exact stream-vs-batch-replay parity incl.
+    (streaming/stateful.py, applyInPandasWithState), rolled up per
+    user. Exact stream-vs-batch-replay parity incl.
     cross-micro-batch state carry is pinned in
     tests/test_stateful_streaming.py.
 
@@ -685,28 +662,15 @@ def streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reuses its DuckDB oracle VERBATIM, so the streaming path is
     value-checked against the same spec that checks the Catalyst
     fold (every float op in the same IEEE order across all three
-    implementations: fold, processor, SQL).
+    implementations: fold, stream step, SQL).
 
     Scale: O(1) state per user (two doubles + a count) in the state
-    store; one shuffle on user_id; dual backend
-    (transformWithStateInPandas when protobuf is present,
-    applyInPandasWithState otherwise); stream-vs-replay parity incl.
-    cross-micro-batch state carry pinned in
-    tests/test_stateful_streaming.py."""
-    from ..streaming.stateful import cusum_drift_stream
+    store; one shuffle on user_id; applyInPandasWithState;
+    stream-vs-replay parity incl. cross-micro-batch state carry pinned
+    in tests/test_stateful_streaming.py."""
+    from ..streaming.stateful import CUSUM_H, cusum_drift_stream
 
-    # One source of truth for the detector constants: the batch fold's
-    # module-level _CUSUM_UP/_DN/_H feed the fold, the oracle SQL, the
-    # stream processor AND this rollup's alarm expression — changing any
-    # one of them cannot silently break batch/stream/oracle parity.
-    from .queries_timeseries import _CUSUM_DN, _CUSUM_H, _CUSUM_UP
-
-    out = _drain(
-        cusum_drift_stream(
-            _events_stream(spark, sf_dir), up=_CUSUM_UP, dn=_CUSUM_DN, h=_CUSUM_H
-        ),
-        "append",
-    )
+    out = _drain(cusum_drift_stream(_events_stream(spark, sf_dir)), "append")
     return out.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.max_by("pos_after", "n_after").alias("final_pos"),
@@ -715,7 +679,7 @@ def streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("neg_after").alias("max_neg"),
         F.sum("alarm").cast("long").alias("alarm_steps"),
         (
-            (F.max("pos_after") > F.lit(_CUSUM_H))
-            | (F.max("neg_after") > F.lit(_CUSUM_H))
+            (F.max("pos_after") > F.lit(CUSUM_H))
+            | (F.max("neg_after") > F.lit(CUSUM_H))
         ).cast("long").alias("alarmed"),
     )

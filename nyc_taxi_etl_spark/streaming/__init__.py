@@ -4,7 +4,6 @@ from .events import (  # noqa: F401
     read_events_stream,
     run_available_now,
     sliding_value_avg,
-    state_partitions,
     tumbling_event_counts,
     user_running_totals,
     user_session_windows,

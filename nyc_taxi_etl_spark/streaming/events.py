@@ -46,7 +46,6 @@ __all__ = [
     "dedup_events_stream",
     "purchase_error_stream_join",
     "run_available_now",
-    "state_partitions",
     "stream_upsert_to_table",
     "stream_ingest_documents",
 ]
@@ -248,7 +247,7 @@ def stream_upsert_to_table(
     keys: tuple[str, ...],
     checkpoint_dir: str,
     version_col: str | None = None,
-    timeout_s: int = 300,
+    timeout_s: float = 300,
 ) -> None:
     """Streaming CDC sink: merge each micro-batch into a
     ``sources/versioned.py::VersionedTable`` keep-latest — the
@@ -261,20 +260,15 @@ def stream_upsert_to_table(
     idempotent, and the table's atomic commit protocol means a crash
     mid-merge leaves only an invisible orphan — the retried batch
     simply merges again. Empty micro-batches publish no commit.
+    Raises ``TimeoutError`` (query stopped) if the drain outlasts
+    ``timeout_s``.
     """
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        table.upsert(batch, keys=list(keys), version_col=version_col)
-
-    q = (
-        sdf.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _foreach_batch(
+        sdf,
+        lambda batch: table.upsert(batch, keys=list(keys), version_col=version_col),
+        checkpoint_dir,
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
 
 
 def purchase_error_stream_join(
@@ -333,39 +327,74 @@ def purchase_error_stream_join(
     )
 
 
+def _start_and_wait(writer, checkpoint_dir: str, timeout_s: float):
+    """Start ``writer`` as a checkpointed ``Trigger.AvailableNow`` query
+    and wait until it has drained its input. A query still running after
+    ``timeout_s`` is stopped and ``TimeoutError`` raised: returning
+    instead would hand the caller a sink that holds part of the input
+    while the query keeps writing to it."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.id} did not drain within {timeout_s} s"
+        )
+    return q
+
+
+def _foreach_batch(sdf: DataFrame, fn, checkpoint_dir: str, timeout_s: float) -> None:
+    """Drain ``sdf`` calling ``fn(batch)`` on each non-empty micro-batch
+    (an empty batch would publish an empty commit)."""
+
+    def body(batch: DataFrame, _batch_id: int) -> None:
+        if not batch.isEmpty():
+            fn(batch)
+
+    _start_and_wait(sdf.writeStream.foreachBatch(body), checkpoint_dir, timeout_s)
+
+
+def _state_partitions(spark: SparkSession) -> int:
+    """State-store width of a drain: ``min(8, defaultParallelism)``
+    (the rule and its measurements: :func:`run_available_now`)."""
+    return min(8, spark.sparkContext.defaultParallelism)
+
+
 def run_available_now(
     sdf: DataFrame,
     query_name: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-    timeout_s: int = 300,
-    shuffle_partitions: int | None = None,
+    timeout_s: float = 300,
     progress_out: list | None = None,
 ) -> DataFrame:
     """Drain all currently-available input through the streaming plan
     (Trigger.AvailableNow) into an in-memory sink; returns the result
     as a DataFrame. Used for tests and for the reference-style
-    "process the backlog then stop" batch-catchup runs.
+    "process the backlog then stop" batch-catchup runs. Raises
+    ``TimeoutError`` (query stopped) if the drain outlasts
+    ``timeout_s``.
 
-    ``shuffle_partitions`` sizes the STATE STORE for this stream: a
-    stateful operator keeps one state store per shuffle partition, and
-    each store pays per-batch open/commit/snapshot overhead — on a
-    bounded key domain (users, hourly windows) 200 stores is almost
-    all fixed cost (measured 5× on the stream-stream join: 16 s → 3 s
-    from 32 → 8 on a 32-core host). Production sizing follows state
-    VOLUME, not the default; the partition count is baked into the
-    checkpoint at first run, which is why it must be chosen
-    deliberately. The session value is restored after the drain — it
-    only pins this query's plan.
+    The drain runs ``min(8, defaultParallelism)`` shuffle partitions,
+    which sizes the STATE STORE for this stream: a stateful operator
+    keeps one state store per shuffle partition, and each store pays
+    per-batch open/commit/snapshot overhead — on a bounded key domain
+    (users, hourly windows) 200 stores is almost all fixed cost
+    (measured 5× on the stream-stream join: 16 s → 3 s from 32 → 8 on
+    a 32-core host). The partition count is baked into the checkpoint
+    at first run. The session value is restored after the drain — the
+    rule only pins this query's plan.
 
-    Sizing rule for the catalog's finite drains
-    (:func:`state_partitions`): ``min(8, defaultParallelism)`` — never
-    more state stores than cores, capped at the 8 measured above. Each
-    state partition is a Python worker task (UDF unpickle, worker
-    set-up, zipimport cache refresh) and a state store whose init and
-    commit fork ``chmod`` processes when no native Hadoop library is
-    loaded (about 47 forks per partition per drain). ``streaming_ewma_anomalies`` through ``perfbench`` on a
-    4-vCPU VM, median of 3 interleaved runs each:
+    Why ``min(8, defaultParallelism)``: never more state stores than
+    cores, capped at the 8 measured above. Each state partition is a
+    Python worker task (UDF unpickle, worker set-up, zipimport cache
+    refresh) and a state store whose init and commit fork ``chmod``
+    processes when no native Hadoop library is loaded (about 47 forks
+    per partition per drain). ``streaming_ewma_anomalies`` through
+    ``perfbench`` on a 4-vCPU VM, median of 3 interleaved runs each:
 
     ====================  =======  ========
     state partitions      cpu_s    wall_s
@@ -381,33 +410,23 @@ def run_available_now(
     wall time rises again: the core count gives the best wall time."""
     spark = sdf.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
     try:
-        q = (
+        q = _start_and_wait(
             sdf.writeStream.format("memory")
             .queryName(query_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode(output_mode),
+            checkpoint_dir,
+            timeout_s,
         )
-        q.awaitTermination(timeout_s)
-        if progress_out is not None:
-            # per-micro-batch progress (incl. stateOperators metrics:
-            # operator name, numRowsTotal, rows dropped by watermark) —
-            # the observability hook the state-bound tests pin against
-            progress_out.extend(q.recentProgress)
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if progress_out is not None:
+        # per-micro-batch progress (incl. stateOperators metrics:
+        # operator name, numRowsTotal, rows dropped by watermark) —
+        # the observability hook the state-bound tests pin against
+        progress_out.extend(q.recentProgress)
     return spark.table(query_name)
-
-
-def state_partitions(spark: SparkSession) -> int:
-    """State-store width for a finite drain: ``min(8, defaultParallelism)``
-    (the rule and its measurements: :func:`run_available_now`)."""
-    return min(8, spark.sparkContext.defaultParallelism)
 
 
 def stream_ingest_documents(
@@ -416,7 +435,7 @@ def stream_ingest_documents(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    timeout_s: int = 300,
+    timeout_s: float = 300,
 ) -> None:
     """Streaming corpus ingestion with EXACT DEDUP AGAINST THE
     CORPUS-AT-REST: each micro-batch of documents is fingerprinted,
@@ -430,18 +449,16 @@ def stream_ingest_documents(
     replayed batch finds all its fingerprints at rest and appends
     nothing); the commit log makes each append atomic and
     time-travelable. Batches that add nothing publish no commit.
+    Raises ``TimeoutError`` (query stopped) if the drain outlasts
+    ``timeout_s``.
     """
     from ..operators.incremental import incremental_ingest
 
-    def _ingest(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_ingest(table, batch, id_col=id_col, text_col=text_col)
-
-    q = (
-        sdf.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _foreach_batch(
+        sdf,
+        lambda batch: incremental_ingest(
+            table, batch, id_col=id_col, text_col=text_col
+        ),
+        checkpoint_dir,
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)

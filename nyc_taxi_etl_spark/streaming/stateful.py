@@ -14,12 +14,9 @@ over history. Holt (trend surprise) and CUSUM (accumulated shift) are
 its siblings, with the same contract.
 
 Backend: ``applyInPandasWithState`` (GroupState tuple, the default
-HDFS-backed state store) is the one that runs wherever protobuf is
-absent, which includes every test and benchmark environment of this
-repository. All three detectors run through ONE per-key driver,
-:func:`_fold_stream`. The ``StatefulProcessor`` twins for Spark 4.1's
-``transformWithStateInPandas`` (RocksDB state store) are selected only
-when ``google.protobuf`` is importable (:func:`has_transform_with_state`).
+HDFS-backed state store). All three detectors run through ONE per-key
+driver, :func:`_fold_stream`; each detector only supplies its scalar
+step function.
 
 Scale posture: state is three numbers per user in the state store.
 Events shuffle once on user_id; each micro-batch's rows arrive grouped
@@ -36,7 +33,6 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -49,22 +45,19 @@ __all__ = [
     "CUSUM_UP",
     "CUSUM_DN",
     "CUSUM_H",
-    "EwmaAnomalyProcessor",
     "ewma_anomaly_stream",
     "ewma_replay_pandas",
-    "HoltTrendProcessor",
     "holt_trend_stream",
     "holt_replay_pandas",
-    "CusumDriftProcessor",
     "cusum_drift_stream",
     "cusum_replay_pandas",
 ]
 
 # Canonical two-sided CUSUM tuning (Page 1954) — the ONE definition the
 # batch fold, its DuckDB oracle (plans/queries_timeseries reads these
-# via its _CUSUM_* aliases), the streaming entry (queries_streaming
-# passes them explicitly), this module's processor defaults, and the
-# pandas replay oracle all share. Retuning the detector here retunes
+# via its _CUSUM_* aliases), the stream operator's defaults, the
+# streaming entry's alarm rollup (queries_streaming reads CUSUM_H), and
+# the pandas replay oracle all share. Retuning the detector here retunes
 # every leg at once; a second literal anywhere would silently break
 # batch/stream/oracle parity (VERDICT r9 task #1). Plan-time LITERALS,
 # not data-derived floats — a global mean/stddev would be an
@@ -96,8 +89,7 @@ def _ordered_batch(chunks) -> "pd.DataFrame":
     """Concatenate a key's Arrow chunks and sort ONCE by
     (ts, event_id): the fold must run in global event order, and a
     per-chunk sort would interleave chunks of a multi-chunk key out of
-    order (r7 fix, shared by both stateful backends). ``np.lexsort``
-    is stable and puts NaT last."""
+    order (r7 fix). ``np.lexsort`` is stable and puts NaT last."""
     frames = [p for p in chunks if len(p)]
     if not frames:
         return pd.DataFrame()
@@ -169,88 +161,17 @@ def _step(mean: float, var: float, n: int, x: float, alpha: float):
     return dev, new_mean, new_var, n + 1
 
 
-class EwmaAnomalyProcessor(StatefulProcessor):
-    def __init__(self, alpha: float = 0.2, threshold: float = 3.0,
-                 min_periods: int = 5):
-        self.alpha = alpha
-        self.threshold = threshold
-        self.min_periods = min_periods
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("ewma", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        mean, var, n = (
-            self.state.get() if self.state.exists() else (0.0, 0.0, 0)
-        )
-        out = []
-        batch = _ordered_batch(rows)
-        if len(batch):
-            for r in batch.itertuples(index=False):
-                x = float(r.value)
-                pre_mean = x if n == 0 else mean  # what it's scored against
-                pre_n = n
-                dev, mean, var, n = _step(mean, var, n, x, self.alpha)
-                out.append(
-                    (
-                        int(key[0]),
-                        int(r.event_id),
-                        r.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                        x,
-                        pre_mean,
-                        dev,
-                        1
-                        if (pre_n >= self.min_periods and dev > self.threshold)
-                        else 0,
-                    )
-                )
-        self.state.update((mean, var, n))
-        yield pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields])
-
-    def close(self) -> None:
-        pass
-
-
-def has_transform_with_state() -> bool:
-    """transformWithStateInPandas needs protobuf in the Python env
-    (its driver worker speaks a proto protocol to the JVM); absent in
-    this container, so the API is gated, not assumed."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def ewma_anomaly_stream(
     events: DataFrame,
     alpha: float = 0.2,
     threshold: float = 3.0,
     min_periods: int = 5,
-    use_transform_with_state: bool | None = None,
 ) -> DataFrame:
     """Wire the detector onto a streaming events frame (expects
-    user_id, event_id, ts, value).
-
-    Two interchangeable stateful backends, same recurrence and same
-    output schema:
-      * ``transformWithStateInPandas`` (Spark 4.1, RocksDB-backed,
-        composable state vars) — used when protobuf is available
-        (``has_transform_with_state``), or forced via the flag;
-      * ``applyInPandasWithState`` (GroupState tuple) — the
-        dependency-free fallback this container runs.
-    """
+    user_id, event_id, ts, value): one row per event with the mean it
+    was scored against, its deviation in σ units and the anomaly
+    flag."""
     src = events.select("user_id", "event_id", "ts", "value")
-    if use_transform_with_state is None:
-        use_transform_with_state = has_transform_with_state()
-    if use_transform_with_state:
-        return src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=EwmaAnomalyProcessor(alpha, threshold, min_periods),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
 
     def step(st, x):
         mean, var, n = st
@@ -328,74 +249,18 @@ def _holt_step(
     return forecast, res, new_level, new_trend, n + 1
 
 
-class HoltTrendProcessor(StatefulProcessor):
-    """Per-key double exponential smoothing (level + trend) with
-    one-step-ahead forecast residuals — the trend-aware sibling of the
-    EWMA detector (an EWMA lags a steadily-trending series forever and
-    flags the trend itself; Holt folds the slope into the forecast).
-    Same dual-backend contract and chunk-ordering discipline."""
-
-    def __init__(self, alpha: float = 0.3, beta: float = 0.1):
-        self.alpha = alpha
-        self.beta = beta
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("holt", _HOLT_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        level, trend, n = (
-            self.state.get() if self.state.exists() else (0.0, 0.0, 0)
-        )
-        out = []
-        batch = _ordered_batch(rows)
-        if len(batch):
-            for r in batch.itertuples(index=False):
-                x = float(r.value)
-                forecast, res, level, trend, n = _holt_step(
-                    level, trend, n, x, self.alpha, self.beta
-                )
-                out.append(
-                    (
-                        int(key[0]),
-                        int(r.event_id),
-                        r.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                        x,
-                        forecast,
-                        res,
-                        level,
-                        trend,
-                        n,
-                    )
-                )
-        self.state.update((level, trend, n))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in _HOLT_OUT_SCHEMA.fields]
-        )
-
-    def close(self) -> None:
-        pass
-
-
 def holt_trend_stream(
     events: DataFrame,
     alpha: float = 0.3,
     beta: float = 0.1,
-    use_transform_with_state: bool | None = None,
 ) -> DataFrame:
     """Wire the Holt smoother onto a streaming events frame (expects
-    user_id, event_id, ts, value) — same backend gate as
-    :func:`ewma_anomaly_stream`: transformWithStateInPandas when
-    protobuf is present, applyInPandasWithState otherwise."""
+    user_id, event_id, ts, value): per-key double exponential smoothing
+    (level + trend) with one-step-ahead forecast residuals — the
+    trend-aware sibling of the EWMA detector (an EWMA lags a
+    steadily-trending series forever and flags the trend itself; Holt
+    folds the slope into the forecast)."""
     src = events.select("user_id", "event_id", "ts", "value")
-    if use_transform_with_state is None:
-        use_transform_with_state = has_transform_with_state()
-    if use_transform_with_state:
-        return src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=HoltTrendProcessor(alpha, beta),
-            outputStructType=_HOLT_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
 
     def step(st, x):
         forecast, res, level, trend, n = _holt_step(*st, x, alpha, beta)
@@ -460,73 +325,17 @@ def _cusum_step(
     return new_pos, new_neg, alarm, n + 1
 
 
-class CusumDriftProcessor(StatefulProcessor):
-    """Per-key two-sided CUSUM drift detector — the persistent-shift
-    sibling of the EWMA (level surprise) and Holt (trend surprise)
-    processors; state is two doubles + a count per key. Same
-    dual-backend contract and chunk-ordering discipline."""
-
-    def __init__(self, up: float = CUSUM_UP, dn: float = CUSUM_DN,
-                 h: float = CUSUM_H):
-        self.up, self.dn, self.h = up, dn, h
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("cusum", _CUSUM_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        pos, neg, n = (
-            self.state.get() if self.state.exists() else (0.0, 0.0, 0)
-        )
-        out = []
-        batch = _ordered_batch(rows)
-        if len(batch):
-            for r in batch.itertuples(index=False):
-                x = float(r.value)
-                pos, neg, alarm, n = _cusum_step(
-                    pos, neg, n, x, self.up, self.dn, self.h
-                )
-                out.append(
-                    (
-                        int(key[0]),
-                        int(r.event_id),
-                        r.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                        x,
-                        pos,
-                        neg,
-                        alarm,
-                        n,
-                    )
-                )
-        self.state.update((pos, neg, n))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in _CUSUM_OUT_SCHEMA.fields]
-        )
-
-    def close(self) -> None:
-        pass
-
-
 def cusum_drift_stream(
     events: DataFrame,
     up: float = CUSUM_UP,
     dn: float = CUSUM_DN,
     h: float = CUSUM_H,
-    use_transform_with_state: bool | None = None,
 ) -> DataFrame:
-    """Wire the CUSUM detector onto a streaming events frame (expects
-    user_id, event_id, ts, value) — same backend gate as the EWMA and
-    Holt twins: transformWithStateInPandas when protobuf is present,
-    applyInPandasWithState otherwise."""
+    """Wire the two-sided CUSUM detector onto a streaming events frame
+    (expects user_id, event_id, ts, value) — the persistent-shift
+    sibling of the EWMA (level surprise) and Holt (trend surprise)
+    detectors; state is two doubles + a count per key."""
     src = events.select("user_id", "event_id", "ts", "value")
-    if use_transform_with_state is None:
-        use_transform_with_state = has_transform_with_state()
-    if use_transform_with_state:
-        return src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=CusumDriftProcessor(up, dn, h),
-            outputStructType=_CUSUM_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
 
     def step(st, x):
         pos, neg, alarm, n = _cusum_step(*st, x, up, dn, h)

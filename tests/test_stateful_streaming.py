@@ -1,5 +1,6 @@
-"""transformWithStateInPandas EWMA anomaly detector: multi-batch
-state carry-over must reproduce the exact batch recurrence replay."""
+"""Stateful streaming detectors (EWMA, Holt, CUSUM on
+applyInPandasWithState): multi-batch state carry-over must reproduce
+the exact batch recurrence replay."""
 
 from __future__ import annotations
 
@@ -88,34 +89,11 @@ def test_ewma_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
     assert sorted(flagged) == [uid * 1000 + 25 for uid in range(5)]
 
 
-def test_stateful_backend_gate_reports_active_path(capsys):
-    """The EWMA detector has two interchangeable stateful backends;
-    which one the parity test above just exercised is decided by the
-    protobuf gate. Record it so a green run SAYS which path it proved
-    (transformWithStateInPandas needs protobuf for its JVM protocol;
-    flip happens automatically when the environment gains it)."""
-    from nyc_taxi_etl_spark.streaming.stateful import has_transform_with_state
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        expected = True
-    except ImportError:
-        expected = False
-    assert has_transform_with_state() is expected
-    active = (
-        "transformWithStateInPandas (RocksDB)"
-        if expected
-        else "applyInPandasWithState (GroupState fallback)"
-    )
-    print(f"stateful parity ran on: {active}")
-
-
 def test_multi_chunk_key_folds_in_global_order():
     """r7 fix: a key whose micro-batch arrives as SEVERAL Arrow chunks
     must fold in global (ts, event_id) order — the old per-chunk sort
     interleaved chunks out of order. _ordered_batch is the shared
-    concat-then-sort both stateful backends now run their fold over."""
+    concat-then-sort every detector runs its fold over."""
     import pandas as pd
 
     from nyc_taxi_etl_spark.streaming.stateful import _ordered_batch
@@ -326,10 +304,10 @@ def test_catalog_drain_rows_do_not_depend_on_state_width(spark, monkeypatch, nam
     """A catalog drain gives the same rows on one state partition as on
     the host's width: the per-key fold orders its own input, and the
     windowed sums are rounded before they are compared."""
-    from nyc_taxi_etl_spark.plans import queries_streaming
+    from nyc_taxi_etl_spark.streaming import events
 
     host = _drain_entry(spark, name)
-    monkeypatch.setattr(queries_streaming, "state_partitions", lambda _spark: 1)
+    monkeypatch.setattr(events, "_state_partitions", lambda _spark: 1)
     assert _drain_entry(spark, name) == host
 
 
@@ -337,13 +315,13 @@ def test_catalog_drain_state_width_is_min_8_cores(spark, monkeypatch):
     """The drained query runs min(8, defaultParallelism) state
     partitions, whatever the session's shuffle width is."""
     from nyc_taxi_etl_spark.plans import queries_streaming
+    from nyc_taxi_etl_spark.streaming import events
 
     progress: list = []
-    drain = queries_streaming.run_available_now
     monkeypatch.setattr(
         queries_streaming,
         "run_available_now",
-        lambda *a, **k: drain(*a, progress_out=progress, **k),
+        lambda *a, **k: events.run_available_now(*a, progress_out=progress, **k),
     )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")

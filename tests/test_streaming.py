@@ -91,6 +91,24 @@ def test_tumbling_parity_with_batch(spark, events_dir, tmp_path_factory):
     pd.testing.assert_frame_equal(got, batch)
 
 
+def test_drain_timeout_stops_query_and_raises(spark, events_dir, tmp_path_factory):
+    """A drain that outlasts its timeout must not hand back the
+    partial memory sink: it stops the query, raises, and restores the
+    session's shuffle width."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    with pytest.raises(TimeoutError):
+        run_available_now(
+            tumbling_event_counts(stream, watermark=None),
+            "t_timeout",
+            _ckpt(tmp_path_factory),
+            output_mode="complete",
+            timeout_s=0.001,
+        )
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
 def test_sliding_window_counts(spark, events_dir, tmp_path_factory):
     stream = read_events_stream(spark, events_dir, max_files_per_trigger=None)
     got = run_available_now(

@@ -126,7 +126,6 @@ def test_left_outer_null_emission_boundary_is_strict(spark):
         "q_boundary_" + uuid.uuid4().hex[:8],
         tempfile.mkdtemp(prefix="ckpt_boundary_"),
         output_mode="append",
-        shuffle_partitions=4,
     )
     got = {
         (r["purchase_id"], r["error_id"]) for r in out.collect()
@@ -150,7 +149,6 @@ def test_stream_join_single_state_operator_and_bounded_state(spark):
         "q_state_" + uuid.uuid4().hex[:8],
         tempfile.mkdtemp(prefix="ckpt_state_"),
         output_mode="append",
-        shuffle_partitions=8,
         progress_out=progress,
     )
     # result parity with the batch interval join (row count level)
@@ -165,6 +163,11 @@ def test_stream_join_single_state_operator_and_bounded_state(spark):
         assert len(p["stateOperators"]) == 1, p["stateOperators"]
     final = state_batches[-1]["stateOperators"][0]
     assert "symmetricHashJoin" in final["operatorName"], final
+    # a direct caller gets the drain's state-width rule, not the
+    # session's shuffle width
+    assert final["numShufflePartitions"] == min(
+        8, spark.sparkContext.defaultParallelism
+    ), final
     # Eviction bound: during the final batch the watermark sits at
     # (max ts of chunks 1..N-1) - WATERMARK, so surviving state is the
     # purchase/error rows newer than that minus TOLERANCE. Events are

@@ -126,10 +126,10 @@ def test_cusum_fold_precheck_names_hot_entity_before_collecting(spark):
 def test_cusum_constants_single_sourced():
     """VERDICT r9 task #1: the CUSUM tuning lives in exactly one place
     (streaming/stateful.py) and every leg — batch fold module, the
-    embedded DuckDB oracle text, the stream operator's defaults, the
-    processor's defaults, and the pandas replay oracle — resolves to
-    it. Changing CUSUM_H there retunes all legs at once; a stray
-    second literal anywhere breaks this test, not oracle parity."""
+    embedded DuckDB oracle text, the stream operator's defaults, and
+    the pandas replay oracle — resolves to it. Changing CUSUM_H there
+    retunes all legs at once; a stray second literal anywhere breaks
+    this test, not oracle parity."""
     import inspect
 
     from nyc_taxi_etl_spark.plans import queries_timeseries as qt
@@ -140,8 +140,7 @@ def test_cusum_constants_single_sourced():
     assert qt._CUSUM_DN is st.CUSUM_DN
     assert qt._CUSUM_H is st.CUSUM_H
     # every streaming-side default reads the canonical names
-    for fn in (st.cusum_drift_stream, st.cusum_replay_pandas,
-               st.CusumDriftProcessor.__init__):
+    for fn in (st.cusum_drift_stream, st.cusum_replay_pandas):
         d = inspect.signature(fn).parameters
         assert d["up"].default == st.CUSUM_UP, fn
         assert d["dn"].default == st.CUSUM_DN, fn

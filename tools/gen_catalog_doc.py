@@ -1,9 +1,11 @@
 """Regenerate CATALOG.md from the query registries.
 
-Usage: python tools/gen_catalog_doc.py   (writes /root/repo/CATALOG.md)
+Usage: python tools/gen_catalog_doc.py   (writes CATALOG.md at the
+repository root)
 
 The doc is derived — never edit it by hand; the registries and
-docstrings are the source of truth.
+docstrings are the source of truth. ``render()`` returns the text, so
+tests/test_catalog_doc.py can fail when the committed file drifts.
 """
 
 from __future__ import annotations
@@ -32,7 +34,13 @@ def _module(fn) -> str:
     return fn.__module__.rsplit(".", 1)[-1]
 
 
-def main() -> None:
+CATALOG_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md"
+)
+
+
+def render() -> str:
+    """CATALOG.md's full text, from the registries and docstrings."""
     lines = [
         "# CATALOG — every registered query (generated by "
         "tools/gen_catalog_doc.py; do not edit)",
@@ -149,10 +157,13 @@ def main() -> None:
                 f"{_summary(fn)} |"
             )
         lines.append("")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote {out}: {len(QUERIES) + len(QUERIES_EXTRA)} entries")
+    return "\n".join(lines)
+
+
+def main() -> None:
+    with open(CATALOG_PATH, "w") as f:
+        f.write(render())
+    print(f"wrote {CATALOG_PATH}: {len(QUERIES) + len(QUERIES_EXTRA)} entries")
 
 
 if __name__ == "__main__":
