@@ -56,7 +56,11 @@ session cannot separate a real 20% regression from machine load):
   — numbers usable, cross-round deltas should be discounted — and the
   compact stdout line now carries ``cpus``, ``master`` and
   ``min_probe_s`` so a reader can both verify the core-count contract
-  and normalize comparisons without opening the detail file.
+  and normalize comparisons without opening the detail file;
+* the compact line's ``floor`` field says which of those verdicts
+  applies — ``ok``, ``degraded``, ``contended``, or
+  ``no-reference-for-host`` when no committed floor matches this host
+  (then neither gate ran, which the two stamps alone cannot show).
 """
 
 from __future__ import annotations
@@ -307,6 +311,20 @@ def load_probe_floor(path: str | None = None) -> dict | None:
     except (TypeError, ValueError):
         return None
     return ref
+
+
+def floor_status(
+    floor_ref: dict | None, contended: bool, degraded: bool
+) -> str:
+    """The compact line's ``floor`` field: how far this run's host can
+    be trusted against the committed probe floor. ``no-reference-for-host``
+    when no floor applies (missing, corrupt, reset, or measured on
+    another host), so a reader never mistakes "no gate ran" for "ok"."""
+    if floor_ref is None:
+        return "no-reference-for-host"
+    if contended:
+        return "contended"
+    return "degraded" if degraded else "ok"
 
 
 def select_clean_passes(
@@ -661,6 +679,7 @@ def main() -> None:
             "cpus": spark.sparkContext.defaultParallelism,
             "master": spark.sparkContext.master,
             "min_probe_s": round(min(calibration), 4),
+            "floor": floor_status(floor_ref, contended, degraded),
             "detail": "BENCH_DETAIL.json",
         }
         if contended:

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from .text import tokens
 
 __all__ = ["word_counts", "train_bpe", "segment_words", "END_MARK"]
@@ -91,7 +92,7 @@ def train_bpe(
     types = word_counts(df, text_col).select(
         "n", _initial_symbols(F.col("word")).alias("sym")
     )
-    types = types.localCheckpoint(eager=True)
+    types = pin(types)
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
         s = F.col("sym")
@@ -112,9 +113,9 @@ def train_bpe(
             break
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
-        types = types.select(
-            "n", _merge_in(F.col("sym"), a, b).alias("sym")
-        ).localCheckpoint(eager=True)
+        types = pin(
+            types.select("n", _merge_in(F.col("sym"), a, b).alias("sym"))
+        )
     return merges
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from .text import token_count, tokens
 
 __all__ = ["chunk_by_chars", "chunk_by_tokens", "pack_sequences"]
@@ -150,12 +151,9 @@ def pack_sequences(
     # across them — without materialization that is three scans of the
     # full text. The projection is two longs per document (no text), so
     # storing it trades O(16 bytes × docs) memory/disk for two scans.
-    # Eager localCheckpoint, not persist: the return is lazy so a
-    # persist could never be unpersisted and would accumulate
-    # CacheManager entries per call.
-    base = df.select(
-        doc_id, token_count(F.col(text_col)).alias("n_tokens")
-    ).localCheckpoint(eager=True)
+    base = pin(
+        df.select(doc_id, token_count(F.col(text_col)).alias("n_tokens"))
+    )
     hi_lo = base.agg(
         F.min(id_col).alias("_lo"), F.max(id_col).alias("_hi")
     )

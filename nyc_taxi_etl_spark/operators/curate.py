@@ -16,12 +16,15 @@ individually oracle-checked elsewhere):
      each cluster keeps its MIN doc id (the component representative) —
      every other member is anti-joined away.
 
+Contract: document ids are unique and non-null; null-id rows are
+dropped before scoring (no keeper rule can compare them).
+
 Scale posture (100 TB): stage order is the whole point — quality filter
 and exact dedup shrink the corpus before the expensive shingle/minhash
 pass; LSH keeps candidate generation sub-quadratic; component finding
-never materializes the graph on the driver. The surviving corpus is
-materialized once (eager localCheckpoint) because two downstream
-subtrees (pair generation and the final anti-join) both consume it.
+never materializes the graph on the driver. Both public functions run
+the same ``_curate_stages``; its exact keepers are pinned once because
+pair generation and the anti-join (or the audit's keeper map) reuse them.
 """
 
 from __future__ import annotations
@@ -29,10 +32,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from .dedup import connected_components, minhash_lsh_pairs
 from .text import fingerprint, quality_score
 
 __all__ = ["curate_documents", "curation_audit"]
+
+
+def _curate_stages(
+    docs: DataFrame, id_col: str, text_col: str, quality_threshold: float,
+    **lsh,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """``(scored, passed, keepers, components)``: non-null-id docs with
+    their quality, the quality-passed docs with their fingerprint, the
+    pinned exact keepers, and the near-dup ``(node, component)`` map;
+    ``lsh`` is passed to ``minhash_lsh_pairs``."""
+    scored = docs.filter(F.col(id_col).isNotNull()).withColumn(
+        "quality", quality_score(F.col(text_col))
+    )
+    passed = scored.filter(F.col("quality") >= quality_threshold).withColumn(
+        "fingerprint", fingerprint(F.col(text_col))
+    )
+    # min_by keeps the min-id row inside the aggregation (partial aggs
+    # shrink each map partition first); unique ids mean no ties (r11)
+    keepers = pin(
+        passed.groupBy("fingerprint")
+        .agg(F.min_by(F.struct(*passed.columns), F.col(id_col)).alias("_r"))
+        .select("_r.*")
+    )
+    pairs = minhash_lsh_pairs(keepers, text_col=text_col, id_col=id_col, **lsh)
+    return scored, passed, keepers, connected_components(pairs)
 
 
 def curate_documents(
@@ -46,47 +75,16 @@ def curate_documents(
     bands: int = 4,
 ) -> DataFrame:
     """Curated corpus: one row per kept document, with its quality
-    score. Deterministic: every keeper rule is min-id."""
-    scored = docs.withColumn("quality", quality_score(F.col(text_col)))
-    passed = scored.filter(F.col("quality") >= quality_threshold)
-
-    fp = passed.withColumn("fingerprint", fingerprint(F.col(text_col)))
-    # exact dedup as ONE pass (r11): min_by keeps the min-id row per
-    # fingerprint inside the dedup aggregation itself — partial
-    # aggregation reduces each map partition to one candidate row per
-    # fingerprint before the exchange, so the shuffle carries at most
-    # the near-deduplicated corpus. The previous groupBy+left-semi
-    # shape executed the quality+fingerprint subtree TWICE (agg side
-    # and probe side are independent lineages) and still moved full
-    # rows through the semi-join at scale. Measured flat at sf0.1
-    # (5.55 vs 5.57 s same-window — the stage is small here); the win
-    # is one fewer corpus scan + regex/md5 pass at scale. min_by is
-    # deterministic: doc ids are unique, so no ties exist. The
-    # exact-kept frame feeds both the LSH pair stage and the final
-    # anti-join; eager localCheckpoint, not persist: the return is
-    # lazy so a persist could never be unpersisted (dedup.py
-    # convention).
-    exact_kept = (
-        fp.groupBy("fingerprint")
-        .agg(F.min_by(F.struct(*fp.columns), F.col(id_col)).alias("_r"))
-        .select("_r.*")
-        .localCheckpoint(eager=True)
+    score. Deterministic: every keeper rule is min-id. Ids must be
+    unique; null-id rows are dropped."""
+    _, _, keepers, comp = _curate_stages(
+        docs, id_col, text_col, quality_threshold, k=k, num_hashes=num_hashes,
+        bands=bands, verify_threshold=jaccard_threshold,
     )
-
-    pairs = minhash_lsh_pairs(
-        exact_kept,
-        text_col=text_col,
-        id_col=id_col,
-        k=k,
-        num_hashes=num_hashes,
-        bands=bands,
-        verify_threshold=jaccard_threshold,
-    )
-    comp = connected_components(pairs)
     non_keepers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
-    return exact_kept.drop("fingerprint").join(non_keepers, id_col, "left_anti")
+    return keepers.drop("fingerprint").join(non_keepers, id_col, "left_anti")
 
 
 def curation_audit(
@@ -106,50 +104,30 @@ def curation_audit(
     low-quality doc that is also a duplicate reports dropped_quality;
     it never reached the hash stages). ``keeper_id`` is the retained
     representative (itself when kept, NULL for quality drops — there
-    is nothing it deduplicated into).
+    is nothing it deduplicated into). Ids must be unique; null-id rows
+    are dropped, so they get no row.
 
-    The report every production pipeline owes its users: how much did
-    each stage remove, and where did my document go. Same stages, same
-    keeper rules, same plan shapes as :func:`curate_documents` — one
-    extra broadcast-sized join per stage to carry the labels back to
-    the full corpus; no new shuffles on the text itself.
+    How much did each stage remove, and where did my document go?
+    ``_curate_stages`` runs the same stages, keeper rules and plan
+    shapes as :func:`curate_documents`; one join per stage carries the
+    labels back to the corpus, with no new shuffle of the text.
     """
-    scored = docs.withColumn("quality", quality_score(F.col(text_col)))
-    fp = scored.filter(F.col("quality") >= quality_threshold).withColumn(
-        "fingerprint", fingerprint(F.col(text_col))
+    scored, passed, keepers, comp = _curate_stages(
+        docs, id_col, text_col, quality_threshold, k=k, num_hashes=num_hashes,
+        bands=bands, verify_threshold=jaccard_threshold,
     )
-    ex = fp.join(
-        fp.groupBy("fingerprint").agg(F.min(id_col).alias("ex_keeper")),
+    ex = passed.join(
+        keepers.select("fingerprint", F.col(id_col).alias("ex_keeper")),
         "fingerprint",
     ).select(id_col, "ex_keeper")
-    # eager localCheckpoint, not persist — see curate_documents above
-    exact_kept = (
-        fp.join(ex, id_col)
-        .filter(F.col(id_col) == F.col("ex_keeper"))
-        .localCheckpoint(eager=True)
-    )
-    pairs = minhash_lsh_pairs(
-        exact_kept,
-        text_col=text_col,
-        id_col=id_col,
-        k=k,
-        num_hashes=num_hashes,
-        bands=bands,
-        verify_threshold=jaccard_threshold,
-    )
-    comp = connected_components(pairs).select(
-        F.col("node").alias(id_col), F.col("component")
-    )
     out = (
         scored.select(id_col, "quality")
         .join(ex, id_col, "left")
-        .join(comp, id_col, "left")
+        .join(comp.withColumnRenamed("node", id_col), id_col, "left")
     )
     is_q = F.col("quality") < quality_threshold
     is_ex = F.col("ex_keeper") != F.col(id_col)
-    is_nd = F.col("component").isNotNull() & (
-        F.col("component") != F.col(id_col)
-    )
+    is_nd = F.col("component") != F.col(id_col)  # NULL (no pair) → False
     fate = (
         F.when(is_q, F.lit("dropped_quality"))
         .when(is_ex, F.lit("dropped_exact_dup"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from .text import fingerprint, shingles, tokens
 
 __all__ = [
@@ -361,15 +362,8 @@ def ngram_jaccard_pairs(
         # materialization Spark would re-execute the upstream LSH
         # banding subtree per site. The frame is sub-quadratic by
         # construction (that is the point of LSH) so materializing it
-        # is bounded. Eager localCheckpoint, not persist: the returned
-        # frame is lazy, so a persist here could never be unpersisted
-        # and would accumulate cached blocks across repeated calls
-        # (incremental ingestion drives this path per batch); the
-        # checkpoint's blocks are released by the ContextCleaner once
-        # the frame is unreferenced.
-        candidates = candidates.select("id_a", "id_b").localCheckpoint(
-            eager=True
-        )
+        # is bounded (incremental ingestion drives this path per batch).
+        candidates = pin(candidates.select("id_a", "id_b"))
         cand_ids = (
             candidates.select(F.col("id_a").alias(id_col))
             .union(candidates.select(F.col("id_b").alias(id_col)))
@@ -706,19 +700,15 @@ def connected_components(
     explicit memory contract (~16 MB of id pairs at the default),
     exactly the judgment Spark itself applies for broadcast joins.
     """
-    from pyspark.sql import Observation
-
     spark = pairs.sparkSession
-    obs_edges = Observation("cc_edge_count")
-    edges = (
+    edges, m = pin(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .observe(obs_edges, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
     id_type = edges.schema["a"].dataType
-    if local_solve_edges and obs_edges.get["n"] <= local_solve_edges:
+    if local_solve_edges and m["n"] <= local_solve_edges:
         return _local_components(spark, edges.collect(), id_type)
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -750,19 +740,16 @@ def connected_components(
         hubs = mins.select(F.col("a"), F.col("m").alias("b"))
         return moved.union(hubs).distinct()
 
-    # convergence checksum rides the checkpoint job itself via
-    # df.observe (CollectMetrics fires when localCheckpoint
-    # materializes) — one job per round instead of checkpoint+checksum
+    # the convergence checksum rides each round's pin — one job per
+    # round instead of checkpoint + checksum
     prev: tuple[int, int] | None = None
-    for i in range(max_iterations):
-        obs = Observation(f"cc_round_{i}")
-        stepped = _small_star(_large_star(edges)).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
+    for _ in range(max_iterations):
+        edges, m = pin(
+            _small_star(_large_star(edges)),
+            n=F.count(F.lit(1)),
+            h=F.coalesce(F.sum(F.xxhash64("a", "b")), F.lit(0)),
         )
-        edges = stepped.localCheckpoint(eager=True)
-        cur = (obs.get["n"], obs.get["h"])
+        cur = (m["n"], m["h"])
         if cur == prev:
             break
         prev = cur

@@ -21,6 +21,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
+
 __all__ = ["hits", "pagerank", "triangle_counts", "bfs_level_hops"]
 
 #: Target edge rows per partition for the per-iteration co-partitioned
@@ -66,7 +68,7 @@ def _iter_shuffle_scope(spark: SparkSession, n_rows: int):
     width, which is why the conf is used at all (see below).
 
     Why the conf and not per-op ``repartition``: the round's zero-
-    exchange property needs EVERY relation in the loop — the persisted
+    exchange property needs EVERY relation in the loop — the pinned
     edge/node layouts AND each round's hash-agg output — on the same
     partition count, and aggregation width is only reachable through
     the conf. Width = ceil(n_rows / _ITER_ROWS_PER_PARTITION), capped
@@ -107,15 +109,13 @@ def hits(
     choice (r10): at or under ``score_broadcast_max`` rows the scores
     are explicitly broadcast into each join — the edge relation is
     never moved or sorted and needs no per-key layouts at all; above
-    the cap the edge relation is persisted twice, pre-partitioned and
+    the cap the edge relation is pinned twice, pre-partitioned and
     sorted on EACH join key (src for the a-step, dst for the h-step),
     so the per-round joins reuse layout instead of moving edges, and
     the aggregated score frame comes out of its shuffle already
     partitioned on the key the NEXT join needs. ‖·‖₂ rides the
     checkpoint job as an observed metric (the pagerank posture —
     zero extra jobs, one scalar per half-step to the driver)."""
-    from pyspark.sql import Observation
-
     if iterations < 1:
         raise ValueError("hits() needs iterations >= 1")
     spark = edges.sparkSession
@@ -127,14 +127,12 @@ def hits(
     # the size-adaptive iteration width rides the checkpoint job as an
     # observed metric — zero extra jobs, and it replaces the separate
     # isEmpty() probe.
-    obs_e = Observation("hits_edges")
-    e = (
+    e, m = pin(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .observe(obs_e, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    n_edges = int(obs_e.get["n"])
+    n_edges = int(m["n"])
     if n_edges == 0:
         empty_h = e.select(
             F.col("src").alias("node"), F.lit(1.0).alias("hub")
@@ -154,15 +152,11 @@ def hits(
         if small:
             e_by_src = e_by_dst = e
         else:
-            e_by_src = (
-                e.repartition(n_part, "src")
-                .sortWithinPartitions("src")
-                .persist()
+            e_by_src = pin(
+                e.repartition(n_part, "src").sortWithinPartitions("src")
             )
-            e_by_dst = (
-                e.repartition(n_part, "dst")
-                .sortWithinPartitions("dst")
-                .persist()
+            e_by_dst = pin(
+                e.repartition(n_part, "dst").sortWithinPartitions("dst")
             )
         hubs = (
             e_by_src.select("src").distinct().select(
@@ -196,40 +190,25 @@ def hits(
         # float drift vs per-half-step normalization is ulp-scale, far
         # under the catalog's r4 rounding.
         prev = hubs
-        for it in range(iterations):
+        for _ in range(iterations):
             prev = hubs
             h_raw = (
                 e_by_dst.join(_score(_a_raw(hubs)), "dst")
                 .groupBy("src")
                 .agg(F.sum("a").alias("hub"))
             )
-            obs_h = Observation(f"hits_h_{it}")
-            h_raw = h_raw.observe(
-                obs_h, F.sum(F.col("hub") * F.col("hub")).alias("ss")
-            ).localCheckpoint(eager=True)
-            h_norm = float(obs_h.get["ss"]) ** 0.5 or 1.0
+            h_raw, m = pin(h_raw, ss=F.sum(F.col("hub") * F.col("hub")))
+            h_norm = float(m["ss"]) ** 0.5 or 1.0
             hubs = h_raw.select(
                 F.col("src").alias("node"),
                 (F.col("hub") / F.lit(h_norm)).alias("hub"),
             )
-        obs_a = Observation("hits_a_final")
-        a_final = _a_raw(prev).observe(
-            obs_a, F.sum(F.col("a") * F.col("a")).alias("ss")
-        ).localCheckpoint(eager=True)
-        a_norm = float(obs_a.get["ss"]) ** 0.5 or 1.0
+        a_final, m = pin(_a_raw(prev), ss=F.sum(F.col("a") * F.col("a")))
+        a_norm = float(m["ss"]) ** 0.5 or 1.0
         auth = a_final.select(
             F.col("dst").alias("node"),
             (F.col("a") / F.lit(a_norm)).alias("authority"),
         )
-        # hubs/auth are selects over EAGER localCheckpoints — their
-        # lineage no longer references the persisted edge layouts, so
-        # release them now instead of leaking one cached edge copy per
-        # call (bench runs each entry 5×). Intermediate per-iteration
-        # checkpoint blocks are reclaimed by ContextCleaner once the
-        # loop drops its references (only prev/current are ever held).
-        if not small:
-            e_by_src.unpersist()
-            e_by_dst.unpersist()
     return hubs, auth
 
 
@@ -263,8 +242,6 @@ def triangle_counts(
     does not depend on the orientation used to enumerate it, so a
     plain id-ordered oracle reproduces the counts bit-for-bit.
     """
-    from pyspark.sql import Observation
-
     e = edges.select(
         F.col(node_a).alias("a"), F.col(node_b).alias("b")
     ).filter(F.col(node_a) != F.col(node_b))
@@ -278,16 +255,13 @@ def triangle_counts(
     # lineage truncated (dedup-components posture). The edge count
     # rides the checkpoint job as an observed metric — it gates the
     # degree-frame broadcast below, zero extra jobs.
-    obs_e = Observation("tri_edges")
-    und = (
+    und, m = pin(
         e.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .observe(obs_e, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        ).distinct(),
+        n=F.count(F.lit(1)),
     )
-    n_und = int(obs_e.get["n"])
+    n_und = int(m["n"])
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -383,7 +357,7 @@ def pagerank(
     ``score_broadcast_max`` rows they are explicitly broadcast (the
     edge relation is never moved or sorted at all); above it, the
     edge⋈degree relation is hash-repartitioned ONCE on src, sorted,
-    and persisted, so each round's sort-merge join reuses that layout
+    and pinned, so each round's sort-merge join reuses that layout
     and only the (post-agg, much smaller) contribution frame moves.
     The dangling-node term needs no anti-join: ranks sum to 1 every
     round, so the undistributed mass is ``1 − (N·base + d·Σ inc)``
@@ -394,8 +368,6 @@ def pagerank(
     the driver loop does no data reads. Skewed in-degree (celebrity
     nodes) degrades only the final agg — salting composes if needed
     (functions/skew.py)."""
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
     # pin the distinct edge list ONCE before forking into the three
     # consumers (degree agg, edge⋈degree layout, node-list union) —
@@ -404,14 +376,12 @@ def pagerank(
     # orders⋈lineitem join + distinct, the most expensive stage, 3×).
     # The edge count for the size-adaptive iteration width rides the
     # checkpoint job as an observed metric — zero extra jobs.
-    obs_e = Observation("pr_edges")
-    e = (
+    e, m = pin(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .observe(obs_e, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    n_edges = int(obs_e.get["n"])
+    n_edges = int(m["n"])
     if n_edges == 0:
         # empty graph: typed empty result (SURVEY §7.3 posture), and
         # guards the 1/N terms below
@@ -429,42 +399,25 @@ def pagerank(
         deg = e.groupBy("src").agg(
             F.count("*").cast("double").alias("outdeg")
         )
-        if small:
-            # one materialization; partitioning is irrelevant to the
-            # broadcast-probe rounds. The node count rides the
-            # checkpoint job as an observed metric — zero extra jobs
-            ed = e.join(deg, "src").localCheckpoint(eager=True)
-            obs_n = Observation("pr_nodes")
-            nodes = (
-                e.select(F.col("src").alias("node"))
-                .union(e.select(F.col("dst").alias("node")))
-                .distinct()
-                .observe(obs_n, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+        ed = e.join(deg, "src")
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        if not small:
+            # laid out on the per-round join key AND sorted within
+            # partitions on it: every round's sort-merge join reuses
+            # both from the pin — no exchange and no re-sort of the
+            # (large) edge side per round. Partitioning is irrelevant
+            # to the small path's broadcast-probe rounds.
+            ed = ed.repartition(n_part, "src").sortWithinPartitions("src")
+            nodes = nodes.repartition(n_part, "node").sortWithinPartitions(
+                "node"
             )
-            n_nodes = int(obs_n.get["n"])
-        else:
-            # edges ⋈ out-degree once, laid out on the per-round join
-            # key AND sorted within partitions on it: every
-            # iteration's sort-merge join then reuses both the
-            # partitioning and the ordering from the cache — no
-            # exchange and no re-sort of the (large) edge side per
-            # round
-            ed = (
-                e.join(deg, "src")
-                .repartition(n_part, "src")
-                .sortWithinPartitions("src")
-                .persist()
-            )
-            nodes = (
-                e.select(F.col("src").alias("node"))
-                .union(e.select(F.col("dst").alias("node")))
-                .distinct()
-                .repartition(n_part, "node")
-                .sortWithinPartitions("node")
-                .persist()
-            )
-            n_nodes = nodes.count()  # also materializes the layouts
+        ed = pin(ed)
+        nodes, m = pin(nodes, n=F.count(F.lit(1)))
+        n_nodes = int(m["n"])
         base = (1.0 - damping) / n_nodes
         # Rounds carry only the CONTRIBUTION table (one row per node
         # with in-edges), never the full per-node rank relation: a
@@ -502,7 +455,7 @@ def pagerank(
             )
             return joined, expr
 
-        for it in range(iterations):
+        for _ in range(iterations):
             joined, prev_rank = _attach_prev()
             stepped = (
                 joined.select(
@@ -512,11 +465,8 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum("c").alias("inc"))
             )
-            obs = Observation(f"pr_inc_{it}")
-            contrib = stepped.observe(
-                obs, F.coalesce(F.sum("inc"), F.lit(0.0)).alias("s")
-            ).localCheckpoint(eager=True)
-            deficit = 1.0 - (n_nodes * base + damping * float(obs.get["s"]))
+            contrib, m = pin(stepped, s=F.coalesce(F.sum("inc"), F.lit(0.0)))
+            deficit = 1.0 - (n_nodes * base + damping * float(m["s"]))
         if contrib is None:  # iterations == 0: the uniform init
             ranks = nodes.select(
                 "node", F.lit(1.0 / n_nodes).alias("rank")
@@ -536,19 +486,6 @@ def pagerank(
                     + F.lit(deficit / float(n_nodes))
                 ).alias("rank"),
             )
-        # Release the persisted layouts so repeated calls don't
-        # accumulate cached edge copies (checkpoint blocks on the small
-        # path are ContextCleaner-released when unreferenced). On the
-        # large path the returned plan JOINS the persisted ``nodes``
-        # frame (r10 ADVICE: unpersisting before the caller
-        # materializes would silently re-execute the node-list
-        # union+distinct+repartition+sort from lineage), so pin the
-        # final ranks eagerly first — one bounded |V|-row job — and
-        # only then drop both layouts.
-        if not small:
-            ranks = ranks.localCheckpoint(eager=True)
-            ed.unpersist()
-            nodes.unpersist()
     return ranks
 
 
@@ -599,8 +536,6 @@ def bfs_level_hops(
     is a bounded materialization; no driver-side collects anywhere.
     Deterministic — an unrolled SQL oracle replays it level by level.
     """
-    from pyspark.sql import Observation
-
     if max_hops < 0:
         raise ValueError("bfs_level_hops: max_hops must be >= 0")
     level = seeds.select(F.col(node_col)).distinct()
@@ -610,12 +545,9 @@ def bfs_level_hops(
         # every hop join (the hits/triangle_counts posture); the
         # frontier count rides each checkpoint job via observe — the
         # adaptive_join posture: measure, then choose the join strategy
-        edges = edges.select(src_col, dst_col).localCheckpoint(eager=True)
-        obs0 = Observation("bfs_seed_count")
-        level = level.observe(
-            obs0, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        n_frontier = obs0.get["n"]
+        edges = pin(edges.select(src_col, dst_col))
+        level, m = pin(level, n=F.count(F.lit(1)))
+        n_frontier = m["n"]
     out = level.select(node_col, F.lit(0).alias("hops"))
     for h in range(1, max_hops + 1):
         frontier = (
@@ -632,11 +564,8 @@ def bfs_level_hops(
             # pin the frontier (bounded by |V| — the point of level-set
             # BFS) so later hops join the materialized set, and measure
             # it on the same job for the next broadcast decision
-            obs_h = Observation(f"bfs_frontier_{h}")
-            level = level.observe(
-                obs_h, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint(eager=True)
-            n_frontier = obs_h.get["n"]
+            level, m = pin(level, n=F.count(F.lit(1)))
+            n_frontier = m["n"]
         out = out.unionByName(
             level.select(node_col, F.lit(h).alias("hops"))
         )

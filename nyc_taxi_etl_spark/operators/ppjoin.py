@@ -31,7 +31,8 @@ partials), one window per document over its own shingles (partitioned
 by doc — never a global sort), the prefix self-equi-join on shingle
 (cost follows the truncated postings), then row-local exact
 verification via ``array_intersect`` on the full shingle arrays.
-No UDFs, no driver state, no caching.
+No UDFs and no driver state; the shingled corpus is pinned once
+(``pins.pin``) because four plan sites read it.
 
 Reference intent: the reference dedups with pandas
 ``drop_duplicates`` (scripts/analytics_pandas.py); this is the exact
@@ -43,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from .dedup import _pin_verify_width
 from .text import shingles
 
@@ -55,7 +57,6 @@ def ppjoin_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact word-``k``-shingle Jaccard pairs with similarity >=
     ``threshold``, generated through prefix filtering (lossless — the
@@ -67,19 +68,8 @@ def ppjoin_pairs(
     values get a conservative epsilon so the prefix can only be
     LONGER than required (still lossless, never lossy).
 
-    ``materialize=False`` skips the eager localCheckpoint of the
-    shingled corpus and returns the fully lazy plan — the
-    multi-consumed subtrees then re-execute per plan site. Exists for
-    plan inspection (the plan-quality tests assert on the window/join
-    shapes that a checkpoint would truncate out of the final frame's
-    explain) and for callers composing larger pipelines that
-    materialize at their own boundaries.
-
     Output: ``(id_a, id_b, jaccard)`` with ``id_a < id_b``; jaccard
     is an exact-integer ratio (bit-identical cross-engine)."""
-
-    def _pin(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=True) if materialize else frame
     # ONLY the shingled corpus is pinned. It feeds FOUR plan sites
     # (postings → document frequencies, postings → prefix ranks, and
     # both sides of the verify join); lazily each site re-scans the
@@ -92,11 +82,8 @@ def ppjoin_pairs(
     # dfreq-join + per-doc rank window ahead of the candidate join and
     # measured 6.92 s (prefix-only) / 5.69 s (both pinned) on the same
     # A/B — the window recompute per side is cheaper than its
-    # checkpoint. Eager localCheckpoint, not persist: the returned
-    # frame is lazy, so a persist here could never be unpersisted and
-    # would accumulate cached blocks across calls (the dedup.py
-    # convention).
-    arr = _pin(
+    # checkpoint.
+    arr = pin(
         df.select(
             F.col(id_col).alias("doc"),
             shingles(F.col(text_col), k).alias("arr"),

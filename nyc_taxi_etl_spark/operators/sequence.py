@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import pin
+
 __all__ = ["global_sequence"]
 
 _LOCAL_MASK = (1 << 33) - 1
@@ -78,10 +80,9 @@ def global_sequence(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
     )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    ranged = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .localCheckpoint(eager=True)  # pin partition contents (see top)
+    # pin partition contents (see top)
+    ranged = pin(
+        df.repartitionByRange(n_part, *cols).sortWithinPartitions(*cols)
     )
     counts = {
         r["_pid"]: r["_n"]

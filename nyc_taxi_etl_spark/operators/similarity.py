@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import pin
+
 __all__ = [
     "dot",
     "norm",
@@ -356,13 +358,13 @@ def hyperplane_lsh_pairs(
     # folds per vector, the operator's dominant row-local cost.
     # Materialize once (rows are three scalars — id, tbl, bucket — so
     # the checkpoint is narrow) instead of running the fold subtree
-    # twice. Eager localCheckpoint, not persist: the returned frame is
-    # lazy, so a persist could never be unpersisted (dedup.py
-    # convention).
-    banded = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(bucket_arr).alias("tbl", "bucket"),
-    ).localCheckpoint(eager=True)
+    # twice.
+    banded = pin(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.posexplode(bucket_arr).alias("tbl", "bucket"),
+        )
+    )
     probed = banded
     if probe_hamming == 1:
         # identity + each single-bit flip, exploded row-locally; only

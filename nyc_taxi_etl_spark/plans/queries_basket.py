@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from .queries import query, t
 
 _PAIR_MIN_SUPPORT = 2
@@ -24,14 +25,14 @@ def baskets_of(li: DataFrame) -> DataFrame:
     """(l_orderkey, ps) with ps = the order's SORTED deduplicated part
     array — ONE groupBy(order) exchange; collect_set folds the
     (order, part) dedup into the same shuffle, so no separate
-    DISTINCT pass exists. Eagerly localCheckpointed: the frame feeds
-    pair generation, per-part marginals, and the order total (3
-    consumers), and an in-entry persist() could never be unpersisted
-    (the entry returns a lazy frame — the r6 cache-leak class)."""
-    b = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("ps")
+    DISTINCT pass exists. Pinned (``pins.pin``): the frame feeds pair
+    generation, per-part marginals, and the order total (3
+    consumers)."""
+    return pin(
+        li.groupBy("l_orderkey").agg(
+            F.array_sort(F.collect_set("l_partkey")).alias("ps")
+        )
     )
-    return b.localCheckpoint(eager=True)
 
 
 def basket_pair_counts(baskets: DataFrame, min_support: int) -> DataFrame:

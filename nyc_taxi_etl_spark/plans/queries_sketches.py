@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import keyed_sketches, trailing_union, union_estimate
+from ..pins import pin
 from .queries import query, t
 
 
@@ -83,10 +84,10 @@ def distinct_users_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("target_date")
         .agg(F.countDistinct("user_id").cast("long").alias("exact_users_7d"))
     )
-    daily = keyed_sketches(
-        ev.withColumn("d", F.to_date("ts")), ["d"], "user_id"
-    ).localCheckpoint(eager=True)  # shared by both sketch paths, no
-    # persist-leak across repeated calls (bench runs entries 5x)
+    # shared by both sketch paths
+    daily = pin(
+        keyed_sketches(ev.withColumn("d", F.to_date("ts")), ["d"], "user_id")
+    )
     per_day = union_estimate(daily, ["d"], out_col="est_users")
     trailing = trailing_union(daily, "d", days=7, out_col="est_users_7d")
     ok = (

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import normal_p_sql, normal_two_sided_p, r4
+from ..pins import pin
 from .queries import query, t
 
 _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -91,11 +92,8 @@ def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = docs.groupBy("lang", "source").agg(
         F.count("*").cast("double").alias("o")
     )
-    # marginals + cells share it — eager localCheckpoint, not persist
-    # (same class as the r6 ngram-candidates fix): the return is lazy
-    # so a persist could never be unpersisted and would accumulate
-    # CacheManager entries per bench/oracle call
-    obs = obs.localCheckpoint(eager=True)
+    # marginals + cells share it
+    obs = pin(obs)
     langs = obs.groupBy("lang").agg(F.sum("o").alias("rl"))
     srcs = obs.groupBy("source").agg(F.sum("o").alias("cs"))
     n = obs.agg(F.sum("o").alias("n"))
@@ -258,21 +256,9 @@ def value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n"))
         )
 
-    # eager localCheckpoint, not persist (r7, same class as the ngram
-    # candidates fix): each <=10-row bin table feeds two plan sites,
-    # the return is lazy so a persist here could never be unpersisted
-    # and would accumulate cache entries per bench/oracle call; the
-    # checkpoint blocks are ContextCleaner-released when unreferenced
-    rc = (
-        _binned(ref)
-        .withColumnRenamed("n", "n_ref")
-        .localCheckpoint(eager=True)
-    )
-    cc = (
-        _binned(cur)
-        .withColumnRenamed("n", "n_cur")
-        .localCheckpoint(eager=True)
-    )
+    # each <=10-row bin table feeds two plan sites
+    rc = pin(_binned(ref).withColumnRenamed("n", "n_ref"))
+    cc = pin(_binned(cur).withColumnRenamed("n", "n_cur"))
     # window totals derive from the 10-row bin tables (every row lands
     # in exactly one bin) — not from two more full-window scans
     tot = rc.agg(F.sum("n_ref").cast("double").alias("tr")).crossJoin(
@@ -1069,27 +1055,24 @@ _MONTHLY_M_CTE = """m AS (
       GROUP BY 1, 2)"""
 
 
-def _monthly_nation_revenue(
-    spark: SparkSession, sf_dir: str, materialize: bool = False
-) -> DataFrame:
+def _monthly_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(nation, x, y): month index x (months since 1995-01) and exact
     monthly revenue cents y per nation — the bounded post-agg grain
     (nations × months) every trend entry runs its pair/moment math on.
     The one row-scale operation the four entries share: orders joined
     to the customer→nation dims (nation broadcast), one hash agg.
 
-    ``materialize=True`` pins the grain with an eager localCheckpoint:
-    entries that consume it from 3-4 independent subtrees (Theil-Sen's
+    Entries that consume it from 3-4 independent subtrees (Theil-Sen's
     pair sides + month counts, Mann-Kendall's pair sides + tie
-    spectrum, ACF's lag sides + moments) otherwise re-execute the
-    row-scale join+agg once per subtree (r10; the grain is
-    nations×months rows, so the checkpoint is metadata-sized).
-    Single-consumer entries (the OLS moments) skip it — a checkpoint
-    job would only add a driver barrier."""
+    spectrum, ACF's lag sides + moments) wrap it in ``pin`` — lazily
+    each subtree re-executes the row-scale join+agg (r10; the grain
+    is nations×months rows, so the pin is metadata-sized).
+    Single-consumer entries (the OLS moments) do not — a pin job
+    would only add a driver barrier."""
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
     n = t(spark, sf_dir, "nation")
-    grain = (
+    return (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .groupBy(
@@ -1106,9 +1089,6 @@ def _monthly_nation_revenue(
             .alias("y")
         )
     )
-    if materialize:
-        grain = grain.localCheckpoint(eager=True)
-    return grain
 
 
 _TREND_SQL = """    WITH {m_cte},
@@ -1582,7 +1562,7 @@ def nation_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain-local rank window. The same posture as the OLS entry: the
     100-TB cost is the first aggregation, everything after is
     metadata-sized."""
-    monthly = _monthly_nation_revenue(spark, sf_dir, materialize=True)
+    monthly = pin(_monthly_nation_revenue(spark, sf_dir))
     a = monthly.alias("a")
     b = monthly.alias("b")
     pairs = a.join(
@@ -1690,7 +1670,7 @@ def nation_revenue_mannkendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded (nation, month) POST-AGG grain (≤ C(months,2) pairs
     per nation), after one hash agg that is the only row-scale work.
     The tie spectrum is a second tiny agg at the (nation, y) grain."""
-    monthly = _monthly_nation_revenue(spark, sf_dir, materialize=True)
+    monthly = pin(_monthly_nation_revenue(spark, sf_dir))
     a = monthly.alias("a")
     b = monthly.alias("b")
     sgn = (
@@ -1837,7 +1817,7 @@ def nation_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a grain-local range self-join (≤ {L} pairs per month) and two
     tiny aggs — the Theil-Sen/Mann-Kendall posture: row-scale work is
     exactly one aggregation, everything after is metadata-sized."""
-    monthly = _monthly_nation_revenue(spark, sf_dir, materialize=True)
+    monthly = pin(_monthly_nation_revenue(spark, sf_dir))
     y19 = F.col("y").cast("decimal(19,0)")
     mom = monthly.groupBy("nation").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -28,6 +28,7 @@ from ..operators.lm import (
     train_unigram,
 )
 from ..operators.redact import PII_RULES, redact_documents
+from ..pins import pin
 from .queries import query, t
 from .queries_text import _SQL_TOKENS
 
@@ -201,9 +202,7 @@ def doc_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scorer consumes the model twice (corpus totals + per-token
     # join); materialize the vocab-grain aggregate once instead of
     # re-running the tokenize+agg training pass per reference
-    return score_documents(
-        docs, train_unigram(docs).localCheckpoint(eager=True)
-    )
+    return score_documents(docs, pin(train_unigram(docs)))
 
 
 @query(
@@ -616,8 +615,8 @@ def doc_lm_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 extra corpus tokenizations without this. Both frames are
     # aggregates (vocab / distinct-pair grain), far smaller than the
     # corpus they summarize.
-    uni = train_unigram(docs).localCheckpoint(eager=True)
-    big = train_bigram(docs).localCheckpoint(eager=True)
+    uni = pin(train_unigram(docs))
+    big = pin(train_bigram(docs))
     return score_documents_bigram(docs, uni, big)
 
 
@@ -955,9 +954,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     # model checkpoint: see doc_lm_scores (the scorer reads it twice)
-    scored = score_documents(
-        docs, train_unigram(docs).localCheckpoint(eager=True)
-    )
+    scored = score_documents(docs, pin(train_unigram(docs)))
     sc = (
         scored.join(docs.select("doc_id", "lang"), "doc_id")
         .filter(F.col("perplexity").isNotNull())

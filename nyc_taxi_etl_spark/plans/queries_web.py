@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import text as X
+from ..pins import pin
 from .queries import query, t
 
 # deterministic synthetic URL, same construction in both engines
@@ -210,11 +211,8 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, w in enumerate(_BM25_TERMS)
         ],
     )
-    # shared by stats, dfreq, and scoring — eager localCheckpoint, not
-    # persist (same class as the r6 ngram-candidates fix): the return
-    # is lazy so a persist could never be unpersisted and would
-    # accumulate CacheManager entries per bench/oracle call
-    per_doc = per_doc.localCheckpoint(eager=True)
+    # shared by stats, dfreq, and scoring
+    per_doc = pin(per_doc)
     stats = per_doc.agg(
         F.avg("dl").alias("avgdl"),
         *[

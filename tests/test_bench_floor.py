@@ -243,3 +243,13 @@ def test_reset_floor_zero_means_off(tmp_path, monkeypatch) -> None:
         # the downward ratchet still refuses to loosen
         bench.write_probe_floor(0.50, 0.1, path)
         assert bench.load_probe_floor(path)["probe_floor_s"] == 0.10, off
+
+
+def test_floor_status_names_all_four_cases() -> None:
+    """The compact line's ``floor`` field: a run with no committed
+    floor for this host says so instead of looking like a clean run."""
+    ref = {"probe_floor_s": 0.12}
+    assert bench.floor_status(None, False, False) == "no-reference-for-host"
+    assert bench.floor_status(ref, False, False) == "ok"
+    assert bench.floor_status(ref, False, True) == "degraded"
+    assert bench.floor_status(ref, True, False) == "contended"

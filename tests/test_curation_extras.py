@@ -533,3 +533,28 @@ def test_pipeline_cap_and_weighted_stages(spark):
     assert sorted(
         map(tuple, sampled.select("doc_id", "chunk_ix").collect())
     ) == sorted(map(tuple, again.select("doc_id", "chunk_ix").collect()))
+
+
+def test_curation_drops_null_ids(spark):
+    """Contract: ids are unique and non-null; a null-id row is dropped
+    before scoring. It used to surface as an all-null curated row
+    (its text lost) and as a 'kept' audit row with a null keeper."""
+    from nyc_taxi_etl_spark.operators.curate import (
+        curate_documents,
+        curation_audit,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog by the river"),
+            (2, "a completely different sentence about spring weather here"),
+            (None, "yet another document with enough plain words to pass"),
+        ],
+        "doc_id long, text string",
+    )
+    curated = curate_documents(docs).collect()
+    audit = curation_audit(docs).collect()
+    assert all(r.doc_id is not None for r in curated), curated
+    assert all(r.doc_id is not None for r in audit), audit
+    kept = {r.doc_id for r in audit if r.fate == "kept"}
+    assert kept == {r.doc_id for r in curated}

@@ -181,12 +181,14 @@ def test_training_split_one_agg_shuffle(spark):
 def test_pagerank_round_is_single_exchange_when_copartitioned(spark):
     """PageRank's per-round contract at scale: with the edge⋈degree
     relation and node list hash-repartitioned once on their join keys
-    (operators/graph.py::pagerank), a power-iteration round needs
-    exactly ONE shuffle exchange — the contribution agg on dst. The
-    probe mirrors the loop body with AQE + auto-broadcast off (the
+    and pinned (operators/graph.py::pagerank), a power-iteration round
+    needs exactly ONE shuffle exchange — the contribution agg on dst.
+    The probe mirrors the loop body with AQE + auto-broadcast off (the
     large-table regime where co-partitioning is what saves the
     exchanges; with them on, tiny test relations all broadcast)."""
     from pyspark.sql import functions as F
+
+    from nyc_taxi_etl_spark.pins import pin
 
     saved = {
         k: spark.conf.get(k)
@@ -207,18 +209,20 @@ def test_pagerank_round_is_single_exchange_when_copartitioned(spark):
         deg = e.groupBy("src").agg(
             F.count("*").cast("double").alias("outdeg")
         )
-        ed = e.join(deg, "src").repartition(n_part, "src").persist()
-        nodes = (
+        ed = pin(
+            e.join(deg, "src")
+            .repartition(n_part, "src")
+            .sortWithinPartitions("src")
+        )
+        nodes, m = pin(
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct()
             .repartition(n_part, "node")
-            .persist()
+            .sortWithinPartitions("node"),
+            n=F.count(F.lit(1)),
         )
-        n = nodes.count()
-        ranks = nodes.select(
-            "node", F.lit(1.0 / n).alias("rank")
-        ).localCheckpoint(eager=True)
+        ranks = pin(nodes.select("node", F.lit(1.0 / m["n"]).alias("rank")))
         # one loop-body round (graph.py::pagerank)
         contrib = (
             ed.join(ranks, ed["src"] == ranks["node"])
@@ -236,9 +240,8 @@ def test_pagerank_round_is_single_exchange_when_copartitioned(spark):
         )
         raw.collect()
 
-        # walk the executed plan; children() naturally stops at
-        # InMemoryTableScan (cached build plans are not children), so
-        # only THIS round's exchanges are counted
+        # walk the executed plan; a pinned frame is a leaf scan
+        # (RDDScanExec), so only THIS round's exchanges are counted
         shuffles = []
         def walk(jnode):
             name = jnode.getClass().getSimpleName()
@@ -250,8 +253,6 @@ def test_pagerank_round_is_single_exchange_when_copartitioned(spark):
         walk(raw._jdf.queryExecution().executedPlan())
         assert len(shuffles) == 1, shuffles
         assert "dst" in shuffles[0], shuffles  # the contribution agg
-        ed.unpersist()
-        nodes.unpersist()
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -371,24 +372,24 @@ def test_tpch_scalar_aggregates_reuse_exchange(spark):
         assert "ReusedExchange" in executed, name
 
 
-def test_ppjoin_no_cartesian_single_shingle_pass_per_side(spark):
+def test_ppjoin_no_cartesian_single_shingle_pass_per_side(spark, monkeypatch):
     """PPJoin: candidates come from the prefix equi-join (no nested
     loop anywhere), and the doc-partitioned rank window is never a
     single-partition sort.
 
-    Inspected with ``materialize=False``: the production path eagerly
-    localCheckpoints the shingle/prefix frames (they feed multiple
-    plan sites), which truncates those subtrees out of the final
-    frame's explain — the lazy variant exposes the full plan the
-    checkpoint jobs execute."""
+    Inspected with ``pin`` replaced by the identity: the production
+    path pins the shingled corpus (it feeds multiple plan sites),
+    which truncates that subtree out of the final frame's explain —
+    the lazy variant exposes the full plan the pin job executes."""
     import io as _io
     import contextlib as _ctx
 
-    from nyc_taxi_etl_spark.operators.ppjoin import ppjoin_pairs
+    from nyc_taxi_etl_spark.operators import ppjoin as ppjoin_module
     from nyc_taxi_etl_spark.sources.catalog import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    df = ppjoin_pairs(docs, threshold=0.5, materialize=False)
+    monkeypatch.setattr(ppjoin_module, "pin", lambda df: df)
+    df = ppjoin_module.ppjoin_pairs(docs, threshold=0.5)
     buf = _io.StringIO()
     with _ctx.redirect_stdout(buf):
         df.explain("formatted")
@@ -399,7 +400,8 @@ def test_ppjoin_no_cartesian_single_shingle_pass_per_side(spark):
     # the rank window partitions by doc — a global (unpartitioned)
     # window would plan an Exchange SinglePartition
     assert "SinglePartition" not in plan
-    # the production (materialized) plan keeps the same join posture
+    # the production (pinned) plan keeps the same join posture
+    monkeypatch.undo()
     mplan = _plan(spark, "ppjoin_near_pairs")
     assert "CartesianProduct" not in mplan
     assert "BroadcastNestedLoopJoin" not in mplan

@@ -327,31 +327,74 @@ def test_entry_leaves_no_cached_frames(spark, entry):
     assert cm.isEmpty() or not before_empty
 
 
-def test_no_entry_level_persist_without_release():
-    """Static guard for the whole leak class: no plans/ module and no
-    operator on a lazy-return path may call .persist() — every
-    multi-consumer subframe must use an eager localCheckpoint (blocks
-    are ContextCleaner-released when the frame is unreferenced) or be
-    released in-function. Operators that DO materialize eagerly and
-    unpersist in-function are listed explicitly."""
+def _modules_matching(pattern: str) -> set[str]:
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parent.parent / "nyc_taxi_etl_spark"
-    # graph.py unpersists after its iterative loops; versioned.py
-    # persists inside eager write paths and unpersists in finally.
-    allowed = {"operators/graph.py", "sources/versioned.py"}
-    offenders = []
-    for py in root.rglob("*.py"):
-        rel = str(py.relative_to(root))
-        if rel in allowed:
-            continue
-        if re.search(r"\.persist\(", py.read_text()):
-            offenders.append(rel)
-    assert offenders == [], (
-        f"persist() without a release path in {offenders}; use an eager "
-        "localCheckpoint (or unpersist in-function) instead"
+    return {
+        str(py.relative_to(root))
+        for py in root.rglob("*.py")
+        if re.search(pattern, py.read_text())
+    }
+
+
+def test_no_entry_level_persist_without_release():
+    """Static guard for the whole leak class: no plans/ module and no
+    operator on a lazy-return path may call .persist() — every
+    multi-consumer subframe must use ``pins.pin`` (an eager
+    localCheckpoint whose blocks are ContextCleaner-released when the
+    frame is unreferenced) or be released in-function. Modules that DO
+    materialize eagerly and unpersist in-function are listed
+    explicitly."""
+    # versioned.py persists inside eager write paths and unpersists
+    # in finally.
+    allowed = {"sources/versioned.py"}
+    offenders = _modules_matching(r"\.persist\(") - allowed
+    assert offenders == set(), (
+        f"persist() without a release path in {offenders}; use "
+        "pins.pin (or unpersist in-function) instead"
     )
+
+
+def test_every_pin_goes_through_pins_module():
+    """Static guard: every eager materialization is ``pins.pin``, so
+    there is one place that decides how a frame is pinned."""
+    assert _modules_matching(r"\.localCheckpoint\(") == {"pins.py"}
+
+
+def test_observations_only_in_pin_and_etl_writes():
+    """Static guard: driver-side metrics ride a pin (``pin(df, n=...)``);
+    the only other Observations are the ETL write's row counts."""
+    assert _modules_matching(r"Observation\(") == {"pins.py", "etl.py"}
+
+
+def test_pin_contract(spark):
+    """``pin``: metrics equal a direct agg, the pin runs exactly ONE
+    job (metrics ride it), the returned plan is a leaf scan, and
+    nothing lands in the CacheManager."""
+    from nyc_taxi_etl_spark.pins import pin
+
+    df = spark.range(0, 1000, numPartitions=4).withColumn("v", F.col("id") % 7)
+    metrics = {"n": F.count(F.lit(1)), "s": F.sum("v")}
+    want = df.agg(*[c.alias(n) for n, c in metrics.items()]).first()
+    sc = spark.sparkContext
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cm.isEmpty()
+    sc.setJobGroup("pin-contract", "pin contract")
+    try:
+        pinned, got = pin(df, **metrics)
+        plain = pin(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pin-contract")
+    assert len(jobs) == 2, jobs  # one job per pin, none for the metrics
+    assert (got["n"], got["s"]) == (want["n"], want["s"])
+    for frame in (pinned, plain):
+        plan = frame._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LogicalRDD", plan.toString()
+        assert sorted(frame.collect()) == sorted(df.collect())
+    assert cm.isEmpty() or not was_empty
 
 
 # ---------------------------------------------------------------- r9 task #8
