@@ -5,6 +5,12 @@ to the driver's verify harness: ``entry`` smoke-runs the flagship query
 at sf0.001, ``queries``/``oracle_sql`` expose the full catalog
 (nyc_taxi_etl_spark/plans/queries.py) for the DuckDB comparison at
 sf0.01.
+
+The harness that calls these functions builds its own session, not
+``session.get_spark``, so that session's Python workers run Spark's
+stock daemon and import ``pyspark.zip``: the engine's worker daemon
+(``nyc_taxi_etl_spark.pydaemon``) is not set there. Results are the
+same either way; only the per-task set-up cost differs.
 """
 
 from __future__ import annotations

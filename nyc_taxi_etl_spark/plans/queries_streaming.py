@@ -24,8 +24,10 @@ cross-engine hash is timezone-representation-proof.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,15 +44,14 @@ from .queries import query
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _stage_events(sf_dir: str, d: str) -> None:
     # the file source requires a directory of data files: stage
-    # events.parquet into a temp dir via symlinks (no data copy).
+    # events.parquet into ``d`` via symlinks (no data copy).
     # Two layouts exist — the driver testdata is a single parquet
     # FILE; Spark-written datasets (tools/gen_scale_data.py) are a
     # DIRECTORY of part files, whose nested dir would be invisible to
     # the source's non-recursive listing — so link part files
     # individually in that case.
-    d = tempfile.mkdtemp(prefix="events_src_")
     src = f"{sf_dir}/events.parquet"
     if os.path.isdir(src):
         for i, part in enumerate(sorted(os.listdir(src))):
@@ -58,17 +59,32 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.symlink(f"{src}/{part}", f"{d}/part_{i}.parquet")
     else:
         os.symlink(src, f"{d}/events.parquet")
-    return read_events_stream(spark, d, max_files_per_trigger=None)
 
 
-def _drain(sdf: DataFrame, mode: str) -> DataFrame:
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    plan: Callable[[DataFrame], DataFrame],
+    mode: str,
+) -> DataFrame:
+    """Drain ``plan(events stream)`` with ``Trigger.AvailableNow`` into a
+    memory sink and return the sink's table. The staged source and the
+    checkpoint are removed once the drain ends: the sink holds the whole
+    result, and nothing reads either directory again."""
     # looked up per call, not bound at import: a caller may rebind
     # scratch.scratch_dir to move the checkpoints elsewhere
     from ..sources.scratch import scratch_dir
 
-    return run_available_now(
-        sdf, "q_" + uuid.uuid4().hex[:12], scratch_dir("ckpt_"), output_mode=mode
-    )
+    src, ckpt = tempfile.mkdtemp(prefix="events_src_"), scratch_dir("ckpt_")
+    try:
+        _stage_events(sf_dir, src)
+        stream = read_events_stream(spark, src, max_files_per_trigger=None)
+        return run_available_now(
+            plan(stream), "q_" + uuid.uuid4().hex[:12], ckpt, output_mode=mode
+        )
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(
@@ -87,7 +103,9 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, complete mode) — must equal the batch GROUP BY the oracle
     runs. Scale: per-micro-batch partial aggregation into the state
     store; state is O(open windows × event types)."""
-    out = _drain(tumbling_event_counts(_events_stream(spark, sf_dir), watermark=None), "complete")
+    out = _drain(
+        spark, sf_dir, lambda s: tumbling_event_counts(s, watermark=None), "complete"
+    )
     return out.select(
         F.date_format("window_start", _FMT).alias("window_start"),
         "event_type",
@@ -128,7 +146,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark in production (complete mode here only to compare the
     full result)."""
     out = _drain(
-        user_session_windows(_events_stream(spark, sf_dir), gap="30 minutes", watermark=None),
+        spark,
+        sf_dir,
+        lambda s: user_session_windows(s, gap="30 minutes", watermark=None),
         "complete",
     )
     return out.select(
@@ -155,7 +175,7 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user totals) drained over the whole table; its final emission
     per user must equal the batch aggregate. ``max_by`` picks the last
     (highest events_seen) emission per user."""
-    out = _drain(user_running_totals(_events_stream(spark, sf_dir)), "update")
+    out = _drain(spark, sf_dir, user_running_totals, "update")
     return out.groupBy("user_id").agg(
         F.max("events_seen").alias("events_seen"),
         F.round(F.max_by("value_total", "events_seen"), 4).alias("value_total"),
@@ -194,7 +214,7 @@ def streaming_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import sliding_value_avg
 
     out = _drain(
-        sliding_value_avg(_events_stream(spark, sf_dir), watermark=None), "complete"
+        spark, sf_dir, lambda s: sliding_value_avg(s, watermark=None), "complete"
     )
     return out.select(
         F.date_format("window_start", _FMT).alias("window_start"),
@@ -234,10 +254,7 @@ def streaming_purchase_error_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     emits eagerly (no watermark-close latency)."""
     from ..streaming import purchase_error_stream_join
 
-    out = _drain(
-        purchase_error_stream_join(_events_stream(spark, sf_dir)), "append"
-    )
-    return out
+    return _drain(spark, sf_dir, purchase_error_stream_join, "append")
 
 
 @query(
@@ -309,9 +326,7 @@ def streaming_ewma_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     key concatenated before the in-order fold — see stateful.py)."""
     from ..streaming.stateful import ewma_anomaly_stream
 
-    out = _drain(
-        ewma_anomaly_stream(_events_stream(spark, sf_dir)), "append"
-    )
+    out = _drain(spark, sf_dir, ewma_anomaly_stream, "append")
     return (
         out.groupBy("user_id")
         .agg(
@@ -365,14 +380,13 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tier"),
         )
     )
-    stream = _events_stream(spark, sf_dir)
-    enriched = stream.join(tiers, "user_id").groupBy(
-        "tier", "event_type"
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-    return _drain(enriched, "complete")
+    def enriched(stream: DataFrame) -> DataFrame:
+        return stream.join(tiers, "user_id").groupBy("tier", "event_type").agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+
+    return _drain(spark, sf_dir, enriched, "complete")
 
 
 @query(
@@ -398,19 +412,21 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle-safety requirement for streaming dedup)."""
     from ..streaming import dedup_events_stream
 
-    s = _events_stream(spark, sf_dir).select(
-        "ts",
-        "event_type",
-        "user_id",
-        F.date_trunc("minute", F.col("ts")).alias("minute"),
-    )
-    dd = dedup_events_stream(
-        s, keys=("event_type", "user_id", "minute"), watermark="1 hour"
-    )
-    agg = dd.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("unique_user_minutes")
-    )
-    return _drain(agg, "complete")
+    def counts(stream: DataFrame) -> DataFrame:
+        s = stream.select(
+            "ts",
+            "event_type",
+            "user_id",
+            F.date_trunc("minute", F.col("ts")).alias("minute"),
+        )
+        dd = dedup_events_stream(
+            s, keys=("event_type", "user_id", "minute"), watermark="1 hour"
+        )
+        return dd.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("unique_user_minutes")
+        )
+
+    return _drain(spark, sf_dir, counts, "complete")
 
 
 from .queries_sketches import cms_sketch_sql as _cms_sketch_sql
@@ -438,9 +454,12 @@ def streaming_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     other streaming entries)."""
     from ..operators.sketches import cms_table
 
-    s = _events_stream(spark, sf_dir).select("user_id")
-    sketch = cms_table(s, "user_id", depth=4, width=64, seed=7)
-    out = _drain(sketch, "complete")
+    out = _drain(
+        spark,
+        sf_dir,
+        lambda s: cms_table(s.select("user_id"), "user_id", depth=4, width=64, seed=7),
+        "complete",
+    )
     return out.select(
         F.col("j").cast("long").alias("j"),
         F.col("bucket").cast("long").alias("bucket"),
@@ -487,9 +506,14 @@ def streaming_value_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained table (see the batch entry)."""
     from ..operators.ddsketch import ddsketch_buckets
 
-    s = _events_stream(spark, sf_dir).select("event_type", "value")
-    sketch = ddsketch_buckets(s, "value", ["event_type"], alpha=0.01)
-    out = _drain(sketch, "complete")
+    out = _drain(
+        spark,
+        sf_dir,
+        lambda s: ddsketch_buckets(
+            s.select("event_type", "value"), "value", ["event_type"], alpha=0.01
+        ),
+        "complete",
+    )
     return out.select(
         F.col("event_type"),
         F.col("bucket").cast("long").alias("bucket"),
@@ -544,9 +568,9 @@ def streaming_purchase_error_left(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming import purchase_error_stream_join
 
     return _drain(
-        purchase_error_stream_join(
-            _events_stream(spark, sf_dir), how="left_outer"
-        ),
+        spark,
+        sf_dir,
+        lambda s: purchase_error_stream_join(s, how="left_outer"),
         "append",
     )
 
@@ -631,7 +655,7 @@ def streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted once — see _ordered_batch)."""
     from ..streaming.stateful import holt_trend_stream
 
-    out = _drain(holt_trend_stream(_events_stream(spark, sf_dir)), "append")
+    out = _drain(spark, sf_dir, holt_trend_stream, "append")
     return out.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_scored"),
         F.max_by("level_after", "n_after").alias("last_level"),
@@ -670,7 +694,7 @@ def streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_stateful_streaming.py."""
     from ..streaming.stateful import CUSUM_H, cusum_drift_stream
 
-    out = _drain(cusum_drift_stream(_events_stream(spark, sf_dir)), "append")
+    out = _drain(spark, sf_dir, cusum_drift_stream, "append")
     return out.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.max_by("pos_after", "n_after").alias("final_pos"),

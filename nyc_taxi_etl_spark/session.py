@@ -20,6 +20,10 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_all"]
 
+# the directory that holds this package: Python workers start from the
+# JVM's cwd, so they find the worker daemon (``pydaemon``) through it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "nyc_taxi_etl_spark",
@@ -99,8 +103,26 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers import the pip-installed pyspark instead of
+        # $SPARK_HOME's pyspark.zip and the spark-core jar: every task's
+        # importlib.invalidate_caches() made each cached zipimporter
+        # re-read its archive directory: 0.22-0.26 s of CPU per task,
+        # 0.0001 s without the archives. pydaemon.py keeps them when
+        # the installed pyspark's or py4j's version differs.
+        # perfbench stateful_streams on a 4-vCPU VM, 10 interleaved
+        # pairs: cpu_s median 5.06 -> 3.61 s (lower in 10/10); worker
+        # CPU per drain 2.0 -> 1.03 s. The conf is static: it takes
+        # effect for the first session in a JVM.
+        .config("spark.python.daemon.module", "nyc_taxi_etl_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(
+            p for p in (_PACKAGE_ROOT, extra.pop("spark.executorEnv.PYTHONPATH", None)) if p
+        ),
+    )
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -333,3 +333,28 @@ def test_catalog_drain_state_width_is_min_8_cores(spark, monkeypatch):
     assert ops
     want = min(8, spark.sparkContext.defaultParallelism)
     assert {op["numShufflePartitions"] for op in ops} == {want}
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_ewma_anomalies", "streaming_tumbling_counts"]
+)
+def test_catalog_drain_removes_its_scratch_dirs(spark, duck, monkeypatch, tmp_path, name):
+    """A catalog drain removes its staged source and its checkpoint once
+    it has drained (the memory sink holds the result), and the returned
+    frame still matches the oracle after both are gone."""
+    from nyc_taxi_etl_spark.plans import ORACLE, ORACLE_EXTRA, QUERIES, QUERIES_EXTRA
+    from nyc_taxi_etl_spark.sources import scratch
+
+    from .compare import assert_frames_match
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(
+        scratch,
+        "scratch_dir",
+        lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=tmp_path),
+    )
+    out = {**QUERIES, **QUERIES_EXTRA}[name](spark, SF_DIR)
+    left = [d for d in os.listdir(tmp_path) if d.startswith(("ckpt_", "events_src_"))]
+    assert not left
+    want = duck.execute({**ORACLE, **ORACLE_EXTRA}[name]).df()
+    assert_frames_match(out.toPandas(), want, name)

@@ -12,14 +12,18 @@ Usage:
 Prints one JSON line per query:
     {"name":..., "build_s":..., "runs":[...], "min_s":...,
      "jobs":N, "stages":N, "tasks":N, "compiles":N,
-     "jvm_child_cpu_s":...}
+     "jvm_child_cpu_s":..., "py_worker_cpu_s":...}
 
 ``compiles`` (classes Janino compiled: the ``CodegenMetrics`` count)
 and ``jvm_child_cpu_s`` (CPU of the processes the JVM forked and
 reaped, e.g. the ``chmod`` calls of the local file system when no
 native Hadoop library is loaded: ``cutime + cstime`` from
 ``/proc/<jvm>/stat``) cover the plan build and every run. They show
-two fixed-cost classes a wall-time profile hides.
+two fixed-cost classes a wall-time profile hides. ``py_worker_cpu_s``
+(CPU of the Python daemon and workers under the JVM: each live Python
+process's ``utime + stime`` plus the ``cutime + cstime`` of the workers
+it reaped) covers the same span; ``jvm_child_cpu_s`` cannot see it,
+because the JVM never reaps the daemon while the session lives.
 """
 
 from __future__ import annotations
@@ -38,12 +42,40 @@ from nyc_taxi_etl_spark.session import get_spark  # noqa: E402
 ALL = {**QUERIES, **QUERIES_EXTRA}
 
 
+def _stat(pid: int) -> tuple[str, list[str]]:
+    """``(comm, fields 3..)`` of ``/proc/<pid>/stat``."""
+    with open(f"/proc/{pid}/stat") as f:
+        data = f.read()
+    return data[data.find("(") + 1 : data.rfind(")")], data[data.rfind(")") + 2 :].split()
+
+
 def jvm_child_cpu_s(pid: int) -> float:
     """CPU seconds of the reaped children of process ``pid``."""
-    with open(f"/proc/{pid}/stat") as f:
-        rest = f.read().rsplit(")", 1)[1].split()
+    rest = _stat(pid)[1]
     # fields 16-17 of proc(5): cutime, cstime
     return (int(rest[13]) + int(rest[14])) / os.sysconf("SC_CLK_TCK")
+
+
+def py_worker_cpu_s(jvm: int) -> float:
+    """CPU seconds of the live Python processes under process ``jvm``
+    (the worker daemon and its workers), each with the children it
+    reaped (fields 14-17 of proc(5): utime, stime, cutime, cstime)."""
+    procs = {}
+    for name in os.listdir("/proc"):
+        if name.isdigit():
+            try:
+                comm, rest = _stat(int(name))
+            except OSError:  # the process ended while we looked
+                continue
+            procs[int(name)] = (int(rest[1]), comm, sum(int(x) for x in rest[11:15]))
+    tree, frontier = set(), [jvm]
+    while frontier:
+        parent = frontier.pop()
+        kids = [p for p, (pp, _, _) in procs.items() if pp == parent]
+        tree.update(kids)
+        frontier += kids
+    ticks = sum(procs[p][2] for p in tree if procs[p][1].startswith("python"))
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -70,6 +102,7 @@ def main() -> None:
             continue
         compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
         child0 = jvm_child_cpu_s(jvm_pid)
+        py0 = py_worker_cpu_s(jvm_pid)
         t0 = time.perf_counter()
         df = ALL[name](spark, sf_dir)
         build_s = time.perf_counter() - t0
@@ -127,6 +160,7 @@ def main() -> None:
                     "jvm_child_cpu_s": round(
                         jvm_child_cpu_s(jvm_pid) - child0, 3
                     ),
+                    "py_worker_cpu_s": round(py_worker_cpu_s(jvm_pid) - py0, 3),
                 }
             ),
             flush=True,
