@@ -36,13 +36,7 @@ def cmd_etl(args) -> int:
     raw_paths = dict(kv.split("=", 1) for kv in args.raw)
     spark = _session("etl")
     try:
-        res = run_etl(
-            spark,
-            raw_paths,
-            args.output,
-            target_files=args.target_files,
-            collect_metrics=not args.no_metrics,
-        )
+        res = run_etl(spark, raw_paths, args.output)
         print(
             json.dumps(
                 {
@@ -243,8 +237,6 @@ def main(argv: list[str] | None = None) -> int:
         help="cab_type=parquet-path pairs (e.g. yellow=/data/raw/yellow)",
     )
     pe.add_argument("--output", required=True)
-    pe.add_argument("--target-files", type=int, default=None)
-    pe.add_argument("--no-metrics", action="store_true")
     pe.set_defaults(fn=cmd_etl)
 
     pq = sub.add_parser("query", help="run one catalog query")

@@ -12,7 +12,7 @@ Scale posture:
   * curated layout ``cab_type=*/year=*/month=*`` → partition pruning
     for every time/cab-sliced query;
   * no ``coalesce(1)`` (the reference's laptop-ism): AQE sizes output
-    tasks; callers can set ``target_files`` per partition if needed;
+    tasks;
   * metrics via a count aggregate, not repeated ``df.count()`` scans
     (the reference double-counted the scan, ``etl_yellow_s3.py:48,52``).
 """
@@ -44,8 +44,6 @@ def run_etl(
     raw_paths: dict[str, str],
     curated_path: str,
     cfg: CleanConfig = CleanConfig(),
-    target_files: int | None = None,
-    collect_metrics: bool = True,
 ) -> EtlResult:
     """Read raw per-cab parquet dirs → unified clean table →
     ``partitionBy(cab_type, year, month)`` parquet.
@@ -60,35 +58,23 @@ def run_etl(
     # curated table — zero extra scans (the previous form re-read the
     # curated output for rows_out and counted each raw input
     # separately: three additional jobs at 100 TB).
-    obs_in = obs_out = None
-    if collect_metrics:
-        obs_in, obs_out = Observation("etl_in"), Observation("etl_out")
-        unified = unified.observe(
-            obs_in, F.count(F.lit(1)).alias("rows_in")
-        )
-    cleaned = clean(unified, cfg)
-    if collect_metrics:
-        cleaned = cleaned.observe(
-            obs_out,
-            F.count(F.lit(1)).alias("rows_out"),
-            F.sum(F.col("fare_amount").isNull().cast("long")).alias(
-                "null_fares"
-            ),
-            # DISTINCT aggregates are rejected in observed metrics;
-            # the HLL estimate is exact at this cardinality (≤4 cabs)
-            F.approx_count_distinct("cab_type").alias("cab_types_out"),
-        )
-
-    writer = cleaned
-    if target_files is not None:
-        writer = cleaned.coalesce(target_files)
+    obs_in, obs_out = Observation("etl_in"), Observation("etl_out")
+    unified = unified.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+    cleaned = clean(unified, cfg).observe(
+        obs_out,
+        F.count(F.lit(1)).alias("rows_out"),
+        F.sum(F.col("fare_amount").isNull().cast("long")).alias(
+            "null_fares"
+        ),
+        # DISTINCT aggregates are rejected in observed metrics;
+        # the HLL estimate is exact at this cardinality (≤4 cabs)
+        F.approx_count_distinct("cab_type").alias("cab_types_out"),
+    )
     (
-        writer.write.mode("overwrite")
+        cleaned.write.mode("overwrite")
         .partitionBy("cab_type", "year", "month")
         .parquet(curated_path)
     )
-    if not collect_metrics:
-        return EtlResult(rows_in=-1, rows_out=-1, curated_path=curated_path)
     m_out = obs_out.get
     return EtlResult(
         rows_in=int(obs_in.get["rows_in"]),

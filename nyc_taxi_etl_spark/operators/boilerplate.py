@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _ensure_parallelism
+from .. import width
 from .text import _norm, tokens
 
 __all__ = ["boilerplate_shingles", "remove_boilerplate"]
@@ -67,7 +67,7 @@ def boilerplate_shingles(
     ``(shingle, doc_freq)``. One explode + one hash-agg; the result is
     bounded by ``avg_shingles_per_doc / min_doc_frac`` rows (see module
     docstring), so downstream consumers may broadcast it."""
-    per_doc = _ensure_parallelism(df).select(
+    per_doc = width.spread(df).select(
         F.col(id_col),
         F.explode(
             F.array_distinct(_positional_shingles(_norm(F.col(text_col)), k))
@@ -107,7 +107,7 @@ def remove_boilerplate(
         boilerplate_shingles(df, text_col, id_col, k, min_doc_frac)
         .agg(F.collect_list("shingle").alias("_boiler"))
     )
-    base = _ensure_parallelism(df).select(
+    base = width.spread(df).select(
         F.col(id_col),
         *[F.col(c) for c in passthrough],
         tokens(_norm(F.col(text_col))).alias("_toks"),

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import width
 from ..pins import pin
 from .text import fingerprint, shingles, tokens
 
@@ -124,69 +125,6 @@ def lsh_bucket_stats(banded: DataFrame, max_bucket: int = MAX_BUCKET_WIDTH) -> D
     )
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread CPU-bound hashing across the cluster when the input is
-    under-partitioned (a single small parquet file reads as ONE
-    partition — fine for IO, fatal for 12×md5-per-shingle compute: one
-    core does all the work). At real scale inputs arrive with thousands
-    of files and this is a no-op; the round-robin shuffle of raw
-    text it may add is orders cheaper than serializing the hash work.
-
-    The under-partitioning probe is ``df.inputFiles()`` — pure plan
-    metadata from the already-built file index (NO DataFrame→RDD
-    conversion, which ``rdd.getNumPartitions()`` would force on every
-    dedup entry point at plan-build time).  File count lower-bounds
-    scan parallelism only for large files (``maxPartitionBytes`` then
-    splits further, so skipping the repartition is safe); the one
-    false positive — a single huge file that the scan would split
-    anyway — just adds a repartition that is still the right call for
-    CPU-bound hash work.  Non-file sources (in-memory test frames)
-    return no files: leave them untouched.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # pragma: no cover - exotic sources without a file index
-        return df
-    if 0 < n_files < target:
-        return df.repartition(target)
-    return df
-
-
-def _pin_verify_width(pairs: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition a candidate-pair frame at the session's
-    configured shuffle width before its dedup/verify stage.
-
-    Why (r11, measured on fuzzy/ppjoin/semantic_dedup): the
-    ``distinct()`` that follows candidate generation plans an
-    ENSURE_REQUIREMENTS exchange which AQE coalesces by BYTES — but
-    every row downstream of that exchange pays the expensive per-pair
-    verify (banded Levenshtein DP, ``array_intersect`` over full
-    shingle sets, 64-dim dot folds). A few MB of (id_a, id_b) longs
-    coalesce to 1-2 tasks and tens of CPU-seconds of verify run nearly
-    serial (fuzzy: 14 s vs 4 s at sf0.1). An explicit
-    ``repartition(n, cols)`` is REPARTITION_BY_NUM — it satisfies the
-    distinct's clustering requirement and AQE never shrinks it. Whether
-    it adds an exchange depends on the caller's plan (``Exchange``
-    nodes, shuffle + broadcast, in the sf0.01 physical plan):
-    ``fuzzy_near_pairs`` keeps 6 with or without the pin — it replaces
-    the distinct's exchange; ``ppjoin_near_pairs`` goes from 9 to 10 —
-    without the pin its distinct plans as back-to-back hash aggregates
-    with no exchange, so the pin adds the one exchange that widens the
-    verify. The width comes from ``spark.sql.shuffle.partitions`` —
-    the session's scale-configured parallelism, not a local constant;
-    bytes-based coalescing is simply the wrong model when per-row
-    compute, not transport, dominates (the sizing assumption of guide
-    §2.2 inverted)."""
-    try:
-        n_part = int(
-            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    except (TypeError, ValueError):  # pragma: no cover - exotic conf
-        return pairs
-    return pairs.repartition(n_part, *cols)
-
-
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -235,7 +173,7 @@ def minhash_signatures(
     folds per row — NO explode, zero data-motion shuffles (only the
     parallelism guard when the input is a single file).
     """
-    shingled = _ensure_parallelism(df).select(
+    shingled = width.spread(df).select(
         F.col(id_col), shingles(F.col(text_col), k).alias("__sh")
     )
     hexed = shingled.select(
@@ -355,7 +293,7 @@ def ngram_jaccard_pairs(
     candidate set, not the corpus. Unrestricted mode is for small
     corpora / verification.
     """
-    base = _ensure_parallelism(df)
+    base = width.spread(df)
     if candidates is not None:
         # the candidate frame feeds THREE plan sites (two semi-join
         # prunes via cand_ids + the pair join below); without
@@ -438,7 +376,7 @@ def simhash(
     toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
     # 32-bit token hash from the md5 hex prefix (conv base16→base10),
     # projected once so the 32 per-bit folds share the hashed array.
-    hashed = _ensure_parallelism(df).select(
+    hashed = width.spread(df).select(
         F.col(id_col),
         F.transform(
             toks, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")

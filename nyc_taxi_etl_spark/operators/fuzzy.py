@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _ensure_parallelism, _pin_verify_width
+from .. import width
 from .text import _norm, shingles
 
 __all__ = ["fuzzy_candidates", "fuzzy_near_pairs"]
@@ -65,7 +65,7 @@ def fuzzy_candidates(
     rows to ~0.29 M, and the downstream text-attachment joins + DP
     verifies from 1.13 M pairs to 258 k (r11; VERDICT r10 task #1).
     """
-    base = _ensure_parallelism(df)
+    base = width.spread(df)
     cols = [F.col(id_col).alias("doc")]
     if length_band is not None:
         # normalized length as a column of its own BEFORE the explode:
@@ -117,8 +117,8 @@ def fuzzy_candidates(
     # coalesces it by BYTES, but every downstream row pays the banded
     # Levenshtein DP — at sf0.1 the ~4 MB band-filtered pair set was
     # shrunk to 2 tasks and ~19 CPU-seconds of DP ran 2-wide (measured
-    # 14 s vs 4 s entry). See dedup._pin_verify_width.
-    return _pin_verify_width(pairs, "id_a", "id_b").distinct()
+    # 14 s vs 4 s entry). See width.verify_width.
+    return width.verify_width(pairs, "id_a", "id_b").distinct()
 
 
 def fuzzy_near_pairs(

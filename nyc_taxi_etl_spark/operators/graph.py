@@ -15,26 +15,13 @@ as chained CTEs).
 
 from __future__ import annotations
 
-import contextlib
-import math
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import width
 from ..pins import pin
 
 __all__ = ["hits", "pagerank", "triangle_counts", "bfs_level_hops"]
-
-#: Target edge rows per partition for the per-iteration co-partitioned
-#: layouts. An iteration relation row is fixed-width scalars (two
-#: longs + a double ≈ 24 B in Tungsten), so 2^18 rows ≈ 6 MB —
-#: deliberately small in bytes because iterative rounds are
-#: SCHEDULING-bound long before they are bandwidth-bound: every round
-#: pays (tasks × launch cost) whether or not a task has meaningful
-#: work. Sized so a small graph runs its rounds in a handful of tasks
-#: while a cluster-scale edge list saturates the session's configured
-#: parallelism (the cap below).
-_ITER_ROWS_PER_PARTITION = 1 << 18
 
 #: Score-frame broadcast cap for the iterative rank loops (pagerank /
 #: hits): when the per-round rank/score relation is bounded by this
@@ -49,39 +36,6 @@ _ITER_ROWS_PER_PARTITION = 1 << 18
 #: frontier cap, halved for the wider rows. Above the cap the
 #: co-partitioned layouts run exactly as before.
 SCORE_BROADCAST_MAX = 2_000_000
-
-
-@contextlib.contextmanager
-def _iter_shuffle_scope(spark: SparkSession, n_rows: int):
-    """Pin ``spark.sql.shuffle.partitions`` to a size-derived width
-    for an iterative section, restoring the session value on exit.
-
-    NOT REENTRANT / NOT THREAD-SAFE (r10 VERDICT what's-wrong #4):
-    the conf is session-global, so any OTHER query planned on the
-    shared session while a graph entry is inside this scope silently
-    plans with the pinned width (results unchanged — AQE still
-    coalesces — but parallelism may be wrong). The engine's harnesses
-    are single-threaded per session; callers that submit concurrent
-    jobs from driver threads must use separate sessions
-    (``SparkSession.newSession()``) around graph entries. A per-plan
-    alternative (repartition hints) cannot reach aggregation output
-    width, which is why the conf is used at all (see below).
-
-    Why the conf and not per-op ``repartition``: the round's zero-
-    exchange property needs EVERY relation in the loop — the pinned
-    edge/node layouts AND each round's hash-agg output — on the same
-    partition count, and aggregation width is only reachable through
-    the conf. Width = ceil(n_rows / _ITER_ROWS_PER_PARTITION), capped
-    by the session's configured value (at cluster scale the measured
-    size exceeds the cap and behavior is unchanged); the measurement
-    arrives free as an observed metric on the edge checkpoint job."""
-    cur = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    n_part = max(1, min(int(cur), math.ceil(n_rows / _ITER_ROWS_PER_PARTITION)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    try:
-        yield n_part
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", cur)
 
 
 def hits(
@@ -148,7 +102,8 @@ def hits(
     # sort, no pre-partitioned edge layouts needed); above it, the
     # co-partitioned sorted layouts pay off exactly as before.
     small = n_edges <= score_broadcast_max
-    with _iter_shuffle_scope(spark, n_edges) as n_part:
+    n_iter = width.iter_partitions(spark, n_edges)
+    with width.shuffle_scope(spark, n_iter) as n_part:
         if small:
             e_by_src = e_by_dst = e
         else:
@@ -395,7 +350,8 @@ def pagerank(
     # zero sort, no pre-partitioned edge layout; above it, the
     # co-partitioned sorted layouts pay off exactly as before.
     small = n_edges <= score_broadcast_max
-    with _iter_shuffle_scope(spark, n_edges) as n_part:
+    n_iter = width.iter_partitions(spark, n_edges)
+    with width.shuffle_scope(spark, n_iter) as n_part:
         deg = e.groupBy("src").agg(
             F.count("*").cast("double").alias("outdeg")
         )

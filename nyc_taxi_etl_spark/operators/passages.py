@@ -44,8 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import width
 from .boilerplate import _positional_shingles
-from .dedup import _ensure_parallelism
 from .text import _norm, tokens
 
 __all__ = ["passage_occurrences", "duplicate_passages", "dedup_passages"]
@@ -66,7 +66,7 @@ def passage_occurrences(
     ``(doc_id, pos, gram)`` with ``pos`` 1-based. One regex pass +
     posexplode — row-local."""
     norm = _norm(F.col(text_col))
-    return _ensure_parallelism(df).select(
+    return width.spread(df).select(
         F.col(id_col),
         F.posexplode(_positional_shingles(norm, k)).alias("pos0", "gram"),
     ).select(

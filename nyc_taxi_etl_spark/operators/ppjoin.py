@@ -44,8 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import width
 from ..pins import pin
-from .dedup import _pin_verify_width
 from .text import shingles
 
 __all__ = ["ppjoin_pairs"]
@@ -148,8 +148,8 @@ def ppjoin_pairs(
     # an array_intersect over the FULL shingle sets per surviving pair,
     # and AQE's bytes-based coalescing shrank the few-MB pair exchange
     # to 1-2 tasks (measured 3.5 s vs 2.0 s entry at sf0.1 — see
-    # dedup._pin_verify_width)
-    cands = _pin_verify_width(
+    # width.verify_width)
+    cands = width.verify_width(
         pa.join(pb, "s")
         .filter(
             (F.col("id_a") < F.col("id_b"))

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import width
 from ..pins import pin
 
 __all__ = ["global_sequence"]
@@ -76,9 +77,7 @@ def global_sequence(
                 f"internal column of the partition-offset join"
             )
     spark = df.sparkSession
-    n_part = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    n_part = num_partitions or width.shuffle_width(spark)
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     # pin partition contents (see top)
     ranged = pin(

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import width
 from ..pins import pin
 
 __all__ = [
@@ -389,14 +390,12 @@ def hyperplane_lsh_pairs(
         if probe_hamming == 0
         else F.col("a.id") != F.col("b.id")
     )
-    from .dedup import _pin_verify_width
-
     # width pin before the dedup exchange: the consumer attaches full
     # vectors and pays a 64-dim dot fold per pair, and AQE's
     # bytes-based coalescing shrank the few-MB (id_a, id_b) exchange
     # to 1-2 tasks (semantic_dedup measured 3.5 s vs 2.4 s at sf0.1 —
-    # see dedup._pin_verify_width)
-    return _pin_verify_width(
+    # see width.verify_width)
+    return width.verify_width(
         a.join(
             b,
             (F.col("a.tbl") == F.col("b.tbl"))

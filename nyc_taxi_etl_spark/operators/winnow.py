@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _ensure_parallelism
+from .. import width
 from .text import _norm
 
 __all__ = ["winnow_fingerprints", "winnow_near_pairs"]
@@ -90,7 +90,7 @@ def winnow_fingerprints(
     index). ``k`` = noise threshold (no match shorter than k chars is
     ever reported), ``w + k − 1`` = guarantee threshold (every shared
     run at least this long IS reported), per the paper's t = w+k−1."""
-    base = _ensure_parallelism(df)
+    base = width.spread(df)
     return (
         base.select(
             F.col(id_col), _norm(F.col(text_col)).alias("_t")

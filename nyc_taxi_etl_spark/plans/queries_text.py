@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import width
 from ..operators import decontam as C
 from ..operators import dedup as D
 from ..operators import similarity as S
@@ -171,7 +172,7 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # there) — this was an ~8× tokenization fan-out before. The
     # projection survives CollapseProject because the aliases are
     # non-cheap and multiply referenced.
-    base = D._ensure_parallelism(docs).select(
+    base = width.spread(docs).select(
         "doc_id",
         "lang",
         "text",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .. import width
 from ..operators.export import shuffle_order_key
 
 __all__ = ["read_jsonl", "jsonl_parse_audit", "export_jsonl"]
@@ -95,7 +96,9 @@ def export_jsonl(
     (Spark samples range boundaries — the standard total-order
     machinery), then a within-shard sort; shard i is a contiguous,
     disjoint key range. ``shuffled=False`` keeps input order per
-    partition and just controls the shard count (coalesce — narrow).
+    partition and sets exactly ``num_shards`` shards
+    (``width.with_partitions``: coalesce, narrow, to shrink;
+    repartition to grow).
     """
     line = F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value")
     if shuffled:
@@ -108,5 +111,5 @@ def export_jsonl(
             .select("value")
         )
     else:
-        out = df.select(line).coalesce(num_shards)
+        out = width.with_partitions(df.select(line), num_shards)
     out.write.mode("overwrite").text(path)

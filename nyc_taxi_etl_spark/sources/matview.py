@@ -26,6 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import width
 from .versioned import VersionedTable
 
 __all__ = ["MaterializedAgg", "MaterializedJoin"]
@@ -270,12 +271,13 @@ class MaterializedJoin:
             and len(active) >= self.compact_after
         ):
             # Auto-trigger bounds the FILE count, not just the directory
-            # count: coalesce (narrow, no shuffle) down to at most
-            # compact_after files. Explicit compact() calls choose their
-            # own layout/size policy (target_files/cluster_by).
-            n_files = len(self.state.read().inputFiles()) or 1
+            # count: at most compact_after files, and never more than
+            # the snapshot's partitions, so the rewrite is a coalesce
+            # (narrow, no shuffle). Explicit compact() calls choose
+            # their own layout/size policy (target_files/cluster_by).
+            n_part = width.num_partitions(self.state.read())
             return self.compact(
-                target_files=min(n_files, self.compact_after)
+                target_files=min(n_part, self.compact_after)
             )
         return version
 
@@ -297,36 +299,23 @@ class MaterializedJoin:
         CARRYING the current source versions forward, so incremental
         maintenance continues across compactions. Auto-triggered by
         ``refresh()`` once the active list reaches ``compact_after``
-        directories, which passes ``target_files=min(n_files,
+        directories, which passes ``target_files=min(partitions,
         compact_after)`` so the small-file count is bounded too. An
         explicit call with ``target_files=None`` and no ``cluster_by``
         rewrites the active files as-is — only the directory list is
         consolidated (mirroring ``VersionedTable.compact``); pass
-        ``target_files`` to also coalesce (narrow, no shuffle when
-        shrinking) or ``cluster_by`` for the Morton layout."""
+        ``target_files`` for exactly that many files
+        (``width.with_partitions``) or ``cluster_by`` for the Morton
+        layout."""
         base = self.state.latest_version()
         if base is None:
             raise FileNotFoundError(
                 f"materialized join {self.state.root} is empty"
             )
         prior_rec = self.state._read_commit(base)
-        snap = self.state.read(base)
-        n_now = len(snap.inputFiles()) or 1
-        if cluster_by:
-            # same Morton-curve layout as VersionedTable.compact, so
-            # read_where footer pruning works on every clustered column
-            from ..functions.zorder import zorder_layout
-
-            snap = zorder_layout(
-                snap, cluster_by, target_files or n_now, zorder_bits
-            )
-        elif target_files is not None:
-            snap = (
-                snap.coalesce(target_files)
-                if target_files <= n_now
-                else snap.repartition(target_files)
-            )
-        rel = self.state._write_data_dir(snap)
+        # same rewrite as VersionedTable.compact, so read_where footer
+        # pruning works on every clustered column
+        rel = self.state._compact_dir(base, target_files, cluster_by, zorder_bits)
         version = base + 1
         record = {
             "version": version,

@@ -7,30 +7,22 @@ The reference controls output file counts with ``coalesce(1)`` /
 the file-count knob but replaces path interpolation with
 ``partitionBy`` so partition pruning works without convention.
 
-Scale: ``coalesce`` narrows without a shuffle (right for shrinking to
-few files); ``repartition`` is used instead when GROWING the file count
-or when combined with partitioning, where per-partition file control
-needs a hash exchange on the partition keys.
+``target_files`` sets the number of WRITE TASKS. Unpartitioned, that is
+the file count: ``width.with_partitions`` coalesces (narrow, no
+shuffle) to shrink and repartitions to grow. With ``partition_by`` the
+rows hash-exchange on the partition keys into ``target_files`` tasks,
+so every Hive partition lands in ONE task and writes one file; the
+directory holds at most ``target_files`` files in total (fewer when
+there are fewer keys than tasks).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .. import width
 
 __all__ = ["write_parquet", "write_csv", "write_jsonl", "write_orc"]
-
-
-def _with_file_count(df: DataFrame, target_files: int | None, partition_by) -> DataFrame:
-    if target_files is None:
-        return df
-    if partition_by:
-        # spread within partitions: hash exchange on the partition keys
-        # so each Hive partition writes ~target_files files
-        return df.repartition(target_files, *[F.col(c) for c in partition_by])
-    if target_files <= df.rdd.getNumPartitions():
-        return df.coalesce(target_files)  # narrow, no shuffle
-    return df.repartition(target_files)
 
 
 def _write(
@@ -42,12 +34,17 @@ def _write(
     target_files: int | None,
     options: dict | None = None,
 ) -> None:
-    """Shared sink scaffolding: file-count control → mode →
+    """Shared sink scaffolding: write-task count → mode →
     partitioning → format dispatch. One copy, so the
-    ``_with_file_count`` / ``partitionBy`` interaction is fixed in one
-    place for every format."""
-    out = _with_file_count(df, target_files, partition_by)
-    writer = out.write.mode(mode).format(fmt)
+    ``target_files`` / ``partitionBy`` interaction is fixed in one
+    place for every format (module docstring)."""
+    if target_files is not None:
+        df = (
+            df.repartition(target_files, *partition_by)
+            if partition_by
+            else width.with_partitions(df, target_files)
+        )
+    writer = df.write.mode(mode).format(fmt)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     for key, val in (options or {}).items():
@@ -77,8 +74,8 @@ def write_csv(
     """CSV sink (S12 — the reference's aggregate→CSV exports,
     ``scripts/analytics_summary.py:63-75``). Defaults to one file, the
     shape those small result tables want."""
-    out = _with_file_count(df, target_files, None)
-    out.write.mode(mode).option("header", str(header).lower()).csv(path)
+    opts = {"header": str(header).lower()}
+    _write(df, path, "csv", mode, None, target_files, opts)
 
 
 def write_jsonl(

@@ -47,6 +47,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import width
 from ..operators.merge import merge_upsert
 
 __all__ = ["VersionedTable"]
@@ -117,6 +118,27 @@ class VersionedTable:
         rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         df.write.mode("error").parquet(os.path.join(self.root, rel))
         return rel
+
+    def _compact_dir(
+        self,
+        version: int,
+        target_files: int | None,
+        cluster_by: Sequence[str] | None,
+        zorder_bits: int,
+    ) -> str:
+        """Rewrite snapshot ``version`` into one fresh data directory:
+        the Morton layout of ``cluster_by`` (``target_files`` files,
+        default the current file count), else exactly ``target_files``
+        files, else the files as they are."""
+        snap = self.read(version)
+        if cluster_by:
+            from ..functions.zorder import zorder_layout
+
+            n = target_files or width.input_file_count(snap) or 1
+            snap = zorder_layout(snap, cluster_by, n, zorder_bits)
+        elif target_files is not None:
+            snap = width.with_partitions(snap, target_files)
+        return self._write_data_dir(snap)
 
     def _active_dirs(self, version: int) -> list[str]:
         return list(self._read_commit(version)["active"])
@@ -365,8 +387,8 @@ class VersionedTable:
         ``vacuum_versions``-style retention (not implemented — vacuum
         here only removes unreferenced orphans) lets them go.
 
-        Coalesce (narrow, no shuffle) when shrinking the file count;
-        repartition only when growing it.
+        ``target_files`` is exact (``width.with_partitions``: coalesce,
+        narrow, to shrink; repartition to grow).
 
         ``cluster_by`` lays the rewrite out along the Morton curve of
         the given columns (``functions/zorder.py``) so that
@@ -376,20 +398,7 @@ class VersionedTable:
         base_version = self.latest_version()
         if base_version is None:
             raise FileNotFoundError(f"versioned table {self.root} is empty")
-        snap = self.read(base_version)
-        if cluster_by:
-            from ..functions.zorder import zorder_layout
-
-            n = target_files or len(snap.inputFiles()) or 1
-            snap = zorder_layout(snap, cluster_by, n, zorder_bits)
-        elif target_files is not None:
-            n_now = len(snap.inputFiles()) or 1
-            snap = (
-                snap.coalesce(target_files)
-                if target_files <= n_now
-                else snap.repartition(target_files)
-            )
-        rel = self._write_data_dir(snap)
+        rel = self._compact_dir(base_version, target_files, cluster_by, zorder_bits)
         record = {
             "version": base_version + 1,
             "operation": "compact",

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import width
 from ..sources.catalog import _ensure_confs
 
 __all__ = [
@@ -357,12 +358,6 @@ def _foreach_batch(sdf: DataFrame, fn, checkpoint_dir: str, timeout_s: float) ->
     _start_and_wait(sdf.writeStream.foreachBatch(body), checkpoint_dir, timeout_s)
 
 
-def _state_partitions(spark: SparkSession) -> int:
-    """State-store width of a drain: ``min(8, defaultParallelism)``
-    (the rule and its measurements: :func:`run_available_now`)."""
-    return min(8, spark.sparkContext.defaultParallelism)
-
-
 def run_available_now(
     sdf: DataFrame,
     query_name: str,
@@ -378,7 +373,7 @@ def run_available_now(
     ``TimeoutError`` (query stopped) if the drain outlasts
     ``timeout_s``.
 
-    The drain runs ``min(8, defaultParallelism)`` shuffle partitions,
+    The drain runs ``width.state_partitions`` shuffle partitions,
     which sizes the STATE STORE for this stream: a stateful operator
     keeps one state store per shuffle partition, and each store pays
     per-batch open/commit/snapshot overhead — on a bounded key domain
@@ -417,9 +412,7 @@ def run_available_now(
     runs on fewer cores and wall time rises again: the core count gives
     the best wall time."""
     spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
+    with width.shuffle_scope(spark, width.state_partitions(spark)):
         q = _start_and_wait(
             sdf.writeStream.format("memory")
             .queryName(query_name)
@@ -427,8 +420,6 @@ def run_available_now(
             checkpoint_dir,
             timeout_s,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     if progress_out is not None:
         # per-micro-batch progress (incl. stateOperators metrics:
         # operator name, numRowsTotal, rows dropped by watermark) —

@@ -528,19 +528,19 @@ def test_fuzzy_length_band_keeps_caller_len_column(spark):
 
 
 def test_pin_verify_width_replaces_dedup_exchange(spark):
-    """_pin_verify_width must land as REPARTITION_BY_NUM satisfying the
+    """width.verify_width must land as REPARTITION_BY_NUM satisfying the
     following distinct's clustering — ONE pinned exchange, not a pinned
     exchange plus a coalescible ENSURE_REQUIREMENTS one (the r11 AQE
     width-starvation fix; a future refactor reintroducing the second
     exchange would silently re-expose the verify stage to bytes-based
     coalescing)."""
-    from nyc_taxi_etl_spark.operators.dedup import _pin_verify_width
+    from nyc_taxi_etl_spark.width import verify_width
 
     pairs = spark.range(100).selectExpr(
         "id AS id_a", "id + 1 AS id_b"
     )
     plan = (
-        _pin_verify_width(pairs, "id_a", "id_b")
+        verify_width(pairs, "id_a", "id_b")
         .distinct()
         ._jdf.queryExecution()
         .executedPlan()

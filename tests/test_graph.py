@@ -297,3 +297,26 @@ def test_hits_broadcast_and_copartitioned_paths_agree(spark):
         assert hs1[n] == pytest.approx(hs2[n], rel=1e-12), n
     for n in as1:
         assert as1[n] == pytest.approx(as2[n], rel=1e-12), n
+
+
+@pytest.mark.parametrize("score_broadcast_max", [None, 0])
+@pytest.mark.parametrize("algo", ["hits", "pagerank"])
+def test_graph_loops_restore_the_shuffle_width(spark, algo, score_broadcast_max):
+    """The rank loops narrow ``spark.sql.shuffle.partitions`` to the
+    graph's size for their rounds (1 here) and give the session its
+    own value back afterwards, on the broadcast path and on the forced
+    large path alike."""
+    from nyc_taxi_etl_spark.operators import graph
+
+    kw = {} if score_broadcast_max is None else {
+        "score_broadcast_max": score_broadcast_max
+    }
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")], ["src", "dst"]
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "1"
+    out = getattr(graph, algo)(df, **kw)
+    for frame in out if isinstance(out, tuple) else (out,):
+        frame.collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev

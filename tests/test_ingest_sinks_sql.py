@@ -124,7 +124,17 @@ def test_write_parquet_file_count_and_partitioning(spark, tmp_path):
     write_parquet(df, out2, partition_by=["g"], target_files=1)
     for g in (0, 1, 2):
         files = glob.glob(os.path.join(out2, f"g={g}", "*.parquet"))
-        assert len(files) >= 1, g
+        assert len(files) == 1, g
+    # target_files sets the write TASKS: the hash exchange on the keys
+    # sends each key to one task, so 8 tasks over 7 keys write one
+    # file per Hive partition, not 8 per partition
+    out3 = str(tmp_path / "parts7")
+    write_parquet(
+        df.withColumn("k", F.col("id") % 7), out3, partition_by=["k"], target_files=8
+    )
+    for k in range(7):
+        files = glob.glob(os.path.join(out3, f"k={k}", "*.parquet"))
+        assert len(files) == 1, k
     # partition pruning applies on read
     back = spark.read.parquet(out2).filter(F.col("g") == 1)
     assert back.count() == 333

@@ -97,3 +97,16 @@ def test_unshuffled_export_shard_count(spark, tmp_path):
     assert len(files) <= 2
     n = sum(1 for f in files for l in open(f) if l.strip())
     assert n == docs.count()
+
+
+def test_unshuffled_export_grows_to_num_shards(spark, tmp_path):
+    """``num_shards`` above the frame's partition count still gives
+    exactly that many shards — a coalesce alone would leave 4."""
+    df = spark.range(400, numPartitions=4).selectExpr(
+        "id AS doc_id", "CAST(id AS STRING) AS text"
+    )
+    path = str(tmp_path / "grown")
+    export_jsonl(df, path, num_shards=8, shuffled=False)
+    files = glob.glob(path + "/part-*")
+    assert len(files) == 8
+    assert sum(1 for f in files for l in open(f) if l.strip()) == 400

@@ -4,6 +4,9 @@ incrementally-maintained materialized aggregate."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -366,6 +369,74 @@ def test_join_matview_compaction_bounds_files_and_keeps_deltas(
     v = mv.refresh()
     assert mv.state._read_commit(v)["operation"] == "join_matview_refresh"
     assert _rows(mv.read()) == _rows(left.read().join(right.read(), ["k"]))
+
+
+def _small_file_matview(spark, tmp_path, compact_after=None):
+    """A materialized join whose view holds many small files: 50 right
+    keys, then ten left appends of 50 matching rows, each refreshed."""
+    from nyc_taxi_etl_spark.sources.matview import MaterializedJoin
+
+    left = VersionedTable(spark, str(tmp_path / "left"))
+    right = VersionedTable(spark, str(tmp_path / "right"))
+    right.write(spark.range(50).selectExpr("id AS k", "CAST(id AS STRING) AS b"))
+    mv = MaterializedJoin(
+        left, right, str(tmp_path / "view"), ["k"], compact_after=compact_after
+    )
+    return left, mv
+
+
+def _append_left(spark, left, i):
+    rows = spark.range(50, numPartitions=1).selectExpr(
+        "id AS k", f"'a{i}' AS a"
+    )
+    if left.latest_version() is None:
+        left.write(rows, operation="append")
+    else:
+        left.append(rows)
+
+
+@pytest.mark.parametrize("target", [6, 9])
+def test_join_matview_compact_target_files_is_exact(spark, tmp_path, target):
+    """Many small view files read as four partitions; compact(target_files)
+    still writes exactly ``target`` files (repartition grows, coalesce
+    cannot) and keeps the rows."""
+    left, mv = _small_file_matview(spark, tmp_path)
+    for i in range(10):
+        _append_left(spark, left, i)
+        mv.refresh()
+    snap = mv.read()
+    assert snap.rdd.getNumPartitions() == 4 < target <= len(snap.inputFiles())
+    before = _rows(snap)
+    v = mv.compact(target_files=target)
+    (rel,) = mv.state._active_dirs(v)
+    assert len(glob.glob(os.path.join(mv.state.root, rel, "*.parquet"))) == target
+    assert _rows(mv.read()) == before
+
+
+def test_join_matview_auto_compaction_is_narrow(spark, tmp_path):
+    """The refresh auto-trigger writes at most ``compact_after`` files
+    and its rewrite plans no Exchange (a coalesce, never a shuffle)."""
+    left, mv = _small_file_matview(spark, tmp_path, compact_after=3)
+    plans = []
+    write_dir = mv.state._write_data_dir
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_dir(df)
+
+    mv.state._write_data_dir = recording
+    compacted = 0
+    for i in range(6):
+        _append_left(spark, left, i)
+        rec = mv.state._read_commit(mv.refresh())
+        if rec["operation"] == "join_matview_compact":
+            compacted += 1
+            # the bound bites: the compacted version held more files
+            base = mv.state._read_commit(rec["base_version"])
+            assert len(base["file_stats"]) > 3
+            assert len(mv.read().inputFiles()) <= 3
+            assert "Exchange" not in plans[-1], plans[-1]
+    assert compacted
 
 
 def test_join_matview_external_state_write_falls_back_to_full(

@@ -369,6 +369,21 @@ def test_observations_only_in_pin_and_etl_writes():
     assert _modules_matching(r"Observation\(") == {"pins.py", "etl.py"}
 
 
+def test_every_partition_width_goes_through_width_module():
+    """Static guard: one module decides partition counts. Only
+    ``width.py`` reads or sets the session's shuffle width, reads the
+    core count, or probes a frame's partition or file count; no module
+    names the private width helpers it replaced."""
+    shuffle_conf = r'conf\.(set|get)\("spark\.sql\.shuffle\.partitions"'
+    assert _modules_matching(shuffle_conf) == {"width.py"}
+    assert _modules_matching(r"\.inputFiles\(") == {"width.py"}
+    assert _modules_matching(r"\.getNumPartitions\(") == {"width.py"}
+    assert _modules_matching(r"\.defaultParallelism\b") == {"width.py"}
+    assert _modules_matching(
+        r"_ensure_parallelism|_pin_verify_width|_iter_shuffle_scope"
+    ) == set()
+
+
 def test_pin_contract(spark):
     """``pin``: metrics equal a direct agg, the pin runs exactly ONE
     job (metrics ride it), the returned plan is a leaf scan, and

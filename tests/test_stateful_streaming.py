@@ -304,10 +304,10 @@ def test_catalog_drain_rows_do_not_depend_on_state_width(spark, monkeypatch, nam
     """A catalog drain gives the same rows on one state partition as on
     the host's width: the per-key fold orders its own input, and the
     windowed sums are rounded before they are compared."""
-    from nyc_taxi_etl_spark.streaming import events
+    from nyc_taxi_etl_spark import width
 
     host = _drain_entry(spark, name)
-    monkeypatch.setattr(events, "_state_partitions", lambda _spark: 1)
+    monkeypatch.setattr(width, "state_partitions", lambda _spark: 1)
     assert _drain_entry(spark, name) == host
 
 

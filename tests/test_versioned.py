@@ -3,6 +3,7 @@ time travel, crash-between-merges replay, conflict detection, vacuum."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -174,6 +175,27 @@ def test_compact_merges_dirs_preserves_rows_and_history(spark, tmp_path):
     assert sorted(r.k for r in t.read(1).collect()) == list(range(20))
     # nothing is orphaned by compaction itself
     assert t.vacuum() == []
+
+
+@pytest.mark.parametrize("target", [6, 9])
+def test_compact_target_files_is_exact_above_the_read_width(spark, tmp_path, target):
+    """Ten small appended files read as four partitions (file packing);
+    compact(target_files) must still write exactly ``target`` files —
+    a coalesce alone cannot add partitions."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.write(spark.range(0, 50, numPartitions=1).withColumnRenamed("id", "k"))
+    for lo in range(50, 500, 50):
+        t.append(
+            spark.range(lo, lo + 50, numPartitions=1).withColumnRenamed("id", "k")
+        )
+    snap = t.read()
+    assert len(snap.inputFiles()) == 10
+    assert snap.rdd.getNumPartitions() == 4
+    v = t.compact(target_files=target)
+    (rel,) = t._active_dirs(v)
+    files = glob.glob(os.path.join(t.root, rel, "*.parquet"))
+    assert len(files) == target
+    assert sorted(r.k for r in t.read().collect()) == list(range(500))
 
 
 def _orders(spark, rows):
