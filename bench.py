@@ -73,7 +73,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA  # noqa: E402
+from nyc_taxi_etl_spark.plans import CATALOG  # noqa: E402
 from nyc_taxi_etl_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -212,10 +212,6 @@ EXTENSION = [
     "nation_revenue_mannkendall",
     "nation_revenue_acf",
 ]
-
-# Headline stays on the driver catalog; extension ops may live in the
-# overflow registry.
-ALL_QUERIES = {**QUERIES, **QUERIES_EXTRA}
 
 
 def materialize(df) -> None:
@@ -441,18 +437,18 @@ def main() -> None:
 
         probe()  # warm-up (JIT + classload), untimed
 
-        names = [n for n in HEADLINE if n in ALL_QUERIES]
-        ext_names = [n for n in EXTENSION if n in ALL_QUERIES and n not in names]
+        names = [n for n in HEADLINE if n in CATALOG]
+        ext_names = [n for n in EXTENSION if n in CATALOG and n not in names]
         extra = os.environ.get("SPARK_GRAFT_BENCH_EXTRA")
         if extra:
             ext_names += [
                 n
                 for n in extra.split(",")
-                if n in ALL_QUERIES and n not in names and n not in ext_names
+                if n in CATALOG and n not in names and n not in ext_names
             ]
         only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
         if only:
-            keep = {n for n in only.split(",") if n in ALL_QUERIES}
+            keep = {n for n in only.split(",") if n in CATALOG}
             names = [n for n in names if n in keep]
             ext_names = [n for n in ext_names if n in keep]
             for n in sorted(keep):
@@ -492,7 +488,7 @@ def main() -> None:
             calibration.append(round(probe(), 4))
             for name in all_names:
                 t0 = time.perf_counter()
-                materialize(ALL_QUERIES[name](spark, sf_dir))
+                materialize(CATALOG[name](spark, sf_dir))
                 samples[name].append(time.perf_counter() - t0)
 
         def clean_passes() -> list[int]:

@@ -8,7 +8,7 @@ as subcommands of one module, running on the engine's session factory
 
   etl        raw per-cab parquet → unified clean curated table
   query      run a named catalog query; print or write parquet/CSV
-  queries    list the catalog (driver window + overflow registry)
+  queries    list the catalog (driver window first, then the overflow)
   report     render the HTML/SVG dashboard
   prepare    run the training-corpus pipeline end-to-end
   table      versioned-table maintenance: versions/compact/vacuum/expire
@@ -52,15 +52,14 @@ def cmd_etl(args) -> int:
 
 
 def cmd_query(args) -> int:
-    from .plans import QUERIES, QUERIES_EXTRA
+    from .plans import CATALOG
 
-    QUERIES = {**QUERIES, **QUERIES_EXTRA}
-    if args.name not in QUERIES:
+    if args.name not in CATALOG:
         print(f"unknown query {args.name!r}; see `queries`", file=sys.stderr)
         return 1
     spark = _session(f"query-{args.name}")
     try:
-        df = QUERIES[args.name](spark, args.sf_dir)
+        df = CATALOG[args.name](spark, args.sf_dir)
         if args.out:
             from .sources.sinks import write_csv, write_parquet
 
@@ -81,15 +80,14 @@ def cmd_explain(args) -> int:
     loop (`.explain("formatted")`) as an operational command, so scale
     review (pushed filters, exchange count, codegen spans, broadcast
     choices) doesn't need a notebook."""
-    from .plans import QUERIES, QUERIES_EXTRA
+    from .plans import CATALOG
 
-    catalog = {**QUERIES, **QUERIES_EXTRA}
-    if args.name not in catalog:
+    if args.name not in CATALOG:
         print(f"unknown query {args.name!r}; see `queries`", file=sys.stderr)
         return 1
     spark = _session(f"explain-{args.name}")
     try:
-        df = catalog[args.name](spark, args.sf_dir)
+        df = CATALOG[args.name](spark, args.sf_dir)
         df.explain(args.mode)
         return 0
     finally:
@@ -97,14 +95,12 @@ def cmd_explain(args) -> int:
 
 
 def cmd_queries(_args) -> int:
-    from .plans import ORACLE, ORACLE_EXTRA, QUERIES, QUERIES_EXTRA
+    from .plans import CATALOG, DRIVER_WINDOW, ORACLES
 
-    for name in QUERIES:
-        kind = "oracle" if name in ORACLE else "rows-only"
-        print(f"{name}\t{kind}")
-    for name in QUERIES_EXTRA:
-        kind = "oracle" if name in ORACLE_EXTRA else "rows-only"
-        print(f"{name}\t{kind}\toverflow")
+    for name in CATALOG:
+        kind = "oracle" if name in ORACLES else "rows-only"
+        tag = "" if name in DRIVER_WINDOW else "\toverflow"
+        print(f"{name}\t{kind}{tag}")
     return 0
 
 

@@ -37,11 +37,6 @@ from .text import _norm, shingles
 
 __all__ = ["fuzzy_candidates", "fuzzy_near_pairs"]
 
-#: Character-bag histogram alphabet (mirrors the oracle's list in
-#: plans/queries_text.py::fuzzy_candidates_sql — keep in sync).
-_HIST_CHARS = "abcdefghijklmnopqrstuvwxyz0123456789 "
-
-
 def fuzzy_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -129,24 +124,11 @@ def fuzzy_near_pairs(
     k: int = 3,
     max_doc_freq: int | None = None,
     candidates: DataFrame | None = None,
-    bag_prune: bool = False,
 ) -> DataFrame:
     """Document pairs within ``max_distance`` character edits of each
     other (on whitespace-normalized lowercased text):
     ``(id_a, id_b, distance)``. Pass ``candidates`` to reuse an
     existing blocking stage (e.g. LSH) instead of the shingle index.
-
-    ``bag_prune`` inserts the character-bag L1 gate between blocking
-    and the DP: each edit moves the char histogram by ≤ 2 counts, so
-    L1 ≤ 2·d is a NECESSARY condition for distance ≤ d — an exact
-    prune that cannot drop a true pair (same bound as the oracle's
-    candidate stage, ``fuzzy_candidates_sql``). Measured at sf0.1 it
-    removes 29 % of the DP verifies (258 k length-survivors → 183 k)
-    but the 37-replace histograms + per-pair L1 fold cost slightly
-    MORE than the skipped DPs on this corpus's short (~500 char)
-    documents — so it defaults OFF. Flip it on for long-document
-    corpora, where the banded DP is O(d·len) per pair and the
-    constant-size bag test wins by orders of magnitude.
     """
     if candidates is None:
         # the length band is lossless for the ≤ max_distance verify
@@ -160,33 +142,9 @@ def fuzzy_near_pairs(
     txt = df.select(
         F.col(id_col).alias("_id"), _norm(F.col(text_col)).alias("_t")
     )
-    if bag_prune:
-        chars = ",".join(f"'{c}'" for c in _HIST_CHARS)
-        txt = txt.withColumn(
-            "_h",
-            F.expr(
-                f"transform(array({chars}), "
-                "c -> length(_t) - length(replace(_t, c, '')))"
-            ),
-        )
-    a_cols = [F.col("_id").alias("id_a"), F.col("_t").alias("_ta")]
-    b_cols = [F.col("_id").alias("id_b"), F.col("_t").alias("_tb")]
-    if bag_prune:
-        a_cols.append(F.col("_h").alias("_ha"))
-        b_cols.append(F.col("_h").alias("_hb"))
-    joined = candidates.join(txt.select(*a_cols), "id_a").join(
-        txt.select(*b_cols), "id_b"
-    )
-    if bag_prune:
-        joined = joined.where(
-            F.abs(F.length("_ta") - F.length("_tb")) <= max_distance
-        ).where(
-            F.expr(
-                "aggregate(zip_with(_ha, _hb, (x, y) -> abs(x - y)), "
-                "0, (acc, v) -> acc + v)"
-            )
-            <= 2 * max_distance
-        )
+    joined = candidates.join(
+        txt.select(F.col("_id").alias("id_a"), F.col("_t").alias("_ta")), "id_a"
+    ).join(txt.select(F.col("_id").alias("id_b"), F.col("_t").alias("_tb")), "id_b")
     dist = F.levenshtein(F.col("_ta"), F.col("_tb"), max_distance)
     return (
         joined.select("id_a", "id_b", dist.cast("long").alias("distance"))

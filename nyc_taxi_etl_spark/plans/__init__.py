@@ -1,4 +1,4 @@
-from .queries import ORACLE, ORACLE_EXTRA, QUERIES, QUERIES_EXTRA  # noqa: F401
+from .queries import CATALOG, ORACLES
 from . import queries_text  # noqa: F401  (registers text/dedup/similarity queries)
 from . import queries_ml  # noqa: F401  (registers KMeans/IsolationForest queries)
 from . import queries_streaming  # noqa: F401  (registers Structured Streaming queries)
@@ -21,505 +21,78 @@ from . import queries_tpch  # noqa: F401  (registers the remaining TPC-H query s
 from . import queries_linkage  # noqa: F401  (registers sorted-neighborhood linkage + skyline)
 from . import queries_basket  # noqa: F401  (registers market-basket association rules)
 
-# --------------------------------------------------------------------------
-# Driver-window rotation (round 6, VERDICT r5 task #3).
-#
-# The driver's CORRECTNESS snapshot records only the FIRST 50 entries of
-# the merged catalog; that window had been static since round 1 while the
-# overflow registry grew to 92 locally-oracle-tested entries, so the
-# marquee scale operators (DSIR, CMS, HITS, triangles, global sequence,
-# winnowing, semantic/fuzzy dedup, BM25) never earned a driver-side green
-# row. Swap ten long-stable slots for the ten highest-value overflow
-# entries. Constraint honored (and asserted below): every §2 family keeps
-# ≥1 representative in the window — the demoted entries are either bonus
-# operators beyond reference parity (anti-join, INTERSECT/EXCEPT,
-# sessionization, interval join) or IDs whose family stays green through
-# a sibling (P4/P5/P9/P10 filters via valid_lines_unit_price +
-# daily_pct_of_baseline; A7/A20 aggregations via the 12 remaining agg
-# entries; text top-terms via doc_profile). Demoted entries remain fully
-# oracle-tested in the local suite (tests/test_oracle.py runs
-# QUERIES ∪ QUERIES_EXTRA). Rotation plan documented in CATALOG.md.
-_PROMOTE_R6 = [
-    "dsir_selected_docs",
+# The driver's CORRECTNESS snapshot records only the first 50 entries of
+# the catalog; this tuple is that window, in order. Whoever swaps an
+# entry keeps every SURVEY.md §2 family represented here. Entries outside
+# the window are oracle-tested locally all the same (tests/test_oracle.py).
+DRIVER_WINDOW = (
+    "events_time_profile",
+    "top_suppliers_per_nation",
+    "valid_lines_unit_price",
+    "union_heterogeneous",
+    "doc_profile",
+    "exact_dedup_groups",
+    "doc_decontamination",
+    "dedup_components",
+    "curate_documents",
+    "kmeans_lineitem_profile",
+    "isolation_outliers_by_flag",
+    "media_image_features",
+    "media_audio_features",
+    "doc_pii_redaction",
     "user_count_cms",
-    "purchase_graph_hits",
-    "near_dup_triangles",
-    "orders_global_seq",
-    "customer_revenue_gini",
-    "winnow_near_pairs",
-    "semantic_dedup",
-    "fuzzy_near_pairs",
-    "bm25_scores",
-]
-_DEMOTE_R6 = [
-    "customers_without_urgent_orders",
-    "priority_nation_filter",
-    "props_safe_cast",
-    "buyer_lifecycle_segments",
-    "monthly_seasonality_profile",
-    "orders_status_cube",
-    "user_sessions",
-    "purchases_in_error_windows",
-    "etl_filter_audit",
-    "doc_top_terms",
-]
-for _n in _DEMOTE_R6:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R6:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-7 rotation: the r6 promotions earned their driver-side green
-# rows in CORRECTNESS_r06; swap six of them (plus two family-redundant
-# long-stable slots) for the round-7 operators that have never had a
-# driver row — the newly full-oracle streaming EWMA (previously
-# rows-only), the temperature mixture, and four of the new TPC-H
-# shapes. Family coverage after the swap (same constraint as r6):
-# dedup keeps exact/ngram/minhash/components/curate/semantic/fuzzy in
-# the window; embeddings keep knn/ann_lsh/semantic_dedup; graph keeps
-# purchase_graph_hits; stats keep orders_global_seq + extreme_days_
-# zscore + dsir; training keeps chunks/pii/lm/splits/mixture/dsir.
-# Demoted entries remain fully oracle-tested in the local suite.
-_PROMOTE_R7 = [
-    "streaming_ewma_anomalies",
-    "temperature_mixture_counts",
-    "sole_blame_suppliers",
-    "nation_trade_flows",
-    "small_quantity_avg_loss",
-    "order_count_distribution",
-]
-_DEMOTE_R7 = [
-    "simhash_near_pairs",
-    "embedding_near_pairs",
-    "winnow_near_pairs",
-    "near_dup_triangles",
-    "customer_revenue_gini",
-    "doc_boilerplate_removal",
-]
-for _n in _DEMOTE_R7:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R7:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-7 continuation rotation: promote the two marquee operators built
-# after the main r7 swap — the golden-record entity-resolution pipeline
-# and the Holt level+trend stateful twin (its list_reduce oracle is
-# bit-exact, so a driver row is meaningful) — so CORRECTNESS_r07 stamps
-# them. Demotions keep every family green: dedup retains
-# exact/minhash/components/curate/semantic/fuzzy (ngram_jaccard demoted,
-# its inverted-index shape also exercised by winnow + fuzzy in the local
-# gate); the mixture family's window slot passes to the promoted
-# temperature_mixture_counts (same operator family, superset shape).
-# Demoted entries remain fully oracle-tested in the local suite.
-_PROMOTE_R7B = [
     "part_entity_resolution",
-    "streaming_holt_trend",
-]
-_DEMOTE_R7B = [
-    "ngram_jaccard_near_pairs",
-    "mixture_source_counts",
-]
-for _n in _DEMOTE_R7B:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R7B:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-8 rotation (VERDICT r7 task #2): promote the ten round-7 marquee
-# overflow operators that have never had a driver CORRECTNESS row —
-# PPJoin, sorted-neighborhood linkage, the 2-D skyline, the incremental
-# JOIN materialized view, hybrid sparse+dense retrieval with RRF, and the
-# four new governance/profiling audits (FD, k-anonymity, Benford, column
-# profile) plus CDC tombstone merges. Demotions are all long-stable green
-# rows whose §2 family keeps ≥1 in-window representative:
-#   dedup keeps exact/minhash/components/curate + promoted ppjoin
-#     (fuzzy + semantic demoted — both green in r6/r7 driver rows and the
-#     local gate);
-#   embeddings keep knn_bruteforce + ann_lsh (semantic_dedup demoted);
-#   retrieval window slot passes bm25 -> hybrid_retrieval_rrf (superset:
-#     RRF fuses the same BM25 ranking with dense cosine);
-#   training keeps chunks/pii/lm/splits + temperature mixture (dsir
-#     demoted, green since r6);
-#   sampling keeps temperature_mixture_counts (stratified demoted);
-#   lakehouse window slots pass orders_upsert_status_totals -> the
-#     promoted join-matview + CDC tombstone entries (same commit-log
-#     machinery, strictly wider coverage);
-#   the four TPC-H shapes promoted in r7 earned their green rows in
-#     CORRECTNESS_r07 and rotate back out (agg/join families stay green
-#     through the ten r1-era slots 1-13).
-# Demoted entries remain fully oracle-tested in the local suite
-# (tests/test_oracle.py runs QUERIES ∪ QUERIES_EXTRA).
-_PROMOTE_R8 = [
-    "ppjoin_near_pairs",
     "part_name_linkage",
     "part_price_skyline",
     "customer_order_join_matview",
     "hybrid_retrieval_rrf",
     "order_line_fd_audit",
-    "customer_k_anonymity",
-    "orders_benford_profile",
     "lineitem_column_profile",
-    "orders_cdc_delete_totals",
-]
-_DEMOTE_R8 = [
-    "fuzzy_near_pairs",
-    "semantic_dedup",
-    "bm25_scores",
-    "dsir_selected_docs",
-    "stratified_order_sample",
-    "orders_upsert_status_totals",
-    "sole_blame_suppliers",
-    "nation_trade_flows",
-    "small_quantity_avg_loss",
-    "order_count_distribution",
-]
-for _n in _DEMOTE_R8:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R8:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-8 continuation rotation (the r7b precedent): promote the six
-# operators BUILT this round — the two ANN paths newly full-oracle via
-# seeded quantizer literals, the k-anonymity generalization repair, the
-# key-skew profiler, the exact join-size audit, and bounded-BFS
-# reachability — so CORRECTNESS_r08 stamps them driver-side. All six
-# are oracle-verified locally at sf0.001/0.01/0.1 and the generated
-# sf1 (five also at sf10). Demotions keep every family ≥1 in-window:
-#   similarity search keeps ann_lsh + the two promoted ANN entries
-#     (knn_bruteforce demoted — exact-scan baseline, green since r1;
-#     its fold/cosine arithmetic is exercised by every ANN oracle);
-#   aggregations keep events_time_profile/orders_rollup/returnflag_
-#     summary/region_order_revenue/top_suppliers_per_nation/extreme_
-#     days_zscore and more (monthly_order_summary — the exact-median
-#     rep — value_histogram and quantity_segmentation demoted, all
-#     green since r1; the median shape stays locally gated);
-#   joins keep region_order_revenue/daily_pct_of_baseline/
-#     purchase_asof_prior_error (daily_purchase_vs_errors demoted);
-#   training keeps chunks/pii/splits/mixture (doc_lm_scores demoted,
-#     green since r1).
-# Demoted entries remain fully oracle-tested in the local suite.
-_PROMOTE_R8B = [
     "ann_ivf_cosine",
     "ann_pq_cosine",
-    "customer_k_anonymity_repair",
-    "key_skew_profiles",
-    "join_size_audits",
     "purchase_reach_hops",
-]
-_DEMOTE_R8B = [
-    "knn_bruteforce_cosine",
-    "monthly_order_summary",
-    "value_histogram",
-    "quantity_segmentation",
-    "daily_purchase_vs_errors",
-    "doc_lm_scores",
-]
-for _n in _DEMOTE_R8B:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R8B:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-9 rotation (VERDICT r8 task #3): promote the r8 overflow marquee —
-# the CUSUM changepoint fold and its streaming twin, the l-diversity
-# repair and the released k-anonymous table — plus the long-unwindowed
-# family representatives the judge named (exact-kNN baseline, BM25,
-# the Arrow-batched pandas-UDAF weighted median, and the CUBE shape).
-# Demotions are all multi-round-green slots whose §2 family keeps ≥1
-# in-window representative:
-#   rollup/cube A5: orders_rollup (green r1-r8) hands the slot to the
-#     promoted orders_status_cube — same GROUPING-SETS machinery;
-#   top-k A3/A10: top_users_by_events (green r1-r8) — the windowed
-#     top-k rep top_suppliers_per_nation stays;
-#   streaming: tumbling + session windows (green r1-r8) rotate out —
-#     the stateful trio (EWMA, Holt, promoted CUSUM) stays in-window;
-#   graph: purchase_graph_hits (green r6-r8) — purchase_reach_hops
-#     stays;
-#   sequence/window W: orders_global_seq (green r6-r8) — the W family
-#     keeps top_suppliers_per_nation + extreme_days_zscore;
-#   training: training_split_counts (green r1-r8) — chunks/pii/mixture
-#     stay;
-#   ANN: ann_lsh_cosine (green r1-r8) — the promoted exact-kNN baseline
-#     plus ann_ivf + ann_pq keep three similarity reps in-window.
-# Demoted entries remain fully oracle-tested in the local suite
-# (tests/test_oracle.py runs QUERIES ∪ QUERIES_EXTRA).
-_PROMOTE_R9 = [
-    "user_value_cusum",
     "streaming_cusum_drift",
     "customer_l_diversity_repair",
-    "customer_k_anonymity_release",
-    "knn_bruteforce_cosine",
-    "bm25_scores",
-    "weighted_median_price",
     "orders_status_cube",
-]
-_DEMOTE_R9 = [
-    "orders_rollup",
-    "top_users_by_events",
-    "streaming_tumbling_counts",
-    "streaming_session_windows",
-    "purchase_graph_hits",
-    "orders_global_seq",
-    "training_split_counts",
-    "ann_lsh_cosine",
-]
-for _n in _DEMOTE_R9:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R9:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-9 continuation rotation (the r7b/r8b precedent): promote the two
-# operators BUILT this round so CORRECTNESS_r09 stamps them driver-side —
-# the adaptive join (measured skew pre-flight choosing the physical
-# strategy, full oracle pinning both values and the chosen strategy) and
-# the survivorship-menu golden record (all six declared rules over each
-# customer's order history). Demotions are r1-era greens whose families
-# stay represented: daily_pct_of_baseline (J3 scalar-baseline join; the
-# join family keeps region_order_revenue + purchase_asof_prior_error +
-# customer_order_join_matview + the promoted adaptive join) and
-# extreme_days_zscore (A15; the agg family keeps events_time_profile /
-# returnflag_summary / region_order_revenue / orders_status_cube /
-# weighted_median_price, and the W window family keeps
-# top_suppliers_per_nation). Both remain fully oracle-tested locally.
-_PROMOTE_R9B = [
     "adaptive_join_revenue",
     "customer_order_golden",
-]
-_DEMOTE_R9B = [
-    "daily_pct_of_baseline",
-    "extreme_days_zscore",
-]
-for _n in _DEMOTE_R9B:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R9B:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-9 second continuation: promote the three analytics operators
-# built late in the round — grouped OLS from exact integer moments
-# (bit-exact slope/intercept/R² per nation), the count-table
-# Mann-Whitney U test, and positional phrase search — all oracle-green
-# at sf0.001 through the generated sf10. Demotions are eight-round
-# greens whose families stay represented: returnflag_summary (A9; the
-# agg family keeps events_time_profile / orders_status_cube /
-# weighted_median_price and more), region_order_revenue (J2/A14; the
-# join family keeps purchase_asof_prior_error /
-# customer_order_join_matview / adaptive_join_revenue, and the
-# promoted nation_revenue_trend itself carries a broadcast dim join),
-# and minhash_lsh_near_pairs (the dedup family keeps
-# exact_dedup_groups / dedup_components / curate_documents /
-# ppjoin_near_pairs in-window). All remain fully oracle-tested locally.
-_PROMOTE_R9C = [
-    "nation_revenue_trend",
     "mw_quantity_shift",
-    "phrase_search_docs",
-]
-_DEMOTE_R9C = [
-    "returnflag_summary",
-    "region_order_revenue",
-    "minhash_lsh_near_pairs",
-]
-for _n in _DEMOTE_R9C:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R9C:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-10 rotation (VERDICT r9 task #3): promote the eight
-# long-unwindowed family representatives the judge named — the quality
-# classifier, the LM bigram scorer, budget-constrained source selection,
-# the SimHash and n-gram-Jaccard near-dup paths, the interval join
-# (purchases inside error windows), sessionization, and the stratified
-# sampler — plus the two operators BUILT this round (the adaptive
-# join's left-outer enrich path and the k>2 chained-postings phrase
-# search), so CORRECTNESS_r10 green-stamps them driver-side. Demotions
-# are all multi-round greens whose §2 family keeps ≥1 in-window
-# representative:
-#   stateful streaming: EWMA (green r7-r9) and Holt (r7b-r9) hand their
-#     slots on — the CUSUM twin stays, and all three share one parity
-#     test + replay oracle locally;
-#   similarity/ANN: knn_bruteforce (green r9 + r1-r8) — ann_ivf/ann_pq
-#     stay, and the promoted simhash/ngram_jaccard add two more
-#     similarity-family rows;
-#   anonymity: the base audit + k-repair (green r8/r9) rotate out — the
-#     l-diversity repair AND the released table stay (the ladder's two
-#     strongest checks);
-#   skew tooling: the profiler + join-size audit (green r8-r9) hand
-#     their slots to the promoted adaptive_left_enrich — the closed
-#     loop (adaptive_join_revenue) stays, and the audits' arithmetic
-#     is exactly what the adaptive pre-flight re-runs;
-#   retrieval: bm25_scores (green r9 + r6-r7) — hybrid_retrieval_rrf
-#     (which re-ranks the same BM25) + both phrase entries stay;
-#   dedup: ppjoin (green r8-r9) — exact/components/curate stay and the
-#     promoted simhash + ngram_jaccard keep five dedup reps in-window;
-#   sampling: temperature mixture (green r7-r9) hands the sampling slot
-#     to the promoted stratified_order_sample (M1).
-# Demoted entries remain fully oracle-tested in the local suite
-# (tests/test_oracle.py runs QUERIES ∪ QUERIES_EXTRA).
-_PROMOTE_R10 = [
     "doc_quality_classifier",
     "doc_lm_bigram_scores",
     "budget_selected_sources",
-    "simhash_near_pairs",
     "ngram_jaccard_near_pairs",
     "purchases_in_error_windows",
     "user_sessions",
     "stratified_order_sample",
     "adaptive_left_enrich",
     "phrase_search_trigram",
-]
-_DEMOTE_R10 = [
-    "streaming_ewma_anomalies",
-    "streaming_holt_trend",
-    "knn_bruteforce_cosine",
-    "customer_k_anonymity",
-    "customer_k_anonymity_repair",
-    "key_skew_profiles",
-    "join_size_audits",
-    "bm25_scores",
-    "ppjoin_near_pairs",
-    "temperature_mixture_counts",
-]
-for _n in _DEMOTE_R10:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R10:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-10 continuation rotation (the r7b/r8b/r9b precedent): promote the
-# six statistics/mining operators BUILT this round so CORRECTNESS_r10
-# stamps them driver-side — the count-table Kolmogorov-Smirnov test, the
-# Theil-Sen robust slope, the Mann-Kendall trend test, market-basket
-# association rules, the per-source Jensen-Shannon divergence, and the
-# exact-moment lag-k autocorrelation. All six are oracle-verified
-# locally at sf0.001 through the generated sf10. Demotions keep every
-# family ≥1 in-window:
-#   joins: purchase_asof_prior_error (green r1-r9) — the family keeps
-#     customer_order_join_matview + both adaptive-join entries, and the
-#     as-of/temporal shape stays locally gated;
-#   training: doc_chunks_packed (green r1-r9) — pii_redaction +
-#     quality classifier + lm bigram + budget selection stay;
-#   profiling/forensics: orders_benford_profile (green r8-r9) —
-#     lineitem_column_profile + order_line_fd_audit stay;
-#   lakehouse: orders_cdc_delete_totals (green r8-r9) — the join
-#     matview (same commit-log machinery) stays;
-#   stats: nation_revenue_trend (green r9) hands its slot to its own
-#     robust siblings (theilsen + mannkendall + acf share its monthly
-#     grain; the OLS remains locally gated at four SFs);
-#   retrieval: phrase_search_docs (green r9) — the promoted trigram
-#     entry exercises a strict superset of its chained-postings plan.
-_PROMOTE_R10B = [
     "ks_quantity_shift",
     "nation_revenue_theilsen",
     "nation_revenue_mannkendall",
     "part_pair_lift",
     "source_token_jsd",
     "nation_revenue_acf",
-]
-_DEMOTE_R10B = [
-    "purchase_asof_prior_error",
-    "doc_chunks_packed",
-    "orders_benford_profile",
-    "orders_cdc_delete_totals",
-    "nation_revenue_trend",
-    "phrase_search_docs",
-]
-for _n in _DEMOTE_R10B:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R10B:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
-
-# --------------------------------------------------------------------------
-# Round-11 rotation (VERDICT r10 task #7): promote the four entries whose
-# r10 optimization rewrites touched float-level numerics or join internals
-# so the driver hash-stamps the NEW formulations — `purchase_graph_hits`
-# (round-level L2 normalization), `purchase_graph_pagerank` (algebraic
-# dangling-deficit recovery + contribution-only rounds),
-# `near_dup_triangles` (degree-broadcast orientation) and
-# `ppjoin_near_pairs` (shingle-only checkpoint shape). All four are
-# oracle-verified locally every round (tests/test_oracle.py), but none has
-# sat in the driver's 50-slot window since r8, so the driver has never
-# stamped the rewritten paths. Demotions are multi-round driver greens
-# whose family keeps an in-window representative:
-#   simhash_near_pairs (green r1-r6, r10) — near-pair dedup keeps
-#     ngram_jaccard_near_pairs + the promoted ppjoin/triangles entries;
-#   user_value_cusum (green r9-r10) — its stateful twin
-#     streaming_cusum_drift stays (same CUSUM recurrence + oracle);
-#   weighted_median_price (green r1-r10) — exact-percentile/agg family
-#     keeps lineitem_column_profile + the full agg window;
-#   customer_k_anonymity_release (green r9-r10) — anonymization keeps
-#     customer_l_diversity_repair (same ladder machinery).
-_PROMOTE_R11 = [
     "purchase_graph_pagerank",
     "purchase_graph_hits",
     "near_dup_triangles",
     "ppjoin_near_pairs",
-]
-_DEMOTE_R11 = [
-    "simhash_near_pairs",
-    "user_value_cusum",
-    "weighted_median_price",
-    "customer_k_anonymity_release",
-]
-for _n in _DEMOTE_R11:
-    QUERIES_EXTRA[_n] = QUERIES.pop(_n)
-    if _n in ORACLE:
-        ORACLE_EXTRA[_n] = ORACLE.pop(_n)
-for _n in _PROMOTE_R11:
-    QUERIES[_n] = QUERIES_EXTRA.pop(_n)
-    if _n in ORACLE_EXTRA:
-        ORACLE[_n] = ORACLE_EXTRA.pop(_n)
-assert len(QUERIES) == 50, len(QUERIES)
+)
+
+_unregistered = [n for n in DRIVER_WINDOW if n not in CATALOG]
+if len(set(DRIVER_WINDOW)) != 50 or _unregistered:
+    raise RuntimeError(
+        f"DRIVER_WINDOW must name 50 distinct registered entries: "
+        f"{len(set(DRIVER_WINDOW))} distinct, unregistered {_unregistered}"
+    )
+# Window entries first, in window order; the rest in registration order.
+_ordered = {n: CATALOG[n] for n in DRIVER_WINDOW}
+_ordered.update(CATALOG)
+CATALOG.clear()
+CATALOG.update(_ordered)
+
+# The window/overflow split as a derived view. Only perfbench/ reads it
+# (selftest.py, workloads.py); everything else uses CATALOG and ORACLES.
+QUERIES = {n: CATALOG[n] for n in DRIVER_WINDOW}
+QUERIES_EXTRA = {n: fn for n, fn in CATALOG.items() if n not in QUERIES}
+ORACLE = {n: ORACLES[n] for n in DRIVER_WINDOW if n in ORACLES}
+ORACLE_EXTRA = {n: sql for n, sql in ORACLES.items() if n not in ORACLE}

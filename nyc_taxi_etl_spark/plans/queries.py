@@ -29,28 +29,17 @@ from pyspark.sql import functions as F
 from ..functions import r4, topk, zscore_over_all
 from ..sources.catalog import load_table
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE: dict[str, str] = {}
-
-# Overflow registry: queries kept fully tested locally (the oracle suite
-# runs over QUERIES ∪ QUERIES_EXTRA) but left OUT of the driver catalog,
-# which snapshots at most ~50 entries — every family below stays
-# represented in the main catalog by a sibling entry.
-QUERIES_EXTRA: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_EXTRA: dict[str, str] = {}
+CATALOG: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None, extra: bool = False):
-    """Register a catalog query and (optionally) its DuckDB oracle.
-
-    ``extra=True`` registers into the local-only overflow registry
-    instead of the driver-visible catalog (see above).
-    """
+def query(name: str, oracle: str | None = None):
+    """Register a catalog query and (optionally) its DuckDB oracle."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        (QUERIES_EXTRA if extra else QUERIES)[name] = fn
+        CATALOG[name] = fn
         if oracle is not None:
-            (ORACLE_EXTRA if extra else ORACLE)[name] = oracle
+            ORACLES[name] = oracle
         return fn
 
     return deco

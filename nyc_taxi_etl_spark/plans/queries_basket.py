@@ -105,7 +105,7 @@ _PAIR_LIFT_SQL = f"""
 """
 
 
-@query("part_pair_lift", _PAIR_LIFT_SQL, extra=True)
+@query("part_pair_lift", _PAIR_LIFT_SQL)
 def part_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} part pairs by LIFT among pairs co-ordered at least
     {s} times: for parts A < B, support = P(A,B), confidence(A→B) =

@@ -49,7 +49,6 @@ _FUNNEL = ("signup", "view", "purchase")
              AS conversion_from_start
     FROM counts
     """,
-    extra=True,
 )
 def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel signup → view → purchase: a user counts at
@@ -143,7 +142,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM activity a JOIN sizes s USING (cohort_week)
     GROUP BY 1, 2, s.cohort_size
     """,
-    extra=True,
 )
 def weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention: users bucketed by the ISO week of
@@ -209,7 +207,6 @@ def weekly_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                               AS DOUBLE) AS probability
     FROM pairs
     """,
-    extra=True,
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types per user
@@ -257,7 +254,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
            revenue / lag(revenue, 12) OVER w - 1 AS yoy_growth
     FROM m WINDOW w AS (ORDER BY mo)
     """,
-    extra=True,
 )
 def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month and year-over-year revenue growth: lag(1) and
@@ -311,7 +307,6 @@ def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS total_users
     FROM daily
     """,
-    extra=True,
 )
 def cumulative_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The growth curve: users by day of FIRST activity plus the

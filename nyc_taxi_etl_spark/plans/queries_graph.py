@@ -77,7 +77,7 @@ def _pagerank_sql(iterations: int = _ITERATIONS, d: float = _DAMPING) -> str:
     )
 
 
-@query("purchase_graph_pagerank", _pagerank_sql(), extra=True)
+@query("purchase_graph_pagerank", _pagerank_sql())
 def purchase_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (6 fixed iterations, d=0.85) on the customer→supplier
     purchase graph — ranks suppliers by how much customer "attention
@@ -154,7 +154,7 @@ def _triangle_sql(min_jaccard: float = 0.1) -> str:
     """
 
 
-@query("near_dup_triangles", _triangle_sql(), extra=True)
+@query("near_dup_triangles", _triangle_sql())
 def near_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle participation + local clustering coefficient for every
     document with ≥ 2 near-dup edges (word-3-gram Jaccard ≥ 0.1, the
@@ -249,7 +249,7 @@ def _hits_sql(iterations: int = _HITS_ITER) -> str:
     )
 
 
-@query("purchase_graph_hits", _hits_sql(), extra=True)
+@query("purchase_graph_hits", _hits_sql())
 def purchase_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities (4 fixed L2-normalized iterations) on
     the customer→supplier purchase graph: authoritative suppliers are
@@ -323,7 +323,7 @@ def _reach_sql(max_hops: int = _BFS_HOPS) -> str:
     )
 
 
-@query("purchase_reach_hops", _reach_sql(), extra=True)
+@query("purchase_reach_hops", _reach_sql())
 def purchase_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-BFS reachability over the (symmetrized) customer–
     supplier purchase graph: minimum hop distance from the seed

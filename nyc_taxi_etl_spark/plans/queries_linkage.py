@@ -58,7 +58,6 @@ _LINKAGE_MAX_DIST = 2
       ON b.rn > a.rn AND b.rn <= a.rn + {_LINKAGE_WINDOW}
     WHERE levenshtein(a.p_name, b.p_name) <= {_LINKAGE_MAX_DIST}
     """,
-    extra=True,
 )
 def part_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood record linkage over part names: candidate
@@ -126,7 +125,6 @@ def part_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     WHERE sz = same_max AND sz > coalesce(cheap_max, -1)
     """,
-    extra=True,
 )
 def part_price_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The price/size Pareto frontier of the part catalog: every part
@@ -257,7 +255,7 @@ def _er_sql() -> str:
     """
 
 
-@query("part_entity_resolution", _er_sql(), extra=True)
+@query("part_entity_resolution", _er_sql())
 def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution with golden-record survivorship:
     sorted-neighborhood blocking → edit-distance match → connected-
@@ -419,7 +417,7 @@ _GOLDEN_SQL = """
 """
 
 
-@query("customer_order_golden", _GOLDEN_SQL, extra=True)
+@query("customer_order_golden", _GOLDEN_SQL)
 def customer_order_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The survivorship rule menu as a FIRST-CLASS entry (r9): one
     golden record per customer from their order history, exercising

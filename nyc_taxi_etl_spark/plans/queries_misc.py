@@ -211,7 +211,6 @@ def orders_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 100 AS total_price
     FROM merged GROUP BY 1
     """,
-    extra=True,
 )
 def orders_cdc_delete_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC merge WITH TOMBSTONES (operators/merge.py ``op_col`` — the
@@ -363,7 +362,6 @@ def stratified_order_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS delta_n
     FROM per
     """,
-    extra=True,
 )
 def events_drift_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality drift monitor: per-day distribution profile of the
@@ -422,7 +420,6 @@ def events_drift_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events, b
     GROUP BY event_type
     """,
-    extra=True,
 )
 def winsorized_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percentile winsorization (P13's clip/cap with DATA-DRIVEN
@@ -479,7 +476,6 @@ def winsorized_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM g WHERE n_events < 3 GROUP BY 1)
     SELECT * FROM released UNION ALL SELECT * FROM rolled
     """,
-    extra=True,
 )
 def kanon_daily_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymous aggregate release (k=3) of per-user daily activity:
@@ -535,7 +531,6 @@ def kanon_daily_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(sample_key, 4) AS sample_key
     FROM ranked WHERE rk <= 10
     """,
-    extra=True,
 )
 def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis-Spirakis
@@ -581,7 +576,6 @@ def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_absent
     FROM j GROUP BY 1
     """,
-    extra=True,
 )
 def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured props via Spark 4's VARIANT type: parse_json
@@ -624,7 +618,6 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(max(o_totalprice), 4) AS max_price
     FROM orders GROUP BY 1
     """,
-    extra=True,
 )
 def orders_matview_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained materialized aggregate, driver-
@@ -694,7 +687,6 @@ def orders_matview_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFram
       SELECT 1 FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
       WHERE o.o_custkey = c.c_custkey AND l.l_returnflag = 'R')
     """,
-    extra=True,
 )
 def returning_customers_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join chain (the J-family member the catalog's anti-
@@ -742,7 +734,6 @@ def returning_customers_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(p.d IS NULL OR e.d IS NULL AS BIGINT) AS one_sided
     FROM p FULL OUTER JOIN e ON e.d = p.d
     """,
-    extra=True,
 )
 def daily_purchase_error_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of two daily series with different coverage
@@ -801,7 +792,6 @@ def daily_purchase_error_full_outer(spark: SparkSession, sf_dir: str) -> DataFra
     JOIN supplier s ON s.s_suppkey = r.l_suppkey
     WHERE r.rk = 1
     """,
-    extra=True,
 )
 def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2's shape on this schema: the minimum-cost supplier per
@@ -875,7 +865,6 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN isup ua ON ua.l_partkey = p.part_a
     JOIN isup ub ON ub.l_partkey = p.part_b
     """,
-    extra=True,
 )
 def part_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: part pairs co-purchased in the same
@@ -952,7 +941,6 @@ def part_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 100 AS segment_revenue
     FROM scored GROUP BY 1, 2, 3
     """,
-    extra=True,
 )
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation: recency / frequency / monetary quartiles per
@@ -1021,7 +1009,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(delay_days) AS BIGINT) AS max_delay
     FROM d GROUP BY 1
     """,
-    extra=True,
 )
 def shipping_delay_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship latency distribution per order priority (count /
@@ -1066,7 +1053,6 @@ def shipping_delay_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS revenue_rank
     FROM b
     """,
-    extra=True,
 )
 def brand_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brand revenue with share-of-total (ratio_to_report — each
@@ -1125,7 +1111,6 @@ def brand_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sides s JOIN nation n ON n.n_nationkey = s.nationkey
     GROUP BY 1, 2
     """,
-    extra=True,
 )
 def nation_account_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer vs supplier account-balance book per nation: the
@@ -1169,14 +1154,12 @@ def nation_account_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT NULL AS source, CAST(2 AS BIGINT) AS n_rows,
            CAST(2 AS BIGINT) AS n_corrupt
     """,
-    extra=True,
 )
 def jsonl_roundtrip_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end JSONL ingest check through the oracle gate: the
     documents table is exported to JSON-Lines (sources/sinks.py::
-    write_jsonl), two malformed lines are planted, and the PERMISSIVE
-    quarantine reader (sources/textformats.py::read_jsonl) ingests the
-    directory back. Per-source clean counts must equal the parquet
+    write_jsonl), two malformed lines are planted, and the quarantine
+    reader (sources/jsonl.py::read_jsonl) ingests the directory back. Per-source clean counts must equal the parquet
     truth and both corrupt lines must land in the NULL-source
     quarantine bucket — proving the round-trip loses nothing and the
     front door never turns one bad byte into a task failure.
@@ -1192,7 +1175,7 @@ def jsonl_roundtrip_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     import tempfile
 
     from ..sources.sinks import write_jsonl
-    from ..sources.textformats import CORRUPT_COL, read_jsonl
+    from ..sources.jsonl import CORRUPT_COL, read_jsonl
 
     docs = t(spark, sf_dir, "documents")
     tag = hashlib.md5(
@@ -1240,7 +1223,6 @@ def jsonl_roundtrip_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame
              END AS is_current
     FROM starts WINDOW w2 AS (PARTITION BY custkey ORDER BY d, k)
     """,
-    extra=True,
 )
 def customer_priority_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type 2 dimension history (``operators/scd.py``): each
@@ -1298,7 +1280,6 @@ def customer_priority_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (b.k IS NOT NULL AND r.k IS NOT NULL
                AND b.p IS NOT DISTINCT FROM r.p)
     """,
-    extra=True,
 )
 def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation (``operators/diff.py``): diff the
@@ -1354,7 +1335,6 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.r_name = 'ASIA' AND year(o.o_orderdate) = 1996
     GROUP BY 1
     """,
-    extra=True,
 )
 def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5's shape — the 6-table join chain (lineitem ⋈ orders ⋈
@@ -1425,7 +1405,6 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, orderkey
     LIMIT 10
     """,
-    extra=True,
 )
 def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3's shape: the 10 highest-revenue orders from BUILDING
@@ -1482,7 +1461,6 @@ def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY 1
     """,
-    extra=True,
 )
 def customer_order_join_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained materialized JOIN view, driver-verified

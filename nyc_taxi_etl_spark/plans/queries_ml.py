@@ -106,7 +106,7 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
-@query("media_video_frames", extra=True)
+@query("media_video_frames")
 def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal video pipeline: frame container binary column →
     every-Nth-frame sampling via mapInPandas, one row per kept frame
@@ -128,7 +128,7 @@ def media_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id", "frame_idx")
 
 
-@query("lda_document_topics", None, extra=True)
+@query("lda_document_topics")
 def lda_document_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LDA topic-term table over the documents corpus (k=5 topics ×
     top-8 terms, EM optimizer, seed-pinned). Rows-only by design —
@@ -144,7 +144,7 @@ def lda_document_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
                       max_iter=20, top_n=8)
 
 
-@query("media_image_patch_embeddings", None, extra=True)
+@query("media_image_patch_embeddings")
 def media_image_patch_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ViT-style patch embeddings over the synthetic media corpus:
     real decode (PNG/BMP/PPM pure-numpy codecs) → separable bilinear
@@ -163,7 +163,7 @@ def media_image_patch_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_patch_embeddings(media, grid=4, patch_px=8)
 
 
-@query("media_image_phash_pairs", None, extra=True)
+@query("media_image_phash_pairs")
 def media_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate pairs by DCT perceptual hash — the visual
     member of the dedup family (text: minhash/simhash/winnow;
@@ -192,7 +192,7 @@ def media_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("media_audio_fingerprint_pairs", None, extra=True)
+@query("media_audio_fingerprint_pairs")
 def media_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate pairs by spectral fingerprint — the audio
     member of the dedup family. PCM16 decode → Hann STFT → 65

@@ -1,8 +1,8 @@
 """Catalog entry for exact duplicate-passage removal
 (``operators/passages.py`` — Lee et al. 2021 ExactSubstr semantics,
-window-hash formulation). Registered in the overflow registry so the
-driver's 50-slot window stays stable; ``tests/test_oracle.py`` runs it
-under the same DuckDB gate.
+window-hash formulation). It sits outside the driver window
+(``plans.DRIVER_WINDOW``); ``tests/test_oracle.py`` runs it under the
+same DuckDB gate.
 """
 
 from __future__ import annotations
@@ -56,7 +56,7 @@ _PASSAGE_SQL = f"""
 """
 
 
-@query("doc_passage_dedup", _PASSAGE_SQL, extra=True)
+@query("doc_passage_dedup", _PASSAGE_SQL)
 def doc_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate-passage removal over the documents table
     (``operators/passages.py::dedup_passages``): every 5-token window

@@ -39,7 +39,7 @@ def _profile_sql() -> str:
     """
 
 
-@query("synth_corpus_lang_profile", _profile_sql(), extra=True)
+@query("synth_corpus_lang_profile", _profile_sql())
 def synth_corpus_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(lang, source) profile of the Python-data-source corpus:
     doc counts, char totals, and an order-pinned md5 over the full

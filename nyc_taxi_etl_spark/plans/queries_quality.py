@@ -67,7 +67,7 @@ _CHECK_SQL = """
 """
 
 
-@query("lineitem_quality_report", _CHECK_SQL, extra=True)
+@query("lineitem_quality_report", _CHECK_SQL)
 def lineitem_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared expectation suite over lineitem: null/range/set/regex/
     predicate row checks, composite-key uniqueness, and referential
@@ -129,7 +129,7 @@ def _profile_sql() -> str:
     return " UNION ALL ".join(parts)
 
 
-@query("lineitem_column_profile", _profile_sql(), extra=True)
+@query("lineitem_column_profile", _profile_sql())
 def lineitem_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-TABLE-style column statistics over lineitem: per column
     the non-null/null counts, EXACT distinct count, and min/max
@@ -257,7 +257,7 @@ _FD_SQL = """
 """
 
 
-@query("order_line_fd_audit", _FD_SQL, extra=True)
+@query("order_line_fd_audit", _FD_SQL)
 def order_line_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency audit over orders+lineitem: five declared
     FDs profiled in one report — the key-discovery / denormalization-
@@ -308,7 +308,7 @@ _KANON_SQL = """
 """
 
 
-@query("customer_k_anonymity", _KANON_SQL, extra=True)
+@query("customer_k_anonymity", _KANON_SQL)
 def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
     et al. 2006) over the customer table: with quasi-identifier
@@ -427,7 +427,7 @@ def _customer_qi_ladder(base):
     ]
 
 
-@query("customer_k_anonymity_repair", _KREPAIR_SQL, extra=True)
+@query("customer_k_anonymity_repair", _KREPAIR_SQL)
 def customer_k_anonymity_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity REPAIR (Samarati 2001 / Datafly; VERDICT r7 task
     #8): where ``customer_k_anonymity`` names the exposure, this picks
@@ -502,7 +502,7 @@ _LREPAIR_SQL = f"""
 """
 
 
-@query("customer_l_diversity_repair", _LREPAIR_SQL, extra=True)
+@query("customer_l_diversity_repair", _LREPAIR_SQL)
 def customer_l_diversity_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity repair (Machanavajjhala et al. 2006 on the Datafly
     ladder): k-anonymity alone leaves a group that shares ONE
@@ -604,7 +604,7 @@ _KRELEASE_SQL = f"""
 """
 
 
-@query("customer_k_anonymity_release", _KRELEASE_SQL, extra=True)
+@query("customer_k_anonymity_release", _KRELEASE_SQL)
 def customer_k_anonymity_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RELEASED k-anonymized customer table — not just the repair
     report: every surviving row with its generalized QI columns

@@ -9,9 +9,8 @@ bullet prefix, and line suffixes cycle ``. / ... / (none)`` on
 ``(doc_id + line) % 4``. That gives the line-level rules something to
 discriminate on while keeping the oracle bit-identical.
 
-Both entries are registered in the overflow registry (``extra=True``)
-so the driver's 50-slot window stays stable; ``tests/test_oracle.py``
-runs them under the same DuckDB gate.
+The entries sit outside the driver window (``plans.DRIVER_WINDOW``);
+``tests/test_oracle.py`` runs them under the same DuckDB gate.
 """
 
 from __future__ import annotations
@@ -135,7 +134,7 @@ _GOPHER_SQL = (
 )
 
 
-@query("doc_gopher_flags", _GOPHER_SQL, extra=True)
+@query("doc_gopher_flags", _GOPHER_SQL)
 def doc_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher quality rules (Rae et al. 2021 A1.1) over the documents
     table (``operators/rules.py::gopher_flags``): word-count bounds,
@@ -174,7 +173,7 @@ _C4_SQL = (
 )
 
 
-@query("doc_c4_line_filter", _C4_SQL, extra=True)
+@query("doc_c4_line_filter", _C4_SQL)
 def doc_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 line cleaning (Raffel et al. 2020) over the documents table
     (``operators/rules.py::c4_line_filter``): keep lines ending in
@@ -213,7 +212,7 @@ _FUNNEL_SQL = f"""
 """
 
 
-@query("gopher_rule_funnel", _FUNNEL_SQL, extra=True)
+@query("gopher_rule_funnel", _FUNNEL_SQL)
 def gopher_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-rejection funnel over the Gopher audit frame: how many
     documents each quality rule rejects, and how many survive the

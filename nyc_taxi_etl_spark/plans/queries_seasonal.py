@@ -42,7 +42,6 @@ from .queries import query, t
            ROUND(t.total / t.trend / s.seasonal_index, 4) AS remainder
     FROM trended t JOIN seasonal s USING (dow)
     """,
-    extra=True,
 )
 def daily_seasonality_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical multiplicative decomposition of the daily value
@@ -105,7 +104,6 @@ def daily_seasonality_decomposition(spark: SparkSession, sf_dir: str) -> DataFra
     WHERE abs(0.6745 * (total - (SELECT m FROM med))
               / (SELECT mad FROM madv)) > 2.0
     """,
-    extra=True,
 )
 def mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier days via median absolute deviation: robust z =
@@ -165,7 +163,6 @@ def mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored)
     WHERE rk <= 50
     """,
-    extra=True,
 )
 def bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 bigram collocations by PMI (pointwise mutual
@@ -243,7 +240,6 @@ def bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sums s JOIN norms n USING (doc_id)
     WHERE n.l2 > 0
     """,
-    extra=True,
 )
 def doc_hashed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-free document embeddings by signed feature hashing

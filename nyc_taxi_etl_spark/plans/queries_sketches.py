@@ -42,7 +42,6 @@ from .queries import query, t
            TRUE AS est_within_5pct
     FROM per_day JOIN trail USING (d)
     """,
-    extra=True,
 )
 def distinct_users_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day and trailing-7-day distinct users from daily HLL
@@ -123,7 +122,6 @@ def distinct_users_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1
     ORDER BY n_events DESC, user_id ASC LIMIT 6
     """,
-    extra=True,
 )
 def heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-based heavy hitters (``approx_top_k``): the streaming-
@@ -204,7 +202,7 @@ def _cms_sql(depth: int = _CMS_DEPTH, width: int = _CMS_WIDTH,
     """
 
 
-@query("user_count_cms", _cms_sql(), extra=True)
+@query("user_count_cms", _cms_sql())
 def user_count_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch point-frequency estimates vs exact counts for
     every user — the mergeable FREQUENCY pre-aggregate beside the HLL
@@ -302,7 +300,7 @@ def _kmv_sql(k: int = _KMV_K) -> str:
     """
 
 
-@query("source_shingle_overlap_kmv", _kmv_sql(), extra=True)
+@query("source_shingle_overlap_kmv", _kmv_sql())
 def source_shingle_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content overlap between sub-corpus sources from K-Minimum-
     Values sketches (``operators/kmv.py``; Bar-Yossef et al. 2002 /
@@ -414,7 +412,7 @@ def _ddsketch_sql(alpha: float = 0.01) -> str:
     """
 
 
-@query("event_value_ddsketch", _ddsketch_sql(), extra=True)
+@query("event_value_ddsketch", _ddsketch_sql())
 def event_value_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DDSketch relative-error quantiles (Masson/Lee/Law, VLDB 2019;
     ``operators/ddsketch.py``) of the event value stream per type —

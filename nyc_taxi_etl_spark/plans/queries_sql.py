@@ -51,7 +51,7 @@ _LATERAL_SQL = """
 """
 
 
-@query("customer_ancestor_chains", _HIERARCHY_SQL, extra=True)
+@query("customer_ancestor_chains", _HIERARCHY_SQL)
 def customer_ancestor_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive-CTE hierarchy walk (Spark 4's WITH RECURSIVE): every
     customer's ancestor chain in the decimal-trie hierarchy
@@ -69,7 +69,7 @@ def customer_ancestor_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_HIERARCHY_SQL)
 
 
-@query("customer_top_orders_lateral", _LATERAL_SQL, extra=True)
+@query("customer_top_orders_lateral", _LATERAL_SQL)
 def customer_top_orders_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery: each customer's top-2 orders by
     price (deterministic orderkey tiebreak), expressed as the SQL

@@ -35,7 +35,7 @@ def _corr_sql() -> str:
     return f"SELECT CAST(count(*) AS BIGINT) AS n_rows,\n           {cols}\nFROM lineitem"
 
 
-@query("lineitem_correlations", _corr_sql(), extra=True)
+@query("lineitem_correlations", _corr_sql())
 def lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation + sample covariance over the four
     lineitem measures — the engine-side ``df.corr()`` matrix of the
@@ -76,7 +76,6 @@ def lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cells
     HAVING (SELECT n FROM n) IS NOT NULL
     """,
-    extra=True,
 )
 def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square test of independence for the lang × source
@@ -146,7 +145,6 @@ def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (ORDER BY d
                  RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
     """,
-    extra=True,
 )
 def daily_rolling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-CALENDAR-day rolling revenue over the daily series —
@@ -217,7 +215,6 @@ def daily_rolling_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                       / (COALESCE(cc.n_cur, 0) / tot.tc)), 4) AS psi_term
     FROM rc LEFT JOIN cc ON cc.bin = rc.bin CROSS JOIN tot
     """,
-    extra=True,
 )
 def value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between the first and second half of
@@ -300,7 +297,6 @@ def value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT f AS l_returnflag, ROUND(min(v), 4) AS weighted_median_price
     FROM c WHERE cw >= tw / 2.0 GROUP BY 1
     """,
-    extra=True,
 )
 def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-weighted median extended price per return flag via the
@@ -333,7 +329,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS seq
     FROM orders
     """,
-    extra=True,
 )
 def orders_global_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global dense 1-based sequence numbers for every order under the
@@ -371,7 +366,6 @@ def orders_global_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
                  - (max(seq) + 1.0) / max(seq), 4) AS gini
     FROM rk
     """,
-    extra=True,
 )
 def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of revenue concentration across customers —
@@ -428,7 +422,6 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(regr_r2(day_value, day_idx), 4) AS r2
     FROM d GROUP BY 1
     """,
-    extra=True,
 )
 def daily_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type OLS trend of the daily value series: slope,
@@ -481,7 +474,6 @@ def daily_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + pow(v2 / n2, 2) / (n2 - 1)), 4) AS welch_df
     FROM m
     """,
-    extra=True,
 )
 def purchase_click_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test between purchase and click
@@ -537,7 +529,6 @@ def purchase_click_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (ORDER BY d
                  RANGE BETWEEN INTERVAL 13 DAYS PRECEDING AND CURRENT ROW)
     """,
-    extra=True,
 )
 def daily_rolling_purchase_error_corr(
     spark: SparkSession, sf_dir: str
@@ -630,7 +621,7 @@ def _auc_sql() -> str:
     """
 
 
-@query("classifier_lang_auc", _auc_sql(), extra=True)
+@query("classifier_lang_auc", _auc_sql())
 def classifier_lang_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC-AUC + Kolmogorov-Smirnov of the fixed-lexicon quality
     classifier (``operators/classifier.py``) at separating English
@@ -682,7 +673,7 @@ _BENFORD_SQL = """
 """
 
 
-@query("orders_benford_profile", _BENFORD_SQL, extra=True)
+@query("orders_benford_profile", _BENFORD_SQL)
 def orders_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-significant-digit profile of order totals:
     observed share per leading digit next to the Benford expectation
@@ -765,7 +756,7 @@ _SKEW_SQL = f"""
 """
 
 
-@query("key_skew_profiles", _SKEW_SQL, extra=True)
+@query("key_skew_profiles", _SKEW_SQL)
 def key_skew_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-distribution skew profiles for the three join/agg keys a
     planner actually worries about on this schema — orders.o_custkey,
@@ -839,7 +830,7 @@ _JOIN_AUDIT_SQL = f"""
 """
 
 
-@query("join_size_audits", _JOIN_AUDIT_SQL, extra=True)
+@query("join_size_audits", _JOIN_AUDIT_SQL)
 def join_size_audits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pre-join cardinality audits for the schema's three big
     equi-joins (orders⋈lineitem, customer⋈orders, part⋈lineitem):
@@ -888,7 +879,7 @@ _ADAPTIVE_SQL = """
 """
 
 
-@query("adaptive_join_revenue", _ADAPTIVE_SQL, extra=True)
+@query("adaptive_join_revenue", _ADAPTIVE_SQL)
 def adaptive_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew toolkit's CLOSED LOOP (r9, VERDICT r8 task #8):
     measure, then choose, then run. A deliberately skewed join key
@@ -967,7 +958,7 @@ _ADAPTIVE_LEFT_SQL = """
 """
 
 
-@query("adaptive_left_enrich", _ADAPTIVE_LEFT_SQL, extra=True)
+@query("adaptive_left_enrich", _ADAPTIVE_LEFT_SQL)
 def adaptive_left_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The adaptive join's LEFT-OUTER path (r10, VERDICT r9 task #2):
     the most common real-world skewed join is the left fact→dim
@@ -1126,7 +1117,7 @@ _TREND_SQL = """    WITH {m_cte},
 """.format(m_cte=_MONTHLY_M_CTE)
 
 
-@query("nation_revenue_trend", _TREND_SQL, extra=True)
+@query("nation_revenue_trend", _TREND_SQL)
 def nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation ordinary-least-squares revenue trend: slope
     (cents/month), intercept, and R² of monthly revenue against a
@@ -1244,7 +1235,7 @@ _MW_SQL = """
 """.format(p_sql=normal_p_sql("z"))
 
 
-@query("mw_quantity_shift", _MW_SQL, extra=True)
+@query("mw_quantity_shift", _MW_SQL)
 def mw_quantity_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U test of distribution shift: does returned ('R')
     lineitem quantity stochastically dominate non-returned ('N')? —
@@ -1400,7 +1391,7 @@ _KS_SQL = """
 """
 
 
-@query("ks_quantity_shift", _KS_SQL, extra=True)
+@query("ks_quantity_shift", _KS_SQL)
 def ks_quantity_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test of returned ('R') vs
     non-returned ('N') lineitem quantity — the distribution-SHAPE
@@ -1539,7 +1530,7 @@ _THEILSEN_SQL = """
 """.format(m_cte=_MONTHLY_M_CTE)
 
 
-@query("nation_revenue_theilsen", _THEILSEN_SQL, extra=True)
+@query("nation_revenue_theilsen", _THEILSEN_SQL)
 def nation_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend per nation: the MEDIAN of all pairwise
     slopes (y_j−y_i)/(x_j−x_i) over each nation's monthly revenue
@@ -1649,7 +1640,7 @@ _MK_SQL = """
 """.format(p_sql=normal_p_sql("z"), m_cte=_MONTHLY_M_CTE)
 
 
-@query("nation_revenue_mannkendall", _MK_SQL, extra=True)
+@query("nation_revenue_mannkendall", _MK_SQL)
 def nation_revenue_mannkendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test per nation (Mann 1945; Kendall 1975):
     S = Σ_{i<j} sign(y_j − y_i) over each monthly revenue series, the
@@ -1795,7 +1786,7 @@ _ACF_SQL = f"""
 """
 
 
-@query("nation_revenue_acf", _ACF_SQL, extra=True)
+@query("nation_revenue_acf", _ACF_SQL)
 def nation_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..{L} autocorrelation of each nation's monthly revenue
     (Box & Jenkins ACF, exact-moment form): r_k = Σ(y_t−ȳ)(y_{t+k}−ȳ)

@@ -168,7 +168,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(sum(coalesce(value, 0)), 4) AS value_total
     FROM events GROUP BY 1
     """,
-    extra=True,
 )
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom stateful operator (applyInPandasWithState running
@@ -198,10 +197,6 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(sum(value), 4) AS sum_value
     FROM w GROUP BY 1, 2
     """,
-    # Overflow registry: the driver catalog snapshots at most ~50
-    # entries; tumbling + session windows keep streaming represented
-    # there while this stays fully oracle-tested locally.
-    extra=True,
 )
 def streaming_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hour moving average sliding every hour, computed BY THE
@@ -238,7 +233,6 @@ def streaming_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND e.e_ts >= p.p_ts - INTERVAL 30 MINUTE
       AND e.e_ts <= p.p_ts + INTERVAL 30 MINUTE
     """,
-    extra=True,
 )
 def streaming_purchase_error_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STREAM interval self-join executed by the streaming
@@ -302,7 +296,6 @@ def streaming_purchase_error_pairs(spark: SparkSession, sf_dir: str) -> DataFram
            s.max_dev AS max_deviation
     FROM folded
     """,
-    extra=True,
 )
 def streaming_ewma_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (§2.10/§2.11 north star):
@@ -354,7 +347,6 @@ def streaming_ewma_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN tiers t USING (user_id)
     GROUP BY 1, 2
     """,
-    extra=True,
 )
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STATIC join: the event stream enriched per micro-batch
@@ -399,7 +391,6 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, CAST(count(*) AS BIGINT) AS unique_user_minutes
     FROM d GROUP BY event_type
     """,
-    extra=True,
 )
 def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once ingestion dedup BY THE STREAMING ENGINE:
@@ -435,7 +426,6 @@ from .queries_sketches import cms_sketch_sql as _cms_sketch_sql
 @query(
     "streaming_user_cms",
     _cms_sketch_sql(depth=4, width=64, seed=7),
-    extra=True,
 )
 def streaming_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch maintained BY THE STREAMING ENGINE: the sketch
@@ -484,7 +474,6 @@ def _stream_ddsketch_sql(alpha: float = 0.01) -> str:
 @query(
     "streaming_value_ddsketch",
     _stream_ddsketch_sql(),
-    extra=True,
 )
 def streaming_value_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DDSketch maintained BY THE STREAMING ENGINE: the bucket build
@@ -547,7 +536,6 @@ def streaming_value_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND e.e_ts <= p.p_ts + INTERVAL 30 MINUTE)
       AND p.p_ts + INTERVAL 30 MINUTE < wm.w
     """,
-    extra=True,
 )
 def streaming_purchase_error_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join — the null-extension
@@ -623,7 +611,6 @@ def streaming_purchase_error_left(spark: SparkSession, sf_dir: str) -> DataFrame
            s[3] AS max_abs_residual
     FROM folded
     """,
-    extra=True,
 )
 def streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user Holt double exponential smoothing (level + trend,
@@ -673,7 +660,7 @@ def _cusum_sql() -> str:
     return _CUSUM_SQL
 
 
-@query("streaming_cusum_drift", _cusum_sql(), extra=True)
+@query("streaming_cusum_drift", _cusum_sql())
 def streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user two-sided CUSUM drift detection THROUGH THE STREAMING
     ENGINE (streaming/stateful.py::cusum_drift_stream) — the

@@ -140,7 +140,6 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(sum(value), 4) AS total_value
     FROM events GROUP BY ROLLUP(1, 2, 3, 4)
     """,
-    extra=True,
 )
 def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous-aggregate: hourly → daily → monthly
@@ -218,7 +217,6 @@ def purchases_in_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(quantile_cont(value, 0.90), 4) AS p90
     FROM events GROUP BY 1
     """,
-    extra=True,
 )
 def event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact multi-quantile profile per event type (A16 quantiles; p50
@@ -278,7 +276,6 @@ def event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_reconstructed
     FROM pit GROUP BY 1
     """,
-    extra=True,
 )
 def orders_priority_point_in_time(
     spark: SparkSession, sf_dir: str

@@ -257,7 +257,7 @@ def _repeat_removal_sql(max_period: int = 3) -> str:
     """
 
 
-@query("doc_repetition_removal", _repeat_removal_sql(), extra=True)
+@query("doc_repetition_removal", _repeat_removal_sql())
 def doc_repetition_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collapse immediately-repeated word 1-3-gram runs
     (``operators/text.py::collapse_repeated_ngrams``): the removal
@@ -315,7 +315,6 @@ def ngram_jaccard_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM shared JOIN sizes x ON id_a = x.doc_id JOIN sizes y ON id_b = y.doc_id
     WHERE {_SQL_NGRAM_JACCARD} >= 0.5
     """,
-    extra=True,
 )
 def ppjoin_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered EXACT Jaccard near-dup pairs (j >= 0.5 on word
@@ -712,7 +711,7 @@ def _curation_audit_sql(
     """
 
 
-@query("curation_audit", _curation_audit_sql(), extra=True)
+@query("curation_audit", _curation_audit_sql())
 def curation_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation provenance (``operators/curate.py::curation_audit``):
     one row per INPUT document with its quality score, fate
@@ -978,7 +977,7 @@ def _semantic_dedup_sql(threshold: float = 0.35) -> str:
     """
 
 
-@query("semantic_dedup", _semantic_dedup_sql(), extra=True)
+@query("semantic_dedup", _semantic_dedup_sql())
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (``operators/similarity.py::semantic_dedup``): embedding
     near-coincidence (cos ≥ 0.35 on this near-uniform corpus; ≥ 0.95 in
@@ -1062,7 +1061,7 @@ def _ann_ivf_sql(k: int = 5, n_queries: int = 10) -> str:
     """
 
 
-@query("ann_ivf_cosine", _ann_ivf_sql(), extra=True)
+@query("ann_ivf_cosine", _ann_ivf_sql())
 def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 neighbors for 10 queries via an IVF index
     (16 Voronoi cells, 4 probed cells) — the second scale path for ANN
@@ -1161,7 +1160,6 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT shingle, CAST(count(*) AS BIGINT) AS df
     FROM ex GROUP BY 1 ORDER BY df DESC, shingle LIMIT 100
     """,
-    extra=True,
 )
 def shingle_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 word-3-shingles by document frequency — the boilerplate
@@ -1231,7 +1229,6 @@ def fuzzy_oracle_sql() -> str:
 @query(
     "fuzzy_near_pairs",
     fuzzy_oracle_sql(),
-    extra=True,
 )
 def fuzzy_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Levenshtein near-dup pairs (≤50 char edits on normalized text)
@@ -1337,7 +1334,7 @@ def _ann_pq_sql(k: int = 5, n_queries: int = 10) -> str:
     """
 
 
-@query("ann_pq_cosine", _ann_pq_sql(), extra=True)
+@query("ann_pq_cosine", _ann_pq_sql())
 def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 neighbors for 10 queries via product
     quantization (``operators/pq.py``): 16×16 codebooks, compressed
@@ -1371,7 +1368,7 @@ def ann_pq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
-@query("doc_compression_signal", extra=True)
+@query("doc_compression_signal")
 def doc_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compression-ratio quality signal per document
     (``operators/signals.py``): repetitive/templated text compresses
@@ -1401,7 +1398,6 @@ def doc_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN src sb ON p.id_b = sb.doc_id
     GROUP BY 1, 2
     """,
-    extra=True,
 )
 def cross_source_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-sub-corpus duplication matrix: MinHash-LSH near-dup pairs
@@ -1437,7 +1433,6 @@ def cross_source_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored)
     WHERE rnk <= 5
     """,
-    extra=True,
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard negatives: for each of 10 query vectors, the
@@ -1468,7 +1463,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
            max_eval_sim >= 0.35 AS is_contaminated
     FROM s
     """,
-    extra=True,
 )
 def semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-level decontamination: every 20th vector plays the
@@ -1517,7 +1511,6 @@ _WINNOW_K, _WINNOW_W, _WINNOW_MIN = 20, 8, 5
     GROUP BY 1, 2
     HAVING count(*) >= {_WINNOW_MIN}
     """,
-    extra=True,
 )
 def winnow_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint near-dup pairs (Schleimer et al., SIGMOD
@@ -1560,7 +1553,7 @@ def _cluster_balanced_sample_sql() -> str:
     """
 
 
-@query("cluster_balanced_sample", _cluster_balanced_sample_sql(), extra=True)
+@query("cluster_balanced_sample", _cluster_balanced_sample_sql())
 def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced 20% subset of the embedding corpus: bucket the
     space into 2^4 hyperplane cells (a deterministic stand-in for
@@ -1616,7 +1609,7 @@ def _incremental_minhash_sql() -> str:
     """
 
 
-@query("incremental_near_dup_ingest", _incremental_minhash_sql(), extra=True)
+@query("incremental_near_dup_ingest", _incremental_minhash_sql())
 def incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup ingestion gate
     (``operators/incremental.py::near_dup_batch_against_corpus``):
@@ -1691,7 +1684,7 @@ _JSD_SQL = """
 """
 
 
-@query("source_token_jsd", _JSD_SQL, extra=True)
+@query("source_token_jsd", _JSD_SQL)
 def source_token_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence of each source's token distribution
     from the CORPUS distribution (Lin 1991) — the mixture-curation

@@ -54,7 +54,6 @@ _FMT = "yyyy-MM-dd HH:mm:ss"
            ) AS total_value_locf
     FROM j
     """,
-    extra=True,
 )
 def hourly_gapfilled_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled hourly series per event type with last-observation-
@@ -117,7 +116,6 @@ def hourly_gapfilled_values(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS partial_revenue
     FROM orders GROUP BY 1
     """,
-    extra=True,
 )
 def monthly_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide month×status matrix via `groupBy().pivot()` — the
@@ -185,7 +183,6 @@ def monthly_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
-    extra=True,
 )
 def customer_order_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer order cadence: sequence number, days since the
@@ -243,7 +240,6 @@ def customer_order_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + power(0.8, idx - 1) * f.x1, 4) AS ewma
     FROM u, f
     """,
-    extra=True,
 )
 def daily_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch EWMA (α=0.2) over the daily event-value series — the
@@ -301,7 +297,6 @@ def daily_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(sum(o_totalprice), 4) AS revenue
     FROM orders GROUP BY 1, 2
     """,
-    extra=True,
 )
 def monthly_status_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot → UNPIVOT round-trip: build the wide month × status matrix
@@ -529,7 +524,7 @@ def cusum_fold(
     )
 
 
-@query("user_value_cusum", _CUSUM_SQL, extra=True)
+@query("user_value_cusum", _CUSUM_SQL)
 def user_value_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided tabular CUSUM changepoint detection (Page 1954) per
     user over the (ts, event_id)-ordered value stream — the classic

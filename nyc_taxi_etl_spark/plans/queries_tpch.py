@@ -98,7 +98,6 @@ _REV_SQL = "CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)"
            CAST(count(*) AS BIGINT) AS num_customers
     FROM per_cust GROUP BY 1
     """,
-    extra=True,
 )
 def order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13's shape: how many customers placed 0, 1, 2, …
@@ -149,7 +148,6 @@ def order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_shipdate >= TIMESTAMP '1996-09-01'
       AND l.l_shipdate <  TIMESTAMP '1996-10-01'
     """,
-    extra=True,
 )
 def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14's shape: the share of one month's revenue that came
@@ -200,7 +198,6 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 0.2 * avg(l2.l_quantity)
         FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
     """,
-    extra=True,
 )
 def small_quantity_avg_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17's shape: revenue tied up in unusually small orders of
@@ -274,7 +271,6 @@ def small_quantity_avg_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o3.r = 1)
     GROUP BY 1
     """,
-    extra=True,
 )
 def sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21's shape: suppliers who were the SOLE supplier with
@@ -337,7 +333,6 @@ def sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o.o_orderdate >= TIMESTAMP '2000-01-01')
     GROUP BY 1
     """,
-    extra=True,
 )
 def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22's shape: customers with above-average account
@@ -397,7 +392,6 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                      count(*) AS n_parts FROM pv) tot
     WHERE value_cents * tot.n_parts * 2 > 3 * tot.total_cents
     """,
-    extra=True,
 )
 def important_parts_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11's shape: parts whose traded value exceeds 1.5× the
@@ -455,7 +449,6 @@ def important_parts_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY 1, 2, 3
     """,
-    extra=True,
 )
 def brand_type_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16's shape: how many DISTINCT qualified suppliers can
@@ -511,7 +504,6 @@ def brand_type_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 35
            AND l.l_quantity BETWEEN 20 AND 30)
     """,
-    extra=True,
 )
 def disjunctive_basket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19's shape: revenue from three OR'd brand/size/quantity
@@ -565,7 +557,6 @@ def disjunctive_basket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND year(o.o_orderdate) IN (1996, 1997)
     GROUP BY 1, 2, 3
     """,
-    extra=True,
 )
 def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7's shape: shipping volume BETWEEN two nations, both
@@ -636,7 +627,6 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sr JOIN supplier s ON sr.suppkey = s.s_suppkey
     WHERE sr.rev_cents = (SELECT max(rev_cents) FROM sr)
     """,
-    extra=True,
 )
 def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15's shape: the supplier(s) whose revenue over one
@@ -706,7 +696,6 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND year(o.o_orderdate) IN (1996, 1997)
     GROUP BY 1
     """,
-    extra=True,
 )
 def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8's shape: one nation's market share — the fraction of
@@ -785,7 +774,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY 1, 2
     """,
-    extra=True,
 )
 def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9's shape: profit decomposition per supplier nation per
@@ -846,7 +834,6 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY sum({_REV_SQL}) DESC, custkey
     LIMIT 20
     """,
-    extra=True,
 )
 def returned_revenue_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10's shape: the 20 customers who returned the most
@@ -917,7 +904,6 @@ def returned_revenue_top_customers(spark: SparkSession, sf_dir: str) -> DataFram
       ON o.o_orderkey = q.l_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
     """,
-    extra=True,
 )
 def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18's shape: orders whose total line quantity exceeds a
@@ -980,7 +966,6 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE 2 * pl.q > pt.tq
     GROUP BY 1, 2
     """,
-    extra=True,
 )
 def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20's shape: suppliers who dominated a part's supply —

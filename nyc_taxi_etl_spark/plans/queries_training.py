@@ -299,10 +299,10 @@ def training_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Rows-only (overflow): per-round argmax is not SQL-expressible; BPE
+# Rows-only: per-round argmax is not SQL-expressible; BPE
 # semantics are pinned against a reference implementation in
 # tests/test_bpe.py — the KMeans/IVF posture.
-@query("bpe_merges", extra=True)
+@query("bpe_merges")
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vocabulary induction over the documents corpus
     (``operators/bpe.py``): the first 10 learned merges in application
@@ -321,7 +321,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("doc_bpe_token_stats", extra=True)
+@query("doc_bpe_token_stats")
 def doc_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full tokenizer lifecycle in one catalog query: TRAIN 12 BPE
     merges on the corpus (word-type-table iteration, ``train_bpe``),
@@ -391,7 +391,7 @@ def _leakage_audit_sql() -> str:
     """
 
 
-@query("split_leakage_audit", _leakage_audit_sql(), extra=True)
+@query("split_leakage_audit", _leakage_audit_sql())
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-leakage audit: count near-dup pairs (MinHash-LSH, jaccard
     ≥ 0.5) by the (split_a, split_b) of their endpoints under the
@@ -454,7 +454,7 @@ def _leakage_safe_sql() -> str:
     """
 
 
-@query("leakage_safe_split_counts", _leakage_safe_sql(), extra=True)
+@query("leakage_safe_split_counts", _leakage_safe_sql())
 def leakage_safe_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-aware splitting (``operators/export.py::
     leakage_safe_split``): every document hashes its duplicate-cluster
@@ -523,7 +523,7 @@ def _budget_sql() -> str:
     """
 
 
-@query("budget_selected_sources", _budget_sql(), extra=True)
+@query("budget_selected_sources", _budget_sql())
 def budget_selected_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus selection (``operators/selection.py``): per
     source, admit documents in (quality DESC, doc_id) order while the
@@ -592,7 +592,6 @@ def budget_selected_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(a, 4) AS avg_logprob, ROUND(exp(-a), 4) AS perplexity
     FROM sc
     """,
-    extra=True,
 )
 def doc_lm_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated bigram-LM perplexity (``operators/lm.py``
@@ -663,7 +662,7 @@ def _classifier_sql() -> str:
     """
 
 
-@query("doc_quality_classifier", _classifier_sql(), extra=True)
+@query("doc_quality_classifier", _classifier_sql())
 def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style hashed n-gram linear classifier, fixed-lexicon
     inference (``operators/classifier.py``): hash unigrams + word
@@ -771,7 +770,6 @@ def mixture_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_docs_kept
     FROM r LEFT JOIN k USING (source)
     """,
-    extra=True,
 )
 def temperature_mixture_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature (α-power) mixture resampling audit
@@ -849,7 +847,6 @@ _DSIR_TOP = 50
             ORDER BY log_weight DESC, doc_id) AS rnk FROM sc)
     WHERE rnk <= {_DSIR_TOP}
     """,
-    extra=True,
 )
 def dsir_selected_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance selection (``operators/dsir.py``; Xie et al.
@@ -885,7 +882,6 @@ def dsir_selected_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) < 10 AS at_risk
     FROM customer GROUP BY 1, 2
     """,
-    extra=True,
 )
 def k_anonymity_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity release audit (Sweeney 2002) on the customer table's
@@ -930,7 +926,6 @@ def k_anonymity_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
              END AS bucket
     FROM r
     """,
-    extra=True,
 )
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail quality tiers (Wenzek et al. 2020,

@@ -66,7 +66,6 @@ def _url_col() -> F.Column:
            min(path) AS first_path
     FROM parsed GROUP BY 1
     """,
-    extra=True,
 )
 def url_host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host crawl profile: document count, language spread,
@@ -112,7 +111,6 @@ def url_host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rk AS BIGINT) AS host_rank
     FROM ranked WHERE rk <= 4
     """,
-    extra=True,
 )
 def domain_capped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain quota cap (RefinedWeb-style): keep at most 4
@@ -182,7 +180,7 @@ def _bm25_sql() -> str:
     """
 
 
-@query("bm25_scores", _bm25_sql(), extra=True)
+@query("bm25_scores", _bm25_sql())
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 (Robertson/Sparck Jones; k1=1.2, b=0.75) document scores
     for a fixed query — the probabilistic-IR companion to the TF-IDF
@@ -305,7 +303,7 @@ def _hybrid_sql() -> str:
     """
 
 
-@query("hybrid_retrieval_rrf", _hybrid_sql(), extra=True)
+@query("hybrid_retrieval_rrf", _hybrid_sql())
 def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion (Cormack, Clarke &
     Büttcher, SIGIR 2009): the BM25 top-50 for the fixed keyword query
@@ -430,7 +428,7 @@ def _phrase_plan(docs: DataFrame, terms: list[str]) -> DataFrame:
 _PHRASE_SQL = _phrase_oracle_sql(_PHRASE_TERMS)
 
 
-@query("phrase_search_docs", _PHRASE_SQL, extra=True)
+@query("phrase_search_docs", _PHRASE_SQL)
 def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact positional phrase search ('{w1} {w2}') over the corpus —
     the retrieval primitive BM25's bag-of-words scoring cannot
@@ -468,7 +466,6 @@ phrase_search_docs.__doc__ = phrase_search_docs.__doc__.replace(
 @query(
     "phrase_search_trigram",
     _phrase_oracle_sql(_TRIGRAM_TERMS),
-    extra=True,
 )
 def phrase_search_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-term positional phrase search ('big order scan') — the

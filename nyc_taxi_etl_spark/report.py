@@ -263,16 +263,12 @@ def build_report(
     segmentation, region revenue, daily two-series comparison, ETL
     audit — from the engine's catalog queries into ONE self-contained
     HTML file. Returns ``out_path``."""
-    # merged registry: the driver-window rotation (plans/__init__.py)
-    # moves entries between the two dicts round-over-round, and the
-    # report cares about the query, not its snapshot slot
-    from .plans import QUERIES, QUERIES_EXTRA
+    from .plans import CATALOG
 
-    all_queries = {**QUERIES, **QUERIES_EXTRA}
     sections: list[str] = []
 
     def run(name: str) -> tuple[list[str], list[tuple]]:
-        return _collect(all_queries[name](spark, sf_dir))
+        return _collect(CATALOG[name](spark, sf_dir))
 
     # ETL audit → stat tiles (a single headline number is not a chart)
     cols, rows = run("etl_filter_audit")
@@ -351,13 +347,8 @@ def build_report(
         + _table(cols, rows)
     )
 
-    # product-analytics page (overflow-registry entries)
-    from .plans import QUERIES_EXTRA
-
-    def run_extra(name: str) -> tuple[list[str], list[tuple]]:
-        return _collect(QUERIES_EXTRA[name](spark, sf_dir))
-
-    cols, rows = run_extra("event_funnel")
+    # product-analytics page
+    cols, rows = run("event_funnel")
     rows = sorted(rows)
     sections.append(
         "<h2>Conversion funnel</h2>"
@@ -365,13 +356,13 @@ def build_report(
         + _table(cols, rows)
     )
 
-    cols, rows = run_extra("weekly_cohort_retention")
+    cols, rows = run("weekly_cohort_retention")
     rows = sorted(rows)
     sections.append(
         "<h2>Weekly cohort retention</h2>" + _table(cols, rows)
     )
 
-    cols, rows = run_extra("daily_seasonality_decomposition")
+    cols, rows = run("daily_seasonality_decomposition")
     rows = sorted(rows)
     day = [r[0] for r in rows]
     sections.append(

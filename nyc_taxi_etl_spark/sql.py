@@ -3,7 +3,7 @@ runnable as ``spark.sql(...)``.
 
 SURVEY.md §7.1's optional ``sql.py``: the reference has no SQL parser,
 but because this engine declares all plans through Catalyst, exposing
-them as SQL is free — ``register_views`` + the ORACLE strings (which
+them as SQL is free — ``register_views`` + the ORACLES strings (which
 are ANSI) cover most of the catalog verbatim, and users can write ad
 hoc SQL over the same tables.
 

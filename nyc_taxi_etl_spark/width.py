@@ -129,7 +129,11 @@ def shuffle_scope(spark: SparkSession, n: int):
 def with_partitions(df: DataFrame, n: int) -> DataFrame:
     """``df`` in exactly ``n`` partitions, so a write makes ``n`` files:
     ``coalesce`` (narrow, no shuffle) down to the current count,
-    ``repartition`` above it, which ``coalesce`` cannot reach."""
-    if n <= num_partitions(df):
+    ``repartition`` above it, which ``coalesce`` cannot reach.
+
+    ``n == 1`` coalesces without counting: ``coalesce(1)`` yields one
+    partition even from an empty child, and the count plans the frame,
+    which under AQE runs each upstream shuffle as a job of its own."""
+    if n == 1 or n <= num_partitions(df):
         return df.coalesce(n)
     return df.repartition(n)

@@ -20,14 +20,11 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-from nyc_taxi_etl_spark.plans import QUERIES as _MAIN
-from nyc_taxi_etl_spark.plans import QUERIES_EXTRA
+from nyc_taxi_etl_spark.plans import CATALOG
 
 from .conftest import SF_DIR, TABLES
 
-QUERIES = {**_MAIN, **QUERIES_EXTRA}
-
-_STREAMING = {n for n in QUERIES if n.startswith("streaming_")}
+_STREAMING = {n for n in CATALOG if n.startswith("streaming_")}
 # global aggregates legitimately emit one (all-zero) row over no rows
 _GLOBAL_AGG = {"etl_filter_audit", "gopher_rule_funnel",
                "lineitem_correlations",
@@ -52,7 +49,7 @@ _EMPTY_REPORTS = {"lineitem_quality_report": 8, "event_funnel": 3,
 # media queries synthesize their blobs (no media table in testdata),
 # and the Python-data-source entry GENERATES its corpus — input-
 # independent by design, so 'empty input' doesn't apply to them
-_SYNTHETIC = {n for n in QUERIES if n.startswith("media_")} | {
+_SYNTHETIC = {n for n in CATALOG if n.startswith("media_")} | {
     "synth_corpus_lang_profile",
     # plants two fixture corrupt JSONL lines → emits the quarantine
     # bucket row even over an empty documents table (by design)
@@ -72,9 +69,9 @@ def empty_sf_dir(tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - _SYNTHETIC))
+@pytest.mark.parametrize("name", sorted(set(CATALOG) - _SYNTHETIC))
 def test_query_survives_empty_input(spark, empty_sf_dir, name):
-    out = QUERIES[name](spark, empty_sf_dir)
+    out = CATALOG[name](spark, empty_sf_dir)
     rows = out.limit(10).collect()
     if name in _GLOBAL_AGG:
         assert len(rows) == 1 and all(v in (0, None) for v in rows[0])
@@ -108,15 +105,15 @@ def test_key_skew_oracle_matches_on_empty_keyspace(spark, empty_sf_dir):
     con = duckdb.connect()
     _register(con, empty_sf_dir)
     duck_pdf = con.execute(_SKEW_SQL).df()
-    spark_pdf = QUERIES["key_skew_profiles"](spark, empty_sf_dir).toPandas()
+    spark_pdf = CATALOG["key_skew_profiles"](spark, empty_sf_dir).toPandas()
     assert len(spark_pdf) == 3
     assert list(spark_pdf["n_rows"]) == [0, 0, 0]
     assert_frames_match(spark_pdf, duck_pdf, "key_skew_profiles[empty]")
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - _STREAMING))
+@pytest.mark.parametrize("name", sorted(set(CATALOG) - _STREAMING))
 def test_catalog_plan_hygiene(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
+    df = CATALOG[name](spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -14,18 +14,16 @@ def test_queries_listing_no_spark(capsys):
     assert main(["queries"]) == 0
     out = capsys.readouterr().out
     lines = [line for line in out.strip().splitlines() if line]
-    from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+    from nyc_taxi_etl_spark.plans import CATALOG, DRIVER_WINDOW
 
     # driver window (pinned at 50) + however many overflow entries exist
-    assert len(QUERIES) == 50
-    assert len(lines) == len(QUERIES) + len(QUERIES_EXTRA)
+    assert len(DRIVER_WINDOW) == 50
+    assert len(lines) == len(CATALOG)
     assert any(line.startswith("events_time_profile\toracle") for line in lines)
-    assert sum(line.endswith("\toverflow") for line in lines) == len(
-        QUERIES_EXTRA
-    )
-    # r11 rotation: ppjoin_near_pairs + purchase_graph_pagerank promoted
-    # into the driver window (driver must hash-stamp the r10 rewrites);
-    # simhash_near_pairs demoted to overflow — all keep full oracles
+    n_overflow = len(CATALOG) - len(DRIVER_WINDOW)
+    assert sum(line.endswith("\toverflow") for line in lines) == n_overflow
+    # window members print untagged, overflow entries tagged — all keep
+    # full oracles
     assert any(
         line.startswith("adaptive_left_enrich\toracle")
         and not line.endswith("\toverflow")

@@ -774,24 +774,6 @@ def test_semantic_contamination_flags_planted_eval_clone(spark):
     assert got[3][1] is True and 0.995 > got[3][0] > 0.993
 
 
-def test_fuzzy_bag_prune_is_exact(spark):
-    """bag_prune=True (the long-document knob) must return the
-    identical pair set — the char-bag L1 bound is a necessary
-    condition for distance <= d, never a filter on true pairs."""
-    from nyc_taxi_etl_spark.operators.fuzzy import fuzzy_near_pairs
-
-    docs = load_table(spark, SF_DIR, "documents")
-    base = {
-        (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_near_pairs(docs, max_distance=50).collect()
-    }
-    pruned = {
-        (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_near_pairs(docs, max_distance=50, bag_prune=True).collect()
-    }
-    assert base == pruned and base
-
-
 def test_arrow_knn_matches_catalyst_brute_force(spark):
     """The numpy/mapInPandas kNN must agree with the Catalyst fold:
     identical neighbor sets per query and similarities within ulp-level

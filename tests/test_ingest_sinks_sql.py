@@ -150,6 +150,39 @@ def test_write_csv_single_file_roundtrip(spark, tmp_path):
     assert sorted((r["k"], r["s"]) for r in back.collect()) == [("1", "a"), ("2", "b")]
 
 
+def _csv_jobs(spark, df, out) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup("csv-jobs", "write_csv job count")
+    try:
+        write_csv(df, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup("csv-jobs"))
+
+
+def test_write_csv_of_aggregate_runs_no_count_job(spark, tmp_path):
+    """One file from an aggregate in two jobs (the shuffle map stage
+    and the write): counting the frame's partitions first would run
+    the map stage as a job of its own, under AQE, before the write."""
+    agg = spark.range(0, 1000, numPartitions=4).groupBy(
+        (F.col("id") % 10).alias("k")
+    ).count()
+    out = str(tmp_path / "agg")
+    assert _csv_jobs(spark, agg, out) == 2
+    assert len(glob.glob(os.path.join(out, "*.csv"))) == 1
+    back = spark.read.option("header", "true").csv(out)
+    assert sorted((int(r["k"]), int(r["count"])) for r in back.collect()) == [
+        (k, 100) for k in range(10)
+    ]
+    empty = spark.range(0, 1000, numPartitions=4).filter("id < 0")
+    out_empty = str(tmp_path / "empty")
+    write_csv(empty.groupBy((F.col("id") % 10).alias("k")).count(), out_empty)
+    files = glob.glob(os.path.join(out_empty, "*.csv"))
+    assert len(files) == 1
+    with open(files[0]) as f:
+        assert f.read() == "k,count\n"
+
+
 # ---------------------------------------------------------------------------
 # SQL surface
 # ---------------------------------------------------------------------------
@@ -256,14 +289,11 @@ def test_shingle_udtf_matches_catalyst_path(spark):
 
 
 def test_jsonl_roundtrip_with_corrupt_quarantine(spark, tmp_path):
-    """Documents → JSONL → PERMISSIVE read-back: clean rows identical,
+    """Documents → JSONL → quarantine read-back: clean rows identical,
     a planted truncated line lands verbatim in _corrupt_record (never
     a task failure), and the one-scan audit counts both."""
+    from nyc_taxi_etl_spark.sources.jsonl import jsonl_parse_audit, read_jsonl
     from nyc_taxi_etl_spark.sources.sinks import write_jsonl
-    from nyc_taxi_etl_spark.sources.textformats import (
-        jsonl_ingest_audit,
-        read_jsonl,
-    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = str(tmp_path / "docs_jsonl")
@@ -273,9 +303,9 @@ def test_jsonl_roundtrip_with_corrupt_quarantine(spark, tmp_path):
     with open(os.path.join(out, "part-corrupt.json"), "w") as f:
         f.write(bad + "\n")
     back = read_jsonl(spark, out, docs.schema)
-    audit = jsonl_ingest_audit(back).collect()[0]
+    audit = jsonl_parse_audit(back).collect()[0]
     n = docs.count()
-    assert (audit["n_lines"], audit["n_clean"], audit["n_corrupt"]) == (
+    assert (audit["n_rows"], audit["n_good"], audit["n_corrupt"]) == (
         n + 1,
         n,
         1,
@@ -330,10 +360,10 @@ def test_daily_ewma_matches_recursive_reference(spark):
     import duckdb as _duck
     import numpy as np
 
-    from nyc_taxi_etl_spark.plans import QUERIES_EXTRA
+    from nyc_taxi_etl_spark.plans import CATALOG
 
     sp = (
-        QUERIES_EXTRA["daily_value_ewma"](spark, "/root/testdata/sf0.001")
+        CATALOG["daily_value_ewma"](spark, "/root/testdata/sf0.001")
         .toPandas()
         .sort_values("day")
         .reset_index(drop=True)

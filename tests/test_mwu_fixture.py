@@ -13,9 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
-
-ALL = {**QUERIES, **QUERIES_EXTRA}
+from nyc_taxi_etl_spark.plans import CATALOG
 
 # R sample stochastically above N, with ties within and across sides
 _R = [2, 3, 3, 5, 6, 6, 7]
@@ -66,7 +64,7 @@ def mwu_dir(tmp_path_factory):
 
 def test_mwu_z_p_match_rank_reference(spark, mwu_dir):
     u_ref, z_ref, p_ref = _reference()
-    out = ALL["mw_quantity_shift"](spark, mwu_dir).collect()
+    out = CATALOG["mw_quantity_shift"](spark, mwu_dir).collect()
     assert len(out) == 1
     row = out[0]
     assert row["n_r"] == len(_R) and row["n_n"] == len(_N)

@@ -9,20 +9,10 @@ from __future__ import annotations
 
 import pytest
 
-from nyc_taxi_etl_spark.plans import (
-    ORACLE,
-    ORACLE_EXTRA,
-    QUERIES,
-    QUERIES_EXTRA,
-)
+from nyc_taxi_etl_spark.plans import CATALOG, DRIVER_WINDOW, ORACLES
 
 from .compare import assert_frames_match
 from .conftest import ORACLE_SF_DIR as SF_DIR
-
-# The overflow registry (driver catalog caps at ~50 entries) is tested
-# identically to the driver-visible catalog.
-ALL_QUERIES = {**QUERIES, **QUERIES_EXTRA}
-ALL_ORACLE = {**ORACLE, **ORACLE_EXTRA}
 
 
 def _fuzzy_hybrid_oracle(duck):
@@ -51,21 +41,21 @@ def _fuzzy_hybrid_oracle(duck):
 SCALE_ORACLE_OVERRIDE = {"fuzzy_near_pairs": _fuzzy_hybrid_oracle}
 
 
-@pytest.mark.parametrize("name", sorted(ALL_ORACLE))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, duck_oracle):
-    spark_pdf = ALL_QUERIES[name](spark, SF_DIR).toPandas()
+    spark_pdf = CATALOG[name](spark, SF_DIR).toPandas()
     if SF_DIR.endswith("sf0.1") and name in SCALE_ORACLE_OVERRIDE:
         duck_pdf = SCALE_ORACLE_OVERRIDE[name](duck_oracle)
     else:
-        duck_pdf = duck_oracle.execute(ALL_ORACLE[name]).df()
+        duck_pdf = duck_oracle.execute(ORACLES[name]).df()
     assert len(spark_pdf) > 0, f"{name}: empty result"
     assert_frames_match(spark_pdf, duck_pdf, name)
 
 
 def test_all_queries_have_entries(spark):
-    assert set(ALL_ORACLE) <= set(ALL_QUERIES)
-    assert not set(QUERIES) & set(QUERIES_EXTRA)
-    assert len(QUERIES) <= 50, "driver snapshot caps at ~50 entries"
-    for name in ALL_QUERIES:
-        df = ALL_QUERIES[name](spark, SF_DIR)
+    assert set(ORACLES) <= set(CATALOG)
+    assert len(set(DRIVER_WINDOW)) == len(DRIVER_WINDOW)
+    assert len(DRIVER_WINDOW) <= 50, "driver snapshot caps at ~50 entries"
+    for name in CATALOG:
+        df = CATALOG[name](spark, SF_DIR)
         assert df.columns, name

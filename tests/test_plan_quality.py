@@ -10,9 +10,7 @@ import io
 
 import pytest
 
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
-
-ALL_QUERIES = {**QUERIES, **QUERIES_EXTRA}
+from nyc_taxi_etl_spark.plans import CATALOG
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,7 +18,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def _plan(spark, name: str) -> str:
     """Formatted explain output (untruncated scan details —
     executedPlan().toString() elides PushedFilters)."""
-    df = ALL_QUERIES[name](spark, SF_DIR)
+    df = CATALOG[name](spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -52,7 +50,7 @@ def test_dim_joins_broadcast(spark):
     # nation (25 rows) + region (5 rows) carry explicit broadcast hints;
     # customer is SF-scaled so it must NOT be force-broadcast — AQE
     # size-picks its join strategy at runtime.
-    df = ALL_QUERIES["region_order_revenue"](spark, SF_DIR)
+    df = CATALOG["region_order_revenue"](spark, SF_DIR)
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("ResolvedHint (strategy=broadcast)") == 2
     # at tiny SF, AQE still broadcast-converts the customer join from
@@ -77,7 +75,7 @@ def test_dim_joins_broadcast(spark):
     ],
 )
 def test_no_forced_broadcast_on_sf_scaled_tables(spark, name, allowed_hints):
-    df = ALL_QUERIES[name](spark, SF_DIR)
+    df = CATALOG[name](spark, SF_DIR)
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("ResolvedHint (strategy=broadcast)") == allowed_hints
 
@@ -91,7 +89,7 @@ def test_partial_aggregation_before_exchange(spark):
 
 def test_wholestage_codegen_active(spark):
     # codegen stage markers (*(n)) appear once AQE finalizes the plan
-    df = QUERIES["events_time_profile"](spark, SF_DIR)
+    df = CATALOG["events_time_profile"](spark, SF_DIR)
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final
@@ -281,7 +279,7 @@ def test_dsir_single_pass_model_and_broadcast_totals(spark):
     must REUSE the model's shuffle rather than re-tokenize the corpus
     — the explicit isnotnull in dsir._exploded exists exactly so both
     consumers stay canonically identical and exchange reuse fires."""
-    df = ALL_QUERIES["dsir_selected_docs"](spark, SF_DIR)
+    df = CATALOG["dsir_selected_docs"](spark, SF_DIR)
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in executed
@@ -304,7 +302,7 @@ def test_global_seq_no_single_partition_window(spark):
     plan = _plan(spark, "orders_global_seq")
     assert "Window" not in plan, plan
     assert "SinglePartition" not in plan, plan
-    df = ALL_QUERIES["orders_global_seq"](spark, SF_DIR)
+    df = CATALOG["orders_global_seq"](spark, SF_DIR)
     assert df.rdd.getNumPartitions() > 1
 
 
@@ -329,7 +327,7 @@ def test_scd2_single_exchange(spark):
     key — the gaps-and-islands groupBy rewrite (which extends the
     partitioning with the run id and shuffles twice) is the shape
     this operator exists to avoid."""
-    df = ALL_QUERIES["customer_priority_scd2"](spark, SF_DIR)
+    df = CATALOG["customer_priority_scd2"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # one shuffle on the key; the second window adds NO sort of its
     # own (same partitioning + same ordering as the first)
@@ -366,7 +364,7 @@ def test_tpch_scalar_aggregates_reuse_exchange(spark):
     must be runtime-reused by AQE (ReusedExchange in the executed
     plan) rather than scanning lineitem twice."""
     for name in ("important_parts_value", "top_revenue_supplier"):
-        df = ALL_QUERIES[name](spark, SF_DIR)
+        df = CATALOG[name](spark, SF_DIR)
         df.collect()
         executed = df._jdf.queryExecution().executedPlan().toString()
         assert "ReusedExchange" in executed, name
@@ -434,7 +432,7 @@ def test_completing_tpch_shapes_plan_posture(spark):
     assert "TakeOrderedAndProject" in plan, plan[:1500]
     # Q20's part-grain aggregate is an aggregate OVER the
     # (part, supplier) result — runtime exchange reuse, one scan
-    df = ALL_QUERIES["dominant_part_suppliers"](spark, SF_DIR)
+    df = CATALOG["dominant_part_suppliers"](spark, SF_DIR)
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in executed

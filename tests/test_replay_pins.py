@@ -21,11 +21,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+from nyc_taxi_etl_spark.plans import CATALOG
 
 from .conftest import spark  # noqa: F401  (fixture re-export)
-
-ALL = {**QUERIES, **QUERIES_EXTRA}
 
 _TEXTS = [
     "the lowlands slowly lower the lowest slow flows",
@@ -107,9 +105,9 @@ def _rows(df):
 )
 def test_entry_replay_is_layout_and_run_invariant(spark, fixture_dirs, name):
     one, multi = fixture_dirs
-    first = _rows(ALL[name](spark, one))
-    again = _rows(ALL[name](spark, one))
-    other_layout = _rows(ALL[name](spark, multi))
+    first = _rows(CATALOG[name](spark, one))
+    again = _rows(CATALOG[name](spark, one))
+    other_layout = _rows(CATALOG[name](spark, multi))
     assert first == again, f"{name}: two runs on the same input differ"
     assert first == other_layout, (
         f"{name}: output depends on the input's physical layout"
@@ -127,12 +125,12 @@ def test_bpe_merge_golden(spark, fixture_dirs):
 
 def test_compression_signal_golden(spark, fixture_dirs):
     got = _rows(
-        ALL["doc_compression_signal"](spark, fixture_dirs[0]).select(
+        CATALOG["doc_compression_signal"](spark, fixture_dirs[0]).select(
             "doc_id", "raw_bytes", "compressed_bytes"
         )
     )
     assert got == _golden_zlib()
     # and the ratio column is exactly the quotient of the pinned sizes
-    full = _rows(ALL["doc_compression_signal"](spark, fixture_dirs[0]))
+    full = _rows(CATALOG["doc_compression_signal"](spark, fixture_dirs[0]))
     for doc_id, raw, comp, ratio in full:
         assert ratio == comp / raw, (doc_id, raw, comp, ratio)

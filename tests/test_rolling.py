@@ -13,11 +13,10 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from nyc_taxi_etl_spark.operators.rolling import rolling_calendar_frame
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+from nyc_taxi_etl_spark.plans import CATALOG
 
 from .compare import assert_frames_match
 
-ALL_QUERIES = {**QUERIES, **QUERIES_EXTRA}
 SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -97,7 +96,7 @@ def test_rolling_entries_have_no_single_partition_window(spark):
     window: a Window operator partitioned on _pyear, and no
     SinglePartition exchange anywhere in the plan."""
     for name in ("daily_rolling_revenue", "daily_rolling_purchase_error_corr"):
-        df = ALL_QUERIES[name](spark, SF_DIR)
+        df = CATALOG[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         phys = df._jdf.queryExecution().executedPlan().toString()
         assert "SinglePartition" not in phys, (name, phys)

@@ -317,9 +317,9 @@ def test_entry_leaves_no_cached_frames(spark, entry):
     in-entry persist can never be released and CacheManager entries
     accumulate per bench/oracle call). Now eager localCheckpoints:
     repeated calls must not accumulate CacheManager entries."""
-    from nyc_taxi_etl_spark.plans import QUERIES_EXTRA, QUERIES
+    from nyc_taxi_etl_spark.plans import CATALOG
 
-    fn = {**QUERIES, **QUERIES_EXTRA}[entry]
+    fn = CATALOG[entry]
     cm = spark._jsparkSession.sharedState().cacheManager()
     before_empty = cm.isEmpty()
     for _ in range(2):
@@ -382,6 +382,95 @@ def test_every_partition_width_goes_through_width_module():
     assert _modules_matching(
         r"_ensure_parallelism|_pin_verify_width|_iter_shuffle_scope"
     ) == set()
+
+
+# The driver's 50-entry window, pinned apart from plans.DRIVER_WINDOW so
+# an edit to the tuple has to be made twice, on purpose.
+_PINNED_WINDOW = (
+    "events_time_profile",
+    "top_suppliers_per_nation",
+    "valid_lines_unit_price",
+    "union_heterogeneous",
+    "doc_profile",
+    "exact_dedup_groups",
+    "doc_decontamination",
+    "dedup_components",
+    "curate_documents",
+    "kmeans_lineitem_profile",
+    "isolation_outliers_by_flag",
+    "media_image_features",
+    "media_audio_features",
+    "doc_pii_redaction",
+    "user_count_cms",
+    "part_entity_resolution",
+    "part_name_linkage",
+    "part_price_skyline",
+    "customer_order_join_matview",
+    "hybrid_retrieval_rrf",
+    "order_line_fd_audit",
+    "lineitem_column_profile",
+    "ann_ivf_cosine",
+    "ann_pq_cosine",
+    "purchase_reach_hops",
+    "streaming_cusum_drift",
+    "customer_l_diversity_repair",
+    "orders_status_cube",
+    "adaptive_join_revenue",
+    "customer_order_golden",
+    "mw_quantity_shift",
+    "doc_quality_classifier",
+    "doc_lm_bigram_scores",
+    "budget_selected_sources",
+    "ngram_jaccard_near_pairs",
+    "purchases_in_error_windows",
+    "user_sessions",
+    "stratified_order_sample",
+    "adaptive_left_enrich",
+    "phrase_search_trigram",
+    "ks_quantity_shift",
+    "nation_revenue_theilsen",
+    "nation_revenue_mannkendall",
+    "part_pair_lift",
+    "source_token_jsd",
+    "nation_revenue_acf",
+    "purchase_graph_pagerank",
+    "purchase_graph_hits",
+    "near_dup_triangles",
+    "ppjoin_near_pairs",
+)
+# sha256 over the newline-joined sorted names of CATALOG and ORACLES
+_CATALOG_KEYS = (203, "51d5a7118b81a1d0d9213351c33a70406eb4d3aca0ccb4c1ae13155a8689981f")
+_ORACLE_KEYS = (191, "3f8901ff4e9ff5170c3a95bebc8bea277096a6bda6b3b0c7d5e58f723b2e9c82")
+
+
+def _keys(names) -> tuple[int, str]:
+    import hashlib
+
+    names = sorted(names)
+    return len(names), hashlib.sha256("\n".join(names).encode()).hexdigest()
+
+
+def test_driver_window_and_catalog_keys_are_pinned():
+    """The driver sees the pinned window first, in order, and the
+    catalog and oracle key sets are the pinned ones."""
+    import __spark_entry__ as entry
+    from nyc_taxi_etl_spark import plans
+
+    assert plans.DRIVER_WINDOW == _PINNED_WINDOW
+    assert tuple(plans.QUERIES) == _PINNED_WINDOW
+    assert tuple(entry.queries())[:50] == _PINNED_WINDOW
+    assert _keys(plans.CATALOG) == _keys(entry.queries()) == _CATALOG_KEYS
+    assert _keys(plans.ORACLES) == _keys(entry.oracle_sql()) == _ORACLE_KEYS
+
+
+def test_window_membership_is_declared_once():
+    """Static guard: only plans/__init__.py names the derived split
+    view, no entry registers with an ``extra=`` flag, and no
+    promote/demote replay is left."""
+    assert _modules_matching(r"QUERIES_EXTRA|ORACLE_EXTRA|\bextra=True") == {
+        "plans/__init__.py"
+    }
+    assert _modules_matching(r"_PROMOTE_|_DEMOTE_") == set()
 
 
 def test_pin_contract(spark):
@@ -498,9 +587,9 @@ def test_adaptive_join_plain_path(spark):
 def test_adaptive_join_entry_plan_is_salted(spark):
     """The catalog entry's measured shape must pick SALTED (the oracle
     pins the same literal) and the salt must be visible in the plan."""
-    from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+    from nyc_taxi_etl_spark.plans import CATALOG
 
-    fn = {**QUERIES, **QUERIES_EXTRA}["adaptive_join_revenue"]
+    fn = CATALOG["adaptive_join_revenue"]
     df = fn(spark, "/root/testdata/sf0.001")
     assert "__salt" in _plan_of(df)
     assert df.select("strategy").distinct().collect()[0][0] == "salted"

@@ -162,10 +162,10 @@ def test_cluster_balanced_sample_allocation(spark):
     are 1..k contiguous, and picked ids are a subset of the corpus."""
     import math
 
-    from nyc_taxi_etl_spark.plans import QUERIES_EXTRA
+    from nyc_taxi_etl_spark.plans import CATALOG
 
     sf = "/root/testdata/sf0.001"
-    out = QUERIES_EXTRA["cluster_balanced_sample"](spark, sf).collect()
+    out = CATALOG["cluster_balanced_sample"](spark, sf).collect()
     assert out
     by_cell = {}
     for r in out:

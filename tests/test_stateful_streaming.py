@@ -291,9 +291,9 @@ def test_cusum_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
 
 
 def _drain_entry(spark, name):
-    from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+    from nyc_taxi_etl_spark.plans import CATALOG
 
-    rows = {**QUERIES, **QUERIES_EXTRA}[name](spark, SF_DIR).collect()
+    rows = CATALOG[name](spark, SF_DIR).collect()
     return sorted((tuple(r) for r in rows), key=repr)
 
 
@@ -342,7 +342,7 @@ def test_catalog_drain_removes_its_scratch_dirs(spark, duck, monkeypatch, tmp_pa
     """A catalog drain removes its staged source and its checkpoint once
     it has drained (the memory sink holds the result), and the returned
     frame still matches the oracle after both are gone."""
-    from nyc_taxi_etl_spark.plans import ORACLE, ORACLE_EXTRA, QUERIES, QUERIES_EXTRA
+    from nyc_taxi_etl_spark.plans import CATALOG, ORACLES
     from nyc_taxi_etl_spark.sources import scratch
 
     from .compare import assert_frames_match
@@ -353,8 +353,8 @@ def test_catalog_drain_removes_its_scratch_dirs(spark, duck, monkeypatch, tmp_pa
         "scratch_dir",
         lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=tmp_path),
     )
-    out = {**QUERIES, **QUERIES_EXTRA}[name](spark, SF_DIR)
+    out = CATALOG[name](spark, SF_DIR)
     left = [d for d in os.listdir(tmp_path) if d.startswith(("ckpt_", "events_src_"))]
     assert not left
-    want = duck.execute({**ORACLE, **ORACLE_EXTRA}[name]).df()
+    want = duck.execute(ORACLES[name]).df()
     assert_frames_match(out.toPandas(), want, name)

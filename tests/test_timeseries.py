@@ -147,7 +147,7 @@ def test_cusum_constants_single_sourced():
         assert d["h"].default == st.CUSUM_H, fn
     # the oracle SQL was rendered from the same constants
     for sql_name in ("user_value_cusum",):
-        from nyc_taxi_etl_spark.plans.queries import ORACLE, ORACLE_EXTRA
-        sql = {**ORACLE, **ORACLE_EXTRA}[sql_name]
+        from nyc_taxi_etl_spark.plans.queries import ORACLES
+        sql = ORACLES[sql_name]
         for v in (st.CUSUM_UP, st.CUSUM_DN, st.CUSUM_H):
             assert repr(v) in sql or str(v) in sql, (sql_name, v)

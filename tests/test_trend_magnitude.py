@@ -15,12 +15,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
+from nyc_taxi_etl_spark.plans import CATALOG
 
 from .compare import assert_frames_match
 from .conftest import SF_DIR, TABLES, _register
 
-ALL = {**QUERIES, **QUERIES_EXTRA}
 
 
 @pytest.fixture(scope="module")
@@ -83,7 +82,7 @@ def giant_sf_dir(tmp_path_factory):
 def test_trend_r2_survives_giant_magnitudes(spark, giant_sf_dir):
     from nyc_taxi_etl_spark.plans.queries_stats import _TREND_SQL
 
-    out = ALL["nation_revenue_trend"](spark, giant_sf_dir).toPandas()
+    out = CATALOG["nation_revenue_trend"](spark, giant_sf_dir).toPandas()
     assert len(out) == 1
     row = out.iloc[0]
     # perfectly linear series: slope 1e15 cents/month, r2 exactly 1

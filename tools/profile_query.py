@@ -36,10 +36,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA  # noqa: E402
+from nyc_taxi_etl_spark.plans import CATALOG  # noqa: E402
 from nyc_taxi_etl_spark.session import get_spark  # noqa: E402
-
-ALL = {**QUERIES, **QUERIES_EXTRA}
 
 
 def _stat(pid: int) -> tuple[str, list[str]]:
@@ -95,16 +93,16 @@ def main() -> None:
 
     names = [n for n in args.names.split(",") if n]
     if names == ["ALL"]:
-        names = sorted(ALL)
+        names = sorted(CATALOG)
     for name in names:
-        if name not in ALL:
+        if name not in CATALOG:
             print(json.dumps({"name": name, "error": "unknown"}))
             continue
         compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
         child0 = jvm_child_cpu_s(jvm_pid)
         py0 = py_worker_cpu_s(jvm_pid)
         t0 = time.perf_counter()
-        df = ALL[name](spark, sf_dir)
+        df = CATALOG[name](spark, sf_dir)
         build_s = time.perf_counter() - t0
 
         if args.plans_dir:

@@ -37,14 +37,12 @@ def default_entries():
     return [
         n
         for n in bench.HEADLINE + bench.EXTENSION
-        if n in bench.ALL_QUERIES
+        if n in bench.CATALOG
     ]
 
 
 def run_sf(spark, label: str, sf_dir: str, entries, passes: int) -> dict:
-    from nyc_taxi_etl_spark.plans import QUERIES, QUERIES_EXTRA
-
-    all_q = {**QUERIES, **QUERIES_EXTRA}
+    from nyc_taxi_etl_spark.plans import CATALOG
 
     def probe() -> float:
         t0 = time.perf_counter()
@@ -65,7 +63,7 @@ def run_sf(spark, label: str, sf_dir: str, entries, passes: int) -> dict:
         calibration.append(round(probe(), 4))
         for name in entries:
             t0 = time.perf_counter()
-            all_q[name](spark, sf_dir).write.format("noop").mode(
+            CATALOG[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             samples[name].append(time.perf_counter() - t0)
@@ -77,7 +75,7 @@ def run_sf(spark, label: str, sf_dir: str, entries, passes: int) -> dict:
     rows = {}
     for name in entries:
         try:
-            rows[name] = all_q[name](spark, sf_dir).count()
+            rows[name] = CATALOG[name](spark, sf_dir).count()
         except Exception as exc:  # count failure shouldn't kill the run
             rows[name] = f"err: {exc}"[:120]
     return {
