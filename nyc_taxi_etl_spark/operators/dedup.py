@@ -7,12 +7,6 @@ survives 100 TB. Every operator here is expressed as DataFrame ops —
 the only shuffles are the ones the algorithm fundamentally requires
 (group-by fingerprint; band-bucket join), and candidate generation is
 always sub-quadratic via LSH banding, never a full cross join.
-
-Hash-function choice: operators take ``hash_fn`` — ``"md5"`` (default
-here) is bit-portable across engines so the driver's DuckDB oracle can
-replay the whole pipeline; production at 100 TB would flip to
-``"xxhash64"`` (F.xxhash64, one 64-bit op per row vs md5's 128-bit) —
-same plan shape, ~3× cheaper hashing.
 """
 
 from __future__ import annotations

@@ -292,35 +292,13 @@ def sniff_format(blob: bytes) -> str | None:
     return None
 
 
-#: Injectable production decoder (``bytes -> HxWx3 uint8 ndarray``)
-#: for streams the builtin codecs reject — arithmetic-coded JPEG or
-#: non-integer sampling ratios (baseline AND progressive Huffman
-#: decode natively). A deployment with Pillow/libjpeg/turbojpeg plugs
-#: it in here ONCE and every media operator (features/resize/audit)
-#: picks it up. ``None`` (default) → lazy Pillow probe, then re-raise.
-_FALLBACK_DECODER = None
-
-
-def register_fallback_decoder(fn) -> None:
-    """Install (or clear, with ``None``) the production image-decoder
-    hook used when a sniffed container fails the builtin decode."""
-    global _FALLBACK_DECODER
-    _FALLBACK_DECODER = fn
-
-
-def _fallback_decode(blob: bytes, err: ValueError) -> np.ndarray:
-    # The contract of this seam is "ValueError or pixels": whatever the
-    # fallback raises (Pillow's UnidentifiedImageError is an OSError,
-    # a registered decoder may raise anything) must surface as the
-    # builtin codec's ValueError so callers' on_error='skip' paths and
-    # decode audits keep working on exactly the blobs this hook exists
-    # for.
-    if _FALLBACK_DECODER is not None:
-        try:
-            return np.asarray(_FALLBACK_DECODER(blob), dtype=np.uint8)
-        except Exception:
-            raise err from None
-    try:  # pragma: no cover - Pillow not installed in this container
+def _pillow_decode(blob: bytes, err: ValueError) -> np.ndarray:
+    """Decode ``blob`` with Pillow when it is importable, for streams
+    the builtin codecs reject. Every failure (no Pillow, or Pillow
+    rejecting the bytes with its own ``UnidentifiedImageError``, an
+    OSError) raises ``err``: callers see ValueError or pixels, which
+    is what ``on_error='skip'`` and the decode audit catch."""
+    try:  # pragma: no cover - Pillow is optional
         import io
 
         from PIL import Image
@@ -333,9 +311,8 @@ def _fallback_decode(blob: bytes, err: ValueError) -> np.ndarray:
 def sniff_and_decode(blob: bytes) -> np.ndarray:
     """Decode by magic-byte sniff. JPEG features beyond the builtin
     codec (arithmetic coding; baseline and progressive Huffman decode
-    natively) fall through to the registered fallback decoder / Pillow
-    instead of failing the task outright; with neither available the
-    builtin's clear ValueError surfaces."""
+    natively) fall through to Pillow when it is importable; without it
+    the builtin's clear ValueError surfaces."""
     fmt = sniff_format(blob)
     if fmt == "png":
         return decode_png(blob)
@@ -349,7 +326,7 @@ def sniff_and_decode(blob: bytes) -> np.ndarray:
         try:
             return decode_jpeg(blob)
         except ValueError as exc:
-            return _fallback_decode(blob, exc)
+            return _pillow_decode(blob, exc)
     raise ValueError(
         "unrecognized image container (no PNG/BMP/PPM/JPEG magic)"
     )

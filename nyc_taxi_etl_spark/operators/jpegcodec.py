@@ -19,9 +19,9 @@ dependency beyond numpy:
   sequential (SOF0/SOF1) and progressive (SOF2, Annex G — spectral
   selection, successive approximation with DC/AC refinement scans and
   EOB runs, interleaved and single-component scans). Arithmetic-coded
-  streams raise with a clear message (patent-era rarity; the
-  imagecodec fallback-decoder seam covers them in deployments with
-  a system codec).
+  streams raise with a clear message (patent-era rarity;
+  ``imagecodec.sniff_and_decode`` then tries Pillow, where it is
+  installed).
 * **Encoders**: ``encode_jpeg`` — 4:4:4 baseline with the Annex K
   reference quantization tables scaled by the libjpeg quality curve
   (``5000/Q`` below 50, ``200−2Q`` above) and the Annex K "typical"

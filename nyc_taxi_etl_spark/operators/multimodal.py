@@ -16,9 +16,8 @@ codec layer is swappable:
     defilter), BMP (24-bit BGR bottom-up), PPM (P6) and JPEG —
     baseline AND progressive Huffman — via the pure-numpy codecs in
     ``imagecodec.py`` / ``jpegcodec.py``; raw RGB buffers of the
-    declared size pass through; an injectable fallback decoder /
-    Pillow is tried for anything beyond those (arithmetic-coded
-    JPEG); unknown bytes RAISE rather than fabricate pixels, or are
+    declared size pass through; Pillow, if importable, is tried for
+    anything beyond those (arithmetic-coded JPEG); unknown bytes RAISE rather than fabricate pixels, or are
     counted-skipped under ``on_error='skip'`` + ``image_decode_audit``.
   * video: frame sampling over a length-prefixed frame container
     (deterministic synthetic layout) — every-Nth-frame selection, one
@@ -145,40 +144,30 @@ def _decode_image(blob: bytes, width: int, height: int) -> np.ndarray:
     (magic-byte sniff, CRC checks, full PNG defilter, JPEG Huffman +
     IDCT + chroma upsample; baseline AND progressive/SOF2) — JPEG
     features beyond the builtin codec (arithmetic coding, exotic
-    sampling) route through imagecodec's registered fallback decoder
-    / Pillow before failing; (2) raw RGB buffer of
-    the declared size (as produced by a decode-at-ingest stage);
-    (3) Pillow if importable, for formats beyond the built-in four.
-    Undecodable bytes raise ValueError instead of fabricating
+    sampling) try Pillow, if importable, before failing; (2) raw RGB
+    buffer of the declared size (as produced by a decode-at-ingest
+    stage); (3) Pillow if importable, for formats beyond the built-in
+    four. Undecodable bytes raise ValueError instead of fabricating
     pixels."""
-    from .imagecodec import sniff_and_decode, sniff_format
+    from .imagecodec import _pillow_decode, sniff_and_decode, sniff_format
 
     expect = width * height * 3
     if sniff_format(blob) is not None:
-        # A sniffed container that the codecs (and any registered
-        # fallback) reject is corrupt encoded data — re-raise rather
-        # than reinterpret it as raw pixels, even if the byte length
-        # coincidentally equals width*height*3 (that would silently
-        # yield garbage, violating the "raise rather than fabricate
-        # pixels" contract).
+        # A sniffed container that the codecs (and Pillow) reject is
+        # corrupt encoded data — re-raise rather than reinterpret it as
+        # raw pixels, even if the byte length coincidentally equals
+        # width*height*3 (that would silently yield garbage, violating
+        # the "raise rather than fabricate pixels" contract).
         return sniff_and_decode(blob)
     if len(blob) == expect:
         return np.frombuffer(blob, dtype=np.uint8).reshape(height, width, 3)
-    try:  # pragma: no cover - Pillow not installed in this container
-        import io
-
-        from PIL import Image
-
-        return np.asarray(Image.open(io.BytesIO(blob)).convert("RGB"))
-    except Exception as exc:
-        # Exception, not ImportError: with Pillow installed a corrupt
-        # blob raises UnidentifiedImageError (an OSError) which would
-        # otherwise escape the "ValueError or pixels" contract that
-        # on_error='skip' and the decode audit rely on.
-        raise ValueError(
+    return _pillow_decode(
+        blob,
+        ValueError(
             f"undecodable image blob ({len(blob)} bytes; no PNG/BMP/PPM/"
             f"JPEG magic, not raw {width}x{height}x3)"
-        ) from exc
+        ),
+    )
 
 
 _IMG_FEAT_SCHEMA = StructType(
@@ -200,8 +189,8 @@ def image_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
 
     ``on_error``: ``"raise"`` (default — a corrupt blob fails the
     task, the posture for trusted pipelines) or ``"skip"`` — rows the
-    decoder rejects (e.g. arithmetic-coded JPEG with no fallback
-    decoder registered) are dropped instead of poisoning the whole task; pair
+    decoder rejects (e.g. arithmetic-coded JPEG without Pillow) are
+    dropped instead of poisoning the whole task; pair
     with :func:`image_decode_audit` to count and inspect what was
     skipped. At 100 TB a one-in-a-billion malformed blob must not
     kill the job."""

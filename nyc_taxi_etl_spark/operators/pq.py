@@ -14,7 +14,8 @@ product against all k centroids of every subspace is precomputed as an
 m×k lookup table; a corpus vector's approximate score is then ``m``
 TABLE LOOKUPS instead of D multiplies — per-pair cost drops from O(D)
 to O(m). Candidates from the compressed scan are exactly re-ranked on
-the true vectors (standard PQ re-rank), so the output quality is
+the true vectors (standard PQ re-rank, through the exact tail every
+kNN operator shares: ``similarity._rerank``), so the output quality is
 bounded by candidate recall, not code granularity.
 
 Scale design:
@@ -36,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import cosine
+from .similarity import _rerank
 
 __all__ = ["train_pq", "pq_encode", "pq_knn", "seeded_codebooks"]
 
@@ -317,27 +318,4 @@ def pq_knn(
         .select("query_id", "neighbor_id")
     )
     # exact re-rank on true vectors, candidates only
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    return (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine_sim"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("cosine_sim"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .where(F.col("rank") <= k)
-    )
+    return _rerank(cand, queries, corpus, k, id_col, vec_col, query_id_col)

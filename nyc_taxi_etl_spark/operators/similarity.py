@@ -13,6 +13,14 @@ Three paths, per the north star:
     path #2: learned Voronoi cells fail differently than random
     hyperplanes, so production pipelines hedge by running both.
 
+Every kNN operator (these three, ``hard_negative_knn`` and
+``pq.pq_knn``) is a candidate generator followed by one shared exact
+tail: ``_vectors`` projects ``(id, vec, norm)`` once per row,
+``_score`` folds one dot product per pair, and ``_top_k`` is the one
+rank contract — ``cosine_sim`` descending, then ``neighbor_id``
+ascending, a ``long`` ``rank`` ≤ k. ``_rerank`` runs that tail over
+``(query_id, neighbor_id)`` candidates (LSH and PQ).
+
 The only Python stage anywhere is IVF's bounded-sample quantizer fit;
 all per-row math is JVM-side. At 100 TB the brute-force variant is
 still valid when the query side is small (it is a map-side broadcast
@@ -21,7 +29,7 @@ join, scanning the corpus once).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import width
@@ -30,9 +38,7 @@ from ..pins import pin
 __all__ = [
     "dot",
     "norm",
-    "cosine",
     "brute_force_knn",
-    "brute_force_knn_arrow",
     "hard_negative_knn",
     "cosine_near_pairs",
     "adaptive_lsh_bits",
@@ -57,8 +63,70 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+_IDS = {"q": "query_id", "c": "neighbor_id", "a": "id_a", "b": "id_b"}
+
+
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *extra: Column
+) -> DataFrame:
+    """One side of a scoring join: ``(id, <side>_vec, <side>_n, *extra)``
+    with the id named by ``side`` (``q`` → ``query_id``, ``c`` →
+    ``neighbor_id``, ``a``/``b`` → ``id_a``/``id_b``). The norm is
+    computed once per row, not once per pair, so a scored pair pays a
+    single fold (see ``_score``)."""
+    return df.select(
+        F.col(id_col).alias(_IDS[side]),
+        *extra,
+        F.col(vec_col).alias(f"{side}_vec"),
+        norm(F.col(vec_col)).alias(f"{side}_n"),
+    )
+
+
+def _score(a: str = "q", b: str = "c") -> Column:
+    """``cosine_sim`` of a joined pair of ``_vectors`` sides: the same
+    IEEE double as ``dot/(norm·norm)`` computed per pair (the norms are
+    merely factored out), so the oracles replay it exactly."""
+    return (
+        dot(F.col(f"{a}_vec"), F.col(f"{b}_vec"))
+        / (F.col(f"{a}_n") * F.col(f"{b}_n"))
+    ).alias("cosine_sim")
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The rank contract of every kNN operator: per ``query_id``, order
+    by ``cosine_sim`` descending then ``neighbor_id`` ascending, number
+    the rows as a ``long`` ``rank`` and keep ``rank`` ≤ k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Exact cosine top-k over ``(query_id, neighbor_id)`` candidates:
+    attach each side's vector and norm (the query side broadcast),
+    score, and rank with ``_top_k``. Candidates arrive as bare ids, so
+    vectors are attached only to the pairs that survived pruning."""
+    return _top_k(
+        cand.join(
+            F.broadcast(_vectors(queries, query_id_col, vec_col, "q")),
+            "query_id",
+        )
+        .join(_vectors(corpus, id_col, vec_col, "c"), "neighbor_id")
+        .select("query_id", "neighbor_id", _score()),
+        k,
+    )
 
 
 def _broadcast_knn(
@@ -71,53 +139,27 @@ def _broadcast_knn(
     label_col: str | None,
 ) -> DataFrame:
     """Shared broadcast/score/top-k pipeline behind ``brute_force_knn``
-    and ``hard_negative_knn`` (one copy of the aliases, tiebreak, and
-    rank window, so a fix to either twin cannot drift).
+    and ``hard_negative_knn``.
 
     With ``label_col`` set, the label-difference check rides the join
     condition so same-class rows are dropped BEFORE the dot-product
     fold runs, and ``neighbor_label`` is carried in the output.
     """
-    from pyspark.sql import Window
-
-    q_cols = [
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
-    ]
-    c_cols = [
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_n"),
-    ]
+    q_extra, c_extra = [], []
     cond = F.col("neighbor_id") != F.col("query_id")
     out_cols = ["query_id", "neighbor_id"]
     if label_col is not None:
-        q_cols.insert(1, F.col(label_col).alias("q_label"))
-        c_cols.insert(1, F.col(label_col).alias("c_label"))
+        q_extra.append(F.col(label_col).alias("q_label"))
+        c_extra.append(F.col(label_col).alias("c_label"))
         cond = cond & (F.col("c_label") != F.col("q_label"))
         out_cols.append(F.col("c_label").alias("neighbor_label"))
-    # norms computed once per row on each side (not per pair): the
-    # per-pair cost is a single dot-product fold; identical IEEE
-    # values (dot/(sqrt·sqrt) merely factored), so oracles still match
+    q = _vectors(queries, query_id_col, vec_col, "q", *q_extra)
     scored = (
-        corpus.select(*c_cols)
-        .join(F.broadcast(queries.select(*q_cols)), cond)
-        .select(
-            *out_cols,
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_n") * F.col("c_n"))
-            ).alias("cosine_sim"),
-        )
+        _vectors(corpus, id_col, vec_col, "c", *c_extra)
+        .join(F.broadcast(q), cond)
+        .select(*out_cols, _score())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def brute_force_knn(
@@ -194,27 +236,15 @@ def cosine_near_pairs(
     product) instead of three — same IEEE result, since
     ``dot/(sqrt(dot_aa)·sqrt(dot_bb))`` is just factored.
     """
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        norm(F.col(vec_col)).alias("na"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col)).alias("nb"),
-    )
+    a = _vectors(df, id_col, vec_col, "a")
+    b = _vectors(df, id_col, vec_col, "b")
     if candidates is not None:
         pairs = candidates.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
     else:
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-            "cosine_sim"
-        ),
-    ).filter(F.col("cosine_sim") >= threshold)
+    return pairs.select("id_a", "id_b", _score("a", "b")).filter(
+        F.col("cosine_sim") >= threshold
+    )
 
 
 def hyperplanes(dim: int, bits: int, seed: int = 7) -> list[list[float]]:
@@ -441,8 +471,6 @@ def hyperplane_lsh_knn(
     fold itself, which stays interpreted deliberately (see
     ``_signature_sql``'s note on why unrolling it is a net loss).
     """
-    from pyspark.sql import Window
-
     sig_arr = _signature_array(vec_col, bits, tables, dim, seed=7)
 
     c_banded = corpus.select(
@@ -459,35 +487,7 @@ def hyperplane_lsh_knn(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_n"),
-    )
-    scored = (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_n") * F.col("c_n"))
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank(cand, queries, corpus, k, id_col, vec_col, query_id_col)
 
 
 def _train_coarse_centroids(
@@ -544,6 +544,22 @@ def seeded_unit_centroids(
     return out
 
 
+def _cell_sims(vec: Column, centroids) -> Column:
+    """Ranking score of ``vec`` against every centroid. Centroids are
+    unit vectors, so cosine = dot/norm(vec), and norm(vec) is the same
+    positive factor for every cell: it cannot change the argmax or the
+    top-n_probe choice, so rank by the raw dots and skip one norm fold
+    per cell."""
+    return F.array(*[dot(vec, F.lit([float(x) for x in c])) for c in centroids])
+
+
+def _assign_cell(vec: Column, centroids) -> Column:
+    """``vec``'s Voronoi cell: the first position of the best centroid
+    (0-based ``int``), one narrow pass with no ML job."""
+    sims = _cell_sims(vec, centroids)
+    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
+
+
 def ivf_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -570,16 +586,15 @@ def ivf_knn(
     ~n_probe/n_centroids versus brute force; recall is tunable via
     ``n_probe``.
 
-    All per-row math stays JVM-side (the fold-based ``cosine``); the
-    only Python stage is the one-off bounded-sample fit.
+    All per-row math stays JVM-side (the ``dot`` fold; both norms ride
+    the cell join, so each pair pays one fold); the only Python stage
+    is the one-off bounded-sample fit.
 
     Pass ``centroids`` (unit vectors, e.g. ``seeded_unit_centroids``)
     to skip the trained quantizer entirely — the plan then has no
     data-dependent stage, so a SQL oracle embedding the same literals
     replays it exactly.
     """
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = _train_coarse_centroids(
             corpus, vec_col, n_centroids, seed, fit_sample
@@ -591,38 +606,21 @@ def ivf_knn(
             corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
             query_id_col=query_id_col,
         )
-    ctr_lits = [
-        F.lit([float(x) for x in ctr]).alias(f"c{i}")
-        for i, ctr in enumerate(centroids)
-    ]
-
-    def cell_sims(vec):
-        # ranking score against every centroid. Centroids are unit
-        # vectors, so cosine = dot/norm(vec) — and norm(vec) is the
-        # same positive constant for all 16 cells, so it cannot change
-        # the argmax / top-n_probe choice: rank by the raw dots and
-        # skip 16 norm folds per row.
-        return F.array(*[dot(vec, c) for c in ctr_lits])
-
-    # corpus assignment: argmax cell, one narrow JVM pass
-    c_sims = cell_sims(F.col(vec_col))
-    assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        (F.array_position(c_sims, F.array_max(c_sims)) - 1).cast("int").alias("cell"),
+    vec = F.col(vec_col)
+    assigned = _vectors(
+        corpus, id_col, vec_col, "c", _assign_cell(vec, centroids).alias("cell")
     )
 
     # query probing: top-n_probe cells per query, row-local sort
-    q_sims = cell_sims(F.col(vec_col))
     probes = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            q_sims.alias("sims"),
+        _vectors(
+            queries, query_id_col, vec_col, "q",
+            _cell_sims(vec, centroids).alias("sims"),
         )
         .select(
             "query_id",
             "q_vec",
+            "q_n",
             F.explode(
                 F.slice(
                     F.reverse(F.array_sort(F.transform(
@@ -634,23 +632,14 @@ def ivf_knn(
                 )
             ).alias("probe"),
         )
-        .select("query_id", "q_vec", F.col("probe.cell").alias("cell"))
+        .select("query_id", "q_vec", "q_n", F.col("probe.cell").alias("cell"))
     )
-
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine_sim"),
-        )
+        .select("query_id", "neighbor_id", _score())
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def semantic_dedup(
@@ -704,16 +693,9 @@ def semantic_dedup(
                 F.col(id_col).cast("long").alias("keeper_id"),
                 F.lit(0).cast("long").alias("is_dup"),
             )
-        ctr_lits = [F.lit([float(x) for x in ctr]) for ctr in centroids]
-        # centroids are unit vectors: argmax of raw dots == argmax of
-        # cosine (norm(vec) is a shared positive factor) — skip the
-        # norm folds, as in ivf_knn.
-        sims = F.array(*[dot(F.col(vec_col), c) for c in ctr_lits])
         assigned = corpus.select(
             F.col(id_col),
-            (F.array_position(sims, F.array_max(sims)) - 1)
-            .cast("int")
-            .alias("cell"),
+            _assign_cell(F.col(vec_col), centroids).alias("cell"),
         )
         candidates = (
             assigned.select("cell", F.col(id_col).alias("id_a"))
@@ -743,117 +725,4 @@ def semantic_dedup(
             .cast("long")
             .alias("is_dup"),
         )
-    )
-
-
-def brute_force_knn_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_queries: int = 4096,
-) -> DataFrame:
-    """Arrow/numpy twin of ``brute_force_knn`` — the vectorized
-    Pandas-UDF scale path for when per-pair dot products dominate
-    (high dim × many queries, where interpreted Catalyst folds lose
-    to BLAS by orders of magnitude).
-
-    Plan: the query matrix is bounded by an enforced ``max_queries``
-    contract (same pattern as ``pq.pq_knn``; 4096 × 64 doubles ≈ 2 MB)
-    and ships to executors as a task broadcast; ``mapInPandas`` turns
-    each Arrow batch of corpus vectors into ONE matmul against it,
-    emits that batch's per-query top-k, and a final window keeps the
-    global top-k — so the reduce input is batches × queries × k rows,
-    never the full score matrix.
-
-    Ranks use the same (sim DESC, neighbor ASC) tiebreak as the exact
-    operator; float sums differ from the Catalyst fold only at ulp
-    (numpy pairwise vs strict left-fold), so parity tests compare with
-    tolerance instead of a bit-exact oracle.
-
-    Zero-norm divergence (documented, deliberate): cosine of a zero
-    vector is 0/0 — the exact twin propagates NaN, which Spark's
-    descending sort ranks FIRST; this path instead EXCLUDES zero-norm
-    corpus rows and zero-norm queries (no defined direction → no
-    neighbors). Filter zero vectors upstream if the twins must agree
-    on degenerate inputs.
-    """
-    import numpy as np
-    from pyspark.sql import Window
-
-    q_rows = queries.select(
-        F.col(query_id_col), F.col(vec_col)
-    ).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"brute_force_knn_arrow: query set exceeds max_queries="
-            f"{max_queries}; gate the query side or raise the bound "
-            "consciously (it is a broadcast-size contract)"
-        )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep = q_norm > 0.0  # zero-norm queries excluded (see docstring)
-    q_ids, q_mat, q_norm = q_ids[keep], q_mat[keep], q_norm[keep]
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norm))
-
-    def score(batches):
-        import pandas as pd
-
-        ids, mat, qn = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            valid = c_norm > 0.0  # zero-norm corpus rows excluded
-            if not valid.all():
-                c_ids, c_mat, c_norm = (
-                    c_ids[valid], c_mat[valid], c_norm[valid]
-                )
-            if c_ids.size == 0:
-                continue
-            sims = (c_mat @ mat.T) / np.outer(c_norm, qn)  # corpus × query
-            out_q, out_n, out_s = [], [], []
-            kk = min(k, len(c_ids))
-            for j in range(len(ids)):
-                col = sims[:, j]
-                mask = c_ids != ids[j]
-                cand_idx = np.nonzero(mask)[0]
-                if cand_idx.size == 0:
-                    continue
-                take = min(kk, cand_idx.size)
-                # partial-select then exact order: (sim desc, id asc)
-                top = cand_idx[
-                    np.argpartition(-col[cand_idx], take - 1)[:take]
-                ]
-                order = np.lexsort((c_ids[top], -col[top]))
-                top = top[order]
-                out_q.extend([ids[j]] * len(top))
-                out_n.extend(c_ids[top].tolist())
-                out_s.extend(col[top].tolist())
-            yield pd.DataFrame(
-                {
-                    "query_id": np.array(out_q, dtype=np.int64),
-                    "neighbor_id": np.array(out_n, dtype=np.int64),
-                    "cosine_sim": np.array(out_s, dtype=np.float64),
-                }
-            )
-
-    partial = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        score, "query_id long, neighbor_id long, cosine_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
     )

@@ -24,8 +24,6 @@ cross-engine hash is timezone-representation-proof.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
 from typing import Callable
 
@@ -71,20 +69,14 @@ def _drain(
     memory sink and return the sink's table. The staged source and the
     checkpoint are removed once the drain ends: the sink holds the whole
     result, and nothing reads either directory again."""
-    # looked up per call, not bound at import: a caller may rebind
-    # scratch.scratch_dir to move the checkpoints elsewhere
-    from ..sources.scratch import scratch_dir
+    from ..sources.scratch import scratch_dirs
 
-    src, ckpt = tempfile.mkdtemp(prefix="events_src_"), scratch_dir("ckpt_")
-    try:
+    with scratch_dirs("events_src_", "ckpt_") as (src, ckpt):
         _stage_events(sf_dir, src)
         stream = read_events_stream(spark, src, max_files_per_trigger=None)
         return run_available_now(
             plan(stream), "q_" + uuid.uuid4().hex[:12], ckpt, output_mode=mode
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(

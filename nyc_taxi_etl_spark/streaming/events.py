@@ -368,8 +368,9 @@ def run_available_now(
 ) -> DataFrame:
     """Drain all currently-available input through the streaming plan
     (Trigger.AvailableNow) into an in-memory sink; returns the result
-    as a DataFrame. Used for tests and for the reference-style
-    "process the backlog then stop" batch-catchup runs. Raises
+    as a DataFrame, and drops the sink's temp view ``query_name``. Used
+    for tests and for the reference-style "process the backlog then
+    stop" batch-catchup runs. Raises
     ``TimeoutError`` (query stopped) if the drain outlasts
     ``timeout_s``.
 
@@ -425,7 +426,11 @@ def run_available_now(
         # operator name, numRowsTotal, rows dropped by watermark) —
         # the observability hook the state-bound tests pin against
         progress_out.extend(q.recentProgress)
-    return spark.table(query_name)
+    # the resolved frame holds the sink itself, so the session's view
+    # of it is dropped rather than left behind by every drain
+    out = spark.table(query_name)
+    spark.catalog.dropTempView(query_name)
+    return out
 
 
 def stream_ingest_documents(

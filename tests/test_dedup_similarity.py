@@ -4,6 +4,7 @@ verify step)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_etl_spark.operators import dedup as D
@@ -774,51 +775,75 @@ def test_semantic_contamination_flags_planted_eval_clone(spark):
     assert got[3][1] is True and 0.995 > got[3][0] > 0.993
 
 
-def test_arrow_knn_matches_catalyst_brute_force(spark):
-    """The numpy/mapInPandas kNN must agree with the Catalyst fold:
-    identical neighbor sets per query and similarities within ulp-level
-    tolerance (pairwise vs strict-left-fold summation)."""
-    from nyc_taxi_etl_spark.operators.similarity import (
-        brute_force_knn,
-        brute_force_knn_arrow,
+def _tied_corpus(spark):
+    """24 vectors, four distinct directions repeated six times (vector
+    ``i`` is direction ``i % 4``), so every query's similarities tie in
+    groups; labels alternate per block of four for hard negatives."""
+    dirs = [
+        [1.0, 0.5, -0.25, 0.0, 0.75, -1.0, 0.5, 0.25],
+        [0.0, 1.0, 0.5, -0.5, 0.25, 0.0, -0.75, 1.0],
+        [-0.5, 0.25, 1.0, 0.75, 0.0, 0.5, 0.25, -0.25],
+        [0.25, -0.75, 0.0, 1.0, -0.5, 0.25, 1.0, 0.5],
+    ]
+    corpus = spark.createDataFrame(
+        [(i, dirs[i % 4], (i // 4) % 2) for i in range(24)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    queries = corpus.filter(F.col("vec_id") < 3).withColumnRenamed(
+        "vec_id", "query_id"
+    )
+    return corpus, queries
+
+
+def _knn_by_name(name, corpus, queries, k):
+    from nyc_taxi_etl_spark.operators.pq import pq_knn, seeded_codebooks
+
+    if name == "brute_force":
+        return S.brute_force_knn(corpus, queries, k=k)
+    if name == "hard_negatives":
+        return S.hard_negative_knn(corpus, queries, k=k)
+    if name == "lsh":
+        return S.hyperplane_lsh_knn(corpus, queries, k=k, bits=2, tables=2, dim=8)
+    if name == "ivf":
+        return S.ivf_knn(
+            corpus, queries, k=k, n_probe=2,
+            centroids=S.seeded_unit_centroids(8, 4, seed=13),
+        )
+    return pq_knn(
+        corpus, queries, k=k, m=2, n_codes=4, rerank=4,
+        codebooks=seeded_codebooks(8, 2, 4, seed=17),
     )
 
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in brute_force_knn(emb, queries, k=5).collect()
-    }
-    arrow = {
-        (r["query_id"], r["neighbor_id"]): r["cosine_sim"]
-        for r in brute_force_knn_arrow(emb, queries, k=5).collect()
-    }
-    assert set(exact) == set(arrow)
-    for key, sim in exact.items():
-        assert abs(sim - arrow[key]) < 1e-9, key
 
-
-def test_arrow_knn_rejects_unbounded_query_set(spark):
-    import pytest as _pytest
-
-    from nyc_taxi_etl_spark.operators.similarity import brute_force_knn_arrow
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    with _pytest.raises(ValueError, match="max_queries"):
-        brute_force_knn_arrow(emb, queries, k=3, max_queries=5)
-
-
-def test_arrow_knn_empty_query_set(spark):
-    from nyc_taxi_etl_spark.operators.similarity import brute_force_knn_arrow
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    assert brute_force_knn_arrow(emb, queries, k=3).count() == 0
+@pytest.mark.parametrize(
+    "name", ["brute_force", "hard_negatives", "lsh", "ivf", "pq"]
+)
+def test_knn_rank_contract(spark, name):
+    """Every kNN operator ranks the same way: ``rank`` is a long that
+    runs 1..n (n <= k) per query, similarities never rise with rank,
+    tied similarities rank by ``neighbor_id`` ascending, and no query
+    returns itself. The crafted corpus makes ties certain, and the
+    test checks that some were ranked."""
+    corpus, queries = _tied_corpus(spark)
+    k = 5
+    out = _knn_by_name(name, corpus, queries, k)
+    assert dict(out.dtypes)["rank"] == "bigint"
+    by_q: dict = {}
+    for r in out.collect():
+        assert r["neighbor_id"] != r["query_id"]
+        by_q.setdefault(r["query_id"], []).append(
+            (r["rank"], r["cosine_sim"], r["neighbor_id"])
+        )
+    assert set(by_q) == {0, 1, 2}
+    ties = 0
+    for q, rows in by_q.items():
+        rows.sort()
+        assert [rk for rk, _, _ in rows] == list(range(1, len(rows) + 1)), q
+        assert len(rows) <= k
+        for (_, s1, n1), (_, s2, n2) in zip(rows, rows[1:]):
+            assert (-s1, n1) < (-s2, n2), (q, rows)
+            ties += s1 == s2
+    assert ties > 0
 
 
 def test_winnow_guarantee_shared_passage_detected(spark):

@@ -320,6 +320,21 @@ def test_jsonl_roundtrip_with_corrupt_quarantine(spark, tmp_path):
     assert got == want
 
 
+def test_jsonl_roundtrip_entry_stages_under_spark_files_root(spark):
+    """The catalog's JSONL round-trip stages its export under the
+    application's SparkFiles root, which Spark deletes at stop(), so
+    no staged copy outlives the session."""
+    from pyspark import SparkFiles
+
+    from nyc_taxi_etl_spark.plans import CATALOG
+
+    from .conftest import SF_DIR
+
+    root = SparkFiles.getRootDirectory()
+    CATALOG["jsonl_roundtrip_source_counts"](spark, SF_DIR).collect()
+    assert glob.glob(os.path.join(root, "jsonl_rt_*", "_STAGED")), os.listdir(root)
+
+
 def test_orc_roundtrip_matches_parquet(spark, tmp_path):
     from nyc_taxi_etl_spark.sources.sinks import write_orc
 

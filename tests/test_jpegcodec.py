@@ -397,45 +397,16 @@ def _arithmetic_stub() -> bytes:
 
 
 def test_unsupported_process_and_fallback_seam():
-    """Arithmetic-coded JPEG: builtin decode raises; with a production
-    decoder registered via imagecodec.register_fallback_decoder the
-    same bytes decode through the seam (how a Pillow/libjpeg deploy
-    plugs in)."""
+    """Arithmetic-coded JPEG: the builtin decode raises, and so does the
+    sniffing entry point once its Pillow fallback is unavailable —
+    ValueError, never another exception type."""
     from nyc_taxi_etl_spark.operators import imagecodec
 
     blob = _arithmetic_stub()
     with pytest.raises(ValueError, match="SOF|process"):
         decode_jpeg(blob)
-    # no fallback registered (and no Pillow here): error surfaces
     with pytest.raises(ValueError, match="SOF|process"):
         imagecodec.sniff_and_decode(blob)
-    fake = np.full((8, 8, 3), 42, np.uint8)
-    imagecodec.register_fallback_decoder(lambda b: fake)
-    try:
-        assert np.array_equal(imagecodec.sniff_and_decode(blob), fake)
-    finally:
-        imagecodec.register_fallback_decoder(None)
-
-
-def test_fallback_decoder_failure_stays_valueerror():
-    """The seam's contract is 'ValueError or pixels': a fallback that
-    itself fails on a corrupt blob (Pillow raises
-    UnidentifiedImageError, an OSError) must surface as the builtin
-    codec's ValueError so on_error='skip' and decode audits still
-    catch exactly the blobs the hook exists for."""
-    from nyc_taxi_etl_spark.operators import imagecodec
-
-    blob = _arithmetic_stub()
-
-    def broken(_b):
-        raise OSError("cannot identify image file")
-
-    imagecodec.register_fallback_decoder(broken)
-    try:
-        with pytest.raises(ValueError, match="SOF|process"):
-            imagecodec.sniff_and_decode(blob)
-    finally:
-        imagecodec.register_fallback_decoder(None)
 
 
 def test_sniff_integration_and_media_pipeline():
@@ -484,7 +455,7 @@ def test_progressive_roundtrip_bit_identical_to_baseline():
 
 def test_progressive_sniffs_and_flows_through_media_decode():
     """sniff_and_decode and the media _decode_image path accept SOF2
-    streams natively now (no fallback decoder needed)."""
+    streams natively (no Pillow needed)."""
     from nyc_taxi_etl_spark.operators.imagecodec import sniff_and_decode
     from nyc_taxi_etl_spark.operators.jpegcodec import encode_jpeg_progressive
     from nyc_taxi_etl_spark.operators.multimodal import _decode_image

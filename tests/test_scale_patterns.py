@@ -369,6 +369,27 @@ def test_observations_only_in_pin_and_etl_writes():
     assert _modules_matching(r"Observation\(") == {"pins.py", "etl.py"}
 
 
+def test_every_knn_ranks_through_one_window():
+    """Static guard: one rank contract. The only window that sorts by
+    ``cosine_sim`` is ``similarity._top_k``; every kNN operator ends
+    in it."""
+    import pathlib
+    import re
+
+    pattern = r'F\.desc\("cosine_sim"\)'
+    assert _modules_matching(pattern) == {"operators/similarity.py"}
+    src = pathlib.Path(__file__).resolve().parent.parent.joinpath(
+        "nyc_taxi_etl_spark", "operators", "similarity.py"
+    ).read_text()
+    assert len(re.findall(pattern, src)) == 1
+
+
+def test_every_temp_dir_goes_through_scratch_module():
+    """Static guard: only ``sources/scratch.py`` makes temp directories,
+    so every one has an owner that removes it."""
+    assert _modules_matching(r"mkdtemp\(|gettempdir\(") == {"sources/scratch.py"}
+
+
 def test_every_partition_width_goes_through_width_module():
     """Static guard: one module decides partition counts. Only
     ``width.py`` reads or sets the session's shuffle width, reads the

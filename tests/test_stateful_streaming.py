@@ -336,12 +336,19 @@ def test_catalog_drain_state_width_is_min_8_cores(spark, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "name", ["streaming_ewma_anomalies", "streaming_tumbling_counts"]
+    "name",
+    [
+        "streaming_ewma_anomalies",
+        "streaming_tumbling_counts",
+        "orders_matview_monthly_revenue",
+        "customer_order_join_matview",
+    ],
 )
 def test_catalog_drain_removes_its_scratch_dirs(spark, duck, monkeypatch, tmp_path, name):
-    """A catalog drain removes its staged source and its checkpoint once
-    it has drained (the memory sink holds the result), and the returned
-    frame still matches the oracle after both are gone."""
+    """A catalog entry that stages scratch tables (a drain's source and
+    checkpoint, a matview's source and state roots) removes every one
+    before it returns, leaves no memory-sink view in the session, and
+    its frame still matches the oracle after all of them are gone."""
     from nyc_taxi_etl_spark.plans import CATALOG, ORACLES
     from nyc_taxi_etl_spark.sources import scratch
 
@@ -353,8 +360,10 @@ def test_catalog_drain_removes_its_scratch_dirs(spark, duck, monkeypatch, tmp_pa
         "scratch_dir",
         lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=tmp_path),
     )
+    views_before = {v.name for v in spark.catalog.listTables() if v.isTemporary}
     out = CATALOG[name](spark, SF_DIR)
-    left = [d for d in os.listdir(tmp_path) if d.startswith(("ckpt_", "events_src_"))]
-    assert not left
+    assert os.listdir(tmp_path) == []
+    views = {v.name for v in spark.catalog.listTables() if v.isTemporary}
+    assert not {v for v in views - views_before if v.startswith("q_")}
     want = duck.execute(ORACLES[name]).df()
     assert_frames_match(out.toPandas(), want, name)
