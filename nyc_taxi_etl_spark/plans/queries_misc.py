@@ -664,10 +664,7 @@ def orders_matview_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFram
         )
         for i in range(3):
             batch = od.filter(F.col("o_orderkey") % 3 == i)
-            if i == 0:
-                src.write(batch, operation="append")
-            else:
-                src.append(batch)
+            src.append(batch)
             mv.refresh()
         return pin(
             mv.read().select(
@@ -1506,12 +1503,8 @@ def customer_order_join_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(3):
             cb = cu.filter(F.col("c_custkey") % 3 == i)
             ob = od.filter(F.col("o_orderkey") % 3 == i)
-            if i == 0:
-                left.write(cb, operation="append")
-                right.write(ob, operation="append")
-            else:
-                left.append(cb)
-                right.append(ob)
+            left.append(cb)
+            right.append(ob)
             mv.refresh()
         return pin(
             mv.read().groupBy("c_mktsegment").agg(

@@ -59,18 +59,15 @@ def build_bloom_index(table, col: str, fpp: float = 0.01) -> int:
     snapshot that isn't indexed yet. Returns the number of files
     newly indexed. Safe to re-run (idempotent per directory)."""
     spark = table.spark
-    v = table.latest_version()
-    if v is None:
-        raise FileNotFoundError(f"versioned table {table.root} is empty")
+    _, rec = table.snapshot()
     os.makedirs(os.path.join(table.root, _INDEX_DIR), exist_ok=True)
     indexed = 0
-    for rel_dir in table._active_dirs(v):
+    for rel_dir in rec["active"]:
         out = _index_path(table.root, rel_dir, col)
         if os.path.exists(out):
             continue
-        absdir = os.path.join(table.root, rel_dir)
         src = (
-            spark.read.parquet(absdir)
+            table._scan(rec, [rel_dir])
             .select(
                 F.input_file_name().alias("f"), F.col(col).alias("v")
             )
@@ -138,12 +135,10 @@ def build_bloom_index(table, col: str, fpp: float = 0.01) -> int:
     return indexed
 
 
-def _probe_hashes(table, col: str, value) -> tuple[int, int]:
-    """JVM xxhash64 of the probe literal, cast to the table's column
-    type so it hashes bit-identically to the stored rows."""
-    spark = table.spark
-    v = table.latest_version()
-    rec = table._read_commit(v)
+def _probe_hashes(spark, rec: dict, col: str, value) -> tuple[int, int]:
+    """JVM xxhash64 of the probe literal, cast to the column type the
+    commit ``rec`` records, so it hashes bit-identically to the stored
+    rows."""
     dtype = dict(map(tuple, rec.get("schema") or [])).get(col)
     lit = F.lit(value).cast(dtype) if dtype else F.lit(value)
     row = spark.range(1).select(
@@ -152,18 +147,10 @@ def _probe_hashes(table, col: str, value) -> tuple[int, int]:
     return row.h1, row.h2
 
 
-def bloom_prune(
-    table, col: str, value
-) -> tuple[list[str], list[str]]:
-    """Partition the latest snapshot's files into (kept, skipped) for
-    an equality probe on ``col`` using only the bloom sidecars. Files
-    in unindexed directories are always kept (conservative)."""
-    v = table.latest_version()
-    if v is None:
-        raise FileNotFoundError(f"versioned table {table.root} is empty")
-    h1, h2 = _probe_hashes(table, col, value)
+def _prune(table, rec: dict, col: str, value) -> tuple[list[str], list[str]]:
+    h1, h2 = _probe_hashes(table.spark, rec, col, value)
     kept, skipped = [], []
-    for rel_dir in table._active_dirs(v):
+    for rel_dir in rec["active"]:
         idx_path = _index_path(table.root, rel_dir, col)
         idx = None
         if os.path.exists(idx_path):
@@ -190,15 +177,20 @@ def bloom_prune(
     return kept, skipped
 
 
+def bloom_prune(
+    table, col: str, value
+) -> tuple[list[str], list[str]]:
+    """Partition the latest snapshot's files into (kept, skipped) for
+    an equality probe on ``col`` using only the bloom sidecars. Files
+    in unindexed directories are always kept (conservative)."""
+    return _prune(table, table.snapshot()[1], col, value)
+
+
 def read_eq(table, col: str, value):
     """Point-lookup read: bloom-prune the file set, then apply the
     exact equality filter to survivors — result ≡
     ``table.read().filter(col == value)`` (bloom has no false
     negatives; false positives only cost a redundant file scan)."""
-    kept, _ = bloom_prune(table, col, value)
-    cond = F.col(col) == F.lit(value)
-    if not kept:
-        return table.read().limit(0).filter(cond)
-    return table.spark.read.parquet(
-        *[os.path.join(table.root, f) for f in kept]
-    ).filter(cond)
+    _, rec = table.snapshot()
+    kept, _ = _prune(table, rec, col, value)
+    return table._scan(rec, kept).filter(F.col(col) == F.lit(value))

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import width
-from .versioned import VersionedTable
+from .versioned import VersionedTable, compact_layout
 
 __all__ = ["MaterializedAgg", "MaterializedJoin"]
 
@@ -37,6 +37,16 @@ _MERGE = {
     "min": (F.min, F.min),
     "max": (F.max, F.max),
 }
+
+
+def _watermarks(rec: dict) -> tuple | None:
+    """The two source versions a join-view commit reflects. A commit
+    without them (an external / non-refresh write to the state table)
+    reads as never refreshed, so refresh() falls back to a full
+    recompute instead of comparing integers against None."""
+    la = rec.get("source_left_version")
+    rb = rec.get("source_right_version")
+    return None if la is None or rb is None else (la, rb)
 
 
 class MaterializedAgg:
@@ -87,10 +97,7 @@ class MaterializedAgg:
     # -- public API --------------------------------------------------------
 
     def refreshed_source_version(self) -> int | None:
-        v = self.state.latest_version()
-        if v is None:
-            return None
-        return self.state._read_commit(v).get("source_version")
+        return self.state.latest_commit().get("source_version")
 
     def refresh(self) -> int | None:
         """Bring the view up to the source's latest version. Reads the
@@ -99,7 +106,8 @@ class MaterializedAgg:
         src_latest = self.source.latest_version()
         if src_latest is None:
             return None
-        done = self.refreshed_source_version()
+        base = self.state.latest_commit()
+        done = base.get("source_version")
         if done == src_latest:
             return None
         if done is None:
@@ -117,21 +125,9 @@ class MaterializedAgg:
                 # correct for ANY history, just not incremental for
                 # this one refresh
                 merged = self._partial(self.source.read(src_latest))
-        rel = self.state._write_data_dir(merged)
-        base = self.state.latest_version()
-        version = 0 if base is None else base + 1
-        self.state._publish(
-            version,
-            {
-                "version": version,
-                "operation": "matview_refresh",
-                "source_version": src_latest,
-                "active": [rel],
-                "schema": self.state._schema_of(merged),
-                "file_stats": self.state._scan_stats(rel),
-            },
+        return self.state.commit(
+            base, "matview_refresh", written=[merged], source_version=src_latest
         )
-        return version
 
     def read(self) -> DataFrame:
         return self.state.read()
@@ -186,19 +182,7 @@ class MaterializedJoin:
         self.state = VersionedTable(left.spark, root)
 
     def refreshed_source_versions(self) -> tuple | None:
-        v = self.state.latest_version()
-        if v is None:
-            return None
-        rec = self.state._read_commit(v)
-        la = rec.get("source_left_version")
-        rb = rec.get("source_right_version")
-        if la is None or rb is None:
-            # an external / non-refresh write to the state table dropped
-            # the delta bookkeeping: treat as never-refreshed so
-            # refresh() falls back to a full recompute instead of
-            # comparing integers against None
-            return None
-        return (la, rb)
+        return _watermarks(self.state.latest_commit())
 
     def _full(self, la: int, rb: int) -> DataFrame:
         return self.left.read(la).join(self.right.read(rb), self.on)
@@ -211,7 +195,8 @@ class MaterializedJoin:
         rb = self.right.latest_version()
         if la is None or rb is None:
             return None
-        done = self.refreshed_source_versions()
+        base = self.state.latest_commit()
+        done = _watermarks(base)
         if done == (la, rb):
             return None
         full = done is None
@@ -240,35 +225,18 @@ class MaterializedJoin:
                 # non-append commit in the range: delta rule invalid
                 delta = self._full(la, rb)
                 full = True
-        rel = self.state._write_data_dir(delta)
-        base = self.state.latest_version()
-        version = 0 if base is None else base + 1
-        if full or base is None:
-            active = [rel]
-            stats = self.state._scan_stats(rel)
-            op = "join_matview_full"
-        else:
-            prior_rec = self.state._read_commit(base)
-            prior = list(prior_rec.get("active", []))
-            active = prior + [rel]
-            stats = self.state._carry_stats(prior_rec, prior)
-            stats.update(self.state._scan_stats(rel))
-            op = "join_matview_refresh"
-        self.state._publish(
-            version,
-            {
-                "version": version,
-                "operation": op,
-                "active": active,
-                "schema": self.state._schema_of(delta),
-                "file_stats": stats,
-                "source_left_version": la,
-                "source_right_version": rb,
-            },
+        carried = [] if full else base["active"]
+        version = self.state.commit(
+            base,
+            "join_matview_full" if full else "join_matview_refresh",
+            carried,
+            [delta],
+            source_left_version=la,
+            source_right_version=rb,
         )
         if (
             self.compact_after is not None
-            and len(active) >= self.compact_after
+            and len(carried) + 1 >= self.compact_after
         ):
             # Auto-trigger bounds the FILE count, not just the directory
             # count: at most compact_after files, and never more than
@@ -293,9 +261,10 @@ class MaterializedJoin:
         after thousands of refreshes the view reads N small files and
         carries N stats entries).
 
-        Unlike ``VersionedTable.compact`` (whose commit record has no
+        It runs ``VersionedTable.compact``'s rewrite
+        (:func:`compact_layout`), but where that commit record has no
         source watermarks, which would force the NEXT refresh into a
-        full recompute), this publishes ``join_matview_compact``
+        full recompute, this publishes ``join_matview_compact``
         CARRYING the current source versions forward, so incremental
         maintenance continues across compactions. Auto-triggered by
         ``refresh()`` once the active list reaches ``compact_after``
@@ -307,30 +276,19 @@ class MaterializedJoin:
         ``target_files`` for exactly that many files
         (``width.with_partitions``) or ``cluster_by`` for the Morton
         layout."""
-        base = self.state.latest_version()
-        if base is None:
-            raise FileNotFoundError(
-                f"materialized join {self.state.root} is empty"
-            )
-        prior_rec = self.state._read_commit(base)
-        # same rewrite as VersionedTable.compact, so read_where footer
-        # pruning works on every clustered column
-        rel = self.state._compact_dir(base, target_files, cluster_by, zorder_bits)
-        version = base + 1
-        record = {
-            "version": version,
-            "operation": "join_matview_compact",
-            "base_version": base,
-            "active": [rel],
-            "schema": prior_rec.get("schema"),
-            "file_stats": self.state._scan_stats(rel),
-            "source_left_version": prior_rec.get("source_left_version"),
-            "source_right_version": prior_rec.get("source_right_version"),
-        }
-        if cluster_by:
-            record["clustered_by"] = list(cluster_by)
-        self.state._publish(version, record)
-        return version
+        version, base = self.state.snapshot()
+        snap = compact_layout(
+            self.state.read(version), target_files, cluster_by, zorder_bits
+        )
+        return self.state.commit(
+            base,
+            "join_matview_compact",
+            written=[snap],
+            base_version=version,
+            clustered_by=list(cluster_by) if cluster_by else None,
+            source_left_version=base.get("source_left_version"),
+            source_right_version=base.get("source_right_version"),
+        )
 
     def read(self) -> DataFrame:
         return self.state.read()

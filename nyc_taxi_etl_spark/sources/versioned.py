@@ -28,6 +28,17 @@ Protocol:
   * ``vacuum()`` deletes data directories no commit references —
     exactly the orphans crashes leave behind.
 
+Schema contract: every mutation, and the materialized views of
+``sources/matview.py``, publish through :meth:`VersionedTable.commit`,
+so every commit records the table's ``schema`` (column names and types,
+in order) and ``schema_evolved`` (some active file lacks a column).
+Every read — ``read``, ``read_where``, ``read_partitions``,
+``read_changes_since`` and ``bloom_index.read_eq`` — resolves its files
+through one scan that returns exactly that schema: recorded column
+order, typed nulls for columns a file lacks, and a typed empty frame
+when no file is kept. Records written before schemas were recorded
+read as their files do.
+
 Scale posture: the log is tiny metadata (one small JSON per commit —
 fine on any DFS); data stays ordinary parquet readable by any engine.
 The upsert here rewrites the table (full-recompute merge through ONE
@@ -42,18 +53,75 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import width
 from ..operators.merge import merge_upsert
+from ..pins import pin
 
-__all__ = ["VersionedTable"]
+__all__ = ["VersionedTable", "compact_layout"]
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
+
+
+def _schema_of(df: DataFrame) -> list[list[str]]:
+    return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
+
+
+def _evolve(base: dict, new: list[list[str]]) -> tuple[list[list[str]], bool]:
+    """Additive merge of the batch schema ``new`` onto ``base``'s
+    recorded schema: the recorded columns in order, then the batch's
+    new ones. Returns ``(merged, drift)``, where ``drift`` says the
+    column SETS differ (column order is not drift: parquet resolves by
+    name). A shared column changing type raises. A base without a
+    recorded schema takes ``new`` as it is."""
+    prior = base.get("schema")
+    if prior is None:
+        return new, False
+    prior_types, new_types = dict(map(tuple, prior)), dict(map(tuple, new))
+    clash = sorted(
+        n for n in prior_types.keys() & new_types.keys()
+        if prior_types[n] != new_types[n]
+    )
+    if clash:
+        raise ValueError(
+            f"commit would change column type(s) {clash}; "
+            "schema evolution is additive-only"
+        )
+    merged = [*map(list, prior), *([n, t] for n, t in new if n not in prior_types)]
+    return merged, prior_types.keys() != new_types.keys()
+
+
+def _partition_values(df: DataFrame, col: str) -> list[str]:
+    return sorted(str(r[0]) for r in df.select(col).distinct().collect())
+
+
+def _split(df: DataFrame, col: str, values: Sequence[str]) -> dict[str, DataFrame]:
+    return {v: df.filter(F.col(col).cast("string") == v) for v in values}
+
+
+def compact_layout(
+    snap: DataFrame,
+    target_files: int | None,
+    cluster_by: Sequence[str] | None,
+    zorder_bits: int,
+) -> DataFrame:
+    """The compaction rewrite of snapshot ``snap``: the Morton layout of
+    ``cluster_by`` (``target_files`` files, default the current file
+    count), else exactly ``target_files`` files, else the files as they
+    are."""
+    if cluster_by:
+        from ..functions.zorder import zorder_layout
+
+        n = target_files or width.input_file_count(snap) or 1
+        return zorder_layout(snap, cluster_by, n, zorder_bits)
+    if target_files is not None:
+        return width.with_partitions(snap, target_files)
+    return snap
 
 
 class VersionedTable:
@@ -82,6 +150,23 @@ class VersionedTable:
         with open(self._log_path(version)) as f:
             return json.load(f)
 
+    def _active_dirs(self, version: int) -> list[str]:
+        return list(self._read_commit(version)["active"])
+
+    def snapshot(self, version: int | None = None) -> tuple[int, dict]:
+        """``(version, commit record)`` of snapshot ``version``, default
+        the latest. Raises ``FileNotFoundError`` on an empty table."""
+        v = self.latest_version() if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"versioned table {self.root} is empty")
+        return v, self._read_commit(v)
+
+    def latest_commit(self) -> dict:
+        """The latest commit record, the base a mutation commits on top
+        of; ``{}`` while the table is empty."""
+        v = self.latest_version()
+        return {} if v is None else self._read_commit(v)
+
     def _publish(self, version: int, record: dict) -> None:
         """Atomically create the commit record for ``version``.
 
@@ -109,6 +194,53 @@ class VersionedTable:
         finally:
             os.unlink(tmp)
 
+    def commit(
+        self,
+        base: dict,
+        operation: str,
+        carried: Sequence[str] = (),
+        written: Sequence[DataFrame] | Mapping[str, DataFrame] = (),
+        **fields,
+    ) -> int:
+        """Publish the version after ``base`` (a commit record, ``{}`` on
+        an empty table) and return it: the one path to the log.
+
+        The new active set is ``carried`` (directories of ``base`` kept
+        by reference, with their ``file_stats``) followed by one fresh
+        directory per frame of ``written``, whose footers give its
+        stats; a mapping ``written`` is partition value → rows, and the
+        record's ``partitions`` then covers carried and new directories.
+        The recorded ``schema`` is the written frames' (they share one),
+        merged additively onto ``base``'s when directories are carried,
+        with ``schema_evolved`` set once the column sets differ; with no
+        frame it is ``base``'s. ``fields`` are further record fields
+        (keys, watermarks, ...); a ``None`` field is left out."""
+        frames = list(written.values()) if isinstance(written, Mapping) else list(written)
+        prior = base if carried or not frames else {}
+        if frames:
+            schema, drift = _evolve(prior, _schema_of(frames[0]))
+        else:
+            schema, drift = base.get("schema"), False
+        new = [self._write_data_dir(df) for df in frames]
+        if isinstance(written, Mapping):
+            parts = {d: base["partitions"][d] for d in carried}
+            fields["partitions"] = {**parts, **dict(zip(new, written))}
+        stats = self._carry_stats(base, carried)
+        for rel in new:
+            stats.update(self._scan_stats(rel))
+        version = base.get("version", -1) + 1
+        record = {
+            "version": version,
+            "operation": operation,
+            "active": [*carried, *new],
+            "schema": schema,
+            "schema_evolved": drift or bool(prior.get("schema_evolved")),
+            "file_stats": stats,
+            **fields,
+        }
+        self._publish(version, {k: v for k, v in record.items() if v is not None})
+        return version
+
     # -- data plumbing -----------------------------------------------------
 
     def _write_data_dir(self, df: DataFrame) -> str:
@@ -119,29 +251,30 @@ class VersionedTable:
         df.write.mode("error").parquet(os.path.join(self.root, rel))
         return rel
 
-    def _compact_dir(
-        self,
-        version: int,
-        target_files: int | None,
-        cluster_by: Sequence[str] | None,
-        zorder_bits: int,
-    ) -> str:
-        """Rewrite snapshot ``version`` into one fresh data directory:
-        the Morton layout of ``cluster_by`` (``target_files`` files,
-        default the current file count), else exactly ``target_files``
-        files, else the files as they are."""
-        snap = self.read(version)
-        if cluster_by:
-            from ..functions.zorder import zorder_layout
-
-            n = target_files or width.input_file_count(snap) or 1
-            snap = zorder_layout(snap, cluster_by, n, zorder_bits)
-        elif target_files is not None:
-            snap = width.with_partitions(snap, target_files)
-        return self._write_data_dir(snap)
-
-    def _active_dirs(self, version: int) -> list[str]:
-        return list(self._read_commit(version)["active"])
+    def _scan(self, rec: dict, paths: Sequence[str]) -> DataFrame:
+        """Frame over ``paths`` (table-relative directories or files of
+        the snapshot ``rec``) under its recorded schema. Only an evolved
+        table reads with ``mergeSchema``, so unevolved ones skip that
+        footer pass; a column a file lacks reads as a typed null;
+        columns come in the recorded order whichever file the scan
+        infers from; no paths gives a typed empty frame. A record from
+        before schemas were recorded reads as its files do."""
+        schema = rec.get("schema")
+        if not paths and schema is not None:
+            ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
+            return self.spark.createDataFrame([], ddl)
+        reader = self.spark.read
+        if rec.get("schema_evolved"):
+            reader = reader.option("mergeSchema", "true")
+        df = reader.parquet(
+            *[os.path.join(self.root, p) for p in paths or rec["active"]]
+        )
+        if schema is None:
+            return df if paths else df.limit(0)
+        have = set(df.columns)
+        return df.select(
+            *[n if n in have else F.lit(None).cast(t).alias(n) for n, t in schema]
+        )
 
     # -- data-skipping statistics -----------------------------------------
 
@@ -214,10 +347,7 @@ class VersionedTable:
         unbounded side; equality = ``(v, v)``) using ONLY commit
         metadata. Files without recorded stats for a constrained
         column are always kept (conservative)."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"versioned table {self.root} is empty")
-        rec = self._read_commit(v)
+        _, rec = self.snapshot(version)
         fstats = rec.get("file_stats") or {}
         kept, skipped = [], []
         for rel_dir in rec["active"]:
@@ -256,55 +386,30 @@ class VersionedTable:
         win is proportional to how well the layout clusters the
         constrained column — pair with :meth:`compact` after a
         range-partitioned write for sorted layouts."""
-        kept, _ = self.prune_plan(where, version)
+        v, rec = self.snapshot(version)
+        kept, _ = self.prune_plan(where, v)
         cond = F.lit(True)
         for col, (lo, hi) in where.items():
             if lo is not None:
                 cond = cond & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(col) <= F.lit(hi))
-        if not kept:
-            return self.read(version).limit(0).filter(cond)
-        return self.spark.read.parquet(
-            *[os.path.join(self.root, f) for f in kept]
-        ).filter(cond)
+        return self._scan(rec, kept).filter(cond)
 
     # -- public API --------------------------------------------------------
 
-    @staticmethod
-    def _schema_of(df: DataFrame) -> list[list[str]]:
-        return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-
-    def write(self, df: DataFrame, operation: str = "overwrite") -> int:
+    def write(self, df: DataFrame) -> int:
         """Publish ``df`` as the complete new table state (init /
         overwrite). Returns the committed version."""
-        rel = self._write_data_dir(df)
-        latest = self.latest_version()
-        version = 0 if latest is None else latest + 1
-        self._publish(version, {"version": version, "operation": operation,
-                                "active": [rel],
-                                "schema": self._schema_of(df),
-                                "file_stats": self._scan_stats(rel)})
-        return version
+        return self.commit(self.latest_commit(), "overwrite", written=[df])
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Snapshot read (latest, or time-travel to ``version``).
-
-        Commits whose history evolved the schema (see :meth:`append`)
-        read with ``mergeSchema`` — files predating a column surface
-        NULLs for it — and project the RECORDED column order, so the
-        caller-visible schema is stable regardless of which file the
-        scan starts footers from. Unevolved tables skip the mergeSchema
-        footer pass entirely."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"versioned table {self.root} is empty")
-        rec = self._read_commit(v)
-        paths = [os.path.join(self.root, d) for d in rec["active"]]
-        if not rec.get("schema_evolved"):
-            return self.spark.read.parquet(*paths)
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        return df.select(*[name for name, _ in rec["schema"]])
+        """Snapshot read (latest, or time-travel to ``version``) under
+        the recorded schema: commits whose history evolved the schema
+        (see :meth:`append`) read with ``mergeSchema``, and files
+        predating a column surface typed NULLs for it."""
+        _, rec = self.snapshot(version)
+        return self._scan(rec, rec["active"])
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> int:
         """Publish ``df`` as ADDITIONAL rows (insert-only fast path):
@@ -320,58 +425,14 @@ class VersionedTable:
         their type, and a mismatch raises instead of corrupting the
         table — the Delta-style additive evolution contract. Without
         the flag, any schema drift raises."""
-        latest = self.latest_version()
-        prior_rec = {} if latest is None else self._read_commit(latest)
-        prior_schema = prior_rec.get("schema")
-        new_schema = self._schema_of(df)
-        evolved = bool(prior_rec.get("schema_evolved"))
-        if prior_schema is not None:
-            prior_types = dict(map(tuple, prior_schema))
-            new_types = dict(map(tuple, new_schema))
-            clash = {
-                n
-                for n in prior_types.keys() & new_types.keys()
-                if prior_types[n] != new_types[n]
-            }
-            if clash:
-                raise ValueError(
-                    f"append would change column type(s) {sorted(clash)}; "
-                    "schema evolution is additive-only"
-                )
-            # column ORDER is not drift (parquet resolves by name);
-            # only the column SET matters
-            drift = prior_types.keys() != new_types.keys()
-            if drift and not merge_schema:
-                raise ValueError(
-                    "append batch schema differs from the table schema; "
-                    "pass merge_schema=True for additive evolution"
-                )
-            merged_schema = list(map(list, prior_schema)) + [
-                [n, t] for n, t in new_schema if n not in prior_types
-            ]
-            merged_names = {n for n, _ in merged_schema}
-            # evolved ⇔ some active file lacks a merged column: either
-            # the batch ADDED columns (old files lack them) or the
-            # batch OMITS table columns (its new files lack those)
-            evolved = (
-                evolved
-                or bool(merged_names - prior_types.keys())
-                or bool(merged_names - new_types.keys())
+        base = self.latest_commit()
+        _, drift = _evolve(base, _schema_of(df))
+        if drift and not merge_schema:
+            raise ValueError(
+                "append batch schema differs from the table schema; "
+                "pass merge_schema=True for additive evolution"
             )
-        else:
-            merged_schema = new_schema
-        rel = self._write_data_dir(df)
-        prior = list(prior_rec.get("active", []))
-        version = 0 if latest is None else latest + 1
-        stats = self._carry_stats(prior_rec, prior)
-        stats.update(self._scan_stats(rel))
-        self._publish(
-            version,
-            {"version": version, "operation": "append",
-             "active": prior + [rel], "schema": merged_schema,
-             "schema_evolved": evolved, "file_stats": stats},
-        )
-        return version
+        return self.commit(base, "append", base.get("active", []), [df])
 
     def compact(
         self,
@@ -382,10 +443,9 @@ class VersionedTable:
         """Rewrite the current snapshot as ONE data directory (with
         ``target_files`` parquet files when given) and commit it as
         the next version — the standard maintenance op after a run of
-        appends has accumulated directories/small files. Old versions
+        appends has accumulated directories/small files. Older versions
         still time-travel to the original directories until
-        ``vacuum_versions``-style retention (not implemented — vacuum
-        here only removes unreferenced orphans) lets them go.
+        :meth:`expire_versions` drops them.
 
         ``target_files`` is exact (``width.with_partitions``: coalesce,
         narrow, to shrink; repartition to grow).
@@ -395,21 +455,15 @@ class VersionedTable:
         :meth:`read_where` footer pruning works on EVERY clustered
         column at once — the ``OPTIMIZE ZORDER BY`` maintenance op of
         the lakehouse formats, at the cost of one range shuffle."""
-        base_version = self.latest_version()
-        if base_version is None:
-            raise FileNotFoundError(f"versioned table {self.root} is empty")
-        rel = self._compact_dir(base_version, target_files, cluster_by, zorder_bits)
-        record = {
-            "version": base_version + 1,
-            "operation": "compact",
-            "base_version": base_version,
-            "active": [rel],
-            "file_stats": self._scan_stats(rel),
-        }
-        if cluster_by:
-            record["clustered_by"] = list(cluster_by)
-        self._publish(base_version + 1, record)
-        return base_version + 1
+        version, base = self.snapshot()
+        snap = self._scan(base, base["active"])
+        return self.commit(
+            base,
+            "compact",
+            written=[compact_layout(snap, target_files, cluster_by, zorder_bits)],
+            base_version=version,
+            clustered_by=list(cluster_by) if cluster_by else None,
+        )
 
     def upsert(
         self,
@@ -421,23 +475,14 @@ class VersionedTable:
         committed atomically as the next version (restartable: a crash
         anywhere before publish leaves the previous version intact and
         the merge can simply be re-run)."""
-        base_version = self.latest_version()
-        if base_version is None:
-            return self.write(updates, operation="upsert")
-        merged = merge_upsert(self.read(base_version), updates, keys, version_col)
-        rel = self._write_data_dir(merged)
-        self._publish(
-            base_version + 1,
-            {
-                "version": base_version + 1,
-                "operation": "upsert",
-                "keys": list(keys),
-                "base_version": base_version,
-                "active": [rel],
-                "file_stats": self._scan_stats(rel),
-            },
+        base = self.latest_commit()
+        if base:
+            snap = self._scan(base, base["active"])
+            updates = merge_upsert(snap, updates, keys, version_col)
+        return self.commit(
+            base, "upsert", written=[updates], keys=list(keys),
+            base_version=base.get("version"),
         )
-        return base_version + 1
 
     # -- partition-scoped mutation (the 100 TB path) -----------------------
 
@@ -455,41 +500,35 @@ class VersionedTable:
         read with plain ``spark.read.parquet`` and no basePath tricks.
         The per-partition write loop is a driver loop bounded by the
         partition count of the BATCH (months/days — metadata scale);
-        ``df`` is persisted across the loop so the upstream plan runs
-        once, not once per partition."""
-        df = df.persist()
-        try:
-            values = sorted(
-                str(r[0])
-                for r in df.select(partition_col).distinct().collect()
-            )
-            dirs, parts = [], {}
-            for v in values:
-                rel = self._write_data_dir(
-                    df.filter(F.col(partition_col).cast("string") == v)
-                )
-                dirs.append(rel)
-                parts[rel] = v
-            latest = self.latest_version()
-            version = 0 if latest is None else latest + 1
-            self._publish(
-                version,
-                {
-                    "version": version,
-                    "operation": "write_partitioned",
-                    "partition_col": partition_col,
-                    "active": dirs,
-                    "partitions": parts,
-                    "file_stats": {
-                        f: s
-                        for d in dirs
-                        for f, s in self._scan_stats(d).items()
-                    },
-                },
-            )
-            return version
-        finally:
-            df.unpersist()
+        ``df`` is pinned first so the upstream plan runs once, not once
+        per partition."""
+        df = pin(df)
+        return self.commit(
+            self.latest_commit(),
+            "write_partitioned",
+            written=_split(df, partition_col, _partition_values(df, partition_col)),
+            partition_col=partition_col,
+        )
+
+    def _rewrite_partitions(
+        self,
+        base: dict,
+        operation: str,
+        partition_col: str,
+        frames: dict[str, DataFrame],
+        **fields,
+    ) -> int:
+        """Commit ``frames`` (partition value → that partition's new
+        rows) as fresh directories and carry every other partition of
+        ``base`` by reference: the dynamic partition overwrite behind
+        :meth:`upsert_partitioned` and a partitioned
+        :meth:`delete_where`."""
+        parts = base["partitions"]
+        carried = [d for d in base["active"] if parts[d] not in frames]
+        return self.commit(
+            base, operation, carried, frames, partition_col=partition_col,
+            base_version=base["version"], rewritten=list(frames), **fields,
+        )
 
     def upsert_partitioned(
         self,
@@ -509,65 +548,28 @@ class VersionedTable:
         New partition values in the batch simply become new
         directories. Requires a partition-tracked table
         (:meth:`write_partitioned`)."""
-        base_version = self.latest_version()
-        if base_version is None:
+        base = self.latest_commit()
+        if not base:
             return self.write_partitioned(updates, partition_col)
-        rec = self._read_commit(base_version)
-        parts = rec.get("partitions")
-        if parts is None or set(rec["active"]) - set(parts):
+        parts = base.get("partitions")
+        if parts is None or set(base["active"]) - set(parts):
             raise ValueError(
                 "table has partition-untracked directories; use "
                 "write_partitioned first (or the full-rewrite upsert)"
             )
-        if rec.get("partition_col") not in (None, partition_col):
+        if base.get("partition_col") not in (None, partition_col):
             raise ValueError(
-                f"table is partitioned by {rec.get('partition_col')!r}, "
+                f"table is partitioned by {base.get('partition_col')!r}, "
                 f"not {partition_col!r}"
             )
-        updates = updates.persist()
-        try:
-            touched = sorted(
-                str(r[0])
-                for r in updates.select(partition_col).distinct().collect()
-            )
-            touched_set = set(touched)
-            carried = [d for d in rec["active"] if parts[d] not in touched_set]
-            base_dirs = [d for d in rec["active"] if parts[d] in touched_set]
-            if base_dirs:
-                base = self.spark.read.parquet(
-                    *[os.path.join(self.root, d) for d in base_dirs]
-                )
-            else:
-                base = updates.limit(0)
-            merged = merge_upsert(base, updates, keys, version_col).persist()
-            new_parts = {d: parts[d] for d in carried}
-            active = list(carried)
-            stats = self._carry_stats(rec, carried)
-            for v in touched:
-                rel = self._write_data_dir(
-                    merged.filter(F.col(partition_col).cast("string") == v)
-                )
-                active.append(rel)
-                new_parts[rel] = v
-                stats.update(self._scan_stats(rel))
-            self._publish(
-                base_version + 1,
-                {
-                    "version": base_version + 1,
-                    "operation": "upsert_partitioned",
-                    "partition_col": partition_col,
-                    "keys": list(keys),
-                    "base_version": base_version,
-                    "rewritten": touched,
-                    "active": active,
-                    "partitions": new_parts,
-                    "file_stats": stats,
-                },
-            )
-            merged.unpersist()
-            return base_version + 1
-        finally:
-            updates.unpersist()
+        updates = pin(updates)
+        touched = _partition_values(updates, partition_col)
+        old = self._scan(base, [d for d in base["active"] if parts[d] in touched])
+        merged = pin(merge_upsert(old, updates, keys, version_col))
+        return self._rewrite_partitions(
+            base, "upsert_partitioned", partition_col,
+            _split(merged, partition_col, touched), keys=list(keys),
+        )
 
     def read_partitions(
         self, values: Sequence[str], version: int | None = None
@@ -575,18 +577,10 @@ class VersionedTable:
         """Snapshot read PRUNED to the given partition values using
         only commit metadata — no file listing or footer reads for
         untouched partitions."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"versioned table {self.root} is empty")
-        rec = self._read_commit(v)
+        _, rec = self.snapshot(version)
         parts = rec.get("partitions") or {}
         wanted = {str(x) for x in values}
-        dirs = [d for d in rec["active"] if parts.get(d) in wanted]
-        if not dirs:
-            return self.read(v).limit(0)
-        return self.spark.read.parquet(
-            *[os.path.join(self.root, d) for d in dirs]
-        )
+        return self._scan(rec, [d for d in rec["active"] if parts.get(d) in wanted])
 
     def version_as_of(self, ts: float) -> int:
         """Newest version committed at-or-before wall time ``ts``
@@ -665,36 +659,25 @@ class VersionedTable:
         Raises if any commit in (v_from, latest] is not an append —
         a rewrite (upsert/compact/delete) invalidates directory-
         increment semantics; use :meth:`table_changes` there."""
-        latest = self.latest_version()
-        if latest is None or v_from > latest:
+        latest, rec = self.snapshot()
+        if v_from > latest:
             raise FileNotFoundError(
                 f"versioned table {self.root}: bad version range"
             )
         base = set(self._active_dirs(v_from))
         new_dirs: list[str] = []
         for v in self.versions():
-            if v <= v_from:
+            if not v_from < v <= latest:
                 continue
-            rec = self._read_commit(v)
-            if rec.get("operation") != "append":
+            step = self._read_commit(v)
+            if step.get("operation") != "append":
                 raise ValueError(
-                    f"commit {v} is {rec.get('operation')!r}, not append; "
+                    f"commit {v} is {step.get('operation')!r}, not append; "
                     "directory-increment reads need an append-only range"
                 )
-            new_dirs += [d for d in rec["active"] if d not in base]
-            base.update(rec["active"])
-        if not new_dirs:
-            return self.read(latest).limit(0)
-        df = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.root, d) for d in new_dirs]
-        )
-        rec = self._read_commit(latest)
-        if rec.get("schema_evolved"):
-            for name, _ in rec["schema"]:
-                if name not in df.columns:
-                    df = df.withColumn(name, F.lit(None))
-            df = df.select(*[name for name, _ in rec["schema"]])
-        return df
+            new_dirs += [d for d in step["active"] if d not in base]
+            base.update(step["active"])
+        return self._scan(rec, new_dirs)
 
     def delete_where(self, condition) -> int:
         """Row-level delete: remove rows matching ``condition`` (a
@@ -707,66 +690,23 @@ class VersionedTable:
         commit by reference, so delete cost follows the affected
         partitions, not the table (the dynamic-partition-overwrite
         shape). Untracked tables fall back to a full rewrite."""
-        base_version = self.latest_version()
-        if base_version is None:
-            raise FileNotFoundError(f"versioned table {self.root} is empty")
+        version, base = self.snapshot()
         cond = F.expr(condition) if isinstance(condition, str) else condition
         hit = F.coalesce(cond, F.lit(False))
-        rec = self._read_commit(base_version)
-        parts = rec.get("partitions")
-        if parts and not (set(rec["active"]) - set(parts)):
-            pcol = rec["partition_col"]
-            touched = sorted(
-                str(r[0])
-                for r in self.read(base_version)
-                .filter(hit)
-                .select(pcol)
-                .distinct()
-                .collect()
-            )
-            touched_set = set(touched)
-            carried = [d for d in rec["active"] if parts[d] not in touched_set]
-            active = list(carried)
-            new_parts = {d: parts[d] for d in carried}
-            stats = self._carry_stats(rec, carried)
-            for d in rec["active"]:
-                if parts[d] not in touched_set:
-                    continue
-                kept = self.spark.read.parquet(
-                    os.path.join(self.root, d)
+        snap = self._scan(base, base["active"])
+        parts = base.get("partitions")
+        if parts and not (set(base["active"]) - set(parts)):
+            pcol = base["partition_col"]
+            frames = {
+                v: self._scan(
+                    base, [d for d in base["active"] if parts[d] == v]
                 ).filter(~hit)
-                rel = self._write_data_dir(kept)
-                active.append(rel)
-                new_parts[rel] = parts[d]
-                stats.update(self._scan_stats(rel))
-            self._publish(
-                base_version + 1,
-                {
-                    "version": base_version + 1,
-                    "operation": "delete",
-                    "partition_col": pcol,
-                    "base_version": base_version,
-                    "rewritten": touched,
-                    "active": active,
-                    "partitions": new_parts,
-                    "file_stats": stats,
-                },
-            )
-            return base_version + 1
-        kept = self.read(base_version).filter(~hit)
-        rel = self._write_data_dir(kept)
-        self._publish(
-            base_version + 1,
-            {
-                "version": base_version + 1,
-                "operation": "delete",
-                "base_version": base_version,
-                "active": [rel],
-                "schema": self._schema_of(kept),
-                "file_stats": self._scan_stats(rel),
-            },
+                for v in _partition_values(snap.filter(hit), pcol)
+            }
+            return self._rewrite_partitions(base, "delete", pcol, frames)
+        return self.commit(
+            base, "delete", written=[snap.filter(~hit)], base_version=version
         )
-        return base_version + 1
 
     def expire_versions(self, keep_last: int = 1) -> list[int]:
         """Retention: drop all but the newest ``keep_last`` commit

@@ -90,3 +90,26 @@ def test_vacuum_removes_orphan_sidecars(spark, doc_table):
     assert len(os.listdir(idx_dir)) == 2
     doc_table.expire_versions(keep_last=1)  # v0's dir vacuumed
     assert len(os.listdir(idx_dir)) == 1
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "upsert", "write_partitioned"])
+def test_point_lookup_after_a_rewrite_matches_full_filter(spark, tmp_path, rewrite):
+    """Every commit records the schema, so after any rewrite the probe
+    literal is still cast to the column's bigint and hashes like the
+    stored keys: present keys are found, absent ones are not."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    rows = spark.range(1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).cast("string").alias("part")
+    )
+    t.write(rows.repartition(4))
+    if rewrite == "compact":
+        t.compact()
+    elif rewrite == "upsert":
+        t.upsert(rows.filter(F.col("doc_id") < 10), ["doc_id"])
+    else:
+        t.write_partitioned(rows, "part")
+    build_bloom_index(t, "doc_id")
+    for key in (1, 17, 500, 999, 5000):
+        want = t.read().filter(F.col("doc_id") == key).collect()
+        assert sorted(read_eq(t, "doc_id", key).collect()) == sorted(want)
+        assert len(want) == (key < 1000)

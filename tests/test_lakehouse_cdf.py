@@ -215,13 +215,11 @@ def test_join_matview_incremental_equals_recompute(spark, tmp_path):
     # either source empty -> no-op, view unborn
     assert mv.refresh() is None
 
-    left.write(
+    left.append(
         spark.createDataFrame([(1, "a1"), (2, "a2")], "k: long, a: string"),
-        operation="append",
     )
-    right.write(
+    right.append(
         spark.createDataFrame([(1, "b1"), (3, "b3")], "k: long, b: string"),
-        operation="append",
     )
     assert mv.refresh() == 0
     assert _rows(mv.read()) == [(1, "a1", "b1")]
@@ -269,13 +267,11 @@ def test_join_matview_nonappend_falls_back_to_full(spark, tmp_path):
     right = VersionedTable(spark, str(tmp_path / "right"))
     mv = MaterializedJoin(left, right, str(tmp_path / "view"), ["k"])
 
-    left.write(
+    left.append(
         spark.createDataFrame([(1, "a1"), (2, "a2")], "k: long, a: string"),
-        operation="append",
     )
-    right.write(
+    right.append(
         spark.createDataFrame([(1, "b1"), (2, "b2")], "k: long, b: string"),
-        operation="append",
     )
     mv.refresh()
 
@@ -285,7 +281,7 @@ def test_join_matview_nonappend_falls_back_to_full(spark, tmp_path):
         spark.createDataFrame([(1, "a1-fixed")], "k: long, a: string"),
         keys=["k"],
     )
-    left.write(merged, operation="upsert")
+    left.write(merged)
     v = mv.refresh()
     rec = mv.state._read_commit(v)
     assert rec["operation"] == "join_matview_full"
@@ -313,13 +309,11 @@ def test_join_matview_compaction_bounds_files_and_keeps_deltas(
         left, right, str(tmp_path / "view"), ["k"], compact_after=5
     )
 
-    left.write(
+    left.append(
         spark.createDataFrame([(0, "a0")], "k: long, a: string"),
-        operation="append",
     )
-    right.write(
+    right.append(
         spark.createDataFrame([(0, "b0")], "k: long, b: string"),
-        operation="append",
     )
     mv.refresh()
     ops = []
@@ -389,10 +383,7 @@ def _append_left(spark, left, i):
     rows = spark.range(50, numPartitions=1).selectExpr(
         "id AS k", f"'a{i}' AS a"
     )
-    if left.latest_version() is None:
-        left.write(rows, operation="append")
-    else:
-        left.append(rows)
+    left.append(rows)
 
 
 @pytest.mark.parametrize("target", [6, 9])
@@ -452,18 +443,16 @@ def test_join_matview_external_state_write_falls_back_to_full(
     right = VersionedTable(spark, str(tmp_path / "right"))
     mv = MaterializedJoin(left, right, str(tmp_path / "view"), ["k"])
 
-    left.write(
+    left.append(
         spark.createDataFrame([(1, "a1")], "k: long, a: string"),
-        operation="append",
     )
-    right.write(
+    right.append(
         spark.createDataFrame([(1, "b1")], "k: long, b: string"),
-        operation="append",
     )
     mv.refresh()
 
     # external write straight to the state table: no watermark keys
-    mv.state.write(mv.state.read(), operation="overwrite")
+    mv.state.write(mv.state.read())
     assert mv.refreshed_source_versions() is None
 
     left.append(spark.createDataFrame([(2, "a2")], "k: long, a: string"))

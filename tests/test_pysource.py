@@ -6,7 +6,6 @@ semantics."""
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 import duckdb
@@ -110,7 +109,7 @@ def test_corpus_feeds_document_operators(pysrc_spark):
     assert (prof["n_tokens"] >= 20).all() and (prof["n_tokens"] <= 100).all()
 
 
-def test_event_stream_batches_and_replay(pysrc_spark):
+def test_event_stream_batches_and_replay(pysrc_spark, tmp_path):
     sdf = (
         pysrc_spark.readStream.format("eventsynth")
         .option("batch_rows", 100)
@@ -121,7 +120,7 @@ def test_event_stream_batches_and_replay(pysrc_spark):
     q = (
         sdf.writeStream.format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -197,7 +196,7 @@ def test_event_stream_watermark_monotone_without_commit_replay():
     assert r2.latestOffset() == {"i": 200}
 
 
-def test_event_stream_microbatch_has_parallel_partitions(pysrc_spark):
+def test_event_stream_microbatch_has_parallel_partitions(pysrc_spark, tmp_path):
     """End-to-end: the number of tasks per micro-batch equals the
     planned InputPartitions — reads execute on executors, not the
     driver (the r3 Simple reader's weakness)."""
@@ -212,7 +211,7 @@ def test_event_stream_microbatch_has_parallel_partitions(pysrc_spark):
     q = (
         sdf.writeStream.format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.processAllAvailable()

@@ -344,17 +344,37 @@ def test_no_entry_level_persist_without_release():
     operator on a lazy-return path may call .persist() — every
     multi-consumer subframe must use ``pins.pin`` (an eager
     localCheckpoint whose blocks are ContextCleaner-released when the
-    frame is unreferenced) or be released in-function. Modules that DO
-    materialize eagerly and unpersist in-function are listed
-    explicitly."""
-    # versioned.py persists inside eager write paths and unpersists
-    # in finally.
-    allowed = {"sources/versioned.py"}
-    offenders = _modules_matching(r"\.persist\(") - allowed
+    frame is unreferenced) or be released in-function. No module is
+    exempt."""
+    offenders = _modules_matching(r"\.persist\(")
     assert offenders == set(), (
         f"persist() without a release path in {offenders}; use "
         "pins.pin (or unpersist in-function) instead"
     )
+
+
+def test_every_versioned_commit_goes_through_one_function():
+    """Static guard: one commit path. Only ``VersionedTable.commit``
+    calls ``_publish``, and the materialized views reach their state
+    table through its public methods, never its private ones."""
+    import ast
+    import pathlib
+
+    assert _modules_matching(r"_publish\(") == {"sources/versioned.py"}
+    src = pathlib.Path(__file__).resolve().parent.parent.joinpath(
+        "nyc_taxi_etl_spark", "sources", "versioned.py"
+    ).read_text()
+    callers = [
+        fn.name
+        for fn in ast.walk(ast.parse(src))
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "_publish"
+    ]
+    assert callers == ["commit"]
+    assert _modules_matching(r"\.state\._") == set()
 
 
 def test_every_pin_goes_through_pins_module():

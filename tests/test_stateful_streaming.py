@@ -54,7 +54,7 @@ def _stage_two_batches(tmp_path):
 
 
 @pytest.mark.parametrize("files_per_trigger", [1, None])
-def test_ewma_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
+def test_ewma_stream_matches_batch_replay(spark, tmp_path, tmp_path_factory, files_per_trigger):
     rows = _stage_two_batches(tmp_path)
     schema = spark.read.parquet(str(tmp_path)).schema
     reader = spark.readStream.schema(schema)
@@ -68,7 +68,7 @@ def test_ewma_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt")))
         .trigger(availableNow=True)
         .start()
     )
@@ -117,7 +117,7 @@ def test_multi_chunk_key_folds_in_global_order():
 
 
 @pytest.mark.parametrize("files_per_trigger", [1, None])
-def test_holt_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
+def test_holt_stream_matches_batch_replay(spark, tmp_path, tmp_path_factory, files_per_trigger):
     """Holt level+trend twin: the streamed per-event residuals and the
     final (level, trend) state must reproduce the exact batch
     recurrence replay — with maxFilesPerTrigger=1 the state crosses a
@@ -169,7 +169,7 @@ def test_holt_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt")))
         .trigger(availableNow=True)
         .start()
     )
@@ -204,7 +204,7 @@ def test_holt_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
 
 
 @pytest.mark.parametrize("files_per_trigger", [1, None])
-def test_cusum_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
+def test_cusum_stream_matches_batch_replay(spark, tmp_path, tmp_path_factory, files_per_trigger):
     """CUSUM drift twin: the streamed per-event arm values / alarms
     and the final (pos, neg, n) state must reproduce the exact batch
     recurrence replay — with maxFilesPerTrigger=1 the accumulated arms
@@ -255,7 +255,7 @@ def test_cusum_stream_matches_batch_replay(spark, tmp_path, files_per_trigger):
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt")))
         .trigger(availableNow=True)
         .start()
     )

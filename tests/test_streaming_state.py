@@ -17,7 +17,6 @@ not host load:
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -36,14 +35,15 @@ TOLERANCE = "30 minutes"
 HORIZON_S = 2 * 3600 + 30 * 60  # watermark + tolerance
 
 
-def _staged_chunks(spark):
-    """Stage sf0.01 events as N_CHUNKS contiguous-time parquet files
-    with increasing mtimes, so maxFilesPerTrigger=1 replays the stream
-    in event-time order and the watermark advances between batches."""
+def _staged_chunks(spark, d):
+    """Stage sf0.01 events under ``d`` as N_CHUNKS contiguous-time
+    parquet files with increasing mtimes, so maxFilesPerTrigger=1
+    replays the stream in event-time order and the watermark advances
+    between batches."""
     ev = load_table(spark, SF_DIR, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo).total_seconds()
-    d = tempfile.mkdtemp(prefix="events_chunks_")
+    os.makedirs(d)
     bounds = []
     for i in range(N_CHUNKS):
         a = lo + __import__("datetime").timedelta(seconds=span * i / N_CHUNKS)
@@ -71,7 +71,7 @@ def _staged_chunks(spark):
     return d, bounds, hi
 
 
-def test_left_outer_null_emission_boundary_is_strict(spark):
+def test_left_outer_null_emission_boundary_is_strict(spark, tmp_path):
     """Pin the null-emission cutoff of the LEFT OUTER stream-stream
     join (``streaming_purchase_error_left``'s oracle gate): an
     unmatched purchase is emitted with null error columns iff
@@ -100,7 +100,8 @@ def test_left_outer_null_emission_boundary_is_strict(spark):
         (6, T, 99, "error", 0.0, None),
     ]
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    d = tempfile.mkdtemp(prefix="events_boundary_")
+    d = str(tmp_path / "events")
+    os.makedirs(d)
     for i, rows in enumerate([rows_early, rows_late]):
         tmp = os.path.join(d, f"_stage_{i}")
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
@@ -124,7 +125,7 @@ def test_left_outer_null_emission_boundary_is_strict(spark):
             stream, tolerance=TOLERANCE, watermark=WATERMARK, how="left_outer"
         ),
         "q_boundary_" + uuid.uuid4().hex[:8],
-        tempfile.mkdtemp(prefix="ckpt_boundary_"),
+        str(tmp_path / "ckpt"),
         output_mode="append",
     )
     got = {
@@ -137,8 +138,8 @@ def test_left_outer_null_emission_boundary_is_strict(spark):
     }, got
 
 
-def test_stream_join_single_state_operator_and_bounded_state(spark):
-    d, bounds, hi = _staged_chunks(spark)
+def test_stream_join_single_state_operator_and_bounded_state(spark, tmp_path):
+    d, bounds, hi = _staged_chunks(spark, str(tmp_path / "events"))
     stream = read_events_stream(spark, d, max_files_per_trigger=1)
     joined = purchase_error_stream_join(
         stream, tolerance=TOLERANCE, watermark=WATERMARK
@@ -147,7 +148,7 @@ def test_stream_join_single_state_operator_and_bounded_state(spark):
     out = run_available_now(
         joined,
         "q_state_" + uuid.uuid4().hex[:8],
-        tempfile.mkdtemp(prefix="ckpt_state_"),
+        str(tmp_path / "ckpt"),
         output_mode="append",
         progress_out=progress,
     )

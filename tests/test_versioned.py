@@ -24,7 +24,7 @@ def table(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a", 1), (2, "b", 1), (3, "c", 1)], ["k", "val", "ver"]
     )
-    assert t.write(base, operation="init") == 0
+    assert t.write(base) == 0
     return t
 
 
@@ -273,7 +273,7 @@ def _skip_table(spark, tmp_path, n_files=4):
         .repartitionByRange(n_files, "k")
         .sortWithinPartitions("k")
     )
-    t.write(df, operation="init")
+    t.write(df)
     return t
 
 
@@ -361,7 +361,7 @@ def test_zorder_compact_prunes_on_both_dimensions(spark, tmp_path):
         )
         .repartition(16, "payload")
     )
-    t.write(df, operation="init")
+    t.write(df)
     xq = {"x": (0, 7)}   # 1/8 of the x domain
     yq = {"y": (0, 7)}   # 1/8 of the y domain
     kept_x0, skip_x0 = t.prune_plan(xq)
@@ -388,7 +388,7 @@ def test_zorder_layout_handles_nulls_and_constant_columns(spark, tmp_path):
         F.lit(5).alias("c"),
         F.col("id").alias("payload"),
     )
-    t.write(df, operation="init")
+    t.write(df)
     t.compact(target_files=4, cluster_by=["x", "c"])
     assert t.read().count() == 100
     # nulls fall in bucket 0; equality read still exact (51 is not a
@@ -440,6 +440,92 @@ def test_compact_resolves_evolution(spark, tmp_path):
     t.compact(target_files=1)
     out = t.read().orderBy("k").collect()
     assert len(out) == 2 and out[0]["n"] is None and out[1]["n"] == 9
+
+
+
+@pytest.mark.parametrize("rewrite", ["delete_where", "compact", "upsert"])
+def test_append_schema_check_survives_rewrites(spark, tmp_path, rewrite):
+    """Every rewrite records the schema it wrote, so a later append is
+    checked against it: a column changing type is rejected, an
+    additive batch keeps every column."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    if rewrite == "delete_where":
+        t.delete_where("k = 2")
+    elif rewrite == "compact":
+        t.compact()
+    else:
+        t.upsert(spark.createDataFrame([(3, "c")], "k long, v string"), ["k"])
+    with pytest.raises(ValueError, match="additive-only"):
+        t.append(
+            spark.createDataFrame([("x", 0.5)], "k string, w double"),
+            merge_schema=True,
+        )
+    t.append(spark.createDataFrame([(9, 0.5)], "k long, w double"), merge_schema=True)
+    out = t.read()
+    assert out.dtypes == [("k", "bigint"), ("v", "string"), ("w", "double")]
+    assert out.where("k = 1").first()["v"] == "a"
+    assert out.where("k = 9").first()["w"] == 0.5
+
+
+def test_every_read_returns_the_recorded_schema(spark, tmp_path):
+    """On an evolved table every read path has read()'s column names
+    and types (never ``void``) and the rows of the matching filter over
+    read(): partition b gains ``w`` through a partition-scoped upsert,
+    so partition a's file lacks it, and a later append omits ``v``."""
+    from nyc_taxi_etl_spark.sources.bloom_index import build_bloom_index, read_eq
+
+    t = VersionedTable(spark, str(tmp_path / "contract"))
+    t.write_partitioned(
+        spark.createDataFrame(
+            [(1, "a", "x"), (2, "a", "y"), (3, "b", "z")],
+            "k long, p string, v string",
+        ),
+        "p",
+    )
+    v1 = t.upsert_partitioned(
+        spark.createDataFrame([(3, "b", "z2", 0.5)], "k long, p string, v string, w double"),
+        ["k"],
+        "p",
+    )
+    t.append(
+        spark.createDataFrame([(7, "c", 1.5)], "k long, p string, w double"),
+        merge_schema=True,
+    )
+    full = t.read()
+    assert full.dtypes == [
+        ("k", "bigint"), ("p", "string"), ("v", "string"), ("w", "double")
+    ]
+
+    def same(got, want):
+        assert got.dtypes == want.dtypes
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+    same(t.read_where({"k": (2, 7)}), full.where("k BETWEEN 2 AND 7"))
+    same(t.read_where({"k": (100, None)}), full.where("k >= 100"))
+    same(t.read_partitions(["a"], version=v1), t.read(v1).where("p = 'a'"))
+    same(t.read_changes_since(v1), full.where("p = 'c'"))
+    build_bloom_index(t, "k")
+    for key in (1, 3, 7):
+        same(read_eq(t, "k", key), full.where(F.col("k") == key))
+
+
+def test_record_without_schema_still_reads_and_appends(spark, tmp_path):
+    """A commit record from before schemas were recorded reads as its
+    files do, and an append on top of it still commits."""
+    import json
+
+    t = VersionedTable(spark, str(tmp_path / "old"))
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    rec = t._read_commit(0)
+    rec.pop("schema")
+    rec.pop("schema_evolved")
+    with open(t._log_path(0), "w") as f:
+        json.dump(rec, f)
+    assert t.read().dtypes == [("k", "bigint"), ("v", "string")]
+    assert t.read_where({"k": (5, 9)}).columns == ["k", "v"]
+    t.append(spark.createDataFrame([(3, "c")], "k long, v string"))
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
 
 
 # -- incremental ingestion -------------------------------------------------
