@@ -96,8 +96,46 @@ def _evolve(base: dict, new: list[list[str]]) -> tuple[list[list[str]], bool]:
     return merged, prior_types.keys() != new_types.keys()
 
 
+def _footer_bounds(chunk) -> tuple | None:
+    """A parquet column chunk's footer ``(min, max)``, or ``None`` when
+    the bounds are unusable: missing, non-primitive, NaN, or of a type
+    pyarrow cannot extract statistics for (an INT64-backed decimal)."""
+    import pyarrow as pa
+
+    st = chunk.statistics
+    if st is None or not st.has_min_max:
+        return None
+    try:
+        lo, hi = st.min, st.max
+    except pa.ArrowNotImplementedError:
+        return None
+    if not isinstance(lo, (int, float, str, bool)) or lo != lo or hi != hi:
+        return None
+    return lo, hi
+
+
 def _partition_values(df: DataFrame, col: str) -> list[str]:
-    return sorted(str(r[0]) for r in df.select(col).distinct().collect())
+    """The distinct values of partition column ``col`` in ``df``, as
+    strings. A NULL value raises: no partition directory can hold it,
+    so its rows would be dropped."""
+    values = [r[0] for r in df.select(col).distinct().collect()]
+    if None in values:
+        raise ValueError(f"partition column {col!r} holds NULL values")
+    return sorted(str(v) for v in values)
+
+
+def _tracked_partitions(rec: dict) -> dict[str, str]:
+    """``rec``'s directory → partition value map. Raises when some
+    active directory has no partition value (the table was never
+    written with :meth:`VersionedTable.write_partitioned`, or was
+    appended to since)."""
+    parts = rec.get("partitions")
+    if parts is None or set(rec["active"]) - set(parts):
+        raise ValueError(
+            "table has partition-untracked directories: write_partitioned "
+            "tracks partitions, append and the full-rewrite writes do not"
+        )
+    return parts
 
 
 def _split(df: DataFrame, col: str, values: Sequence[str]) -> dict[str, DataFrame]:
@@ -283,8 +321,8 @@ class VersionedTable:
         from the parquet FOOTERS pyarrow exposes — exact bounds the
         writer already computed, no extra data pass. Only JSON-safe
         primitive types (int/float/str/bool) are recorded; a column a
-        row group lacks stats for is dropped from that file's entry
-        (pruning stays conservative)."""
+        row group lacks usable bounds for (``_footer_bounds``) is
+        dropped from that file's entry (pruning stays conservative)."""
         import pyarrow.parquet as pq
 
         stats: dict[str, dict] = {}
@@ -302,22 +340,16 @@ class VersionedTable:
                     col = c.path_in_schema
                     if "." in col or col in dropped:
                         continue  # nested leaves aren't prunable here
-                    st = c.statistics
-                    if (
-                        st is None
-                        or not st.has_min_max
-                        or not isinstance(st.min, (int, float, str, bool))
-                        or (isinstance(st.min, float) and st.min != st.min)
-                        or (isinstance(st.max, float) and st.max != st.max)
-                    ):  # missing / non-primitive / NaN bounds: unusable
+                    bounds = _footer_bounds(c)
+                    if bounds is None:
                         dropped.add(col)
                         cols.pop(col, None)
                         continue
                     if col in cols:
-                        cols[col][0] = min(cols[col][0], st.min)
-                        cols[col][1] = max(cols[col][1], st.max)
+                        cols[col][0] = min(cols[col][0], bounds[0])
+                        cols[col][1] = max(cols[col][1], bounds[1])
                     else:
-                        cols[col] = [st.min, st.max]
+                        cols[col] = list(bounds)
             stats[os.path.join(rel_dir, name)] = {
                 "rows": md.num_rows,
                 "cols": cols,
@@ -501,7 +533,9 @@ class VersionedTable:
         The per-partition write loop is a driver loop bounded by the
         partition count of the BATCH (months/days — metadata scale);
         ``df`` is pinned first so the upstream plan runs once, not once
-        per partition."""
+        per partition. A NULL ``partition_col`` value raises
+        ``ValueError`` before anything is written (here and in
+        :meth:`upsert_partitioned`): no directory could hold its rows."""
         df = pin(df)
         return self.commit(
             self.latest_commit(),
@@ -551,12 +585,7 @@ class VersionedTable:
         base = self.latest_commit()
         if not base:
             return self.write_partitioned(updates, partition_col)
-        parts = base.get("partitions")
-        if parts is None or set(base["active"]) - set(parts):
-            raise ValueError(
-                "table has partition-untracked directories; use "
-                "write_partitioned first (or the full-rewrite upsert)"
-            )
+        parts = _tracked_partitions(base)
         if base.get("partition_col") not in (None, partition_col):
             raise ValueError(
                 f"table is partitioned by {base.get('partition_col')!r}, "
@@ -576,11 +605,12 @@ class VersionedTable:
     ) -> DataFrame:
         """Snapshot read PRUNED to the given partition values using
         only commit metadata — no file listing or footer reads for
-        untouched partitions."""
+        untouched partitions. Raises on a snapshot with
+        partition-untracked directories, whose rows no value selects."""
         _, rec = self.snapshot(version)
-        parts = rec.get("partitions") or {}
+        parts = _tracked_partitions(rec)
         wanted = {str(x) for x in values}
-        return self._scan(rec, [d for d in rec["active"] if parts.get(d) in wanted])
+        return self._scan(rec, [d for d in rec["active"] if parts[d] in wanted])
 
     def version_as_of(self, ts: float) -> int:
         """Newest version committed at-or-before wall time ``ts``

@@ -386,32 +386,38 @@ def run_available_now(
 
     Why ``min(8, defaultParallelism)``: never more state stores than
     cores, capped at the 8 measured above. Each state partition is a
-    Python worker task and a state store whose init and commit fork
-    ``chmod`` processes when no native Hadoop library is loaded (about
-    47 forks per partition per drain). Per drain of
-    ``streaming_ewma_anomalies`` on perfbench's 10k-event input (warm
-    ``local[4]`` session on a 4-vCPU VM, median of 12 drains): JVM
-    2.7 s, the JVM's ``chmod`` forks 0.39 s, Python workers 1.03 s. On
+    Python worker task and a state store whose init and commit create
+    files and directories; without a native Hadoop library each
+    creation forks ``chmod``. A warm drain of
+    ``streaming_ewma_anomalies`` on perfbench's 10k-event input at 4
+    state partitions forks 40 ``chmod``. Before checkpoints committed
+    through the FileSystem manager (``session.get_spark``) it also
+    forked 112 ``readlink``, 152 forks in all; the forked processes'
+    own CPU per drain fell from 0.28-0.34 s to 0.08-0.09 s (warm
+    ``local[4]`` session on a 4-vCPU VM, median of 12 drains). Per
+    drain on that input, measured before that change: JVM 2.7 s, the
+    JVM's forks 0.39 s, Python workers 1.03 s. On
     that input the workers' time is mostly per-task set-up, not the
     fold: the worker daemon (``pydaemon``), which only stops each task
     re-reading pyspark.zip, halved it (2.0 -> 1.03 s). At sf0.1 (100k
     events) the fold dominates: 9.6 -> 8.7 s. ``perfbench``
-    stateful_streams on the same VM with that daemon, median of 3
-    interleaved runs each:
+    stateful_streams on the same VM with that daemon and the
+    FileSystem checkpoint manager, median of 3 interleaved runs each:
 
     ====================  =======  ========
     state partitions      cpu_s    wall_s
     ====================  =======  ========
-    8 (the old constant)  4.57 s   1.92 s
-    4 (= cores)           3.70 s   1.69 s
-    2                     3.34 s   1.87 s
-    1                     2.94 s   2.15 s
+    8 (the old constant)  2.74 s   1.18 s
+    4 (= cores)           2.17 s   1.00 s
+    2                     1.90 s   1.10 s
+    1                     1.79 s   1.37 s
     ====================  =======  ========
 
-    Fewer partitions keep cutting CPU (about 0.23 s per partition per
-    drain, 0.5 s before the daemon), but below the core count the fold
-    runs on fewer cores and wall time rises again: the core count gives
-    the best wall time."""
+    Fewer partitions keep cutting CPU (about 0.14 s per partition per
+    drain; 0.23 s with the FileContext checkpoint manager, 0.5 s before
+    the daemon), but below the core count the fold runs on fewer cores
+    and wall time rises again: the core count gives the best wall
+    time."""
     spark = sdf.sparkSession
     with width.shuffle_scope(spark, width.state_partitions(spark)):
         q = _start_and_wait(

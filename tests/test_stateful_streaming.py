@@ -5,6 +5,7 @@ the exact batch recurrence replay."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -87,6 +88,58 @@ def test_ewma_stream_matches_batch_replay(spark, tmp_path, tmp_path_factory, fil
     # each user's planted outlier is flagged, and only those
     flagged = [k for k, (_, a) in got.items() if a == 1]
     assert sorted(flagged) == [uid * 1000 + 25 for uid in range(5)]
+
+
+def test_ewma_stream_resumes_from_its_checkpoint(spark, tmp_path):
+    """A second AvailableNow query on the same checkpoint reads the
+    offsets and commits logs and reloads the state the first one
+    committed: it emits only the newly staged file's rows, and the two
+    outputs together equal the replay over all rows. (A foreachBatch
+    sink: the memory sink only resumes in complete mode.)"""
+    from nyc_taxi_etl_spark.streaming.events import _foreach_batch
+
+    stage, src = tmp_path / "stage", tmp_path / "src"
+    stage.mkdir()
+    src.mkdir()
+    rows = _stage_two_batches(stage)
+    schema = spark.read.parquet(str(stage)).schema
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain(name):
+        shutil.copy(stage / name, src / name)
+        sdf = spark.readStream.schema(schema).parquet(str(src))
+        out: list = []
+        _foreach_batch(
+            ewma_anomaly_stream(sdf), lambda b: out.extend(b.collect()), ckpt, 300
+        )
+        return {r.event_id: (round(r.deviation_sigma, 9), r.is_anomaly) for r in out}
+
+    first = drain("batch-000.parquet")
+    second = drain("batch-001.parquet")
+    second_ids = {r[1] for r in rows[len(rows) // 2:]}
+    assert set(first) == {r[1] for r in rows} - second_ids
+    assert set(second) == second_ids
+    assert {**first, **second} == ewma_replay_pandas(rows)
+
+
+def test_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    """Stream checkpoints commit through FileSystemBasedCheckpointFileManager
+    (the session conf), not the FileContext manager whose renames fork
+    `readlink` on the local file system; a Spark that moved the class
+    would fail here instead of at every stream's start."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    if mgr.getClass().getSimpleName() == "ChecksumCheckpointFileManager":
+        field = mgr.getClass().getDeclaredField("underlyingFileMgr")
+        field.setAccessible(True)
+        mgr = field.get(mgr)
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_multi_chunk_key_folds_in_global_order():

@@ -257,6 +257,54 @@ def test_partitioned_upsert_rejects_untracked_table(spark, tmp_path):
         )
 
 
+def test_read_partitions_rejects_appended_table(spark, tmp_path):
+    """An append leaves a directory with no partition value, whose rows
+    no value could select: read_partitions raises like the partitioned
+    upsert instead of returning a short read."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.write_partitioned(_orders(spark, [(1, "jan", "a")]), "month")
+    t.append(_orders(spark, [(2, "feb", "b"), (3, "feb", "c")]))
+    assert t.read().where("month = 'feb'").count() == 2
+    with pytest.raises(ValueError, match="partition-untracked"):
+        t.read_partitions(["feb"])
+
+
+def test_partitioned_writes_reject_null_partition_values(spark, tmp_path):
+    """A NULL partition value has no directory to land in: the write
+    raises, naming the column, before any commit."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    with_null = _orders(spark, [(1, "jan", "a"), (2, None, "b")])
+    with pytest.raises(ValueError, match="'month'"):
+        t.write_partitioned(with_null, "month")
+    assert t.versions() == []
+    t.write_partitioned(_orders(spark, [(1, "jan", "a")]), "month")
+    with pytest.raises(ValueError, match="'month'"):
+        t.upsert_partitioned(with_null, ["k"], "month")
+    assert t.versions() == [0]
+
+
+def test_decimal_column_commits_without_bounds(spark, tmp_path):
+    """pyarrow cannot extract footer statistics for Spark's INT64-backed
+    decimal: that column gets no bounds, the write still commits, and
+    the other columns still prune."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [(i, f"{i}.25") for i in range(5)], "k long, amt string"
+    ).selectExpr("k", "CAST(amt AS DECIMAL(10,2)) AS amt")
+    t.write(df.coalesce(1))
+    t.append(
+        spark.createDataFrame([(100, "1.50")], "k long, amt string")
+        .selectExpr("k", "CAST(amt AS DECIMAL(10,2)) AS amt")
+        .coalesce(1)
+    )
+    assert t.read(0).count() == 5
+    stats = t._read_commit(1)["file_stats"]
+    assert all(set(s["cols"]) == {"k"} for s in stats.values())
+    kept, skipped = t.prune_plan({"k": (100, None)})
+    assert len(kept) == 1 and len(skipped) == 1
+    assert [r.k for r in t.read_where({"k": (100, None)}).collect()] == [100]
+
+
 # -- data skipping ---------------------------------------------------------
 
 
