@@ -1,4 +1,5 @@
 from .core import (  # noqa: F401
+    epoch_nanos_ts,
     fare_from_components,
     histogram_bucket,
     month_period,

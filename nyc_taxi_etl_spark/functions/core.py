@@ -15,6 +15,7 @@ __all__ = [
     "safe_div",
     "safe_cast_double",
     "month_period",
+    "epoch_nanos_ts",
     "fare_from_components",
     "histogram_bucket",
     "topk",
@@ -60,6 +61,15 @@ def month_period(ts: Column) -> Column:
     """'yyyy-MM' month period label (pandas ``dt.to_period("M")``,
     ``scripts/analytics_pandas.py:160``)."""
     return F.date_format(ts, "yyyy-MM")
+
+
+def epoch_nanos_ts(name: str) -> Column:
+    """Epoch-nanosecond long column → microsecond TIMESTAMP (the form
+    TIMESTAMP(NANOS) parquet takes under
+    ``spark.sql.legacy.parquet.nanosAsLong``). Integer ``DIV``: a
+    double holds 53 bits, so float division of ~1.7e18 nanos can land
+    just under the true microsecond and truncate 1 µs early."""
+    return F.timestamp_micros(F.expr(f"`{name}` DIV 1000"))
 
 
 def fare_from_components(*cols: Column) -> Column:

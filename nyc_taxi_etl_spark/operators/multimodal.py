@@ -23,6 +23,12 @@ codec layer is swappable:
     (deterministic synthetic layout) — every-Nth-frame selection, one
     output row per kept frame.
 
+One driver, ``_map_media``, runs every per-row operator: it filters
+one ``kind``, decodes each row's payload (HxWx3 pixels, PCM16 samples
+or raw frame bytes), applies the ``on_error`` rule to decode failures
+only, and feeds the operator's kernel inside one Arrow-batched
+``mapInPandas`` loop. Each operator is just its per-row kernel.
+
 Scale posture: all operators are narrow ``mapInPandas`` passes — no
 shuffle, no driver collect; blobs stream through Arrow record batches
 (`spark.sql.execution.arrow.maxRecordsPerBatch` caps batch memory);
@@ -32,7 +38,7 @@ column thanks to parquet column pruning.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -132,6 +138,63 @@ def synthesize_media(spark: SparkSession, n: int = 90, seed: int = 42) -> DataFr
 
 
 # ---------------------------------------------------------------------------
+# The media driver (every per-row operator below runs through it)
+# ---------------------------------------------------------------------------
+
+_DECODE = {
+    "image": lambda r: _decode_image(bytes(r.content), int(r.width), int(r.height)),
+    "audio": lambda r: np.frombuffer(bytes(r.content), dtype="<i2"),
+    "video": lambda r: bytes(r.content),
+}
+
+
+def _map_media(
+    media: DataFrame,
+    kind: str,
+    schema: StructType,
+    kernel: Callable,
+    on_error: str = "raise",
+    failed: Callable | None = None,
+) -> DataFrame:
+    """The one media driver: keep the ``kind`` rows and, per Arrow
+    batch, decode each row's payload (``_DECODE``) and extend the
+    output with ``kernel(row, payload)``'s tuples.
+
+    A decode ``ValueError`` fails the task under ``on_error='raise'``
+    and drops the row under ``'skip'``; ``failed(row, exc)``, when
+    given, turns it into output rows instead (the decode audit). A
+    ``ValueError`` from the kernel itself always propagates."""
+    if on_error not in ("raise", "skip"):
+        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
+    decode = _DECODE[kind]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for r in pdf.itertuples(index=False):
+                try:
+                    payload = decode(r)
+                except ValueError as exc:
+                    if failed is not None:
+                        out.extend(failed(r, exc))
+                    elif on_error == "raise":
+                        raise
+                    continue
+                out.extend(kernel(r, payload))
+            yield pd.DataFrame(out, columns=schema.fieldNames())
+
+    return media.filter(F.col("kind") == kind).mapInPandas(run, schema)
+
+
+def _pack_bits(bits) -> int:
+    """Pack booleans big-endian: the first bit is the most significant."""
+    val = 0
+    for b in bits:
+        val = (val << 1) | int(b)
+    return val
+
+
+# ---------------------------------------------------------------------------
 # Image
 # ---------------------------------------------------------------------------
 
@@ -194,43 +257,26 @@ def image_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
     with :func:`image_decode_audit` to count and inspect what was
     skipped. At 100 TB a one-in-a-billion malformed blob must not
     kill the job."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    img = _decode_image(
-                        bytes(r.content), int(r.width), int(r.height)
-                    )
-                except ValueError:
-                    if on_error == "skip":
-                        continue
-                    raise
-                gray = img.mean(axis=2)
-                # 8x8 average hash: downsample by block-mean, threshold
-                ys = np.array_split(np.arange(gray.shape[0]), 8)
-                xs = np.array_split(np.arange(gray.shape[1]), 8)
-                small = np.array([[gray[np.ix_(y, x)].mean() for x in xs] for y in ys])
-                bits = (small > small.mean()).flatten()
-                val = 0
-                for b in bits:
-                    val = (val << 1) | int(b)
-                out.append(
-                    (
-                        r.media_id,
-                        int(r.width),
-                        int(r.height),
-                        float(img.mean()),
-                        float(img.std()),
-                        f"{val:016x}",
-                    )
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in _IMG_FEAT_SCHEMA.fields])
+    def kernel(r, img):
+        gray = img.mean(axis=2)
+        # 8x8 average hash: downsample by block-mean, threshold
+        ys = np.array_split(np.arange(gray.shape[0]), 8)
+        xs = np.array_split(np.arange(gray.shape[1]), 8)
+        small = np.array([[gray[np.ix_(y, x)].mean() for x in xs] for y in ys])
+        ahash = _pack_bits((small > small.mean()).flatten())
+        return [
+            (
+                r.media_id,
+                int(r.width),
+                int(r.height),
+                float(img.mean()),
+                float(img.std()),
+                f"{ahash:016x}",
+            )
+        ]
 
-    return media.filter(F.col("kind") == "image").mapInPandas(run, _IMG_FEAT_SCHEMA)
+    return _map_media(media, "image", _IMG_FEAT_SCHEMA, kernel, on_error)
 
 
 _DECODE_AUDIT_SCHEMA = StructType(
@@ -251,22 +297,12 @@ def image_decode_audit(media: DataFrame) -> DataFrame:
     deltas. Same Arrow-batched mapInPandas shape as the feature
     extractors; the decoded pixels are discarded, only the verdict
     row flows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    _decode_image(bytes(r.content), int(r.width), int(r.height))
-                    out.append((r.media_id, 1, None))
-                except ValueError as exc:
-                    out.append((r.media_id, 0, str(exc)[:200]))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _DECODE_AUDIT_SCHEMA.fields]
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        run, _DECODE_AUDIT_SCHEMA
+    return _map_media(
+        media,
+        "image",
+        _DECODE_AUDIT_SCHEMA,
+        lambda r, _img: [(r.media_id, 1, None)],
+        failed=lambda r, exc: [(r.media_id, 0, str(exc)[:200])],
     )
 
 
@@ -287,28 +323,14 @@ def resize_images(
     sampling, emitting raw RGB blobs of the new size. Same
     ``on_error`` contract as :func:`image_features` ('skip' drops
     undecodable blobs instead of failing the task)."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    img = _decode_image(
-                        bytes(r.content), int(r.width), int(r.height)
-                    )
-                except ValueError:
-                    if on_error == "skip":
-                        continue
-                    raise
-                yi = (np.arange(out_h) * img.shape[0] // out_h).clip(0, img.shape[0] - 1)
-                xi = (np.arange(out_w) * img.shape[1] // out_w).clip(0, img.shape[1] - 1)
-                resized = img[np.ix_(yi, xi)]
-                out.append((r.media_id, bytearray(resized.tobytes()), out_w, out_h))
-            yield pd.DataFrame(out, columns=[f.name for f in _RESIZE_SCHEMA.fields])
+    def kernel(r, img):
+        yi = (np.arange(out_h) * img.shape[0] // out_h).clip(0, img.shape[0] - 1)
+        xi = (np.arange(out_w) * img.shape[1] // out_w).clip(0, img.shape[1] - 1)
+        resized = img[np.ix_(yi, xi)]
+        return [(r.media_id, bytearray(resized.tobytes()), out_w, out_h)]
 
-    return media.filter(F.col("kind") == "image").mapInPandas(run, _RESIZE_SCHEMA)
+    return _map_media(media, "image", _RESIZE_SCHEMA, kernel, on_error)
 
 
 # ---------------------------------------------------------------------------
@@ -331,27 +353,23 @@ def audio_features(media: DataFrame) -> DataFrame:
     """PCM16-LE decode + duration / RMS / zero-crossing-rate features —
     fully real (numpy frombuffer), no codec dependency."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                wave = np.frombuffer(bytes(r.content), dtype="<i2").astype(np.float64)
-                n = wave.size
-                sr = int(r.sample_rate)
-                zc = float(np.mean(np.signbit(wave[1:]) != np.signbit(wave[:-1]))) if n > 1 else 0.0
-                out.append(
-                    (
-                        r.media_id,
-                        sr,
-                        n,
-                        round(n / sr, 6) if sr else 0.0,
-                        float(np.sqrt(np.mean(wave**2))) if n else 0.0,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in _AUDIO_FEAT_SCHEMA.fields])
+    def kernel(r, pcm):
+        wave = pcm.astype(np.float64)
+        n = wave.size
+        sr = int(r.sample_rate)
+        zc = float(np.mean(np.signbit(wave[1:]) != np.signbit(wave[:-1]))) if n > 1 else 0.0
+        return [
+            (
+                r.media_id,
+                sr,
+                n,
+                round(n / sr, 6) if sr else 0.0,
+                float(np.sqrt(np.mean(wave**2))) if n else 0.0,
+                zc,
+            )
+        ]
 
-    return media.filter(F.col("kind") == "audio").mapInPandas(run, _AUDIO_FEAT_SCHEMA)
+    return _map_media(media, "audio", _AUDIO_FEAT_SCHEMA, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -374,19 +392,15 @@ def sample_video_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     (fixed-size raw RGB frames back to back). One output row per kept
     frame — the fan-out a real video pipeline feeds to the image ops."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                w, h, nf = int(r.width), int(r.height), int(r.n_frames)
-                fsz = w * h * 3
-                blob = bytes(r.content)
-                for idx in range(0, nf, every_n):
-                    frame = blob[idx * fsz : (idx + 1) * fsz]
-                    out.append((r.media_id, idx, bytearray(frame), w, h))
-            yield pd.DataFrame(out, columns=[f.name for f in _FRAME_SCHEMA.fields])
+    def kernel(r, blob):
+        w, h, nf = int(r.width), int(r.height), int(r.n_frames)
+        fsz = w * h * 3
+        return [
+            (r.media_id, idx, bytearray(blob[idx * fsz : (idx + 1) * fsz]), w, h)
+            for idx in range(0, nf, every_n)
+        ]
 
-    return media.filter(F.col("kind") == "video").mapInPandas(run, _FRAME_SCHEMA)
+    return _map_media(media, "video", _FRAME_SCHEMA, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -440,30 +454,14 @@ def image_patch_embeddings(
     short row per image — the blob never leaves the stage."""
     side = grid * patch_px
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = _decode_image(
-                    bytes(r.content), int(r.width), int(r.height)
-                )
-                rs = _bilinear_resize(img, side, side)
-                # (grid, patch_px, grid, patch_px, 3) → mean per patch
-                p = rs.reshape(grid, patch_px, grid, patch_px, 3)
-                emb = (
-                    p.mean(axis=(1, 3)).reshape(grid * grid * 3) / 255.0
-                )
-                out.append(
-                    (int(r.media_id), grid, patch_px,
-                     [float(x) for x in emb])
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _PATCH_SCHEMA.fields]
-            )
+    def kernel(r, img):
+        rs = _bilinear_resize(img, side, side)
+        # (grid, patch_px, grid, patch_px, 3) → mean per patch
+        p = rs.reshape(grid, patch_px, grid, patch_px, 3)
+        emb = p.mean(axis=(1, 3)).reshape(grid * grid * 3) / 255.0
+        return [(int(r.media_id), grid, patch_px, [float(x) for x in emb])]
 
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        run, _PATCH_SCHEMA
-    )
+    return _map_media(media, "image", _PATCH_SCHEMA, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -510,10 +508,7 @@ def _phash64(img: np.ndarray, size: int = 32, low: int = 8) -> int:
     flat = lo.flatten()
     ac = flat[1:]
     med = np.median(ac)
-    val = 0
-    for b in ac > med:
-        val = (val << 1) | int(b)
-    return val  # 63 bits used; top bit (DC) always 0
+    return _pack_bits(ac > med)  # 63 bits used; top bit (DC) always 0
 
 
 _PHASH_SCHEMA = StructType(
@@ -537,28 +532,12 @@ def image_phash(media: DataFrame, on_error: str = "raise") -> DataFrame:
     Scale: narrow Arrow-batched ``mapInPandas`` — decode + hash per
     blob, no shuffle; output is two longs per image, ready for the
     pigeonhole pair join (:func:`image_phash_pairs`)."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    img = _decode_image(
-                        bytes(r.content), int(r.width), int(r.height)
-                    )
-                except ValueError:
-                    if on_error == "skip":
-                        continue
-                    raise
-                out.append((int(r.media_id), _phash64(img)))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _PHASH_SCHEMA.fields]
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        run, _PHASH_SCHEMA
+    return _map_media(
+        media,
+        "image",
+        _PHASH_SCHEMA,
+        lambda r, img: [(int(r.media_id), _phash64(img))],
+        on_error,
     )
 
 
@@ -680,9 +659,7 @@ def _audio_fp64(
         ]
     )
     bits = ebar[:-1] - ebar[1:] > 0
-    val = 0
-    for b in bits[:64]:
-        val = (val << 1) | int(b)
+    val = _pack_bits(bits[:64])
     # two's-complement to signed: LongType/Arrow carry int64, and bit
     # 63 is a real data bit here (unlike pHash, whose DC bit is 0)
     return val - (1 << 64) if val >= 1 << 63 else val
@@ -705,21 +682,11 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
 
     Scale: narrow Arrow-batched ``mapInPandas`` — PCM decode + STFT
     per blob, no shuffle; two longs out per clip."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                wave = np.frombuffer(bytes(r.content), dtype="<i2")
-                out.append(
-                    (int(r.media_id), _audio_fp64(wave, int(r.sample_rate)))
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _AUDIO_FP_SCHEMA.fields]
-            )
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        run, _AUDIO_FP_SCHEMA
+    return _map_media(
+        media,
+        "audio",
+        _AUDIO_FP_SCHEMA,
+        lambda r, wave: [(int(r.media_id), _audio_fp64(wave, int(r.sample_rate)))],
     )
 
 

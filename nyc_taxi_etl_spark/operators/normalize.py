@@ -23,6 +23,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.core import epoch_nanos_ts, fare_from_components
 from ..sources.taxi import CANDIDATES, FARE_COMPONENTS
 
 __all__ = ["resolve_column", "detect_columns", "normalize", "unify"]
@@ -71,7 +72,7 @@ def _ts_col(df: DataFrame, name: str | None):
         return F.lit(None).cast("timestamp")
     dtype = dict(df.dtypes).get(name)
     if dtype == "bigint":
-        return F.timestamp_micros((F.col(name) / F.lit(1000)).cast("long"))
+        return epoch_nanos_ts(name)
     return F.col(name).cast("timestamp")
 
 
@@ -92,27 +93,18 @@ def normalize(df: DataFrame, cab_type: str) -> DataFrame:
     cols = df.columns
     det = detect_columns(cols)
 
+    comps = [F.col(c).cast("double") for c in FARE_COMPONENTS if c in cols]
+    component_sum = fare_from_components(*comps) if comps else None
+
     fare = _col_or_null(det["fare"], "double")
-    if det["fare"] is None:
-        comps = [c for c in FARE_COMPONENTS if c in cols]
-        if comps:
-            fare = reduce(
-                lambda a, b: a + b,
-                [F.coalesce(F.col(c).cast("double"), F.lit(0.0)) for c in comps],
-            )
+    if det["fare"] is None and component_sum is not None:
+        fare = component_sum
 
     # total cost: explicit total_amount, else component sum, else fare.
     if "total_amount" in cols:
         total = F.col("total_amount").cast("double")
     else:
-        comps = [c for c in FARE_COMPONENTS if c in cols]
-        if comps:
-            total = reduce(
-                lambda a, b: a + b,
-                [F.coalesce(F.col(c).cast("double"), F.lit(0.0)) for c in comps],
-            )
-        else:
-            total = fare
+        total = component_sum if component_sum is not None else fare
 
     tip = _col_or_null(det["tip"], "double")
 

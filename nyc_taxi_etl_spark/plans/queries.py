@@ -26,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import r4, topk, zscore_over_all
+from ..functions import r4, safe_cast_double, topk, zscore_over_all
 from ..sources.catalog import load_table
 
 CATALOG: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -591,9 +591,8 @@ def props_safe_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = t(spark, sf_dir, "events")
     k_str = F.regexp_extract("props", '"k": (-?\\d+)', 1)
-    k = F.when(k_str.rlike("^-?\\d+$"), k_str.cast("double"))
     return (
-        ev.select("event_type", k.alias("k"))
+        ev.select("event_type", safe_cast_double(k_str).alias("k"))
         .groupBy("event_type")
         .agg(
             F.count("k").alias("parsed_count"),

@@ -67,9 +67,6 @@ def _cents(expr) -> F.Column:
     return F.round(expr * 100, 0).cast("long")
 
 
-_REV_CENTS = None  # built per-call; l_extendedprice*(1-l_discount)
-
-
 def _rev_cents() -> F.Column:
     return _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import season, topk, zscore_over_all
+from ..functions import month_period, season, topk, zscore_over_all
 
 AIRPORT_ZONES = (132, 138, 1, 140)  # JFK, LGA, EWR, Newark-adjacent (part2 cell 19)
 NIGHT_HOURS = (20, 21, 22, 23, 0, 1, 2, 3, 4)  # nightlife window (part2 cell 21)
@@ -59,7 +59,7 @@ def busiest_zones(df: DataFrame, which: str = "pickup", k: int = 100) -> DataFra
 def monthly_fare_trend(df: DataFrame) -> DataFrame:
     """A4 monthly rollup — ``scripts/analytics_pandas.py:227-244``."""
     return (
-        df.groupBy(F.date_format("pickup_datetime", "yyyy-MM").alias("month"))
+        df.groupBy(month_period(F.col("pickup_datetime")).alias("month"))
         .agg(
             F.avg("fare_per_mile").alias("avg_fare_per_mile"),
             F.count("*").alias("trip_count"),
@@ -218,7 +218,7 @@ def market_share_by_month(df: DataFrame) -> DataFrame:
     """Report §8.9 market-share trend: per-month share of trips by cab
     type (window over the monthly rollup)."""
     m = df.groupBy(
-        F.date_format("pickup_datetime", "yyyy-MM").alias("month"), "cab_type"
+        month_period(F.col("pickup_datetime")).alias("month"), "cab_type"
     ).agg(F.count("*").alias("trip_count"))
     w = Window.partitionBy("month")
     return m.select(
@@ -235,7 +235,7 @@ def pct_of_baseline(df: DataFrame, baseline_end: str) -> DataFrame:
     """J3 — monthly counts vs pre-``baseline_end`` mean per cab
     (``comprehensive_trip_analysis.ipynb:1015``)."""
     m = df.groupBy(
-        "cab_type", F.date_format("pickup_datetime", "yyyy-MM").alias("month")
+        "cab_type", month_period(F.col("pickup_datetime")).alias("month")
     ).agg(F.count("*").alias("trip_count"))
     b = (
         m.filter(F.col("month") < baseline_end)

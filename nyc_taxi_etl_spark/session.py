@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_all"]
+__all__ = ["get_spark"]
 
 # the directory that holds this package: Python workers start from the
 # JVM's cwd, so they find the worker daemon (``pydaemon``) through it
@@ -149,9 +149,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

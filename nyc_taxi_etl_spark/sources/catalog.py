@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import epoch_nanos_ts
+
 TABLES = (
     "region",
     "nation",
@@ -59,13 +61,5 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos since epoch → microsecond TIMESTAMP_NTZ (UTC session).
-        # Integer DIV: float division on epoch-nanos longs loses
-        # sub-microsecond precision (2^53 < 1.7e18).
-        df = df.withColumn(
-            "ts", F.to_timestamp_ntz(F.timestamp_micros(F.expr("ts DIV 1000")))
-        )
+        df = df.withColumn("ts", F.to_timestamp_ntz(epoch_nanos_ts("ts")))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from .. import width
+from ..functions.core import epoch_nanos_ts
 from ..sources.catalog import _ensure_confs
 
 __all__ = [
@@ -75,10 +76,10 @@ def read_events_stream(
     raw = reader.parquet(events_dir)
     ts_type = dict((f.name, f.dataType.simpleString()) for f in physical)["ts"]
     if ts_type == "bigint":
-        # epoch-nanos → microsecond TIMESTAMP (integer DIV keeps
-        # exactness; watermarks require TIMESTAMP, not NTZ — session tz
-        # is pinned UTC so wall times match the batch catalog).
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        # epoch-nanos → microsecond TIMESTAMP (watermarks require
+        # TIMESTAMP, not NTZ — session tz is pinned UTC so wall times
+        # match the batch catalog).
+        return raw.withColumn("ts", epoch_nanos_ts("ts"))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -369,10 +370,16 @@ def run_available_now(
     """Drain all currently-available input through the streaming plan
     (Trigger.AvailableNow) into an in-memory sink; returns the result
     as a DataFrame, and drops the sink's temp view ``query_name``. Used
-    for tests and for the reference-style "process the backlog then
-    stop" batch-catchup runs. Raises
-    ``TimeoutError`` (query stopped) if the drain outlasts
+    for tests and for one-shot "process the backlog then stop" runs.
+    Raises ``TimeoutError`` (query stopped) if the drain outlasts
     ``timeout_s``.
+
+    A drain cannot resume: Spark's memory sink refuses to recover from
+    an existing checkpoint, so a second drain on the same
+    ``checkpoint_dir`` raises ``AnalysisException``. Catch-up runs
+    that continue where the last one stopped need a ``foreachBatch``
+    sink on a kept checkpoint (``_foreach_batch``, as
+    ``stream_upsert_to_table`` and ``stream_ingest_documents`` use).
 
     The drain runs ``width.state_partitions`` shuffle partitions,
     which sizes the STATE STORE for this stream: a stateful operator

@@ -1,6 +1,6 @@
 """Multimodal operator tests: schema/batch plumbing is real; audio
-decode is genuinely computed (PCM16), image decode falls back to the
-documented deterministic stub, video frame sampling fans out rows."""
+decode is genuinely computed (PCM16), image decode runs the real
+PNG/BMP/PPM/JPEG codecs, video frame sampling fans out rows."""
 
 from __future__ import annotations
 
@@ -137,6 +137,7 @@ def test_image_features_on_error_skip_and_audit(spark):
     from nyc_taxi_etl_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         image_decode_audit,
+        image_phash,
     )
 
     sof9 = bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 0x11, 0])
@@ -165,6 +166,11 @@ def test_image_features_on_error_skip_and_audit(spark):
     assert [r["media_id"] for r in kept_rs] == [2]
     with pytest.raises(ValueError, match="on_error"):
         resize_images(df, 2, 2, on_error="bogus")
+    # and so does phash
+    kept_ph = image_phash(df, on_error="skip").collect()
+    assert [r["media_id"] for r in kept_ph] == [2]
+    with pytest.raises(ValueError, match="on_error"):
+        image_phash(df, on_error="bogus")
 
 
 def test_corrupt_container_never_reinterpreted_as_raw(spark):

@@ -425,6 +425,19 @@ def test_every_partition_width_goes_through_width_module():
     ) == set()
 
 
+def test_media_operators_share_one_driver():
+    """Static guard: every multimodal operator runs through one
+    ``mapInPandas`` call, and one module turns epoch nanos into
+    timestamps."""
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parent.parent.joinpath(
+        "nyc_taxi_etl_spark", "operators", "multimodal.py"
+    ).read_text()
+    assert src.count(".mapInPandas(") == 1
+    assert _modules_matching(r"DIV 1000") == {"functions/core.py"}
+
+
 # The driver's 50-entry window, pinned apart from plans.DRIVER_WINDOW so
 # an edit to the tuple has to be made twice, on purpose.
 _PINNED_WINDOW = (

@@ -121,6 +121,37 @@ def test_clean_counts_match_duckdb(spark, taxi_dir):
     assert sp == du
 
 
+def test_nanos_pickups_keep_their_microsecond(spark, tmp_path):
+    """Raw TIMESTAMP(NANOS) pickups surface as epoch-nanos longs; after
+    normalize + clean each one must come back as its exact microsecond.
+    Float division of ~1.7e18 nanos rounds some of them just under the
+    microsecond, which a cast then truncates 1 µs early."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw = taxi_fixtures.make_yellow(720)
+    for c in ("tpep_pickup_datetime", "tpep_dropoff_datetime"):
+        raw[c] = raw[c].dt.floor("us")
+    table = pa.Table.from_pandas(raw, preserve_index=False)
+    assert table.schema.field("tpep_pickup_datetime").type == pa.timestamp("ns")
+    pq.write_table(table, str(tmp_path / "yellow.parquet"))
+
+    micros = raw["tpep_pickup_datetime"].to_numpy().astype("datetime64[us]").astype(np.int64)
+    # the fixture holds pickups that float division would misplace
+    assert ((micros * 1000).astype(np.float64) / 1000.0).astype(np.int64).tolist() != micros.tolist()
+
+    df = spark.read.parquet(str(tmp_path / "yellow.parquet"))
+    assert dict(df.dtypes)["tpep_pickup_datetime"] == "bigint"
+    got = [
+        r[0]
+        for r in clean(normalize(df, "yellow"))
+        .select(F.unix_micros("pickup_datetime"))
+        .collect()
+    ]
+    assert got and set(got) <= set(micros.tolist())
+
+
 def test_etl_partitioned_layout_and_counts(spark, curated):
     out, res = curated
     assert res.rows_out > 0
