@@ -7,6 +7,8 @@ consumer stays inside WholeStageCodegen at any scale.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -21,6 +23,14 @@ __all__ = [
     "topk",
     "zscore_over_all",
     "r4",
+    "cents",
+    "money_sum",
+    "hex_int",
+    "md5_int",
+    "cents_sql",
+    "money_sum_sql",
+    "md5_int_sql",
+    "md5_int_py",
 ]
 
 _NUMERIC_RE = r"^-?\d+(\.\d+)?$"
@@ -149,3 +159,58 @@ def normal_p_sql(z_expr: str) -> str:
         f" + {t} * (-1.453152027 + {t} * 1.061405429)))))"
         f" * exp(-({x} * {x})))"
     )
+
+
+# ---------------------------------------------------------------------------
+# Cross-engine conventions: one spelling per engine. Each Spark helper has a
+# DuckDB twin (``*_sql``, which renders SQL text for the oracles) that
+# computes the same value bit for bit; the md5 hash also has a Python twin.
+# ---------------------------------------------------------------------------
+
+
+def cents(c: Column) -> Column:
+    """Exact integer cents of a money value: ``round(c * 100)`` as a
+    long. Sums and comparisons of cents are order-independent and
+    boundary-stable, which float money is not. DuckDB twin:
+    ``cents_sql``."""
+    return F.round(c * 100, 0).cast("long")
+
+
+def money_sum(c: Column) -> Column:
+    """Σ of a money column as exact cents, returned as a double in
+    currency units (twin: ``money_sum_sql``)."""
+    return F.sum(cents(c)).cast("double") / 100
+
+
+def hex_int(hexed: Column, start: int, n: int) -> Column:
+    """The ``n`` hex digits of ``hexed`` from 1-based ``start`` read as a
+    long. Lets a caller hash once and read several windows."""
+    return F.conv(F.substring(hexed, start, n), 16, 10).cast("long")
+
+
+def md5_int(s: Column, start: int = 1, n: int = 8) -> Column:
+    """md5-prefix hash: ``n`` hex digits of ``md5(s)`` from 1-based
+    ``start`` read as an integer (``n`` ≤ 15 stays a non-negative
+    long). Twins: ``md5_int_sql`` and ``md5_int_py``."""
+    return hex_int(F.md5(s), start, n)
+
+
+def cents_sql(expr: str) -> str:
+    """DuckDB twin of ``cents``. ``expr`` is substituted textually, so a
+    compound expression must bind tighter than ``*``."""
+    return f"CAST(round({expr} * 100) AS BIGINT)"
+
+
+def money_sum_sql(expr: str) -> str:
+    """DuckDB twin of ``money_sum``."""
+    return f"CAST(sum({cents_sql(expr)}) AS DOUBLE) / 100"
+
+
+def md5_int_sql(expr: str, start: int = 1, n: int = 8) -> str:
+    """DuckDB twin of ``md5_int`` over a VARCHAR SQL expression."""
+    return f"('0x' || substr(md5({expr}), {start}, {n}))::BIGINT"
+
+
+def md5_int_py(s: str, start: int = 1, n: int = 8) -> int:
+    """Python twin of ``md5_int`` (md5 of the UTF-8 bytes)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[start - 1 : start - 1 + n], 16)

@@ -44,13 +44,19 @@ TLC_BASE_URL = "https://d37ci6vzurychx.cloudfront.net/trip-data"
 _FILE_RE = re.compile(r"(?P<cab>[a-z_]+)_tripdata_(?P<year>\d{4})-(?P<month>\d{2})")
 
 
+def _year_month(s: str) -> tuple[int, int]:
+    ym = re.fullmatch(r"(\d{4})-(\d{2})", s)
+    if not ym or not 1 <= int(ym.group(2)) <= 12:
+        raise ValueError(f"expected a 'YYYY-MM' month, got {s!r}")
+    return int(ym.group(1)), int(ym.group(2))
+
+
 def month_range(start: str, end: str) -> Iterator[tuple[int, int]]:
     """Inclusive (year, month) work units between 'YYYY-MM' bounds —
-    the reference's prefix-listing month discovery (S6) without S3."""
-    sy, sm = int(start[:4]), int(start[5:7])
-    ey, em = int(end[:4]), int(end[5:7])
-    y, m = sy, sm
-    while (y, m) <= (ey, em):
+    the reference's prefix-listing month discovery (S6) without S3.
+    A bound that is not a real month raises ``ValueError``."""
+    (y, m), last = _year_month(start), _year_month(end)
+    while (y, m) <= last:
         yield y, m
         m += 1
         if m > 12:

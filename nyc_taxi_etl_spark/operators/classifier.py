@@ -30,11 +30,10 @@ of md5-hashed unigrams + word bigrams, the hashing trick):
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int, md5_int_py
 from .text import shingle_seq, tokens
 
 __all__ = [
@@ -53,17 +52,15 @@ N_BUCKETS = 4096
 def feature_bucket(feat: Column, n_buckets: int = N_BUCKETS) -> Column:
     """Portable hash bucket for a feature string: first 6 hex digits of
     md5, mod ``n_buckets`` — bit-identical in DuckDB as
-    ``('0x' || substr(md5(f), 1, 6))::BIGINT % n`` (the same formula
-    the sampling/split operators use)."""
-    return (
-        F.conv(F.substring(F.md5(feat), 1, 6), 16, 10).cast("long") % n_buckets
-    )
+    ``md5_int_sql("f", n=6) % n`` (the same hash the sampling/split
+    operators use)."""
+    return md5_int(feat, n=6) % n_buckets
 
 
 def _py_bucket(feat: str, n_buckets: int = N_BUCKETS) -> int:
     """Driver-side replica of :func:`feature_bucket` (same md5 prefix),
     used to place lexicon entries into buckets at model-build time."""
-    return int(hashlib.md5(feat.encode()).hexdigest()[:6], 16) % n_buckets
+    return md5_int_py(feat, n=6) % n_buckets
 
 
 def hashed_features(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import width
+from ..functions import hex_int, md5_int
 from ..pins import pin
 from .text import fingerprint, shingles, tokens
 
@@ -179,8 +180,8 @@ def minhash_signatures(
         F.transform(
             F.col("__hx"),
             lambda x: F.struct(
-                F.conv(F.substring(x, 1, 8), 16, 10).cast("long").alias("h1"),
-                F.conv(F.substring(x, 9, 8), 16, 10).cast("long").alias("h2"),
+                hex_int(x, 1, 8).alias("h1"),
+                hex_int(x, 9, 8).alias("h2"),
             ),
         ).alias("__hp"),
     )
@@ -214,7 +215,8 @@ def banded_signatures(
     ALL band keys come from one projection + posexplode — the naive
     union-of-bands shape re-executes the (hash-heavy) signature
     subtree once per band; this computes signatures exactly once."""
-    assert num_hashes % bands == 0
+    if num_hashes % bands:
+        raise ValueError("num_hashes must be a multiple of bands")
     r = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, k, num_hashes)
     band_keys = F.array(
@@ -368,13 +370,10 @@ def simhash(
     bucketing then groups near-dups.
     """
     toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
-    # 32-bit token hash from the md5 hex prefix (conv base16→base10),
-    # projected once so the 32 per-bit folds share the hashed array.
+    # 32-bit token hash from the md5 hex prefix, projected once so the
+    # 32 per-bit folds share the hashed array.
     hashed = width.spread(df).select(
-        F.col(id_col),
-        F.transform(
-            toks, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-        ).alias("__th"),
+        F.col(id_col), F.transform(toks, lambda s: md5_int(s)).alias("__th")
     )
     tok_hash = F.col("__th")
     def _vote_merge(i: int):
@@ -444,7 +443,8 @@ def hamming_near_pairs(
     bucket values → colder buckets, but ``max_hamming`` must stay
     below ``blocks``.
     """
-    assert blocks > max_hamming, "pigeonhole needs blocks > max_hamming"
+    if blocks <= max_hamming:
+        raise ValueError("pigeonhole needs blocks > max_hamming")
     width = bits // blocks
     mask = (1 << width) - 1
     # all block values in one projection + posexplode (single execution

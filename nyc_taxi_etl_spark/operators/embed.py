@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
 from .text import tokens
 
 __all__ = ["hashed_ngram_embed", "hashed_embed_long"]
@@ -32,20 +33,13 @@ __all__ = ["hashed_ngram_embed", "hashed_embed_long"]
 
 def _bucket(term: F.Column, dim: int) -> F.Column:
     """Portable md5 bucket in [0, dim) — DuckDB:
-    ``('0x' || substr(md5(term), 1, 6))::BIGINT % dim``."""
-    return (
-        F.conv(F.substring(F.md5(term), 1, 6), 16, 10).cast("long")
-        % dim
-    )
+    ``md5_int_sql("term", n=6) % dim``."""
+    return md5_int(term, n=6) % dim
 
 
 def _sign(term: F.Column) -> F.Column:
     """±1 from the next md5 nibble (independent of the bucket bits)."""
-    return F.when(
-        F.conv(F.substring(F.md5(term), 7, 1), 16, 10).cast("long") % 2
-        == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
+    return F.when(md5_int(term, 7, 1) % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
 
 
 def hashed_embed_long(

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = [
     "split_label",
     "train_val_test_split",
@@ -33,21 +35,10 @@ _PPM = 1_000_000
 
 def _hash_ppm(key: Column, seed: int, salt: str) -> Column:
     """Uniform bucket in [0, 1e6) from md5 over (salt, seed, key) —
-    bit-portable (DuckDB: ``('0x' || substr(md5(...), 1, 8))::BIGINT %
-    1000000``). ``salt`` decorrelates the split hash from the shuffle
-    hash so split membership never biases shard order."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:{seed}:"), key.cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _PPM
-    )
+    bit-portable (DuckDB: ``md5_int_sql(...) % 1000000``). ``salt``
+    decorrelates the split hash from the shuffle hash so split
+    membership never biases shard order."""
+    return md5_int(F.concat(F.lit(f"{salt}:{seed}:"), key.cast("string"))) % _PPM
 
 
 def split_label(

@@ -41,17 +41,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = ["kmv_sketches", "kmv_estimate", "kmv_pair_overlap"]
 
 # md5-prefix hash range: 15 hex chars = 16^15 = 2^60 (fits BIGINT; the
-# DuckDB twin is ('0x' || substr(md5(v), 1, 15))::BIGINT)
+# DuckDB twin is md5_int_sql(v, n=15))
 HASH_SPACE = 16 ** 15
 
 
 def _hash60(col: Column) -> Column:
-    return F.conv(
-        F.substring(F.md5(col.cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    return md5_int(col.cast("string"), n=15)
 
 
 def kmv_sketches(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = [
     "hash_bucket_permille",
     "stratified_hash_sample",
@@ -28,12 +30,9 @@ __all__ = [
 
 def hash_bucket_permille(key: Column) -> Column:
     """Uniform bucket in [0, 1000) from md5 of the key's string form —
-    bit-portable (DuckDB: ``('0x' || substr(md5(CAST(k AS VARCHAR)),
-    1, 6))::BIGINT % 1000``)."""
-    return (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 6), 16, 10).cast("long")
-        % 1000
-    )
+    bit-portable (DuckDB: ``md5_int_sql("CAST(k AS VARCHAR)", n=6)
+    % 1000``)."""
+    return md5_int(key.cast("string"), n=6) % 1000
 
 
 def stratified_hash_sample(
@@ -55,16 +54,7 @@ def stratified_hash_sample(
 def _salted_bucket_permille(key: Column, salt: str) -> Column:
     """Like :func:`hash_bucket_permille` but salted, so independent
     sampling decisions (mixture vs split vs stratified) decorrelate."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), key.cast("string"))), 1, 6
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    return md5_int(F.concat(F.lit(salt), key.cast("string")), n=6) % 1000
 
 
 def mixture_rates(
@@ -228,18 +218,10 @@ def weighted_sample(
     ``sample_key`` (for audit/reproducibility checks)."""
     from pyspark.sql import Window
 
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(str(seed)), F.lit("|"), F.col(id_col).cast("string"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + 0.5
-    ) / float(16**13)
+    h = md5_int(
+        F.concat(F.lit(str(seed)), F.lit("|"), F.col(id_col).cast("string")), n=13
+    )
+    u = (h.cast("double") + 0.5) / float(16**13)
     key = F.log(u) / F.col(weight_col)
     base = (
         df.filter(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))

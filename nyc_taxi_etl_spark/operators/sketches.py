@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import md5_int
+
 __all__ = [
     "cms_estimate",
     "cms_table",
@@ -112,12 +114,10 @@ def trailing_union(
 def _cms_bucket(key: Column, j: int, width: int, seed: int) -> Column:
     """Row j's bucket for ``key``: md5 of ``"{seed}:{j}:{key}"``, first
     15 hex chars as an integer (< 2^60, no sign issues), mod width —
-    identical arithmetic in Spark (conv base16) and DuckDB
-    ('0x'||hex cast)."""
-    h = F.md5(F.concat(F.lit(f"{seed}:{j}:"), key.cast("string")))
-    return F.pmod(
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long"), F.lit(width)
-    )
+    identical arithmetic in Spark (``md5_int``) and DuckDB
+    (``md5_int_sql``)."""
+    h = md5_int(F.concat(F.lit(f"{seed}:{j}:"), key.cast("string")), n=15)
+    return F.pmod(h, F.lit(width))
 
 
 def cms_table(

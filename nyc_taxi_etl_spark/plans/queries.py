@@ -13,7 +13,14 @@ Conventions that keep the cross-engine hash stable:
     deterministic;
   * time parts are extracted as integers (ISO weekday, hour, year) or
     'yyyy-MM' strings, never raw timestamps;
-  * count-like outputs are BIGINT on both sides.
+  * count-like outputs are BIGINT on both sides;
+  * money sums are exact integer cents (``money_sum`` /
+    ``money_sum_sql``, on ``cents`` / ``cents_sql``);
+  * hashes are an md5 hex prefix read as an integer (``md5_int`` /
+    ``md5_int_sql`` / ``md5_int_py``).
+The last two are written once, in ``functions.core``: a Spark
+function and its DuckDB twin each (winnow's Spark-SQL-text hash is the
+one inline copy).
 
 Scale notes live on each query: what shuffles, what broadcasts, and why
 the plan survives 1000 executors on 100 TB.
@@ -26,7 +33,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import r4, safe_cast_double, topk, zscore_over_all
+from ..functions import (
+    money_sum,
+    money_sum_sql,
+    r4,
+    safe_cast_double,
+    topk,
+    zscore_over_all,
+)
 from ..sources.catalog import load_table
 
 CATALOG: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -129,12 +143,11 @@ def top_users_by_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_rollup",
-    """
+    f"""
     SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year,
            CAST(quarter(o_orderdate) AS BIGINT) AS order_quarter,
            CAST(count(*) AS BIGINT) AS order_count,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS total_revenue
+           {money_sum_sql("o_totalprice")} AS total_revenue
     FROM orders GROUP BY ROLLUP(1, 2)
     """,
 )
@@ -156,22 +169,17 @@ def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("order_count"),
             # exact integer cents: the grand-total row (~1e11 at sf1)
             # sits within double sum-order noise of its ROUND grain
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                .cast("double")
-                / 100
-            ).alias("total_revenue"),
+            money_sum(F.col("o_totalprice")).alias("total_revenue"),
         )
     )
 
 
 @query(
     "monthly_order_summary",
-    """
+    f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS month,
            CAST(count(*) AS BIGINT) AS order_count,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS sum_price,
+           {money_sum_sql("o_totalprice")} AS sum_price,
            ROUND(avg(o_totalprice), 4) AS avg_price,
            ROUND(median(o_totalprice), 4) AS median_price
     FROM orders GROUP BY 1
@@ -184,11 +192,7 @@ def monthly_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = t(spark, sf_dir, "orders")
     return od.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month")).agg(
         F.count("*").alias("order_count"),
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double")
-            / 100
-        ).alias("sum_price"),
+        money_sum(F.col("o_totalprice")).alias("sum_price"),
         r4(F.avg("o_totalprice")).alias("avg_price"),
         r4(F.median("o_totalprice")).alias("median_price"),
     )
@@ -228,11 +232,10 @@ def returnflag_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "region_order_revenue",
-    """
+    f"""
     SELECT r.r_name AS region_name,
            CAST(count(*) AS BIGINT) AS order_count,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS total_revenue
+           {money_sum_sql("o.o_totalprice")} AS total_revenue
     FROM orders o
     JOIN customer c ON o.o_custkey = c.c_custkey
     JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -263,11 +266,7 @@ def region_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region_name"))
         .agg(
             F.count("*").alias("order_count"),
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                .cast("double")
-                / 100
-            ).alias("total_revenue"),
+            money_sum(F.col("o_totalprice")).alias("total_revenue"),
         )
     )
 
@@ -408,11 +407,10 @@ def daily_pct_of_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_suppliers_per_nation",
-    """
+    f"""
     WITH rev AS (
       SELECT s.s_nationkey AS nation_key, l.l_suppkey AS supp_key,
-             CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                                 * 100) AS BIGINT)) AS DOUBLE) / 100
+             {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")}
                AS revenue
       FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
       GROUP BY 1, 2
@@ -452,16 +450,8 @@ def top_suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_suppkey").cast("long").alias("supp_key"),
         )
         .agg(
-            (
-                F.sum(
-                    F.round(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100,
-                        0,
-                    ).cast("long")
-                ).cast("double")
-                / 100
+            money_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
             ).alias("revenue")
         )
     )
@@ -530,11 +520,10 @@ def valid_lines_unit_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "priority_nation_filter",
-    """
+    f"""
     SELECT o.o_orderpriority AS priority,
            CAST(count(*) AS BIGINT) AS order_count,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS total_price
+           {money_sum_sql("o.o_totalprice")} AS total_price
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     WHERE c.c_nationkey IN (1, 8, 14, 24)
        OR o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -558,11 +547,7 @@ def priority_nation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(
             F.count("*").alias("order_count"),
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                .cast("double")
-                / 100
-            ).alias("total_price"),
+            money_sum(F.col("o_totalprice")).alias("total_price"),
         )
     )
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import money_sum, money_sum_sql
 from .queries import query, t
 
 _FUNNEL = ("signup", "view", "purchase")
@@ -242,11 +243,10 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "monthly_revenue_growth",
-    """
+    f"""
     WITH m AS (
       SELECT date_trunc('month', o_orderdate) AS mo,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-               / 100 AS revenue
+             {money_sum_sql("o_totalprice")} AS revenue
       FROM orders GROUP BY 1)
     SELECT strftime(mo, '%Y-%m') AS order_month, revenue,
            ROUND(revenue - lag(revenue) OVER w, 4) AS mom_delta,
@@ -270,11 +270,7 @@ def monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = orders.groupBy(
         F.date_trunc("month", "o_orderdate").alias("mo")
     ).agg(
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double")
-            / 100
-        ).alias("revenue")
+        money_sum(F.col("o_totalprice")).alias("revenue")
     )
     w = Window.orderBy("mo")
     return m.select(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cents, cents_sql
 from ..operators.dedup import connected_components
 from ..operators.neighborhood import sorted_neighborhood_pairs
 from ..operators.skyline import skyline_2d
@@ -105,10 +106,10 @@ def part_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "part_price_skyline",
-    """
+    f"""
     WITH p AS (
       SELECT p_partkey, p_name,
-             CAST(round(p_retailprice * 100) AS BIGINT) AS pc,
+             {cents_sql("p_retailprice")} AS pc,
              CAST(p_size AS BIGINT) AS sz
       FROM part
       WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
@@ -147,9 +148,7 @@ def part_price_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("p_partkey").cast("long").alias("part_key"),
         "p_name",
-        F.round(F.col("p_retailprice") * 100)
-        .cast("long")
-        .alias("price_cents"),
+        cents(F.col("p_retailprice")).alias("price_cents"),
         F.col("p_size").cast("long").alias("p_size"),
     )
     sky = skyline_2d(p, "price_cents", "p_size", bucket_width=5000)
@@ -228,9 +227,9 @@ def _er_sql() -> str:
              CAST(count(DISTINCT p_name) AS BIGINT) AS n_names,
              arg_min(p_name, p_partkey) AS canonical_name,
              arg_max(p_type, p_partkey) AS recent_type,
-             min(CAST(round(p_retailprice * 100) AS BIGINT))
+             min({cents_sql("p_retailprice")})
                AS min_price_cents,
-             max(CAST(round(p_retailprice * 100) AS BIGINT))
+             max({cents_sql("p_retailprice")})
                AS max_price_cents
       FROM members GROUP BY 1),
     freq AS (
@@ -335,7 +334,7 @@ def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entity_id",
         F.coalesce("component", "p_partkey").cast("long"),
     ).withColumn(
-        "price_cents", F.round(F.col("p_retailprice") * 100).cast("long")
+        "price_cents", cents(F.col("p_retailprice"))
     )
     counts = labeled.groupBy("entity_id").agg(
         F.count("*").cast("long").alias("n_members"),
@@ -367,11 +366,11 @@ def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GOLDEN_SQL = """
+_GOLDEN_SQL = f"""
     WITH o AS (
       SELECT o_custkey, o_orderkey, o_orderstatus, o_orderpriority,
              o_orderdate,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+             {cents_sql("o_totalprice")} AS cents
       FROM orders),
     base AS (
       SELECT o_custkey AS custkey,
@@ -440,7 +439,7 @@ def customer_order_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.survivorship import golden_record
 
     o = t(spark, sf_dir, "orders").withColumn(
-        "cents", F.round(F.col("o_totalprice") * 100).cast("long")
+        "cents", cents(F.col("o_totalprice"))
     )
     gr = golden_record(
         o,

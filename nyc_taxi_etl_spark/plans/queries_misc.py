@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import season
+from ..functions import cents, md5_int_sql, money_sum, money_sum_sql, season
 from .queries import query, t
 
 
@@ -138,12 +138,11 @@ def etl_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_status_cube",
-    """
+    f"""
     SELECT coalesce(o_orderstatus, 'ALL') AS status,
            coalesce(CAST(year(o_orderdate) AS VARCHAR), 'ALL') AS order_year,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS revenue
+           {money_sum_sql("o_totalprice")} AS revenue
     FROM orders
     WHERE year(o_orderdate) BETWEEN 1994 AND 1996
     GROUP BY CUBE (o_orderstatus, year(o_orderdate))
@@ -171,11 +170,7 @@ def orders_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact integer cents: the sf1 oracle sweep caught the
             # plain double SUM (~1e11 at the ALL grain) drifting past
             # the 4-decimal rounding between engines
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-                .cast("double")
-                / 100
-            ).alias("revenue"),
+            money_sum(F.col("o_totalprice")).alias("revenue"),
         )
         .select(
             F.coalesce(F.col("o_orderstatus"), F.lit("ALL")).alias("status"),
@@ -190,7 +185,7 @@ def orders_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_cdc_delete_totals",
-    """
+    f"""
     WITH feed AS (
       SELECT o_orderkey, o_orderstatus, o_totalprice * 1.1 AS o_totalprice,
              'U' AS op
@@ -207,8 +202,7 @@ def orders_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE f.o_orderkey IS NULL)
     SELECT o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS total_price
+           {money_sum_sql("o_totalprice")} AS total_price
     FROM merged GROUP BY 1
     """,
 )
@@ -243,17 +237,13 @@ def orders_cdc_delete_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double")
-            / 100
-        ).alias("total_price"),
+        money_sum(F.col("o_totalprice")).alias("total_price"),
     )
 
 
 @query(
     "orders_upsert_status_totals",
-    """
+    f"""
     WITH updates AS (
       SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice * 1.1
                AS o_totalprice, o_orderdate, o_orderpriority
@@ -266,8 +256,7 @@ def orders_cdc_delete_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE u.o_orderkey IS NULL)
     SELECT o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS total_price
+           {money_sum_sql("o_totalprice")} AS total_price
     FROM merged GROUP BY 1
     """,
 )
@@ -284,11 +273,11 @@ def orders_upsert_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude (first seen at sf0.1: Σ ≈ 1.3e10 diverged in the 4th
     decimal between engines), and per-row double→DECIMAL casts diverge
     at half-cent ties (Spark rounds the double's shortest string repr,
-    DuckDB its binary value). ``round(x·100) :: long`` is nearest-
-    integer on the SAME IEEE double in both engines (exact .5 ties are
-    measure-zero for *1.1-scaled prices), integer addition is exact,
-    and /100 of an exact integer is deterministic — identical totals
-    at every scale."""
+    DuckDB its binary value). ``money_sum`` (``functions.core``)
+    rounds x·100 to the nearest integer on the SAME IEEE double in
+    both engines (exact .5 ties are measure-zero for *1.1-scaled
+    prices), integer addition is exact, and /100 of an exact integer
+    is deterministic — identical totals at every scale."""
     from ..operators.merge import merge_upsert
 
     od = t(spark, sf_dir, "orders")
@@ -298,20 +287,16 @@ def orders_upsert_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = merge_upsert(od, updates, keys=["o_orderkey"])
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double")
-            / 100
-        ).alias("total_price"),
+        money_sum(F.col("o_totalprice")).alias("total_price"),
     )
 
 
 @query(
     "stratified_order_sample",
-    """
+    f"""
     SELECT o_orderkey, o_orderstatus, ROUND(o_totalprice, 4) AS total
     FROM orders
-    WHERE ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT
+    WHERE {md5_int_sql("CAST(o_orderkey AS VARCHAR)", n=6)}
             % 1000
           < CASE o_orderstatus WHEN 'P' THEN 500
                                WHEN 'F' THEN 50
@@ -515,10 +500,10 @@ def kanon_daily_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_doc_sample",
-    """
+    f"""
     WITH keyed AS (
       SELECT doc_id, lang,
-             ln((('0x' || substr(md5('7|' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
+             ln(({md5_int_sql("'7|' || CAST(doc_id AS VARCHAR)", n=13)}
                  + 0.5) / 4503599627370496.0)
                / CAST(n_chars AS DOUBLE) AS sample_key
       FROM documents WHERE n_chars > 0),
@@ -609,11 +594,10 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_matview_monthly_revenue",
-    """
+    f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS revenue,
+           {money_sum_sql("o_totalprice")} AS revenue,
            ROUND(min(o_totalprice), 4) AS min_price,
            ROUND(max(o_totalprice), 4) AS max_price
     FROM orders GROUP BY 1
@@ -641,9 +625,7 @@ def orders_matview_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFram
         .withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
         # exact integer cents BEFORE the matview: partial sums then
         # merge as longs, so refresh order can never perturb the total
-        .withColumn(
-            "o_cents", F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        )
+        .withColumn("o_cents", cents(F.col("o_totalprice")))
     )
     # scratch on tmpfs when present: the versioned source and matview
     # state are per-run demo roots, so their parquet round-trips are
@@ -920,13 +902,12 @@ def part_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_rfm_segments",
-    """
+    f"""
     WITH rfm AS (
       SELECT o_custkey,
              max(o_orderdate) AS last_order,
              CAST(count(*) AS BIGINT) AS frequency,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-               / 100 AS monetary
+             {money_sum_sql("o_totalprice")} AS monetary
       FROM orders GROUP BY 1),
     scored AS (
       SELECT o_custkey, last_order, frequency, monetary,
@@ -937,8 +918,7 @@ def part_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(r AS BIGINT) AS r_quartile, CAST(f AS BIGINT) AS f_quartile,
            CAST(m AS BIGINT) AS m_quartile,
            CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(CAST(round(monetary * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS segment_revenue
+           {money_sum_sql("monetary")} AS segment_revenue
     FROM scored GROUP BY 1, 2, 3
     """,
 )
@@ -964,11 +944,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact integer cents: monetary feeds BOTH the published
         # segment totals and the ntile ORDERING — sum-order ulp noise
         # in a raw double sum could flip quartile membership
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-            .cast("double")
-            / 100
-        ).alias("monetary"),
+        money_sum(F.col("o_totalprice")).alias("monetary"),
     )
     wr = Window.orderBy(F.col("last_order").desc(), F.col("o_custkey"))
     wf = Window.orderBy(F.col("frequency").desc(), F.col("o_custkey"))
@@ -985,11 +961,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").cast("long").alias("m_quartile"),
     ).agg(
         F.count("*").alias("n_customers"),
-        (
-            F.sum(F.round(F.col("monetary") * 100, 0).cast("long"))
-            .cast("double")
-            / 100
-        ).alias("segment_revenue"),
+        money_sum(F.col("monetary")).alias("segment_revenue"),
     )
 
 
@@ -1320,10 +1292,9 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "local_supplier_revenue",
-    """
+    f"""
     SELECT n.n_name AS nation,
-           CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                               * 100) AS BIGINT)) AS DOUBLE) / 100
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")}
              AS revenue
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -1371,16 +1342,8 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("r_name") == "ASIA") & (F.year("o_orderdate") == 1996))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            (
-                F.sum(
-                    F.round(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100,
-                        0,
-                    ).cast("long")
-                ).cast("double")
-                / 100
+            money_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
             ).alias("revenue")
         )
     )
@@ -1388,10 +1351,9 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "shipping_priority_top10",
-    """
+    f"""
     SELECT CAST(l.l_orderkey AS BIGINT) AS orderkey,
-           CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                               * 100) AS BIGINT)) AS DOUBLE) / 100
+           {money_sum_sql("l.l_extendedprice * (1 - l.l_discount)")}
              AS revenue,
            strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
            o.o_orderpriority AS priority
@@ -1433,16 +1395,8 @@ def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("priority"),
         )
         .agg(
-            (
-                F.sum(
-                    F.round(
-                        F.col("l_extendedprice")
-                        * (1 - F.col("l_discount"))
-                        * 100,
-                        0,
-                    ).cast("long")
-                ).cast("double")
-                / 100
+            money_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
             ).alias("revenue")
         )
         .select("orderkey", "revenue", "orderdate", "priority")
@@ -1453,11 +1407,10 @@ def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_order_join_matview",
-    """
+    f"""
     SELECT c.c_mktsegment,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS revenue
+           {money_sum_sql("o.o_totalprice")} AS revenue
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY 1
     """,
@@ -1488,9 +1441,7 @@ def customer_order_join_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"),
         F.col("o_orderkey"),
-        F.round(F.col("o_totalprice") * 100, 0)
-        .cast("long")
-        .alias("o_cents"),
+        cents(F.col("o_totalprice")).alias("o_cents"),
     )
     # scratch on tmpfs when present (guide §6 — see the agg-matview
     # entry's sizing note; these roots live one invocation, and the

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import r4
+from ..functions import md5_int_sql, r4
 from ..operators import text as X
 from .queries import query, t
 
@@ -220,15 +220,15 @@ def bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_hashed_embeddings",
-    """
+    f"""
     WITH tok AS (
       SELECT doc_id,
              unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
       FROM documents),
     hashed AS (
       SELECT doc_id,
-             ('0x' || substr(md5(term), 1, 6))::BIGINT % 64 AS dim,
-             CASE WHEN ('0x' || substr(md5(term), 7, 1))::BIGINT % 2 = 0
+             {md5_int_sql("term", n=6)} % 64 AS dim,
+             CASE WHEN {md5_int_sql("term", 7, 1)} % 2 = 0
                   THEN 1.0 ELSE -1.0 END AS s
       FROM tok WHERE term <> ''),
     sums AS (

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_sql
 from ..operators.sketches import keyed_sketches, trailing_union, union_estimate
 from ..pins import pin
 from .queries import query, t
@@ -165,10 +166,8 @@ def cms_hash_cte(depth: int = _CMS_DEPTH, width: int = _CMS_WIDTH,
     AND the streaming sketch oracle (queries_streaming), so a hash
     recipe or constant change cannot desynchronize them from the
     Spark operator."""
-    bucket = (
-        f"('0x' || substr(md5('{seed}:' || CAST(j AS VARCHAR) || ':' "
-        f"|| CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % {width}"
-    )
+    key = f"'{seed}:' || CAST(j AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)"
+    bucket = f"{md5_int_sql(key, n=15)} % {width}"
     return f"""h AS (
       SELECT user_id, j, {bucket} AS bucket
       FROM events, generate_series(0, {depth - 1}) AS t(j))"""
@@ -262,7 +261,7 @@ def _kmv_sql(k: int = _KMV_K) -> str:
       FROM tok),
     dv AS (
       SELECT DISTINCT source,
-             ('0x' || substr(md5(s), 1, 15))::BIGINT AS h
+             {md5_int_sql("s", n=15)} AS h
       FROM (SELECT source, unnest(sh) AS s FROM shl)),
     botk AS (
       SELECT source, h FROM dv

@@ -15,7 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import normal_p_sql, normal_two_sided_p, r4
+from ..functions import (
+    cents,
+    cents_sql,
+    money_sum,
+    money_sum_sql,
+    normal_p_sql,
+    normal_two_sided_p,
+    r4,
+)
 from ..pins import pin
 from .queries import query, t
 
@@ -353,14 +361,14 @@ def orders_global_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_revenue_gini",
-    """
+    f"""
     WITH rev AS (SELECT o_custkey, sum(o_totalprice) AS rev
                  FROM orders GROUP BY 1),
     rk AS (SELECT rev, CAST(row_number() OVER (ORDER BY rev, o_custkey)
                             AS BIGINT) AS seq
            FROM rev)
     SELECT CAST(max(seq) AS BIGINT) AS n_customers,
-           CAST(sum(CAST(round(rev * 100) AS BIGINT)) AS DOUBLE) / 100
+           {money_sum_sql("rev")}
              AS total_revenue,
            ROUND(2.0 * sum(seq * rev) / (max(seq) * sum(rev))
                  - (max(seq) + 1.0) / max(seq), 4) AS gini
@@ -391,12 +399,7 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_sequence(rev, ["rev", "o_custkey"], out_col="seq")
     return ranked.agg(
         F.max("seq").cast("long").alias("n_customers"),
-        (
-            F.sum(F.round(F.col("rev") * 100, 0).cast("long")).cast(
-                "double"
-            )
-            / 100
-        ).alias("total_revenue"),
+        money_sum(F.col("rev")).alias("total_revenue"),
         r4(
             F.lit(2.0)
             * F.sum(F.col("seq") * F.col("rev"))
@@ -864,14 +867,14 @@ def join_size_audits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ADAPTIVE_SQL = """
+_ADAPTIVE_SQL = f"""
     WITH o AS (
       SELECT CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE o_custkey END AS k,
              o_totalprice
       FROM orders)
     SELECT c.c_mktsegment AS mktsegment,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
+           CAST(sum({cents_sql("o.o_totalprice")})
                 AS BIGINT) AS revenue_cents,
            'salted' AS strategy
     FROM o JOIN customer c ON c.c_custkey = o.k
@@ -917,7 +920,7 @@ def adaptive_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("k"),
         F.col("o_orderkey"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined, decision = adaptive_join(
@@ -940,7 +943,7 @@ def adaptive_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ADAPTIVE_LEFT_SQL = """
+_ADAPTIVE_LEFT_SQL = f"""
     WITH o AS (
       SELECT CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE o_custkey END AS k,
              o_totalprice
@@ -950,7 +953,7 @@ _ADAPTIVE_LEFT_SQL = """
       WHERE c_custkey % 3 <> 0)
     SELECT COALESCE(d.c_mktsegment, 'UNMATCHED') AS mktsegment,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
+           CAST(sum({cents_sql("o.o_totalprice")})
                 AS BIGINT) AS revenue_cents,
            'salted' AS strategy
     FROM o LEFT JOIN d ON d.c_custkey = o.k
@@ -989,7 +992,7 @@ def adaptive_left_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("k"),
         F.col("o_orderkey"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cust = (
         t(spark, sf_dir, "customer")
@@ -1033,12 +1036,12 @@ def adaptive_left_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in eight places or the entries silently disagreed on their grain —
 # the basket family's baskets_of() precedent).
 
-_MONTHLY_M_CTE = """m AS (
+_MONTHLY_M_CTE = f"""m AS (
       SELECT n.n_name AS nation,
              CAST((EXTRACT(year FROM o.o_orderdate) - 1995) * 12
                   + EXTRACT(month FROM o.o_orderdate) - 1 AS BIGINT)
                AS x,
-             CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
+             CAST(sum({cents_sql("o.o_totalprice")})
                   AS BIGINT) AS y
       FROM orders o
       JOIN customer c ON c.c_custkey = o.o_custkey
@@ -1075,7 +1078,7 @@ def _monthly_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("x"),
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            F.sum(cents(F.col("o_totalprice")))
             .cast("long")
             .alias("y")
         )

@@ -6,7 +6,7 @@ Oracle-portability tricks (validated empirically in tests):
   * MinHash permutations = lexicographic min over ``md5(seed:shingle)``
     hex strings — identical string ops in both engines;
   * SimHash token hashes = 32-bit ints from the md5 hex prefix
-    (Spark ``conv(hex,16,10)`` ≡ DuckDB ``('0x'||hex)::BIGINT``);
+    (Spark ``md5_int`` ≡ DuckDB ``md5_int_sql``, ``functions.core``);
   * cosine similarity = strict left-fold dot product in double
     precision (Spark ``aggregate``/``zip_with`` ≡ DuckDB
     ``list_sum(list_transform(list_zip(...)))``) — verified
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import width
+from ..functions import md5_int_sql
 from ..operators import decontam as C
 from ..operators import dedup as D
 from ..operators import similarity as S
@@ -433,8 +434,8 @@ def _minhash_ctes(
       FROM tok),
     hp AS (
       SELECT doc_id,
-             list_transform(sh, s -> [('0x' || substr(md5(s), 1, 8))::BIGINT,
-                                      ('0x' || substr(md5(s), 9, 8))::BIGINT])
+             list_transform(sh, s -> [{md5_int_sql("s")},
+                                      {md5_int_sql("s", 9, 8)}])
                AS hp
       FROM shl),
     sigs AS (SELECT doc_id, {sig_cols} FROM hp),
@@ -535,12 +536,12 @@ def minhash_lsh_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "simhash_near_pairs",
-    """
+    f"""
     WITH tok AS (
       SELECT doc_id,
              unnest(list_distinct(string_split_regex(trim(lower(text)), '\\s+'))) AS w
       FROM documents),
-    h AS (SELECT doc_id, ('0x' || substr(md5(w), 1, 8))::BIGINT AS hv FROM tok),
+    h AS (SELECT doc_id, {md5_int_sql("w")} AS hv FROM tok),
     bits AS (
       SELECT doc_id, i,
              sum(CASE WHEN (hv >> i) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -1494,7 +1495,7 @@ _WINNOW_K, _WINNOW_W, _WINNOW_MIN = 20, 8, 5
              list_transform(
                [t[i:i+{_WINNOW_K - 1}]
                 for i in generate_series(1, length(t) - {_WINNOW_K - 1})],
-               g -> ('0x' || substr(md5(g), 1, 8))::BIGINT) AS hs
+               g -> {md5_int_sql("g")}) AS hs
       FROM n),
     g AS (
       SELECT doc_id,

@@ -56,22 +56,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cents, cents_sql, money_sum, money_sum_sql
 from .queries import query, t
 
 __all__: list[str] = []
 
 
-def _cents(expr) -> F.Column:
-    """Exact integer cents of a money expression (round-6 convention:
-    order-independent Σ, boundary-stable comparisons)."""
-    return F.round(expr * 100, 0).cast("long")
+def _rev() -> F.Column:
+    """Discounted line revenue; ``_REV`` is its SQL text."""
+    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 def _rev_cents() -> F.Column:
-    return _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    return cents(_rev())
 
 
-_REV_SQL = "CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)"
+_REV = "l.l_extendedprice * (1 - l.l_discount)"
 
 
 # ---------------------------------------------------------------------------
@@ -135,12 +135,12 @@ def order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "promo_revenue_share",
     f"""
     SELECT CAST(sum(CASE WHEN p.p_type = 'PROMO'
-                         THEN {_REV_SQL} ELSE 0 END) AS DOUBLE) / 100
+                         THEN {cents_sql(_REV)} ELSE 0 END) AS DOUBLE) / 100
              AS promo_revenue,
-           CAST(sum({_REV_SQL}) AS DOUBLE) / 100 AS total_revenue,
+           {money_sum_sql(_REV)} AS total_revenue,
            100.0 * sum(CASE WHEN p.p_type = 'PROMO'
-                            THEN {_REV_SQL} ELSE 0 END)
-                 / sum({_REV_SQL}) AS promo_share_pct
+                            THEN {cents_sql(_REV)} ELSE 0 END)
+                 / sum({cents_sql(_REV)}) AS promo_share_pct
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1996-09-01'
       AND l.l_shipdate <  TIMESTAMP '1996-10-01'
@@ -184,9 +184,8 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "small_quantity_avg_loss",
-    """
-    SELECT CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                AS DOUBLE) / 100 / 7.0 AS avg_yearly,
+    f"""
+    SELECT {money_sum_sql("l.l_extendedprice")} / 7.0 AS avg_yearly,
            CAST(count(*) AS BIGINT) AS n_lines
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -234,11 +233,7 @@ def small_quantity_avg_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("l_quantity") < 0.2 * F.col("_avg_qty"))
         .agg(
-            (
-                F.sum(_cents(F.col("l_extendedprice"))).cast("double")
-                / 100
-                / 7.0
-            ).alias("avg_yearly"),
+            (money_sum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -313,16 +308,15 @@ def sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "idle_rich_customers",
-    """
+    f"""
     WITH thr AS (
-      SELECT CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
+      SELECT CAST(sum({cents_sql("c_acctbal")}) AS DOUBLE)
                / (100.0 * count(*)) AS avg_bal
       FROM customer WHERE c_acctbal > 0
     )
     SELECT n.n_name AS nation,
            CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS DOUBLE)
-             / 100 AS total_balance
+           {money_sum_sql("c.c_acctbal")} AS total_balance
     FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey, thr
     WHERE c.c_acctbal > thr.avg_bal
       AND NOT EXISTS (SELECT 1 FROM orders o
@@ -348,7 +342,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = t(spark, sf_dir, "nation")
     thr = cu.filter(F.col("c_acctbal") > 0).agg(
         (
-            F.sum(_cents(F.col("c_acctbal"))).cast("double")
+            F.sum(cents(F.col("c_acctbal"))).cast("double")
             / (F.lit(100.0) * F.count(F.lit(1)))
         ).alias("avg_bal")
     )
@@ -363,9 +357,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            (
-                F.sum(_cents(F.col("c_acctbal"))).cast("double") / 100
-            ).alias("total_balance"),
+            money_sum(F.col("c_acctbal")).alias("total_balance"),
         )
     )
 
@@ -380,7 +372,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH pv AS (
       SELECT l.l_partkey AS partkey,
-             sum({_REV_SQL}) AS value_cents
+             sum({cents_sql(_REV)}) AS value_cents
       FROM lineitem l GROUP BY 1
     )
     SELECT CAST(partkey AS BIGINT) AS partkey,
@@ -491,7 +483,7 @@ def brand_type_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "disjunctive_basket_revenue",
     f"""
-    SELECT CAST(sum({_REV_SQL}) AS DOUBLE) / 100 AS revenue,
+    SELECT {money_sum_sql(_REV)} AS revenue,
            CAST(count(*) AS BIGINT) AS n_lines
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
@@ -526,7 +518,7 @@ def disjunctive_basket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
         .filter(basket)
         .agg(
-            (F.sum(_rev_cents()).cast("double") / 100).alias("revenue"),
+            money_sum(_rev()).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -542,7 +534,7 @@ def disjunctive_basket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
            CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-           CAST(sum({_REV_SQL}) AS DOUBLE) / 100 AS revenue
+           {money_sum_sql(_REV)} AS revenue
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -599,7 +591,7 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
         .agg(
-            (F.sum(_rev_cents()).cast("double") / 100).alias("revenue")
+            money_sum(_rev()).alias("revenue")
         )
     )
 
@@ -613,7 +605,7 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top_revenue_supplier",
     f"""
     WITH sr AS (
-      SELECT l.l_suppkey AS suppkey, sum({_REV_SQL}) AS rev_cents
+      SELECT l.l_suppkey AS suppkey, sum({cents_sql(_REV)}) AS rev_cents
       FROM lineitem l
       WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
         AND l.l_shipdate <  TIMESTAMP '1996-04-01'
@@ -675,11 +667,11 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
            CAST(sum(CASE WHEN ns.n_name = 'NATION_3'
-                         THEN {_REV_SQL} ELSE 0 END) AS DOUBLE) / 100
+                         THEN {cents_sql(_REV)} ELSE 0 END) AS DOUBLE) / 100
              AS nation_revenue,
-           CAST(sum({_REV_SQL}) AS DOUBLE) / 100 AS total_revenue,
+           {money_sum_sql(_REV)} AS total_revenue,
            sum(CASE WHEN ns.n_name = 'NATION_3'
-                    THEN {_REV_SQL} ELSE 0 END) * 1.0 / sum({_REV_SQL})
+                    THEN {cents_sql(_REV)} ELSE 0 END) * 1.0 / sum({cents_sql(_REV)})
              AS mkt_share
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -760,8 +752,8 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     SELECT ns.n_name AS nation,
            CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-           CAST(sum({_REV_SQL} * 1000
-                    - CAST(round(p.p_retailprice * 100) AS BIGINT)
+           CAST(sum({cents_sql(_REV)} * 1000
+                    - {cents_sql("p.p_retailprice")}
                       * CAST(l.l_quantity AS BIGINT) * 600) AS DOUBLE)
              / 100000 AS profit
     FROM lineitem l
@@ -791,7 +783,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa = t(spark, sf_dir, "part")
     profit_units = F.sum(
         _rev_cents() * F.lit(1000)
-        - _cents(F.col("p_retailprice"))
+        - cents(F.col("p_retailprice"))
         * F.col("l_quantity").cast("long")
         * F.lit(600)
     )
@@ -819,7 +811,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(c.c_custkey AS BIGINT) AS custkey,
            c.c_name AS customer,
            n.n_name AS nation,
-           CAST(sum({_REV_SQL}) AS DOUBLE) / 100 AS returned_revenue
+           {money_sum_sql(_REV)} AS returned_revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -828,7 +820,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate >= TIMESTAMP '1996-07-01'
       AND o.o_orderdate <  TIMESTAMP '1996-10-01'
     GROUP BY 1, 2, 3
-    ORDER BY sum({_REV_SQL}) DESC, custkey
+    ORDER BY sum({cents_sql(_REV)}) DESC, custkey
     LIMIT 20
     """,
 )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import md5_int_sql
 from ..operators.boilerplate import remove_boilerplate
 from ..operators.chunking import chunk_by_tokens, pack_sequences
 from ..operators.export import shuffle_order_key, train_val_test_split
@@ -257,11 +258,10 @@ def doc_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "training_split_counts",
-    """
+    f"""
     WITH s AS (
       SELECT doc_id, n_chars,
-             ('0x' || substr(md5('split:0:' || CAST(doc_id AS VARCHAR)),
-                             1, 8))::BIGINT % 1000000 AS b,
+             {md5_int_sql("'split:0:' || CAST(doc_id AS VARCHAR)")} % 1000000 AS b,
              md5('shuffle:0:' || CAST(doc_id AS VARCHAR)) AS ok
       FROM documents)
     SELECT CASE WHEN b < 800000 THEN 'train'
@@ -368,12 +368,9 @@ def doc_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _split_case_sql(key_expr: str, seed: int = 0) -> str:
     """The 80/10/10 split CASE over an arbitrary key expression —
     DuckDB replica of ``export.split_label`` (same md5 ppm bucket)."""
-    return f"""CASE WHEN ('0x' || substr(md5('split:{seed}:' ||
-                     CAST({key_expr} AS VARCHAR)), 1, 8))::BIGINT % 1000000
-                    < 800000 THEN 'train'
-               WHEN ('0x' || substr(md5('split:{seed}:' ||
-                     CAST({key_expr} AS VARCHAR)), 1, 8))::BIGINT % 1000000
-                    < 900000 THEN 'val'
+    b = md5_int_sql(f"'split:{seed}:' || CAST({key_expr} AS VARCHAR)")
+    return f"""CASE WHEN {b} % 1000000 < 800000 THEN 'train'
+               WHEN {b} % 1000000 < 900000 THEN 'val'
                ELSE 'test' END"""
 
 
@@ -626,7 +623,7 @@ def _classifier_sql() -> str:
     from ..operators.classifier import N_BUCKETS, fixed_milli_weight_sql
 
     case = fixed_milli_weight_sql("h")
-    bucket = f"('0x' || substr(md5(t), 1, 6))::BIGINT % {N_BUCKETS}"
+    bucket = f"{md5_int_sql('t', n=6)} % {N_BUCKETS}"
     return f"""
     WITH tok AS (SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
     big AS (
@@ -702,8 +699,8 @@ _MIX_CASE = "CASE source " + " ".join(
           FROM wf, cap),
     k AS (SELECT d.source, count(*) AS n_kept
           FROM documents d JOIN r USING (source)
-          WHERE ('0x' || substr(md5('mix:0:' || CAST(doc_id AS VARCHAR)),
-                                1, 6))::BIGINT % 1000 < r.rate_pm
+          WHERE {md5_int_sql("'mix:0:' || CAST(doc_id AS VARCHAR)", n=6)}
+                % 1000 < r.rate_pm
           GROUP BY 1)
     SELECT r.source AS source,
            CAST(r.n_src AS BIGINT) AS n_docs_in,
@@ -751,7 +748,7 @@ def mixture_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "temperature_mixture_counts",
-    """
+    f"""
     WITH c AS (SELECT source, count(*) AS n_src FROM documents GROUP BY 1),
     m AS (SELECT min(n_src) AS n_min FROM c),
     r AS (SELECT source, n_src,
@@ -761,8 +758,8 @@ def mixture_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM c, m),
     k AS (SELECT d.source, count(*) AS n_kept
           FROM documents d JOIN r USING (source)
-          WHERE ('0x' || substr(md5('temp:0:' || CAST(doc_id AS VARCHAR)),
-                                1, 6))::BIGINT % 1000 < r.rate_pm
+          WHERE {md5_int_sql("'temp:0:' || CAST(doc_id AS VARCHAR)", n=6)}
+                % 1000 < r.rate_pm
           GROUP BY 1)
     SELECT r.source AS source,
            CAST(r.n_src AS BIGINT) AS n_docs_in,

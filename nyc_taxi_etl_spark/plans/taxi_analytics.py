@@ -46,8 +46,10 @@ def trips_by_dow(df: DataFrame) -> DataFrame:
 
 def busiest_zones(df: DataFrame, which: str = "pickup", k: int = 100) -> DataFrame:
     """A3/O1 — ``analytics_yellow_s3.py:25-28``; deterministic
-    tie-break on zone id."""
-    col = "pickup_zone" if which == "pickup" else "dropoff_zone"
+    tie-break on zone id. ``which`` is ``"pickup"`` or ``"dropoff"``."""
+    if which not in ("pickup", "dropoff"):
+        raise ValueError(f"which must be 'pickup' or 'dropoff', got {which!r}")
+    col = f"{which}_zone"
     counts = (
         df.filter(F.col(col).isNotNull())
         .groupBy(col)

@@ -15,10 +15,10 @@ independently. A 1000-executor cluster materializes a synthetic
 
 Determinism contract (and the reason this non-file source still gets
 a FULL DuckDB oracle): every random choice is the integer value of an
-md5 prefix — ``h(seed, doc_id, tag) = int(md5(f"{seed}:{doc_id}:{tag}"
-).hexdigest()[:8], 16)`` — the same portable-hash trick the MinHash
-oracles use, so SQL can rebuild the corpus byte-for-byte:
-``('0x' || substr(md5(seed || ':' || d || ':' || tag), 1, 8))::BIGINT``.
+md5 prefix — ``h(seed, doc_id, tag) = md5_int_py(f"{seed}:{doc_id}:{tag}")``
+— the same portable hash the MinHash oracles use, so SQL can rebuild
+the corpus byte-for-byte through its twin ``md5_int_sql`` (both in
+``functions.core``).
 
 Filter pushdown: ``doc_id`` range predicates (=, <, <=, >, >=) narrow
 the generated id range BEFORE partition planning — the generator-source
@@ -38,7 +38,6 @@ nothing because the source IS its own log.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import (
@@ -53,6 +52,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 from pyspark.sql.types import StructType
+
+from ..functions import md5_int_py, md5_int_sql
 
 __all__ = [
     "SynthCorpusDataSource",
@@ -82,9 +83,7 @@ MIN_WORDS, WORD_RANGE = 20, 81  # n_words in [20, 100]
 
 
 def _h(seed: int, doc_id: int, tag: str) -> int:
-    return int(
-        hashlib.md5(f"{seed}:{doc_id}:{tag}".encode()).hexdigest()[:8], 16
-    )
+    return md5_int_py(f"{seed}:{doc_id}:{tag}")
 
 
 def synth_doc(seed: int, doc_id: int) -> Tuple[int, str, str, str, int]:
@@ -106,10 +105,7 @@ def synth_corpus_oracle_sql(seed: int, n_docs: int) -> str:
     vocab = "[" + ",".join(f"'{w}'" for w in VOCAB) + "]"
     langs = "[" + ",".join(f"'{l}'" for l in LANGS) + "]"
     sources = "[" + ",".join(f"'{s}'" for s in SOURCES) + "]"
-    hh = (
-        f"('0x' || substr(md5({seed} || ':' || d || ':' || {{tag}}), 1, 8))"
-        "::BIGINT"
-    )
+    hh = md5_int_sql(f"{seed} || ':' || d || ':' || {{tag}}")
     return f"""
     WITH ids AS (SELECT unnest(generate_series(0, {n_docs - 1})) AS d),
     sized AS (SELECT d,

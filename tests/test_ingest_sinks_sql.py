@@ -36,6 +36,16 @@ def test_month_range_spans_year_boundary():
     ]
 
 
+@pytest.mark.parametrize(
+    "start, end",
+    [("2023-13", "2024-01"), ("2023-00", "2023-02"), ("2023-1", "2023-02")],
+)
+def test_month_range_rejects_months_that_do_not_exist(start, end):
+    # each yielded month becomes a TLC download URL
+    with pytest.raises(ValueError, match="YYYY-MM"):
+        list(month_range(start, end))
+
+
 def test_url_and_path_and_meta_roundtrip():
     url = tlc_url("yellow", 2025, 3)
     assert url.endswith("/yellow_tripdata_2025-03.parquet")
@@ -282,6 +292,74 @@ def test_shingle_udtf_matches_catalyst_path(spark):
     }
     assert via_udtf == via_catalyst and len(via_udtf) > 0
 
+
+# adversarial inputs for the cross-engine conventions in functions.core
+_TWIN_STRINGS = ["", " ", "café", "数据处理", "🚕🗽", "ab" * 500, "a\tb\nc"]
+_TWIN_WINDOWS = [(1, 8), (9, 8), (1, 6), (7, 1), (1, 13), (1, 15), (18, 15)]
+_TWIN_MONEY = [0.005, 1.005, 2.675, -1.125, 12345678.125, 0.1 + 0.2]
+
+
+def test_cross_engine_twins_agree_exactly(spark):
+    """Each Spark convention function and its DuckDB (and Python) twin
+    give the same value bit for bit: the md5-prefix hash on
+    empty/blank/accented/CJK/emoji/long/control-character strings over
+    several (start, n) windows, and exact cents and money sums on
+    half-cent values."""
+    import duckdb as _duck
+
+    from nyc_taxi_etl_spark.functions import (
+        cents,
+        cents_sql,
+        md5_int,
+        md5_int_py,
+        md5_int_sql,
+        money_sum,
+        money_sum_sql,
+    )
+
+    strs, money = list(enumerate(_TWIN_STRINGS)), list(enumerate(_TWIN_MONEY))
+    with _duck.connect() as con:
+        con.execute("CREATE TABLE strs (i INTEGER, s VARCHAR)")
+        con.executemany("INSERT INTO strs VALUES (?, ?)", strs)
+        con.execute("CREATE TABLE money (i INTEGER, x DOUBLE)")
+        con.executemany("INSERT INTO money VALUES (?, ?)", money)
+        cols = ", ".join(md5_int_sql("s", st, n) for st, n in _TWIN_WINDOWS)
+        duck_hash = {
+            r[0]: list(r[1:])
+            for r in con.execute(f"SELECT i, {cols} FROM strs").fetchall()
+        }
+        duck_money = {
+            i: (c, m)
+            for i, c, m in con.execute(
+                f"SELECT i, first({cents_sql('x')}), {money_sum_sql('x')} "
+                "FROM money GROUP BY i"
+            ).fetchall()
+        }
+        duck_total = con.execute(
+            f"SELECT {money_sum_sql('x')} FROM money"
+        ).fetchone()[0]
+
+    spark_hash = {
+        r["i"]: list(r)[1:]
+        for r in spark.createDataFrame(strs, "i INT, s STRING")
+        .select("i", *[md5_int(F.col("s"), st, n) for st, n in _TWIN_WINDOWS])
+        .collect()
+    }
+    py_hash = {
+        i: [md5_int_py(s, st, n) for st, n in _TWIN_WINDOWS] for i, s in strs
+    }
+    assert spark_hash == duck_hash == py_hash
+
+    x = F.col("x")
+    sdf = spark.createDataFrame(money, "i INT, x DOUBLE")
+    spark_money = {
+        r["i"]: (r["c"], r["m"])
+        for r in sdf.groupBy("i")
+        .agg(F.first(cents(x)).alias("c"), money_sum(x).alias("m"))
+        .collect()
+    }
+    assert spark_money == duck_money
+    assert sdf.agg(money_sum(x)).first()[0] == duck_total
 
 # ---------------------------------------------------------------------------
 # JSONL / ORC formats (r5)

@@ -278,8 +278,17 @@ def test_phash_pairs_match_brute_force(spark):
 def test_phash_pairs_pigeonhole_invariant(spark):
     from nyc_taxi_etl_spark.operators.multimodal import image_phash_pairs
 
-    with pytest.raises(AssertionError, match="pigeonhole"):
+    with pytest.raises(ValueError, match="pigeonhole"):
         image_phash_pairs(_phash_media(spark), max_hamming=8, blocks=8)
+
+
+def test_banded_signatures_rejects_uneven_bands(spark):
+    # 10 hashes in 4 bands would silently drop mh_8 and mh_9
+    from nyc_taxi_etl_spark.operators.dedup import banded_signatures
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id LONG, text STRING")
+    with pytest.raises(ValueError, match="multiple of bands"):
+        banded_signatures(docs, num_hashes=10, bands=4)
 
 
 def test_phash_skips_non_image_rows(spark):

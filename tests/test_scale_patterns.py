@@ -438,6 +438,19 @@ def test_media_operators_share_one_driver():
     assert _modules_matching(r"DIV 1000") == {"functions/core.py"}
 
 
+def test_cross_engine_conventions_written_once():
+    """Static guard: the exact-cents money rule and the md5-prefix hash
+    are each spelled once per language, in ``functions/core.py``. The
+    one other ``conv(`` is winnow's Spark-SQL-text hash, kept inline in
+    its ``F.expr`` lambda for speed."""
+    core = {"functions/core.py"}
+    assert _modules_matching(r"'0x' \|\|") == core
+    assert _modules_matching(r"\* 100, 0\)") == core
+    assert _modules_matching(r"\* 100\) AS BIGINT") == core
+    assert _modules_matching(r"int\(\s*hashlib\.md5") == core
+    assert _modules_matching(r"conv\(") == core | {"operators/winnow.py"}
+
+
 # The driver's 50-entry window, pinned apart from plans.DRIVER_WINDOW so
 # an edit to the tuple has to be made twice, on purpose.
 _PINNED_WINDOW = (

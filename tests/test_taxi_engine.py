@@ -229,6 +229,11 @@ def test_analytics_catalog_runs(spark, curated, taxi_dir):
     }
     for name, rdf in results.items():
         assert rdf.count() > 0, f"{name} empty"
+    assert results["busiest_pickup"].columns[0] == "pickup_zone"
+    assert results["busiest_dropoff"].columns[0] == "dropoff_zone"
+    # a typo must not silently rank dropoff zones
+    with pytest.raises(ValueError, match="which"):
+        A.busiest_zones(df, "pick_up")
 
 
 def test_unify_handles_all_cabs(spark, taxi_dir):
