@@ -54,8 +54,11 @@ def _year_month(s: str) -> tuple[int, int]:
 def month_range(start: str, end: str) -> Iterator[tuple[int, int]]:
     """Inclusive (year, month) work units between 'YYYY-MM' bounds —
     the reference's prefix-listing month discovery (S6) without S3.
-    A bound that is not a real month raises ``ValueError``."""
+    A bound that is not a real month, or an end before the start,
+    raises ``ValueError``."""
     (y, m), last = _year_month(start), _year_month(end)
+    if (y, m) > last:
+        raise ValueError(f"end month {end!r} is before start month {start!r}")
     while (y, m) <= last:
         yield y, m
         m += 1

@@ -128,6 +128,8 @@ def encode_bmp(img: np.ndarray) -> bytes:
 def decode_bmp(blob: bytes) -> np.ndarray:
     if blob[:2] != b"BM":
         raise ValueError("not a BMP")
+    if len(blob) < 54:  # 14-byte file header + 40-byte BITMAPINFOHEADER
+        raise ValueError("truncated BMP header")
     (pixel_offset,) = struct.unpack_from("<I", blob, 10)
     (info_size,) = struct.unpack_from("<I", blob, 14)
     if info_size < 40:

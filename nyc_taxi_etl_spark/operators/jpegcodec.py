@@ -1,49 +1,59 @@
-"""Pure-numpy baseline JPEG (JFIF) codec — the lossy companion to the
-lossless PNG/BMP/PPM codecs in ``imagecodec.py``.
+"""Pure-numpy JPEG (JFIF) codec — the lossy companion to the lossless
+PNG/BMP/PPM codecs in ``imagecodec.py``.
 
 Real multimodal corpora are overwhelmingly JPEG, so the decode stage of
-the media pipeline must read it. This module implements the baseline
-sequential DCT process of ITU-T T.81 (ISO/IEC 10918-1) with no
-dependency beyond numpy:
+the media pipeline must read it. This module implements the Huffman
+DCT processes of ITU-T T.81 (ISO/IEC 10918-1) with no dependency
+beyond numpy, as ONE scan coder: the baseline sequential process is the
+``Ss=0, Se=63, Ah=Al=0`` case of the progressive (Annex G) machinery,
+in both directions.
 
 * **Decoder** (``decode_jpeg``): marker parse (DQT 8/16-bit, SOF,
-  DHT, SOS, DRI/RSTn, 0xFF fill bytes, APPn/COM skip), entropy decode
-  (canonical Huffman per Annex C, byte unstuffing, restart-interval
-  DC reset), dequantize + zigzag, batched 8×8 inverse DCT
-  (orthonormal separable matrix form over all blocks of a component
-  at once), chroma upsample for h/v sampling factors ≤ 4 with integer
-  max/factor ratios (covers 4:4:4 / 4:2:2 / 4:2:0 / 4:1:1;
-  non-integer ratios raise), YCbCr→RGB per the JFIF matrix. Grayscale
-  scans decode to HxWx3 by channel replication (the media pipeline's
-  image contract). BOTH Huffman processes are decoded: baseline
-  sequential (SOF0/SOF1) and progressive (SOF2, Annex G — spectral
-  selection, successive approximation with DC/AC refinement scans and
-  EOB runs, interleaved and single-component scans). Arithmetic-coded
-  streams raise with a clear message (patent-era rarity;
+  DHT, SOS, DRI/RSTn, 0xFF fill bytes, APPn/COM skip); every scan goes
+  through one walker, ``_decode_scan`` (canonical Huffman per Annex C,
+  byte unstuffing, restart-interval resets; MCU order for interleaved
+  scans, the component's own block grid otherwise; DC then the AC band
+  of each block, as a first pass or a refinement). Baseline
+  (SOF0/SOF1) files decode whether they interleave their components in
+  one scan or send one scan per component; progressive (SOF2) files
+  cover spectral selection and successive approximation with DC/AC
+  refinement scans and EOB runs. The tail is shared: dequantize +
+  zigzag, batched 8×8 inverse DCT (orthonormal separable matrix form
+  over all blocks of a component at once), chroma upsample for h/v
+  sampling factors ≤ 4 with integer max/factor ratios (covers 4:4:4 /
+  4:2:2 / 4:2:0 / 4:1:1; non-integer ratios raise), YCbCr→RGB per the
+  JFIF matrix. Grayscale scans decode to HxWx3 by channel replication
+  (the media pipeline's image contract). Arithmetic-coded streams
+  raise with a clear message (patent-era rarity;
   ``imagecodec.sniff_and_decode`` then tries Pillow, where it is
-  installed).
-* **Encoders**: ``encode_jpeg`` — 4:4:4 baseline with the Annex K
-  reference quantization tables scaled by the libjpeg quality curve
-  (``5000/Q`` below 50, ``200−2Q`` above) and the Annex K "typical"
-  Huffman tables (Tables K.3-K.6) — the same defaults virtually every
-  camera writes, so any conforming decoder reads our output.
-  ``encode_jpeg_progressive`` — the same quantized coefficients
-  emitted as an SOF2 scan script (DC first + refinement, spectral AC
-  bands, two successive-approximation levels for luma), used both as
-  a progressive writer and as the roundtrip pin for the progressive
+  installed). A malformed stream raises ``ValueError``.
+* **Encoders**: both quantize through ``_quantize_rgb`` (4:4:4, the
+  Annex K reference quantization tables scaled by the libjpeg quality
+  curve: ``5000/Q`` below 50, ``200−2Q`` above), write their headers
+  through ``_write_header`` and their scans through ``_encode_scan``,
+  the encoder mirror of the walker. ``encode_jpeg`` writes one
+  interleaved sequential scan with the Annex K "typical" Huffman tables
+  (Tables K.3-K.6) — the same defaults virtually every camera writes,
+  so any conforming decoder reads our output.
+  ``encode_jpeg_progressive`` writes the same quantized coefficients
+  as an SOF2 scan script (DC first + refinement, spectral AC bands,
+  two successive-approximation levels for luma), used both as a
+  progressive writer and as the roundtrip pin for the progressive
   decoder.
 
 Validation posture: the decoder is pinned three independent ways —
-(1) an ANALYTIC fixture test hand-assembles a JPEG byte-by-byte in the
-test file (its own spelling of headers + Huffman tables) whose DC-only
-blocks have closed-form decoded values; (2) encode→decode roundtrips
-at PSNR tolerance (JPEG is lossy; Annex K at q85 keeps a smooth
-gradient within a few counts/pixel); (3) progressive↔baseline
-equivalence — entropy coding is lossless over quantized coefficients,
-so decoding ``encode_jpeg_progressive``'s stream must be
-BIT-IDENTICAL to decoding ``encode_jpeg``'s stream of the same image,
-and real-world SOF2 files (non-interleaved DC, Ah=1 refinements)
-decode with pinned statistics.
+(1) ANALYTIC fixture tests hand-assemble JPEGs byte-by-byte in the
+test file (their own spelling of headers + Huffman tables) whose
+DC-only blocks have closed-form decoded values; (2) encode→decode
+roundtrips at PSNR tolerance (JPEG is lossy; Annex K at q85 keeps a
+smooth gradient within a few counts/pixel); (3) progressive↔baseline
+equivalence — entropy coding is lossless over quantized coefficients
+and both encoders share one quantizer, so decoding
+``encode_jpeg_progressive``'s stream is BIT-IDENTICAL to decoding
+``encode_jpeg``'s stream of the same image by construction, a
+one-scan-per-component baseline stream decodes to the pixels of the
+interleaved one, and real-world SOF2 files (non-interleaved DC, Ah=1
+refinements) decode with pinned statistics.
 
 Scale posture: identical to the other codecs — this runs inside
 Arrow-batched ``mapInPandas`` media tasks (operators/multimodal.py),
@@ -273,12 +283,40 @@ class _BitReader:
 
 class _BitWriter:
     """MSB-first writer with 0xFF byte stuffing; flush pads with 1s
-    (T.81 F.1.2.3)."""
+    (T.81 F.1.2.3). Carries the EOB run a scan owes from block to
+    block, and the refinement correction bits of the blocks inside
+    it."""
 
     def __init__(self) -> None:
         self.out = bytearray()
         self.acc = 0
         self.nbits = 0
+        self.eobrun = 0
+        self.eob_bits: list[int] = []
+
+    def symbol(self, tbl: dict, sym: int) -> None:
+        ln, code = tbl[sym]
+        self.write(code, ln)
+
+    def value(self, tbl: dict, r: int, v: int) -> None:
+        """Symbol ``(r << 4) | size(v)``, then v's size-bit magnitude
+        (F.1.2.1-2; a DC diff is the r = 0 case)."""
+        s = abs(v).bit_length()
+        self.symbol(tbl, (r << 4) | s)
+        if s:
+            self.write(v if v >= 0 else v + (1 << s) - 1, s)
+
+    def end_eobrun(self, tbl: dict) -> None:
+        """Emit the pending EOB run (G.1.2.2) and its correction bits."""
+        if self.eobrun:
+            nbits = self.eobrun.bit_length() - 1
+            self.symbol(tbl, nbits << 4)
+            if nbits:
+                self.write(self.eobrun & ((1 << nbits) - 1), nbits)
+            self.eobrun = 0
+            for bit in self.eob_bits:
+                self.write(bit, 1)
+            self.eob_bits = []
 
     def write(self, code: int, length: int) -> None:
         self.acc = (self.acc << length) | (code & ((1 << length) - 1))
@@ -321,13 +359,17 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
     """Decode a JFIF/JPEG byte string to an HxWx3 uint8 RGB array
     (grayscale replicates into 3 channels).
 
-    Handles baseline sequential (SOF0/SOF1) and progressive (SOF2)
-    Huffman processes — progressive covers spectral selection,
-    successive approximation (DC + AC refinement scans, EOB runs per
-    T.81 Annex G), interleaved and single-component scans, and
-    restart intervals. Entropy decode accumulates quantized
-    coefficients per component; dequantize + batched IDCT + upsample
-    + color run once at the end, shared by both processes."""
+    Every scan goes through the one scan walker, ``_decode_scan``, as
+    soon as the marker loop reaches its SOS (tables may be redefined
+    between scans). Baseline sequential (SOF0/SOF1) is its sequential
+    case ``Ss=0, Se=63, Ah=Al=0``, so a baseline file that sends its
+    components in separate scans decodes as well as an interleaved one;
+    progressive (SOF2) covers spectral selection, successive
+    approximation (DC + AC refinement scans, EOB runs per T.81 Annex
+    G), interleaved and single-component scans, and restart intervals.
+    Entropy decode accumulates quantized coefficients per component;
+    dequantize + batched IDCT + upsample + color run once at the end.
+    A malformed stream raises ``ValueError``."""
     if blob[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -335,10 +377,7 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
     dc_tables: dict[int, dict] = {}
     ac_tables: dict[int, dict] = {}
     restart_interval = 0
-    progressive = False
-    frame = None  # (h, w, [(cid, hf, vf, tq)])
-    scan = None  # ([(cid, td, ta)], data_start) — baseline only
-    state: dict | None = None  # progressive accumulation state
+    state: dict | None = None  # frame geometry + coefficient accumulators
     while pos < len(blob):
         if blob[pos] != 0xFF:
             pos += 1
@@ -403,10 +442,7 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
                 cid = seg[6 + 3 * c]
                 hv = seg[7 + 3 * c]
                 comps.append((cid, hv >> 4, hv & 0x0F, seg[8 + 3 * c]))
-            frame = (h, w, comps)
-            progressive = marker == 0xC2
-            if progressive:
-                state = _progressive_state(frame)
+            state = _frame_state(h, w, comps, progressive=marker == 0xC2)
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
             raise ValueError(
@@ -417,23 +453,18 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", seg, 0)
         elif marker == 0xDA:  # SOS
+            if state is None:
+                raise ValueError("JPEG SOS before SOF")
             ns = seg[0]
             scomps = []
             for s in range(ns):
                 cid = seg[1 + 2 * s]
                 tt = seg[2 + 2 * s]
                 scomps.append((cid, tt >> 4, tt & 0x0F))
-            if not progressive:
-                scan = (scomps, pos + 2 + seglen)
-                pos += 2 + seglen
-                break
-            # progressive: decode this scan now (tables may be
-            # redefined between scans) and continue the marker loop
-            # from wherever its entropy data ends
             ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
             ahal = seg[3 + 2 * ns]
             reader = _BitReader(blob, pos + 2 + seglen)
-            _progressive_scan(
+            _decode_scan(
                 reader,
                 state,
                 scomps,
@@ -441,77 +472,34 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
                 se,
                 ahal >> 4,
                 ahal & 0x0F,
+                qtables,
                 dc_tables,
                 ac_tables,
                 restart_interval,
             )
-            state["nscans"] = state.get("nscans", 0) + 1
+            # carry on from wherever this scan's entropy data ends
             pos = reader.pos
             continue
         pos += 2 + seglen
-    if frame is None or (not progressive and scan is None):
-        raise ValueError("JPEG missing SOF or SOS")
-    if progressive and not state.get("nscans"):
-        raise ValueError("progressive JPEG with no SOS scans")
-    h, w, comps = frame
-    if progressive:
-        coefs = state["coef"]
-    else:
-        hmax, vmax, mcux, mcuy = _geometry(h, w, comps)
-        coefs = {
-            cid: np.zeros((mcuy * vf, mcux * hf, 64), dtype=np.int64)
-            for cid, hf, vf, _ in comps
-        }
-        scomps, data_start = scan
-        cinfo = {cid: (hf, vf, tq) for cid, hf, vf, tq in comps}
-        reader = _BitReader(blob, data_start)
-        pred = {cid: 0 for cid, _, _ in scomps}
-        mcu_count = 0
-
-        def decode_block(dc_tbl, ac_tbl) -> np.ndarray:
-            zz = np.zeros(64, dtype=np.int64)
-            s = _huff_decode(reader, dc_tbl)
-            diff = _extend(reader.read_bits(s), s) if s else 0
-            zz[0] = diff  # caller adds predictor
-            k = 1
-            while k < 64:
-                rs = _huff_decode(reader, ac_tbl)
-                r, s = rs >> 4, rs & 0x0F
-                if s == 0:
-                    if r == 15:  # ZRL
-                        k += 16
-                        continue
-                    break  # EOB
-                k += r
-                if k > 63:
-                    raise ValueError("AC run past end of block")
-                zz[k] = _extend(reader.read_bits(s), s)
-                k += 1
-            return zz
-
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if (
-                    restart_interval
-                    and mcu_count
-                    and mcu_count % restart_interval == 0
-                ):
-                    reader.byte_align_past_restart()
-                    pred = {cid: 0 for cid in pred}
-                for cid, td, ta in scomps:
-                    hf, vf, _tq = cinfo[cid]
-                    for by in range(vf):
-                        for bx in range(hf):
-                            zz = decode_block(dc_tables[td], ac_tables[ta])
-                            pred[cid] += int(zz[0])
-                            zz[0] = pred[cid]
-                            coefs[cid][my * vf + by, mx * hf + bx] = zz
-                mcu_count += 1
-    return _finish(h, w, comps, coefs, qtables)
+    if state is None or not state["quant"]:
+        raise ValueError("JPEG with no SOF or no SOS scans")
+    if not state["progressive"]:
+        missing = [c[0] for c in state["comps"] if c[0] not in state["quant"]]
+        if missing:
+            raise ValueError(
+                f"baseline JPEG scans leave components {missing} undecoded"
+            )
+    return _finish(state)
 
 
-def _geometry(h: int, w: int, comps) -> tuple[int, int, int, int]:
-    """(hmax, vmax, mcux, mcuy) with sampling-ratio validation."""
+def _frame_state(h: int, w: int, comps, progressive: bool) -> dict:
+    """Frame geometry + coefficient accumulators, shared by both
+    processes. Arrays are MCU-padded (covers interleaved scans);
+    single-component scans walk only the component's own block grid
+    (``nbw``/``nbh`` -- ceil of the component's true dimensions), per
+    A.2.2/G.2: trailing MCU-pad blocks exist only in interleaved scans.
+    ``quant`` latches each component's quantization table at its first
+    scan (B.2.4.1)."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     # integer replication upsample needs hmax/vmax to be exact
@@ -524,19 +512,32 @@ def _geometry(h: int, w: int, comps) -> tuple[int, int, int, int]:
                 f"unsupported JPEG sampling ratio (component {cid} "
                 f"{hf}x{vf} vs max {hmax}x{vmax}: non-integer upsample)"
             )
-    return hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    state = {"h": h, "w": w, "comps": comps, "progressive": progressive,
+             "hmax": hmax, "vmax": vmax, "mcux": mcux, "mcuy": mcuy,
+             "coef": {}, "geom": {}, "quant": {}}
+    for cid, hf, vf, tq in comps:
+        cw = -(-w * hf // hmax)  # ceil(w * hf / hmax)
+        ch = -(-h * vf // vmax)
+        state["coef"][cid] = np.zeros(
+            (mcuy * vf, mcux * hf, 64), dtype=np.int64
+        )
+        state["geom"][cid] = (hf, vf, tq, -(-cw // 8), -(-ch // 8))
+    return state
 
 
-def _finish(h, w, comps, coefs, qtables) -> np.ndarray:
+def _finish(state: dict) -> np.ndarray:
     """Shared decode tail: dequantize the accumulated zigzag
     coefficients, batched IDCT over every block of a component at
     once, upsample, crop, color-convert."""
-    hmax, vmax, _, _ = _geometry(h, w, comps)
+    h, w, comps = state["h"], state["w"], state["comps"]
+    hmax, vmax = state["hmax"], state["vmax"]
     full = {}
-    for cid, hf, vf, tq in comps:
-        zz = coefs[cid]  # (bh, bw, 64) zigzag-ordered
+    for cid, hf, vf, _tq in comps:
+        zz = state["coef"][cid]  # (bh, bw, 64) zigzag-ordered
         natural = np.zeros(zz.shape, dtype=np.float64)
-        natural[:, :, ZIGZAG] = zz * qtables[tq]
+        # a component no scan reached is all zeros: any step will do
+        natural[:, :, ZIGZAG] = zz * state["quant"].get(cid, 0)
         bh, bw = natural.shape[:2]
         blocks = natural.reshape(bh, bw, 8, 8)
         # idct: D.T @ X @ D for all blocks at once
@@ -565,31 +566,11 @@ def _finish(h, w, comps, coefs, qtables) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Progressive scans (T.81 Annex G)
+# The scan walker (T.81 Annex A.2, F.2 and G)
 # ---------------------------------------------------------------------------
 
 
-def _progressive_state(frame) -> dict:
-    """Coefficient accumulators + per-component geometry for a SOF2
-    frame. Arrays are MCU-padded (covers interleaved DC scans);
-    non-interleaved scans iterate only the component's own block grid
-    (``nbw``/``nbh`` -- ceil of the component's true dimensions), per
-    G.2: trailing MCU-pad blocks exist only in interleaved scans."""
-    h, w, comps = frame
-    hmax, vmax, mcux, mcuy = _geometry(h, w, comps)
-    state = {"h": h, "w": w, "comps": comps, "mcux": mcux, "mcuy": mcuy,
-             "coef": {}, "geom": {}}
-    for cid, hf, vf, tq in comps:
-        cw = -(-w * hf // hmax)  # ceil(w * hf / hmax)
-        ch = -(-h * vf // vmax)
-        state["coef"][cid] = np.zeros(
-            (mcuy * vf, mcux * hf, 64), dtype=np.int64
-        )
-        state["geom"][cid] = (hf, vf, tq, -(-cw // 8), -(-ch // 8))
-    return state
-
-
-def _progressive_scan(
+def _decode_scan(
     reader: _BitReader,
     state: dict,
     scomps,
@@ -597,149 +578,159 @@ def _progressive_scan(
     se: int,
     ah: int,
     al: int,
+    qtables: dict,
     dc_tables: dict,
     ac_tables: dict,
     restart_interval: int,
 ) -> None:
-    """Decode one progressive scan into the coefficient accumulators.
+    """Decode one scan, baseline or progressive, into the frame's
+    coefficient accumulators; a sequential frame's scans are the case
+    ``Ss=0, Se=63, Ah=Al=0``.
 
-    DC scans (Ss=0): interleaved (MCU order) or single-component;
-    first pass codes diffs of coef/2^Al, refinements append one bit.
-    AC scans (Ss>=1): single component, spectral band [Ss, Se], with
-    EOB-run coding; refinement passes emit correction bits for
-    already-nonzero coefficients (G.1.2.3 / the libjpeg
-    decode_mcu_AC_refine protocol)."""
-    coef = state["coef"]
-    geom = state["geom"]
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        pred = {cid: 0 for cid, _, _ in scomps}
-        interleaved = len(scomps) > 1
-        if interleaved:
-            units = state["mcuy"] * state["mcux"]
-        else:
-            cid0 = scomps[0][0]
-            _, _, _, nbw0, nbh0 = geom[cid0]
-            units = nbw0 * nbh0
-        mcux = state["mcux"]
-        count = 0
-        for u in range(units):
-            if restart_interval and count and count % restart_interval == 0:
-                reader.byte_align_past_restart()
-                pred = {cid: 0 for cid in pred}
-            for cid, td, _ta in scomps:
-                hf, vf, _tq, nbw, _nbh = geom[cid]
-                if interleaved:
-                    my, mx = divmod(u, mcux)
-                    blocks = [
-                        (my * vf + by, mx * hf + bx)
-                        for by in range(vf)
-                        for bx in range(hf)
-                    ]
-                else:
-                    blocks = [divmod(u, nbw)]
-                for by, bx in blocks:
-                    if ah == 0:
-                        s = _huff_decode(reader, dc_tables[td])
-                        diff = _extend(reader.read_bits(s), s) if s else 0
-                        pred[cid] += diff
-                        coef[cid][by, bx, 0] = pred[cid] << al
-                    else:
-                        if reader.read_bit():
-                            coef[cid][by, bx, 0] |= 1 << al
-            count += 1
-        return
-    # AC scan: exactly one component (G.2)
-    if len(scomps) != 1:
+    Blocks go in MCU order when the scan holds more than one
+    component, else over the component's own ``nbw x nbh`` grid; a
+    restart unit is one MCU or one block. Per block: DC when ``Ss ==
+    0`` (first pass codes diffs of coef/2^Al, refinement appends one
+    bit), then the AC band ``[max(Ss, 1), Se]`` (first pass: runs, ZRL,
+    EOB runs; refinement: correction bits for already-nonzero
+    coefficients, G.1.2.3 / the libjpeg decode_mcu_AC_refine
+    protocol)."""
+    if not state["progressive"]:
+        ss, se, ah, al = 0, 63, 0, 0  # A.2: sequential scans ignore them
+    elif ss == 0 and se != 0:
+        raise ValueError("progressive DC scan must have Se=0")
+    elif ss and len(scomps) != 1:
+        # AC scan: exactly one component (G.2)
         raise ValueError("progressive AC scan must be single-component")
-    cid, _td, ta = scomps[0]
-    _hf, _vf, _tq, nbw, nbh = geom[cid]
-    tbl = ac_tables[ta]
-    carr = coef[cid]
+    comps = []
+    for cid, td, ta in scomps:
+        if cid not in state["geom"]:
+            raise ValueError(f"JPEG scan names component {cid} not in the frame")
+        hf, vf, tq, nbw, nbh = state["geom"][cid]
+        dc = dc_tables.get(td) if ss == 0 and ah == 0 else {}
+        ac = ac_tables.get(ta) if se else {}
+        if dc is None or ac is None:
+            raise ValueError(
+                f"JPEG scan names an undefined Huffman table "
+                f"(component {cid}: DC {td}, AC {ta})"
+            )
+        if cid not in state["quant"]:
+            if tq not in qtables:
+                raise ValueError(
+                    f"JPEG component {cid} names undefined quantization "
+                    f"table {tq}"
+                )
+            state["quant"][cid] = qtables[tq]
+        comps.append((state["coef"][cid], dc, ac, hf, vf, nbw, nbh))
+    if len(comps) > 1:
+        mcux = state["mcux"]
+        units = [
+            [
+                (i, my * vf + by, mx * hf + bx)
+                for i, (_, _, _, hf, vf, _, _) in enumerate(comps)
+                for by in range(vf)
+                for bx in range(hf)
+            ]
+            for my in range(state["mcuy"])
+            for mx in range(mcux)
+        ]
+    else:
+        nbw, nbh = comps[0][5:]
+        units = [[(0, by, bx)] for by in range(nbh) for bx in range(nbw)]
+    ac_pass = _refine_ac if ah else _first_ac
+    lo = max(ss, 1)
+    pred = [0] * len(comps)
     eobrun = 0
-    p1, m1 = 1 << al, -(1 << al)
-    count = 0
-    for u in range(nbw * nbh):
-        if restart_interval and count and count % restart_interval == 0:
+    for n, unit in enumerate(units):
+        if restart_interval and n and n % restart_interval == 0:
             reader.byte_align_past_restart()
+            pred = [0] * len(comps)
             eobrun = 0
-        by, bx = divmod(u, nbw)
-        zz = carr[by, bx]
-        if ah == 0:  # first pass for this band
-            if eobrun:
-                eobrun -= 1
+        for i, by, bx in unit:
+            carr, dc, ac = comps[i][:3]
+            zz = carr[by, bx]
+            if ss == 0:
+                if ah == 0:
+                    s = _huff_decode(reader, dc)
+                    if s:
+                        pred[i] += _extend(reader.read_bits(s), s)
+                    zz[0] = pred[i] << al
+                elif reader.read_bit():
+                    zz[0] |= 1 << al
+            if se:
+                eobrun = ac_pass(reader, ac, zz, lo, se, al, eobrun)
+
+
+def _first_ac(reader, tbl, zz, ss, se, al, eobrun) -> int:
+    """AC first pass over band [ss, se] of one block; returns the EOB
+    run still owed by the blocks after it."""
+    if eobrun:
+        return eobrun - 1
+    k = ss
+    while k <= se:
+        rs = _huff_decode(reader, tbl)
+        r, s = rs >> 4, rs & 0x0F
+        if s == 0:
+            if r == 15:
+                k += 16  # ZRL
+                continue
+            return (1 << r) - 1 + (reader.read_bits(r) if r else 0)
+        k += r
+        if k > se:
+            raise ValueError("AC run past end of band")
+        zz[k] = _extend(reader.read_bits(s), s) << al
+        k += 1
+    return 0
+
+
+def _refine_ac(reader, tbl, zz, ss, se, al, eobrun) -> int:
+    """AC refinement pass (G.1.2.3) over band [ss, se] of one block;
+    returns the EOB run still owed by the blocks after it."""
+    p1, m1 = 1 << al, -(1 << al)
+    k = ss
+    if eobrun:
+        # EOB region: only correction bits for nonzero coefs
+        eobrun -= 1
+    else:
+        while k <= se:
+            rs = _huff_decode(reader, tbl)
+            r, s = rs >> 4, rs & 0x0F
+            newval = 0
+            if s == 0:
+                if r != 15:
+                    eobrun = (1 << r) - 1
+                    if r:
+                        eobrun += reader.read_bits(r)
+                    break  # rest of band refined below
+                # r == 15: ZRL -- pass 16 zero-history coefs
             else:
-                k = ss
-                while k <= se:
-                    rs = _huff_decode(reader, tbl)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:
-                            k += 16  # ZRL
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += reader.read_bits(r)
+                if s != 1:
+                    raise ValueError("invalid magnitude in AC refinement scan")
+                newval = p1 if reader.read_bit() else m1
+            # advance past r zero-history coefs, emitting correction
+            # bits for nonzero ones along the way
+            while k <= se:
+                if zz[k]:
+                    if reader.read_bit() and not (abs(int(zz[k])) & p1):
+                        zz[k] += p1 if zz[k] > 0 else m1
+                else:
+                    if r == 0:
                         break
-                    k += r
-                    if k > se:
-                        raise ValueError("AC run past end of band")
-                    zz[k] = _extend(reader.read_bits(s), s) << al
-                    k += 1
-        else:  # refinement pass (G.1.2.3)
-            if eobrun:
-                eobrun -= 1
-                # EOB region: only correction bits for nonzero coefs
-                for k in range(ss, se + 1):
-                    if zz[k]:
-                        if reader.read_bit() and not (abs(int(zz[k])) & p1):
-                            zz[k] += p1 if zz[k] > 0 else m1
-            else:
-                k = ss
-                while k <= se:
-                    rs = _huff_decode(reader, tbl)
-                    r, s = rs >> 4, rs & 0x0F
-                    newval = 0
-                    if s == 0:
-                        if r != 15:
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += reader.read_bits(r)
-                            break  # rest of band refined below
-                        # r == 15: ZRL -- pass 16 zero-history coefs
-                    else:
-                        if s != 1:
-                            raise ValueError(
-                                "invalid magnitude in AC refinement scan"
-                            )
-                        newval = p1 if reader.read_bit() else m1
-                    # advance past r zero-history coefs, emitting
-                    # correction bits for nonzero ones along the way
-                    while k <= se:
-                        if zz[k]:
-                            if reader.read_bit() and not (
-                                abs(int(zz[k])) & p1
-                            ):
-                                zz[k] += p1 if zz[k] > 0 else m1
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if newval and k <= se:
-                        zz[k] = newval
-                    k += 1
-                # EOB reached mid-block: refine the rest of the band
-                for kk in range(k, se + 1):
-                    if zz[kk]:
-                        if reader.read_bit() and not (abs(int(zz[kk])) & p1):
-                            zz[kk] += p1 if zz[kk] > 0 else m1
-        count += 1
+                    r -= 1
+                k += 1
+            if newval and k <= se:
+                zz[k] = newval
+            k += 1
+    # EOB reached (in this block or an earlier one): refine the rest
+    for kk in range(k, se + 1):
+        if zz[kk]:
+            if reader.read_bit() and not (abs(int(zz[kk])) & p1):
+                zz[kk] += p1 if zz[kk] > 0 else m1
+    return eobrun
 
 
 # ---------------------------------------------------------------------------
-# Encoder (baseline, 4:4:4, Annex K tables)
+# Encoder (4:4:4, Annex K quantization; one scan coder for both processes)
 # ---------------------------------------------------------------------------
 
 
@@ -751,126 +742,12 @@ def _quality_scale(base: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(q, 1, 255)
 
 
-def _category(v: int) -> int:
-    return int(abs(v)).bit_length()
-
-
-def _encode_block(
-    writer: _BitWriter, zz: np.ndarray, pred: int, dc_tbl, ac_tbl
-) -> int:
-    dc = int(zz[0])
-    diff = dc - pred
-    s = _category(diff)
-    ln, code = dc_tbl[s]
-    writer.write(code, ln)
-    if s:
-        writer.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    run = 0
-    last_nz = 0
-    for k in range(63, 0, -1):
-        if zz[k]:
-            last_nz = k
-            break
-    for k in range(1, last_nz + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            ln, code = ac_tbl[0xF0]  # ZRL
-            writer.write(code, ln)
-            run -= 16
-        s = _category(v)
-        ln, code = ac_tbl[(run << 4) | s]
-        writer.write(code, ln)
-        writer.write(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        ln, code = ac_tbl[0x00]  # EOB
-        writer.write(code, ln)
-    return dc
-
-
-def encode_jpeg(img: np.ndarray, quality: int = 85) -> bytes:
-    """Encode an HxWx3 uint8 RGB array as a baseline 4:4:4 JFIF JPEG."""
-    a = np.asarray(img, dtype=np.float64)
-    if a.ndim != 3 or a.shape[2] != 3:
-        raise ValueError(f"expected HxWx3 uint8 image, got shape {a.shape}")
-    h, w = a.shape[:2]
-    r, g, b = a[..., 0], a[..., 1], a[..., 2]
-    yy = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    # zigzag-ordered throughout: quantization divides zigzag-ordered
-    # coefficients, and DQT payloads are zigzag-ordered by spec
-    qy = _quality_scale(QUANT_LUMA[ZIGZAG], quality)
-    qc = _quality_scale(QUANT_CHROMA[ZIGZAG], quality)
-    # pad to block multiple by edge replication
-    hp, wp = -(-h // 8) * 8, -(-w // 8) * 8
-    planes = []
-    for p in (yy, cb, cr):
-        planes.append(
-            np.pad(p, ((0, hp - h), (0, wp - w)), mode="edge") - 128.0
-        )
-    dc_y = _encode_table(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_y = _encode_table(AC_LUMA_BITS, AC_LUMA_VALS)
-    dc_c = _encode_table(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    ac_c = _encode_table(AC_CHROMA_BITS, AC_CHROMA_VALS)
-    writer = _BitWriter()
-    preds = [0, 0, 0]
-    tables = [(dc_y, ac_y, qy), (dc_c, ac_c, qc), (dc_c, ac_c, qc)]
-    for by in range(hp // 8):
-        for bx in range(wp // 8):
-            for ci in range(3):
-                dc_tbl, ac_tbl, qt = tables[ci]
-                blk = planes[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                coef = _DCT @ blk @ _DCT.T
-                zz = np.round(coef.reshape(64)[ZIGZAG] / qt).astype(np.int64)
-                preds[ci] = _encode_block(writer, zz, preds[ci], dc_tbl, ac_tbl)
-    data = writer.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    def dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-        return bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xE0, b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    )
-    out += seg(0xDB, bytes([0x00]) + bytes(qy.astype(np.uint8)))
-    out += seg(0xDB, bytes([0x01]) + bytes(qc.astype(np.uint8)))
-    out += seg(
-        0xC0,
-        bytes([8])
-        + struct.pack(">HH", h, w)
-        + bytes([3])
-        + bytes([1, 0x11, 0])  # Y: 1x1, qtable 0
-        + bytes([2, 0x11, 1])  # Cb
-        + bytes([3, 0x11, 1]),  # Cr
-    )
-    out += seg(0xC4, dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS))
-    out += seg(0xC4, dht(1, 0, AC_LUMA_BITS, AC_LUMA_VALS))
-    out += seg(0xC4, dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS))
-    out += seg(0xC4, dht(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS))
-    out += seg(
-        0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-    )
-    out += data
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Progressive encoder (spectral selection + successive approximation)
-# ---------------------------------------------------------------------------
-
-
 def _quantize_rgb(img: np.ndarray, quality: int):
-    """Shared front half of encoding: color transform, pad, batched
-    DCT, zigzag quantize. Returns (h, w, qy, qc, coefs) with
-    ``coefs[ci]`` shaped (bh, bw, 64) int64 zigzag-ordered."""
+    """Front half of encoding: color transform, pad by edge
+    replication, batched DCT, zigzag quantize. Returns (h, w, qy, qc,
+    coefs) with ``coefs[ci]`` shaped (bh, bw, 64) int64 zigzag-ordered
+    (quantization divides zigzag-ordered coefficients, and DQT payloads
+    are zigzag-ordered by spec)."""
     a = np.asarray(img, dtype=np.float64)
     if a.ndim != 3 or a.shape[2] != 3:
         raise ValueError(f"expected HxWx3 uint8 image, got shape {a.shape}")
@@ -893,152 +770,177 @@ def _quantize_rgb(img: np.ndarray, quality: int):
     return h, w, qy, qc, coefs
 
 
-def _emit_sym(writer: _BitWriter, tbl: dict, sym: int) -> None:
-    ln, code = tbl[sym]
-    writer.write(code, ln)
+def _segment(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
 
 
-def _encode_dc_scan(coefs, dc_tbls, ah: int, al: int) -> bytes:
-    """Interleaved DC scan over all components (4:4:4 -> MCU =
-    one block per component). Ah=0: diff-code coef0 >> Al (arithmetic
-    shift, G.1.2.1); Ah>0: one appended magnitude bit per block."""
+def _write_header(sof: int, h: int, w: int, qy, qc, dhts) -> bytearray:
+    """SOI, JFIF APP0, the luma and chroma DQTs, a 4:4:4 three-component
+    SOF (0xC0 baseline, 0xC2 progressive), then one DHT per ``(tc, th,
+    bits, vals)`` of ``dhts`` in the order listed."""
+    out = bytearray(b"\xff\xd8")
+    out += _segment(
+        0xE0, b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
+    )
+    out += _segment(0xDB, bytes([0x00]) + bytes(qy.astype(np.uint8)))
+    out += _segment(0xDB, bytes([0x01]) + bytes(qc.astype(np.uint8)))
+    out += _segment(
+        sof,
+        bytes([8])
+        + struct.pack(">HH", h, w)
+        + bytes([3])
+        + bytes([1, 0x11, 0])  # Y: 1x1, qtable 0
+        + bytes([2, 0x11, 1])  # Cb
+        + bytes([3, 0x11, 1]),  # Cr
+    )
+    for tc, th, bits, vals in dhts:
+        out += _segment(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
+    return out
+
+
+def _write_scan(coefs, dhts, comps, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS segment + entropy-coded data of one scan over ``comps``
+    (indices into ``_quantize_rgb``'s ``coefs``: 0 is luma and codes
+    with tables 0, 1 and 2 are chroma and code with tables 1)."""
+    tables = {(tc, th): _encode_table(bits, vals) for tc, th, bits, vals in dhts}
+    body = bytes([len(comps)])
+    scomps = []
+    for ci in comps:
+        t = min(ci, 1)
+        body += bytes([ci + 1, (0 if ss else t) << 4 | (t if se else 0)])
+        scomps.append((coefs[ci].tolist(), tables.get((0, t)), tables.get((1, t))))
+    return _segment(0xDA, body + bytes([ss, se, ah << 4 | al])) + _encode_scan(
+        scomps, ss, se, ah, al
+    )
+
+
+def _encode_scan(scomps, ss: int, se: int, ah: int, al: int) -> bytes:
+    """Entropy-code one scan of ``scomps = [(coefs, dc_tbl, ac_tbl)]``
+    (nested (bh, bw, 64) zigzag lists; 4:4:4, so an MCU is one block
+    per component) — the encoder mirror of ``_decode_scan``. Per block:
+    DC when ``Ss == 0``, then the AC band ``[max(Ss, 1), Se]``, each as
+    a first pass or a refinement. A sequential scan (``Ss = 0 < Se``)
+    ends each block's EOB run at once: the Annex K tables define only
+    EOB0."""
     writer = _BitWriter()
-    bh, bw = coefs[0].shape[:2]
-    preds = [0, 0, 0]
+    bh, bw = len(scomps[0][0]), len(scomps[0][0][0])
+    ac_pass = _encode_ac_refine if ah else _encode_ac_first
+    lo = max(ss, 1)
+    preds = [0] * len(scomps)
     for by in range(bh):
         for bx in range(bw):
-            for ci in range(3):
-                v0 = int(coefs[ci][by, bx, 0])
-                if ah == 0:
-                    v = v0 >> al
-                    diff = v - preds[ci]
-                    preds[ci] = v
-                    s = _category(diff)
-                    _emit_sym(writer, dc_tbls[ci], s)
-                    if s:
-                        writer.write(
-                            diff if diff >= 0 else diff + (1 << s) - 1, s
-                        )
-                else:
-                    writer.write((v0 >> al) & 1, 1)
+            for i, (coefs, dc_tbl, ac_tbl) in enumerate(scomps):
+                zz = coefs[by][bx]
+                if ss == 0:
+                    v = zz[0] >> al  # arithmetic shift (G.1.2.1)
+                    if ah:
+                        writer.write(v & 1, 1)
+                    else:
+                        writer.value(dc_tbl, 0, v - preds[i])
+                        preds[i] = v
+                if se:
+                    ac_pass(writer, ac_tbl, zz, lo, se, al)
+                    if ss == 0:
+                        writer.end_eobrun(ac_tbl)
+    writer.end_eobrun(scomps[0][2])
     return writer.flush()
 
 
-def _encode_ac_first_scan(carr, tbl, ss: int, se: int, al: int) -> bytes:
-    """AC first pass for band [ss, se] at precision Al: runs, ZRL and
-    EOB-run coding of the point-transformed (sign-magnitude >> Al)
-    coefficients — the encoder mirror of the decoder's Ah=0 branch."""
-    writer = _BitWriter()
-    bh, bw = carr.shape[:2]
-    eobrun = 0
-
-    def flush_eobrun():
-        nonlocal eobrun
-        if eobrun:
-            nbits = eobrun.bit_length() - 1
-            _emit_sym(writer, tbl, nbits << 4)
-            if nbits:
-                writer.write(eobrun & ((1 << nbits) - 1), nbits)
-            eobrun = 0
-
-    for by in range(bh):
-        for bx in range(bw):
-            r = 0
-            for k in range(ss, se + 1):
-                v = int(carr[by, bx, k])
-                t = abs(v) >> al
-                if t == 0:
-                    r += 1
-                    continue
-                flush_eobrun()
-                while r > 15:
-                    _emit_sym(writer, tbl, 0xF0)  # ZRL
-                    r -= 16
-                s = t.bit_length()
-                _emit_sym(writer, tbl, (r << 4) | s)
-                val = t if v > 0 else -t
-                writer.write(val if val >= 0 else val + (1 << s) - 1, s)
-                r = 0
-            if r > 0:  # trailing zeros (or all-zero band): EOB block
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
-    flush_eobrun()
-    return writer.flush()
+def _encode_ac_first(writer, tbl, zz, ss: int, se: int, al: int) -> None:
+    """AC first pass over band [ss, se] of one block at precision Al:
+    runs, ZRL, and a block whose band ends in zeros joins the EOB run
+    — the encoder mirror of ``_first_ac``."""
+    r = 0
+    for k in range(ss, se + 1):
+        v = zz[k]
+        t = abs(v) >> al
+        if t == 0:
+            r += 1
+            continue
+        writer.end_eobrun(tbl)
+        while r > 15:
+            writer.symbol(tbl, 0xF0)  # ZRL
+            r -= 16
+        writer.value(tbl, r, t if v > 0 else -t)
+        r = 0
+    if r > 0:  # trailing zeros (or all-zero band): EOB block
+        writer.eobrun += 1
+        if writer.eobrun == 0x7FFF:
+            writer.end_eobrun(tbl)
 
 
-def _encode_ac_refine_scan(carr, tbl, ss: int, se: int, al: int) -> bytes:
-    """AC refinement pass (Ah = Al+1): correction bits for
-    already-nonzero coefficients, (r,1) symbols + sign bit for newly
-    nonzero ones, EOB-runs carrying buffered correction bits — the
-    encoder mirror of the decoder's G.1.2.3 branch.
+def _encode_ac_refine(writer, tbl, zz, ss: int, se: int, al: int) -> None:
+    """AC refinement pass (Ah = Al+1) over band [ss, se] of one block:
+    correction bits for already-nonzero coefficients, (r,1) symbols +
+    sign bit for newly nonzero ones, EOB runs carrying buffered
+    correction bits — the encoder mirror of ``_refine_ac``.
 
     Two correction-bit buffers, as in every conforming implementation:
-    ``eob_bits`` holds bits belonging to blocks already inside the
-    pending EOB run (emitted right after the EOB symbol, where the
-    decoder's EOB-region sweep reads them) and ``cur_bits`` holds the
-    CURRENT block's bits (emitted after this block's next ZRL/(r,1)
-    symbol, where the decoder's advance loop reads them)."""
-    writer = _BitWriter()
-    bh, bw = carr.shape[:2]
-    eobrun = 0
-    eob_bits: list[int] = []
-
-    def flush_eobrun():
-        nonlocal eobrun, eob_bits
-        if eobrun:
-            nbits = eobrun.bit_length() - 1
-            _emit_sym(writer, tbl, nbits << 4)
-            if nbits:
-                writer.write(eobrun & ((1 << nbits) - 1), nbits)
-            eobrun = 0
-            for bit in eob_bits:
+    ``writer.eob_bits`` holds bits belonging to blocks already inside
+    the pending EOB run (emitted right after the EOB symbol, where the
+    decoder's EOB-region sweep reads them) and ``cur_bits`` holds this
+    block's bits (emitted after its next ZRL/(r,1) symbol, where the
+    decoder's advance loop reads them)."""
+    absvals = [abs(v) >> al for v in zz[ss : se + 1]]
+    eob = ss - 1  # index of last NEWLY nonzero coef, if any
+    for k, t in enumerate(absvals, ss):
+        if t == 1:
+            eob = k
+    r = 0
+    cur_bits: list[int] = []
+    for k, t in enumerate(absvals, ss):
+        if t == 0:
+            r += 1
+            continue
+        while r > 15 and k <= eob:
+            writer.end_eobrun(tbl)
+            writer.symbol(tbl, 0xF0)
+            r -= 16
+            for bit in cur_bits:
                 writer.write(bit, 1)
-            eob_bits = []
+            cur_bits = []
+        if t > 1:
+            # already nonzero at coarser precision: buffer the
+            # correction bit until this block's next symbol
+            cur_bits.append(t & 1)
+            continue
+        # newly nonzero at this precision: (r,1) + sign bit
+        writer.end_eobrun(tbl)
+        writer.value(tbl, r, 1 if zz[k] > 0 else -1)
+        for bit in cur_bits:
+            writer.write(bit, 1)
+        cur_bits = []
+        r = 0
+    if r > 0 or cur_bits:
+        writer.eobrun += 1
+        writer.eob_bits.extend(cur_bits)
+        if writer.eobrun == 0x7FFF:
+            writer.end_eobrun(tbl)
 
-    for by in range(bh):
-        for bx in range(bw):
-            absvals = [
-                abs(int(carr[by, bx, k])) >> al for k in range(ss, se + 1)
-            ]
-            eob = ss - 1  # index of last NEWLY nonzero coef, if any
-            for k in range(ss, se + 1):
-                if absvals[k - ss] == 1:
-                    eob = k
-            r = 0
-            cur_bits: list[int] = []
-            for k in range(ss, se + 1):
-                t = absvals[k - ss]
-                if t == 0:
-                    r += 1
-                    continue
-                while r > 15 and k <= eob:
-                    flush_eobrun()
-                    _emit_sym(writer, tbl, 0xF0)
-                    r -= 16
-                    for bit in cur_bits:
-                        writer.write(bit, 1)
-                    cur_bits = []
-                if t > 1:
-                    # already nonzero at coarser precision: buffer the
-                    # correction bit until this block's next symbol
-                    cur_bits.append(t & 1)
-                    continue
-                # newly nonzero at this precision
-                flush_eobrun()
-                _emit_sym(writer, tbl, (r << 4) | 1)
-                writer.write(1 if int(carr[by, bx, k]) > 0 else 0, 1)
-                for bit in cur_bits:
-                    writer.write(bit, 1)
-                cur_bits = []
-                r = 0
-            if r > 0 or cur_bits:
-                eobrun += 1
-                eob_bits.extend(cur_bits)
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
-    flush_eobrun()
-    return writer.flush()
+
+def _encode(img: np.ndarray, quality: int, sof: int, dhts, script) -> bytes:
+    """Quantize, write the header, then each scan ``(comps, Ss, Se, Ah,
+    Al)`` of ``script``."""
+    h, w, qy, qc, coefs = _quantize_rgb(img, quality)
+    out = _write_header(sof, h, w, qy, qc, dhts)
+    for scan in script:
+        out += _write_scan(coefs, dhts, *scan)
+    return bytes(out + b"\xff\xd9")
+
+
+#: Baseline DHTs, in the order ``encode_jpeg`` writes them.
+_BASELINE_DHTS = (
+    (0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
+    (1, 0, AC_LUMA_BITS, AC_LUMA_VALS),
+    (0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
+    (1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS),
+)
+
+
+def encode_jpeg(img: np.ndarray, quality: int = 85) -> bytes:
+    """Encode an HxWx3 uint8 RGB array as a baseline 4:4:4 JFIF JPEG:
+    one interleaved sequential scan (``Ss=0, Se=63, Ah=Al=0``)."""
+    return _encode(img, quality, 0xC0, _BASELINE_DHTS, [((0, 1, 2), 0, 63, 0, 0)])
 
 
 #: Progressive AC scans need EOBn symbols (0x10..0xE0) that the Annex K
@@ -1058,79 +960,33 @@ _PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_PROG_AC_SYMS), 0, 0, 0, 0, 0, 0, 0, 0
 
 def encode_jpeg_progressive(img: np.ndarray, quality: int = 85) -> bytes:
     """Encode an HxWx3 uint8 RGB array as a progressive (SOF2) 4:4:4
-    JFIF JPEG with the Annex K tables.
+    JFIF JPEG with the Annex K quantization and DC tables.
 
     Scan script exercises the full Annex G surface: interleaved DC
     first + refinement, per-component spectral AC bands, and two
     levels of AC successive approximation for luma (Al=2 -> 1 -> 0).
-    All precision is restored by the final scans, so decoding this
-    stream yields BIT-IDENTICAL pixels to decoding ``encode_jpeg``'s
-    baseline stream of the same image — the roundtrip test pins the
-    progressive entropy coder and decoder against the baseline pair."""
-    h, w, qy, qc, coefs = _quantize_rgb(img, quality)
-    dc_y = _encode_table(DC_LUMA_BITS, DC_LUMA_VALS)
-    dc_c = _encode_table(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    ac_y = ac_c = _encode_table(_PROG_AC_BITS, _PROG_AC_SYMS)
-    dc_tbls = [dc_y, dc_c, dc_c]
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    def dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-        return bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
-
-    def sos(scomps: list[tuple[int, int]], ss, se, ah, al) -> bytes:
-        body = bytes([len(scomps)])
-        for cid, tt in scomps:
-            body += bytes([cid, tt])
-        return seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xE0, b"JFIF\x00" + bytes([1, 1, 0]) + struct.pack(">HH", 1, 1) + b"\x00\x00"
+    The quantized coefficients are ``encode_jpeg``'s and all precision
+    is restored by the final scans, so decoding this stream yields
+    BIT-IDENTICAL pixels to decoding ``encode_jpeg``'s stream of the
+    same image, by construction."""
+    dhts = (
+        (0, 0, DC_LUMA_BITS, DC_LUMA_VALS),
+        (0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
+        (1, 0, _PROG_AC_BITS, _PROG_AC_SYMS),
+        (1, 1, _PROG_AC_BITS, _PROG_AC_SYMS),
     )
-    out += seg(0xDB, bytes([0x00]) + bytes(qy.astype(np.uint8)))
-    out += seg(0xDB, bytes([0x01]) + bytes(qc.astype(np.uint8)))
-    out += seg(
-        0xC2,
-        bytes([8])
-        + struct.pack(">HH", h, w)
-        + bytes([3])
-        + bytes([1, 0x11, 0])
-        + bytes([2, 0x11, 1])
-        + bytes([3, 0x11, 1]),
-    )
-    out += seg(0xC4, dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS))
-    out += seg(0xC4, dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS))
-    out += seg(0xC4, dht(1, 0, _PROG_AC_BITS, _PROG_AC_SYMS))
-    out += seg(0xC4, dht(1, 1, _PROG_AC_BITS, _PROG_AC_SYMS))
-    # scan 1: DC first, interleaved, Al=1
-    out += sos([(1, 0x00), (2, 0x10), (3, 0x10)], 0, 0, 0, 1)
-    out += _encode_dc_scan(coefs, dc_tbls, 0, 1)
-    # spectral AC first passes
-    out += sos([(1, 0x00)], 1, 5, 0, 2)
-    out += _encode_ac_first_scan(coefs[0], ac_y, 1, 5, 2)
-    out += sos([(2, 0x01)], 1, 63, 0, 1)
-    out += _encode_ac_first_scan(coefs[1], ac_c, 1, 63, 1)
-    out += sos([(3, 0x01)], 1, 63, 0, 1)
-    out += _encode_ac_first_scan(coefs[2], ac_c, 1, 63, 1)
-    out += sos([(1, 0x00)], 6, 63, 0, 2)
-    out += _encode_ac_first_scan(coefs[0], ac_y, 6, 63, 2)
-    # DC refinement restores the low DC bit
-    out += sos([(1, 0x00), (2, 0x10), (3, 0x10)], 0, 0, 1, 0)
-    out += _encode_dc_scan(coefs, dc_tbls, 1, 0)
-    # AC successive-approximation refinements (luma: two levels)
-    out += sos([(1, 0x00)], 1, 5, 2, 1)
-    out += _encode_ac_refine_scan(coefs[0], ac_y, 1, 5, 1)
-    out += sos([(1, 0x00)], 6, 63, 2, 1)
-    out += _encode_ac_refine_scan(coefs[0], ac_y, 6, 63, 1)
-    out += sos([(1, 0x00)], 1, 5, 1, 0)
-    out += _encode_ac_refine_scan(coefs[0], ac_y, 1, 5, 0)
-    out += sos([(1, 0x00)], 6, 63, 1, 0)
-    out += _encode_ac_refine_scan(coefs[0], ac_y, 6, 63, 0)
-    out += sos([(2, 0x01)], 1, 63, 1, 0)
-    out += _encode_ac_refine_scan(coefs[1], ac_c, 1, 63, 0)
-    out += sos([(3, 0x01)], 1, 63, 1, 0)
-    out += _encode_ac_refine_scan(coefs[2], ac_c, 1, 63, 0)
-    out += b"\xff\xd9"
-    return bytes(out)
+    script = [
+        ((0, 1, 2), 0, 0, 0, 1),  # DC first, interleaved, Al=1
+        ((0,), 1, 5, 0, 2),  # spectral AC first passes
+        ((1,), 1, 63, 0, 1),
+        ((2,), 1, 63, 0, 1),
+        ((0,), 6, 63, 0, 2),
+        ((0, 1, 2), 0, 0, 1, 0),  # DC refinement restores the low bit
+        ((0,), 1, 5, 2, 1),  # AC successive approximation (luma: 2 levels)
+        ((0,), 6, 63, 2, 1),
+        ((0,), 1, 5, 1, 0),
+        ((0,), 6, 63, 1, 0),
+        ((1,), 1, 63, 1, 0),
+        ((2,), 1, 63, 1, 0),
+    ]
+    return _encode(img, quality, 0xC2, dhts, script)

@@ -52,6 +52,15 @@ def test_roundtrip_odd_widths_bmp_padding():
         assert np.array_equal(decode_bmp(encode_bmp(img)), img)
 
 
+def test_truncated_bmp_raises_value_error():
+    # a cut anywhere, header included, is a ValueError: skip-mode media
+    # tasks drop a row only on ValueError
+    blob = encode_bmp(_img(h=4, w=4))  # no row padding to cut off
+    for cut in range(2, len(blob)):
+        with pytest.raises(ValueError):
+            decode_bmp(blob[:cut])
+
+
 def _png_with_filters(img: np.ndarray, ftypes: list[int]) -> bytes:
     """Forward-filter each scanline with the given type (RFC 2083) —
     exercises the decoder against output shapes our encoder never

@@ -46,6 +46,13 @@ def test_month_range_rejects_months_that_do_not_exist(start, end):
         list(month_range(start, end))
 
 
+def test_month_range_rejects_an_end_before_its_start():
+    # swapped CLI bounds must not look like a successful empty ingest
+    with pytest.raises(ValueError, match="2025-01.*2025-03"):
+        list(month_range("2025-03", "2025-01"))
+    assert list(month_range("2025-03", "2025-03")) == [(2025, 3)]
+
+
 def test_url_and_path_and_meta_roundtrip():
     url = tlc_url("yellow", 2025, 3)
     assert url.endswith("/yellow_tripdata_2025-03.parquet")

@@ -351,6 +351,14 @@ def test_truncated_streams_raise_value_error():
     # dangling 0xFF at end of stream
     with pytest.raises(ValueError):
         decode_jpeg(b"\xff\xd8\xff\xe0\x00\x04\x00\x00\xff")
+    # an SOS naming an undefined Huffman table (Cb/Cr point at DHT 3)
+    sos = blob.index(b"\xff\xda")
+    with pytest.raises(ValueError, match="Huffman table"):
+        decode_jpeg(blob[: sos + 8] + b"\x33" + blob[sos + 9 :])
+    # an SOF component naming an undefined quantization table (Cb -> 2)
+    sof = blob.index(b"\xff\xc0")
+    with pytest.raises(ValueError, match="quantization table"):
+        decode_jpeg(blob[: sof + 15] + b"\x02" + blob[sof + 16 :])
 
 
 def test_non_integer_sampling_ratio_raises_clearly():
@@ -440,6 +448,10 @@ def test_progressive_roundtrip_bit_identical_to_baseline():
         np.tile(np.linspace(0, 255, 96).astype(np.uint8)[None, :, None], (64, 1, 3)),
         # flat: maximal EOBRUN accumulation
         np.full((80, 80, 3), 123, np.uint8),
+        # flat values whose DCT lands on a rounding tie at q50
+        np.full((16, 16, 3), 13, np.uint8),
+        np.full((16, 16, 3), 33, np.uint8),
+        np.full((16, 16, 3), 51, np.uint8),
     ]
     # sparse impulses: ZRL paths inside refinement scans
     sp = np.full((48, 64, 3), 128, np.uint8)
@@ -503,3 +515,24 @@ def test_analytic_progressive_dc_ac_scans_with_restarts():
     img = decode_jpeg(blob)
     assert img.shape == (8, 24, 3)
     assert np.all(img == _expected_flat(8, 8))
+
+
+def test_baseline_with_one_scan_per_component():
+    """A sequential (SOF0) frame may send each component in its own
+    scan (T.81 A.2.2); it must decode to exactly the pixels of the
+    interleaved stream, and a frame whose scans skip a component
+    raises."""
+    from nyc_taxi_etl_spark.operators import jpegcodec as jc
+
+    rng = np.random.default_rng(11)
+    for img in (
+        rng.integers(0, 256, (21, 35, 3), dtype=np.uint8),
+        np.tile(np.linspace(0, 255, 40).astype(np.uint8)[None, :, None], (24, 1, 3)),
+    ):
+        h, w, qy, qc, coefs = jc._quantize_rgb(img, 85)
+        head = jc._write_header(0xC0, h, w, qy, qc, jc._BASELINE_DHTS)
+        scans = [jc._write_scan(coefs, jc._BASELINE_DHTS, (ci,), 0, 63, 0, 0) for ci in range(3)]
+        blob = bytes(head) + b"".join(scans) + b"\xff\xd9"
+        assert np.array_equal(decode_jpeg(blob), decode_jpeg(encode_jpeg(img, 85)))
+        with pytest.raises(ValueError, match="undecoded"):
+            decode_jpeg(bytes(head) + b"".join(scans[:2]) + b"\xff\xd9")

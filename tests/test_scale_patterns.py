@@ -451,6 +451,20 @@ def test_cross_engine_conventions_written_once():
     assert _modules_matching(r"conv\(") == core | {"operators/winnow.py"}
 
 
+def test_jpeg_codec_has_one_scan_coder():
+    """Static guard: baseline JPEG is the sequential case of the one
+    scan walker and the one quantizer — one restart-unit alignment, one
+    forward and one inverse batched DCT, no per-block DCT."""
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parent.parent.joinpath(
+        "nyc_taxi_etl_spark", "operators", "jpegcodec.py"
+    ).read_text()
+    assert src.count(".byte_align_past_restart(") == 1
+    assert src.count("np.einsum(") == 2
+    assert "_DCT @" not in src
+
+
 # The driver's 50-entry window, pinned apart from plans.DRIVER_WINDOW so
 # an edit to the tuple has to be made twice, on purpose.
 _PINNED_WINDOW = (
